@@ -19,23 +19,40 @@ Phase 2 (refine, Arrow-vectorized):
       the "broadcast STRtree" role of the north star; envelopes are checked
       first (cheap numpy mask), then full PIP.
 
-For polygon sets too big to broadcast, ``strategy="shuffle"`` joins on cell
-with optional salting of hot cells (see salt_hot_cells) — the long-tail path
-of the two-phase broadcast-then-shuffle design.
+With ``salt`` set, the covering join shuffles on cell instead, salting hot
+cells (fact side salted, dimension side repeated per salt value) — the
+long-tail path of the two-phase broadcast-then-shuffle design for polygon
+sets too big to broadcast.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import cells as _cells
 from ..functions import geometry as _geo
 from ..functions.spark_exprs import cell_col
+
+# rows of one hot cell that should land in a single shuffle partition before
+# another salt bucket is added (sized for the Arrow-refine throughput)
+TARGET_ROWS_PER_SALT = 250_000
+
+# covering-table guardrail: when the fine interior-skip covering exceeds this
+# many rows (huge polygons would swamp the broadcast side), spatial_join
+# backs off to the coarse resolution without sure-cell classification
+MAX_SURE_COVER_ROWS = 2_000_000
+
+
+def _res_for_width(width: float) -> int:
+    """Cell res whose cell size ~ ``width`` degrees, clamped to 1..14."""
+    return max(1, min(int(math.floor(math.log2(360.0 / width))), 14))
 
 
 def choose_resolution(polygons: list[dict]) -> int:
@@ -44,9 +61,30 @@ def choose_resolution(polygons: list[dict]) -> int:
     if not polygons:
         return 7
     widths = [max(p["xmax"] - p["xmin"], (p["ymax"] - p["ymin"]) * 2.0) for p in polygons]
-    med = float(np.median(widths)) or 1.0
-    res = int(math.floor(math.log2(360.0 / med)))
-    return max(1, min(res, 14))
+    return _res_for_width(float(np.median(widths)) or 1.0)
+
+
+def _sure_cells(cells: np.ndarray, rings: list, res: int) -> np.ndarray:
+    """Mask of the covering ``cells`` PROVABLY interior to the polygon
+    ``rings``: all 4 cell corners inside (even-odd over all rings) and no
+    ring edge intersecting the cell rectangle (Liang–Barsky; a hole fully
+    inside the cell shows up as edges inside the rect, so holes are
+    handled)."""
+    cw, ch = 360.0 / (1 << res), 180.0 / (1 << res)
+    ix, iy = _cells.cell_to_ixiy(cells, res)
+    x0 = ix.astype(np.float64) * cw - 180.0
+    y0 = iy.astype(np.float64) * ch - 90.0
+    x1, y1 = x0 + cw, y0 + ch
+    sure = np.ones(len(cells), dtype=bool)
+    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
+        acc = np.zeros(len(cells), dtype=np.int64)
+        for vx, vy in rings:
+            acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
+        sure &= (acc % 2).astype(bool)
+    for vx, vy in rings:
+        wx, wy = np.roll(vx, -1), np.roll(vy, -1)
+        sure &= ~_geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
+    return sure
 
 
 def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.DataFrame:
@@ -59,18 +97,14 @@ def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.
     crossing the Python boundary.
 
     ``classify=True`` additionally marks each covering cell ``sure`` when it
-    is PROVABLY interior to the polygon: all 4 cell corners inside (even-odd
-    over all rings) and no ring edge intersecting the cell rectangle
-    (Liang–Barsky; a hole fully inside the cell shows up as edges inside the
-    rect, so holes are handled).  Points in a sure cell are matches by
-    construction and skip the PIP refine entirely — at the engine's skewed
-    workloads ~70% of candidate pairs fall in sure cells at res+3."""
+    is PROVABLY interior to the polygon (_sure_cells).  Points in a sure
+    cell are matches by construction and skip the PIP refine entirely — at
+    the engine's skewed workloads ~70% of candidate pairs fall in sure cells
+    at res+3."""
     cell_list = []
     idx_list = []
     envs = []
     sures = []
-    n = 1 << res
-    cw, ch = 360.0 / n, 180.0 / n
     for i, p in enumerate(polygons):
         cov = _cells.covering_cells(p["xmin"], p["ymin"], p["xmax"], p["ymax"], res)
         cell_list.append(cov)
@@ -81,21 +115,7 @@ def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.
             )
         )
         if classify:
-            ix, iy = _cells.cell_to_ixiy(cov, res)
-            x0 = ix.astype(np.float64) * cw - 180.0
-            y0 = iy.astype(np.float64) * ch - 90.0
-            x1, y1 = x0 + cw, y0 + ch
-            corners_in = np.ones(len(cov), dtype=bool)
-            for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-                acc = np.zeros(len(cov), dtype=np.int64)
-                for vx, vy in p["rings"]:
-                    acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
-                corners_in &= (acc % 2).astype(bool)
-            hit = np.zeros(len(cov), dtype=bool)
-            for vx, vy in p["rings"]:
-                wx, wy = np.roll(vx, -1), np.roll(vy, -1)
-                hit |= _geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
-            sures.append(corners_in & ~hit)
+            sures.append(_sure_cells(cov, p["rings"], res))
     cols = ["cell", "poly_idx", "e_xmin", "e_ymin", "e_xmax", "e_ymax"] + (
         ["sure"] if classify else []
     )
@@ -182,48 +202,19 @@ def _pack_polygons(parts: list[dict]):
     return {"RVX": RVX, "RVY": RVY, "ring_start": ring_start, "env": env, "keys": keys}
 
 
-def spatial_join(
-    points: DataFrame,
-    polygons: list[dict],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-    poly_key_col: str = "poly_key",
-    strategy: str = "broadcast",
-    salt: int | str | None = None,
-    interior_skip: bool = True,
-) -> DataFrame:
-    """Inner join: one output row per (point row, containing polygon).
+def _point_join(points: DataFrame, lon_col: str, lat_col: str, res: int,
+                join, pip, drop: list[str], split_sure: bool) -> DataFrame:
+    """The tail every point-in-polygon join shares: points get their cell id
+    ``__cell`` in codegen, ``join`` matches them to a covering table
+    (cell, e_xmin..e_ymax[, sure], polygon key, ...), and the candidates
+    are refined by the boolean Arrow column ``pip``.  Output: the candidate
+    columns minus ``__cell`` and ``drop`` (by name).
 
-    ``polygons``: list of dicts with key/vx/vy/xmin..ymax (synth.polygon_table_np
-    shape, or built from WKB via sources.polygons_from_wkb).
-
-    ``interior_skip``: run the prefilter 3 resolutions finer and classify
-    covering cells at plan time; candidates in provably-interior cells are
-    emitted as matches WITHOUT the Arrow PIP refine (~70% of pairs under the
-    engine's skewed workloads).  Exact — a sure cell admits no false
-    positives by construction.
-    """
+    ``split_sure``: rows in provably-interior cells ARE matches (no
+    envelope, no PIP); only the other rows pass the envelope prune and the
+    refine.  Two pipelines over the same map-side join — the join is cheap
+    next to the Arrow refine it avoids."""
     spark = points.sparkSession
-    polygons = normalize_polygons(polygons)  # holes + anti-meridian SPLIT
-    if not polygons:
-        return points.limit(0).withColumn(poly_key_col, F.lit(None).cast("long"))
-    if res is None:
-        res = choose_resolution(polygons)
-        if interior_skip:
-            res = min(res + 3, 14)
-    packed = _pack_polygons(polygons)
-    bc = spark.sparkContext.broadcast(packed)
-
-    pc = polygon_cells(polygons, res, classify=interior_skip)
-    # covering-table guardrail: if the finer resolution explodes the
-    # broadcast side (huge polygons), back off to the coarse plan
-    if interior_skip and len(pc) > 2_000_000:
-        res = choose_resolution(polygons)
-        interior_skip = False
-        pc = polygon_cells(polygons, res)
-    pc = pc.astype({"cell": "int64", "poly_idx": "int64"})
-    cand_df = spark.createDataFrame(pc)
     # CPU-bound refine must not inherit a tiny-scan partitioning: a small
     # parquet (1 rowgroup) scans as ONE split, which would serialize the
     # whole map-side pipeline.  At 100 TB the scan has thousands of splits;
@@ -232,84 +223,72 @@ def spatial_join(
     if not points.isStreaming and points.rdd.getNumPartitions() < max(2, par // 2):
         # (streaming sources own their partitioning; .rdd is illegal there)
         points = points.repartition(par)
-    pts = points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res))
-
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cand_df), pts["__cell"] == cand_df["cell"], "inner")
-    else:  # shuffle path with optional hot-cell salting
-        if salt == "auto":
-            # measure, don't guess: sampled cell histogram -> hot cell set +
-            # salt factor sized so a hot cell's rows spread over ~target
-            # rows per shuffle partition (the cell-frequency sampling +
-            # salted-repartition design of the north rule).  Only HOT cells
-            # pay the dimension-side explosion; the long tail joins plain.
-            hot = hot_cells_with_counts(points, lon_col, lat_col, res)
-            if hot:
-                hot_set = {int(c) for c in hot}
-                max_est = max(hot.values())
-                salt_n = int(min(64, max(2, max_est // TARGET_ROWS_PER_SALT + 1)))
-                # split the DIMENSION side only (tiny, driver-side pandas) —
-                # each equi-join then routes points by itself; no isin over
-                # the big cell expression on the fact side (an isin there
-                # blows whole-stage codegen past the 64 KB method limit and
-                # drops the scan to interpreted mode)
-                pc_hot = pc[pc["cell"].isin(hot_set)]
-                pc_cold = pc[~pc["cell"].isin(hot_set)]
-                parts = []
-                if len(pc_cold):
-                    cold_df = spark.createDataFrame(pc_cold)
-                    parts.append(pts.join(cold_df, pts["__cell"] == cold_df["cell"], "inner"))
-                if len(pc_hot):
-                    pts_s = pts.withColumn(
-                        "__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt_n))
-                    )
-                    hot_exploded = pc_hot.loc[pc_hot.index.repeat(salt_n)].reset_index(drop=True)
-                    hot_exploded["__salt"] = np.tile(np.arange(salt_n), len(pc_hot))
-                    hot_df = spark.createDataFrame(
-                        hot_exploded.astype({"__salt": "int64"})
-                    )
-                    parts.append(
-                        pts_s.join(
-                            hot_df,
-                            (pts_s["__cell"] == hot_df["cell"]) & (pts_s["__salt"] == hot_df["__salt"]),
-                            "inner",
-                        ).drop("__salt")
-                    )
-                cand = parts[0]
-                for extra in parts[1:]:
-                    cand = cand.unionByName(extra)
-            else:
-                cand = pts.join(cand_df, pts["__cell"] == cand_df["cell"], "inner")
-        elif salt:
-            # salt the fact side; explode the dimension side over the salt
-            # range so hot cells spread across `salt` shuffle partitions
-            pts = pts.withColumn("__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt)))
-            salts = spark.range(salt).withColumnRenamed("id", "__salt")
-            cand_df = cand_df.crossJoin(salts)
-            cand = pts.join(
-                cand_df,
-                (pts["__cell"] == cand_df["cell"]) & (pts["__salt"] == cand_df["__salt"]),
-                "inner",
-            ).drop("__salt")
-        else:
-            cand = pts.join(cand_df, pts["__cell"] == cand_df["cell"], "inner")
-
+    cand = join(points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res)))
+    drop = ["__cell", *drop]
     # exact-envelope prune in codegen (plain column compares) so rows the
     # PIP could never accept don't pay the Arrow transfer
     env_ok = (
         (F.col(lon_col) >= F.col("e_xmin")) & (F.col(lon_col) <= F.col("e_xmax"))
         & (F.col(lat_col) >= F.col("e_ymin")) & (F.col(lat_col) <= F.col("e_ymax"))
     )
-    drop_cols = ["cell", "__cell", "e_xmin", "e_ymin", "e_xmax", "e_ymax"] + (
-        ["sure"] if interior_skip else []
+    if not split_sure:
+        return cand.filter(env_ok).filter(pip).drop(*drop)
+    return cand.filter(F.col("sure")).drop(*drop).unionByName(
+        cand.filter(~F.col("sure")).filter(env_ok).filter(pip).drop(*drop)
     )
+
+
+def spatial_join(
+    points: DataFrame,
+    polygons: list[dict],
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int | None = None,
+    poly_key_col: str = "poly_key",
+    salt: int | str | None = None,
+) -> DataFrame:
+    """Inner join: one output row per (point row, containing polygon).
+
+    ``polygons``: list of dicts with key/vx/vy/xmin..ymax (synth.polygon_table_np
+    shape, or built from WKB via sources.polygons_from_wkb).
+
+    Interior skip: the prefilter runs 3 resolutions finer and classifies
+    covering cells at plan time; candidates in provably-interior cells are
+    emitted as matches WITHOUT the Arrow PIP refine (~70% of pairs under
+    the engine's skewed workloads).  Exact — a sure cell admits no false
+    positives by construction.  A covering table over MAX_SURE_COVER_ROWS
+    falls back to the coarse resolution with every candidate refined.
+
+    ``salt``: None broadcasts the covering table.  Otherwise the covering
+    join shuffles on cell with hot cells salted (_salted_join): an int
+    salts every cell that many ways, ``"auto"`` measures the hot cells and
+    the factor.
+    """
+    spark = points.sparkSession
+    polygons = normalize_polygons(polygons)  # holes + anti-meridian SPLIT
+    if not polygons:
+        return points.limit(0).withColumn(poly_key_col, F.lit(None).cast("long"))
+    if res is None:
+        res = min(choose_resolution(polygons) + 3, 14)
+    packed = _pack_polygons(polygons)
+    bc = spark.sparkContext.broadcast(packed)
+
+    pc = polygon_cells(polygons, res, classify=True)
+    split_sure = len(pc) <= MAX_SURE_COVER_ROWS
+    if not split_sure:
+        res = choose_resolution(polygons)
+        pc = polygon_cells(polygons, res)
+    pc = pc.astype({"cell": "int64", "poly_idx": "int64"})
+
+    def join(pts: DataFrame) -> DataFrame:
+        if salt:
+            return _salted_join(points, pts, pc, lon_col, lat_col, res, salt)
+        cells = F.broadcast(spark.createDataFrame(pc))
+        return pts.join(cells, pts["__cell"] == cells["cell"], "inner")
 
     # Refine as a SCALAR Arrow UDF used in a filter: only (lon, lat,
     # poly_idx) cross the Python boundary; every other column stays JVM-side
     # (ArrowEvalPython is a projection, not a row pipe).
-    import pandas as pd
-    from pyspark.sql import types as T
-
     @F.pandas_udf(T.BooleanType())
     def pip_ok(lon_s: pd.Series, lat_s: pd.Series, gi_s: pd.Series) -> pd.Series:
         p = bc.value
@@ -322,24 +301,61 @@ def spatial_join(
         )
         return pd.Series(keep)
 
-    if interior_skip:
-        # interior cells ARE matches (no envelope, no PIP); boundary cells
-        # go through the full refine.  Two pipelines over the same map-side
-        # join — the join is cheap next to the Arrow refine it avoids.
-        sure_rows = cand.filter(F.col("sure")).drop(*drop_cols)
-        unsure = cand.filter(~F.col("sure")).filter(env_ok)
-        refined = sure_rows.unionByName(
-            unsure.filter(pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx"))).drop(*drop_cols)
-        )
-    else:
-        cand = cand.filter(env_ok).drop(*drop_cols)
-        refined = cand.filter(pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx")))
-
+    refined = _point_join(
+        points, lon_col, lat_col, res, join,
+        pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx")),
+        [c for c in pc.columns if c != "poly_idx"], split_sure,
+    )
     keys_arr = packed["keys"]
     key_map = spark.createDataFrame(
         pd.DataFrame({"poly_idx": np.arange(len(keys_arr)), poly_key_col: keys_arr})
     )
     return refined.join(F.broadcast(key_map), "poly_idx").drop("poly_idx")
+
+
+def _salted_join(points: DataFrame, pts: DataFrame, pc: pd.DataFrame, lon_col: str,
+                 lat_col: str, res: int, salt: int | str) -> DataFrame:
+    """Shuffle join of ``pts`` (``points`` + __cell) to the covering table
+    ``pc`` with hot cells salted: the fact side gets __salt = hash(lon, lat)
+    mod n, and each hot covering row is repeated once per salt value on the
+    DIMENSION side (tiny, driver-side pandas), so a hot cell's rows spread
+    over n shuffle partitions while each equi-join still routes points by
+    itself (no isin over the big cell expression on the fact side — that
+    blows whole-stage codegen past the 64 KB method limit).
+
+    ``salt="auto"``: measure, don't guess — a sampled cell histogram picks
+    the hot cells, and the factor is sized so a hot cell's rows spread over
+    ~TARGET_ROWS_PER_SALT rows per shuffle partition (the cell-frequency
+    sampling + salted-repartition design of the north rule); the long tail
+    joins plain.  An int salts every covering cell that many ways."""
+    spark = pts.sparkSession
+    if salt == "auto":
+        hot = hot_cells_with_counts(points, lon_col, lat_col, res)
+        salt_n = int(min(64, max(2, max(hot.values(), default=0) // TARGET_ROWS_PER_SALT + 1)))
+        is_hot = pc["cell"].isin(list(hot))
+    else:
+        salt_n = int(salt)
+        is_hot = np.ones(len(pc), dtype=bool)
+    parts = []
+    if (~is_hot).any():
+        cold = spark.createDataFrame(pc[~is_hot])
+        parts.append(pts.join(cold, pts["__cell"] == cold["cell"], "inner"))
+    if is_hot.any():
+        hot_pc = pc[is_hot]
+        hot_df = spark.createDataFrame(hot_pc.loc[hot_pc.index.repeat(salt_n)].assign(
+            __salt=np.tile(np.arange(salt_n, dtype=np.int64), len(hot_pc))
+        ))
+        pts_s = pts.withColumn(
+            "__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt_n))
+        )
+        parts.append(
+            pts_s.join(
+                hot_df,
+                (pts_s["__cell"] == hot_df["cell"]) & (pts_s["__salt"] == hot_df["__salt"]),
+                "inner",
+            ).drop("__salt")
+        )
+    return reduce(DataFrame.unionByName, parts)
 
 
 def cell_histogram(points: DataFrame, lon_col: str, lat_col: str, res: int) -> DataFrame:
@@ -352,22 +368,12 @@ def cell_histogram(points: DataFrame, lon_col: str, lat_col: str, res: int) -> D
     )
 
 
-def hot_cells(points: DataFrame, lon_col: str, lat_col: str, res: int,
-              sample_fraction: float = 0.01, threshold: int = 1000) -> list[int]:
-    """Sampled cell-frequency scan -> list of hot cell ids (driver-side plan
-    input for salting; the sampling-over-joins idea from PAPERS.md)."""
-    return list(hot_cells_with_counts(points, lon_col, lat_col, res, sample_fraction, threshold))
-
-
-# rows of one hot cell that should land in a single shuffle partition before
-# another salt bucket is added (sized for the Arrow-refine throughput)
-TARGET_ROWS_PER_SALT = 250_000
-
-
 def hot_cells_with_counts(points: DataFrame, lon_col: str, lat_col: str, res: int,
                           sample_fraction: float = 0.01, threshold: int = 1000) -> dict[int, int]:
-    """Like hot_cells but returns {cell: estimated_total_rows} so the caller
-    can size the salt factor from the worst cell (spatial_join salt='auto')."""
+    """Sampled cell-frequency scan -> {hot cell id: estimated total rows}:
+    the driver-side plan input for salting (the sampling-over-joins idea
+    from PAPERS.md); spatial_join salt='auto' sizes the salt factor from
+    the worst cell."""
     hist = cell_histogram(points.sample(sample_fraction, seed=42), lon_col, lat_col, res)
     rows = hist.filter(F.col("n") >= threshold * sample_fraction).collect()
     return {int(r["cell"]): int(r["n"] / sample_fraction) for r in rows}
@@ -392,8 +398,7 @@ def _choose_res_dist(parts: DataFrame) -> int:
             F.lit(0.5),
         ).alias("med")
     ).first()
-    med = float(row["med"] or 1.0) or 1.0
-    return max(1, min(int(math.floor(math.log2(360.0 / med))), 14))
+    return _res_for_width(float(row["med"] or 1.0) or 1.0)
 
 
 def polygon_parts_df(polygons_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb") -> DataFrame:
@@ -432,9 +437,6 @@ def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataF
     geometry transfer).  Same classification as polygon_cells."""
     from ..sources import polygons_from_wkb
 
-    n = 1 << res
-    cw, ch = 360.0 / n, 180.0 / n
-
     def cover(batches):
         for pdf in batches:
             for key, wkb, xmin, ymin, xmax, ymax in zip(
@@ -446,22 +448,7 @@ def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataF
                     continue
                 if classify:
                     (part,) = polygons_from_wkb([(key, wkb)])
-                    rings = [(part["vx"], part["vy"])] + list(part["holes"])
-                    ix, iy = _cells.cell_to_ixiy(cov, res)
-                    x0 = ix.astype(np.float64) * cw - 180.0
-                    y0 = iy.astype(np.float64) * ch - 90.0
-                    x1, y1 = x0 + cw, y0 + ch
-                    corners_in = np.ones(m, dtype=bool)
-                    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-                        acc = np.zeros(m, dtype=np.int64)
-                        for vx, vy in rings:
-                            acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
-                        corners_in &= (acc % 2).astype(bool)
-                    hit = np.zeros(m, dtype=bool)
-                    for vx, vy in rings:
-                        wx, wy = np.roll(vx, -1), np.roll(vy, -1)
-                        hit |= _geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
-                    sure = corners_in & ~hit
+                    sure = _sure_cells(cov, [(part["vx"], part["vy"])] + list(part["holes"]), res)
                 else:
                     sure = np.zeros(m, dtype=bool)
                 yield pd.DataFrame({
@@ -560,11 +547,15 @@ def spatial_join_dist(
     the Arrow batch, grouped by geometry so each part is decoded once per
     batch.
 
+    ``interior_skip``: classify covering cells 3 resolutions finer and emit
+    provably-interior candidates without the refine (as spatial_join).
+
     ``broadcast_threshold``: ADAPTIVE strategy pick (the AQE-style decision
     the reference leaves to its store, SQLStore pushdown analog) — when the
     normalized parts table is at most this many rows, the dimension is
     collected and the proven broadcast plan of ``spatial_join`` runs
-    instead (faster: packed-array refine, no per-candidate WKB transfer).
+    instead (faster: packed-array refine, no per-candidate WKB transfer;
+    spatial_join makes its own interior-skip choice there).
     0 (default) forces the fully distributed plan.
 
     ``compact_levels``: mixed-resolution covering (requires interior_skip).
@@ -583,7 +574,6 @@ def spatial_join_dist(
     """
     from ..sources import polygons_from_wkb
 
-    spark = points.sparkSession
     parts = polygon_parts_df(polygons_df, key_col, wkb_col).persist()
     if broadcast_threshold:
         n_parts = parts.limit(broadcast_threshold + 1).count()
@@ -591,24 +581,17 @@ def spatial_join_dist(
             rows = [(r["key"], bytes(r["wkb"])) for r in parts.collect()]
             return spatial_join(
                 points, polygons_from_wkb(rows), lon_col, lat_col,
-                res=res, poly_key_col=poly_key_col, interior_skip=interior_skip,
+                res=res, poly_key_col=poly_key_col,
             )
+    if compact_levels and not interior_skip:
+        raise ValueError("compact_levels requires interior_skip=True")
     if res is None:
         res = _choose_res_dist(parts)
         if interior_skip:
             res = min(res + 3, 14)
     cov = polygon_cells_df(parts, res, classify=interior_skip)
 
-    par = spark.sparkContext.defaultParallelism
-    if not points.isStreaming and points.rdd.getNumPartitions() < max(2, par // 2):
-        # (streaming sources own their partitioning; .rdd is illegal there)
-        points = points.repartition(par)
-    pts = points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res))
-
-    drop_cols = ["cell", "__cell", "e_xmin", "e_ymin", "e_xmax", "e_ymax", "sure", "pwkb"]
     if compact_levels == "auto":
-        if not interior_skip:
-            raise ValueError("compact_levels requires interior_skip=True")
         st = parts.agg(
             F.sum((F.col("xmax") - F.col("xmin")) * (F.col("ymax") - F.col("ymin"))).alias("area"),
             F.sum(2.0 * ((F.col("xmax") - F.col("xmin")) + (F.col("ymax") - F.col("ymin")))).alias("perim"),
@@ -620,33 +603,25 @@ def spatial_join_dist(
             6, res - 1, int(math.ceil(math.log(interior / boundary, 4.0)))
         ))
     if compact_levels:
-        if not interior_skip:
-            raise ValueError("compact_levels requires interior_skip=True")
         compact_levels = max(0, min(compact_levels, res - 1))
         cov = compact_cover(cov, res, compact_levels)
-        # ancestor chain: the point's cell at res, res-1, ..., res-levels —
-        # exactly one of them can hit each part's (disjoint) mixed-res cover
-        pts = pts.withColumn(
-            "__jcell",
-            F.explode(F.array(*[
-                F.shiftright("__cell", 2 * d) for d in range(compact_levels + 1)
-            ])),
-        )
-        cand = pts.join(cov, pts["__jcell"] == cov["cell"], "inner")
-        drop_cols += ["__jcell", "cres"]
-    else:
-        cand = pts.join(cov, pts["__cell"] == cov["cell"], "inner")
-    env_ok = (
-        (F.col(lon_col) >= F.col("e_xmin")) & (F.col(lon_col) <= F.col("e_xmax"))
-        & (F.col(lat_col) >= F.col("e_ymin")) & (F.col(lat_col) <= F.col("e_ymax"))
-    )
 
-    from pyspark.sql import types as T
+        def join(pts: DataFrame) -> DataFrame:
+            # ancestor chain: the point's cell at res, res-1, ..., res-levels —
+            # exactly one of them can hit each part's (disjoint) mixed-res cover
+            pts = pts.withColumn(
+                "__jcell",
+                F.explode(F.array(*[
+                    F.shiftright("__cell", 2 * d) for d in range(compact_levels + 1)
+                ])),
+            )
+            return pts.join(cov, pts["__jcell"] == cov["cell"], "inner").drop("__jcell")
+    else:
+        def join(pts: DataFrame) -> DataFrame:
+            return pts.join(cov, pts["__cell"] == cov["cell"], "inner")
 
     @F.pandas_udf(T.BooleanType())
     def pip_ok_wkb(lon_s: pd.Series, lat_s: pd.Series, wkb_s: pd.Series) -> pd.Series:
-        from ..functions import geometry as geo
-
         px = lon_s.to_numpy(dtype=np.float64)
         py = lat_s.to_numpy(dtype=np.float64)
         out = np.zeros(len(px), dtype=bool)
@@ -655,37 +630,126 @@ def spatial_join_dist(
         for i, b in enumerate(wkb_s):
             grp.setdefault(bytes(b), []).append(i)
         for buf, idxs in grp.items():
-            _, rings = geo.wkb_parse(buf)
+            _, rings = _geo.wkb_parse(buf)
             ii = np.asarray(idxs, dtype=np.int64)
             acc = np.zeros(len(ii), dtype=np.int64)
             for vx, vy in rings:
                 if len(vx) >= 2 and vx[0] == vx[-1] and vy[0] == vy[-1]:
                     vx, vy = vx[:-1], vy[:-1]  # open the ring (implicit close)
-                acc += geo.points_in_polygon(px[ii], py[ii], vx, vy).astype(np.int64)
+                acc += _geo.points_in_polygon(px[ii], py[ii], vx, vy).astype(np.int64)
             out[ii] = (acc % 2).astype(bool)
         return pd.Series(out)
 
-    if interior_skip:
-        sure_rows = cand.filter(F.col("sure")).drop(*drop_cols)
-        unsure = cand.filter(~F.col("sure")).filter(env_ok)
-        refined = sure_rows.unionByName(
-            unsure.filter(pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb"))).drop(*drop_cols)
-        )
-    else:
-        refined = cand.filter(env_ok).filter(
-            pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb"))
-        ).drop(*drop_cols)
+    refined = _point_join(
+        points, lon_col, lat_col, res, join,
+        pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb")),
+        [c for c in cov.columns if c != "pkey"], interior_skip,
+    )
     return refined.withColumnRenamed("pkey", poly_key_col)
 
 
-# ------------------------------------------------- polygon-vs-polygon pair join
+# ------------------------------------------------------ pair-candidate stage
 #
 # Arbitrary-pair spatial predicates (BinarySpatialFilter.java:43 dispatching
-# to GeometryWrapper.predicate:287) need a polygon-polygon JOIN at engine
-# level.  Same covering-cell bucket shape as the point join: candidates are
-# key pairs sharing a covering cell (complete: two intersecting envelopes
-# share the cell containing any common point), envelope-pruned in codegen,
-# then refined by the DE-9IM kernel (functions/relate.py) over WKB pairs.
+# to GeometryWrapper.predicate:287) need geometry-vs-geometry JOINS at engine
+# level.  Every pair join (polygon pairs, line-vs-polygon, distance-bounded)
+# shares one candidate stage with the covering-cell bucket shape of the point
+# join: key pairs sharing a covering cell, envelope-pruned in codegen, then
+# refined by an Arrow batch kernel over the WKB pairs.
+
+def _grown(parts: DataFrame, pad: float) -> DataFrame:
+    """A parts table with its envelope grown by ``pad`` on every side."""
+    if not pad:
+        return parts
+    d = {"xmin": -pad, "ymin": -pad, "xmax": pad, "ymax": pad}
+    return parts.select(*[(F.col(c) + d[c]).alias(c) if c in d else c for c in parts.columns])
+
+
+def _pair_candidates(a: DataFrame, b: DataFrame | None = None,
+                     res: int | None = None, pad: float = 0.0) -> DataFrame:
+    """Candidate pairs of two parts tables (key, wkb, xmin, ymin, xmax, ymax
+    and any extra columns).  ``b=None`` self-joins ``a``, each unordered
+    pair once as a < b.
+
+    Complete for intersection: two intersecting envelopes share the cell
+    containing any common point.  With ``pad`` the a-side envelopes are
+    grown by ``pad``, so pairs up to ``pad`` apart are candidates too.
+    ``res`` defaults to b's median part diameter.  Both sides' columns are
+    re-attached and the exact envelope test runs in codegen before any
+    Python; the result is spread across the executor cores, since AQE would
+    coalesce the small candidate shuffle to ~1 partition and serialize the
+    per-row-CPU refine.
+
+    Output: keys ``a``, ``b`` and every other column suffixed ``_a``/``_b``
+    (wkb_a, wkb_b, xmin_a, ...; the a envelope grown)."""
+    if res is None:
+        res = _choose_res_dist(a if b is None else b)
+    a = _grown(a, pad)
+
+    def cover(parts: DataFrame, side: str) -> DataFrame:
+        cells = polygon_cells_df(
+            parts.select("key", "wkb", "xmin", "ymin", "xmax", "ymax"), res, classify=False
+        )
+        return cells.select("cell", F.col("pkey").alias(side))
+
+    acov = cover(a, "a")
+    if b is None:
+        b = a
+        pairs = (
+            acov.groupBy("cell")
+            .agg(F.collect_set("a").alias("ids"))
+            .filter(F.size("ids") >= 2)
+            .select(
+                F.explode(
+                    F.expr(
+                        "flatten(transform(ids, (x, i) -> "
+                        "transform(slice(ids, i + 2, size(ids) - i - 1), "
+                        "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
+                    )
+                ).alias("p")
+            )
+            .select("p.a", "p.b")
+        )
+    else:
+        pairs = acov.join(cover(b, "b"), "cell").select("a", "b")
+
+    def side(parts: DataFrame, s: str) -> DataFrame:
+        return parts.select(F.col("key").alias(s), *[
+            F.col(c).alias(f"{c}_{s}") for c in parts.columns if c != "key"
+        ])
+
+    cand = (
+        pairs.distinct()
+        .join(side(a, "a"), "a")
+        .join(side(b, "b"), "b")
+        .filter(
+            (F.col("xmin_a") <= F.col("xmax_b")) & (F.col("xmin_b") <= F.col("xmax_a"))
+            & (F.col("ymin_a") <= F.col("ymax_b")) & (F.col("ymin_b") <= F.col("ymax_a"))
+        )
+    )
+    return cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+
+
+def _relate_pairs(cand: DataFrame) -> DataFrame:
+    """``cand`` + ``r`` = struct(intersects, contains_ab, contains_ba): the
+    DE-9IM predicates of (wkb_a, wkb_b), one padded-grid evaluation per
+    Arrow batch (functions/relate.py; identical FP expressions to the scalar
+    kernel — oracle-exact), not a per-pair Python loop."""
+    from ..functions.relate import relate_polygons_pred_batch
+
+    @F.pandas_udf("intersects boolean, contains_ab boolean, contains_ba boolean")
+    def rel(a_s: pd.Series, b_s: pd.Series) -> pd.DataFrame:
+        p = relate_polygons_pred_batch(a_s, b_s)
+        return pd.DataFrame({
+            "intersects": p["intersects"],
+            "contains_ab": p["contains"],
+            "contains_ba": p["within"],
+        })
+
+    # asNondeterministic: stop Catalyst from re-evaluating the struct UDF
+    # once per referenced field / pushed filter (measured 2-3x refine cost)
+    return cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
+
 
 def polygon_pair_join(
     polygons_df: DataFrame,
@@ -700,73 +764,8 @@ def polygon_pair_join(
     Assumes one part per key (no MultiPolygon / anti-meridian operands —
     those need union-level predicate semantics the general-position model
     does not define)."""
-    from ..functions.relate import relate_polygons_pred_batch
-
     parts = polygon_parts_df(polygons_df, key_col, wkb_col).persist()
-    if res is None:
-        res = _choose_res_dist(parts)
-    cov = polygon_cells_df(parts, res, classify=False).select("cell", "pkey")
-    pairs = (
-        cov.groupBy("cell")
-        .agg(F.collect_set("pkey").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    pa = parts.select(
-        F.col("key").alias("a"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    )
-    pb = parts.select(
-        F.col("key").alias("b"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(pa, "a").join(pb, "b")
-        # exact envelope prune in codegen before any Python
-        .filter(
-            (F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-            & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))
-        )
-    )
-
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(
-        T.StructType([
-            T.StructField("intersects", T.BooleanType()),
-            T.StructField("contains_ab", T.BooleanType()),
-            T.StructField("contains_ba", T.BooleanType()),
-        ])
-    )
-    def rel(a_s: pd.Series, b_s: pd.Series) -> pd.DataFrame:
-        # one padded-grid evaluation for the whole Arrow batch (identical
-        # FP expressions to the scalar kernel — oracle-exact)
-        p = relate_polygons_pred_batch(a_s, b_s)
-        return pd.DataFrame({
-            "intersects": p["intersects"],
-            "contains_ab": p["contains"],
-            "contains_ba": p["within"],
-        })
-
-    # AQE coalesces the small (tens of MB) candidate shuffle to ~1 partition,
-    # which would serialize the Python refine — its cost is per-ROW CPU, not
-    # bytes, so spread candidates across the executor cores explicitly.
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    # asNondeterministic: stop Catalyst from re-evaluating the struct UDF
-    # once per referenced field / pushed filter (measured 2-3x refine cost)
-    out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
+    out = _relate_pairs(_pair_candidates(parts, res=res))
     return (
         out.filter(F.col("r.intersects"))
         .select(
@@ -794,89 +793,32 @@ def polygon_pair_join_multi(
       other member, so per-part containment composes to union containment.
 
     Output (a, b, contains_ab, contains_ba) for intersecting key pairs."""
-    from ..functions.relate import relate_polygons_pred_batch
-
     parts = (
         polygon_parts_df(polygons_df, key_col, wkb_col)
         .withColumn("uid", F.monotonically_increasing_id())
         .localCheckpoint()  # pin uids (monotonic ids are plan-dependent)
     )
-    if res is None:
-        res = _choose_res_dist(parts)
-    cov = polygon_cells_df(
-        parts.select(F.col("uid").alias("key"), "wkb", "xmin", "ymin", "xmax", "ymax"),
-        res, classify=False,
-    ).select("cell", F.col("pkey").alias("uid"))
-    pairs = (
-        cov.groupBy("cell")
-        .agg(F.collect_set("uid").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(least(x, y) AS ua, greatest(x, y) AS ub))))"
-                )
-            ).alias("p")
-        )
-        .select("p.ua", "p.ub")
-        .distinct()
-    )
-    pa = parts.select(
-        F.col("uid").alias("ua"), F.col("key").alias("ka"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    )
-    pb = parts.select(
-        F.col("uid").alias("ub"), F.col("key").alias("kb"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(pa, "ua").join(pb, "ub")
-        .filter(F.col("ka") != F.col("kb"))
-        .filter(
-            (F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-            & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))
-        )
-    )
-
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(
-        T.StructType([
-            T.StructField("intersects", T.BooleanType()),
-            T.StructField("a_contains_b", T.BooleanType()),
-            T.StructField("b_contains_a", T.BooleanType()),
-        ])
-    )
-    def rel(a_s: pd.Series, b_s: pd.Series) -> pd.DataFrame:
-        # padded-grid batch evaluation (relate_polygons_pred_batch), not a
-        # per-pair Python loop
-        p = relate_polygons_pred_batch(a_s, b_s)
-        return pd.DataFrame({
-            "intersects": p["intersects"],
-            "a_contains_b": p["contains"],
-            "b_contains_a": p["within"],
-        })
-
-    # canonical key orientation: a = lesser key; swap flags where ka > kb
-    # (repartition first: per-row-CPU refine must not run on an AQE-coalesced
-    # single partition)
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    flagged = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b"))).select(
-        F.least("ka", "kb").alias("a"),
-        F.greatest("ka", "kb").alias("b"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("ua")).otherwise(F.col("ub")).alias("pa_uid"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("ub")).otherwise(F.col("ua")).alias("pb_uid"),
+    # part pairs: a, b are part uids, owner_a/owner_b their polygon keys
+    cand = _pair_candidates(
+        parts.select(
+            F.col("uid").alias("key"), F.col("key").alias("owner"),
+            "wkb", "xmin", "ymin", "xmax", "ymax",
+        ),
+        res=res,
+    ).filter(F.col("owner_a") != F.col("owner_b"))
+    # canonical key orientation: a = lesser key; swap flags where the
+    # a-side part belongs to the greater key
+    fwd = F.col("owner_a") <= F.col("owner_b")
+    flagged = _relate_pairs(cand).select(
+        F.least("owner_a", "owner_b").alias("ka"),
+        F.greatest("owner_a", "owner_b").alias("kb"),
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("pa_uid"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("pb_uid"),
         F.col("r.intersects").alias("inter"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("r.a_contains_b"))
-         .otherwise(F.col("r.b_contains_a")).alias("cab"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("r.b_contains_a"))
-         .otherwise(F.col("r.a_contains_b")).alias("cba"),
+        F.when(fwd, F.col("r.contains_ab")).otherwise(F.col("r.contains_ba")).alias("cab"),
+        F.when(fwd, F.col("r.contains_ba")).otherwise(F.col("r.contains_ab")).alias("cba"),
     )
-    agg = flagged.groupBy("a", "b").agg(
+    agg = flagged.groupBy(F.col("ka").alias("a"), F.col("kb").alias("b")).agg(
         F.max("inter").alias("intersects"),
         F.count_distinct(F.when(F.col("cab"), F.col("pb_uid"))).alias("b_parts_contained"),
         F.count_distinct(F.when(F.col("cba"), F.col("pa_uid"))).alias("a_parts_contained"),
@@ -932,43 +874,17 @@ def line_parts_df(lines_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb
 def _line_poly_candidates(
     lines_df: DataFrame, polygons_df: DataFrame, res: int | None
 ) -> DataFrame:
-    """Shared candidate stage for mixed-dimension joins: covering-cell
-    bucket candidates for BOTH distributed sides, codegen envelope prune,
-    spread across executor cores (per-row-CPU refines must not inherit an
-    AQE-coalesced single partition).  Columns: lkey, pkey, wkb_l, wkb_p.
+    """_pair_candidates for mixed-dimension joins: a = line key, b =
+    polygon key, with wkb_a/wkb_b.
 
-    Lifecycle: lparts/pparts are persisted because each feeds both its
+    Lifecycle: both parts tables are persisted because each feeds both its
     covering-cell branch and the WKB re-attach join (a consumed-twice plan
     is computed twice unpersisted); they stay cached until session end —
     callers running MANY joins per session should spark.catalog.clearCache()
     between batches."""
-    lparts = line_parts_df(lines_df).persist()
-    pparts = polygon_parts_df(polygons_df).persist()
-    if res is None:
-        res = _choose_res_dist(pparts)
-    lcov = polygon_cells_df(lparts, res, classify=False).select(
-        "cell", F.col("pkey").alias("lkey"))
-    pcov = polygon_cells_df(pparts, res, classify=False).select("cell", "pkey")
-    pairs = lcov.join(pcov, "cell").select("lkey", "pkey").distinct()
-    la = lparts.select(
-        F.col("key").alias("lkey"), F.col("wkb").alias("wkb_l"),
-        F.col("xmin").alias("lxmin"), F.col("ymin").alias("lymin"),
-        F.col("xmax").alias("lxmax"), F.col("ymax").alias("lymax"),
+    return _pair_candidates(
+        line_parts_df(lines_df).persist(), polygon_parts_df(polygons_df).persist(), res
     )
-    pb = pparts.select(
-        F.col("key").alias("pkey"), F.col("wkb").alias("wkb_p"),
-        F.col("xmin").alias("pxmin"), F.col("ymin").alias("pymin"),
-        F.col("xmax").alias("pxmax"), F.col("ymax").alias("pymax"),
-    )
-    cand = (
-        pairs.join(la, "lkey").join(pb, "pkey")
-        .filter(
-            (F.col("lxmin") <= F.col("pxmax")) & (F.col("pxmin") <= F.col("lxmax"))
-            & (F.col("lymin") <= F.col("pymax")) & (F.col("pymin") <= F.col("lymax"))
-        )
-        .select("lkey", "pkey", "wkb_l", "wkb_p")
-    )
-    return cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
 
 
 def line_polygon_join(
@@ -989,15 +905,7 @@ def line_polygon_join(
 
     cand = _line_poly_candidates(lines_df, polygons_df, res)
 
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(
-        T.StructType([
-            T.StructField("intersects", T.BooleanType()),
-            T.StructField("within", T.BooleanType()),
-            T.StructField("crosses", T.BooleanType()),
-        ])
-    )
+    @F.pandas_udf("intersects boolean, within boolean, crosses boolean")
     def rel(l_s: pd.Series, p_s: pd.Series) -> pd.DataFrame:
         # one broadcasted evaluation for the whole Arrow batch (identical
         # FP expressions to the scalar kernel — oracle-exact)
@@ -1006,11 +914,11 @@ def line_polygon_join(
             {"intersects": inter, "within": within, "crosses": crosses}
         )
 
-    out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_l"), F.col("wkb_p")))
+    out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
     return (
         out.filter(F.col("r.intersects"))
         .select(
-            "lkey", "pkey",
+            F.col("a").alias("lkey"), F.col("b").alias("pkey"),
             F.col("r.within").alias("within"),
             F.col("r.crosses").alias("crosses"),
         )
@@ -1028,8 +936,6 @@ def line_clip_join(
     pair with a non-empty clip — (lkey, pkey, qclip) where qclip is the
     int64 quantized clipped length (per-interval floor at 1e7, sum —
     aggregation-order-independent, hence oracle-exact)."""
-    from pyspark.sql import types as T
-
     from ..functions.overlay import clip_qlen_batch
 
     cand = _line_poly_candidates(lines_df, polygons_df, res)
@@ -1040,8 +946,10 @@ def line_clip_join(
         # clip_line_polygon's qlen), not a per-pair Python loop
         return pd.Series(clip_qlen_batch(l_s, p_s))
 
-    out = cand.withColumn("qclip", qclip.asNondeterministic()(F.col("wkb_l"), F.col("wkb_p")))
-    return out.filter(F.col("qclip") > 0).select("lkey", "pkey", "qclip")
+    out = cand.withColumn("qclip", qclip.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
+    return out.filter(F.col("qclip") > 0).select(
+        F.col("a").alias("lkey"), F.col("b").alias("pkey"), "qclip"
+    )
 
 
 def nearest_line_join(
@@ -1162,10 +1070,7 @@ def _radius_res(parts: DataFrame, radius: float) -> int:
     heuristic, capped so one cell is never (much) smaller than the radius —
     otherwise the radius-expanded covers grow as (r/cell)^2 per feature."""
     res = _choose_res_dist(parts)
-    if radius > 0:
-        cap = int(math.floor(math.log2(360.0 / radius)))
-        res = min(res, max(1, cap))
-    return res
+    return min(res, _res_for_width(radius)) if radius > 0 else res
 
 
 def geometry_distance_join(
@@ -1189,13 +1094,9 @@ def geometry_distance_join(
 
     Output: (akey, bkey, qdist) with qdist = floor(1e7 * distance), for
     pairs with qdist <= floor(1e7 * radius)."""
-    from ..functions import geometry as geo
     from ..functions.sqlmm import geom_distance_batch
 
     r = float(radius)
-    # qdist <= floor(r*1e7) admits distances up to r + 1e-7; pad the
-    # geometric prunes so the quantization granularity can't drop a pair
-    rp = r + 1e-6
     # eager localCheckpoint, not persist: each side feeds both its cover
     # branch and the WKB re-attach join, and checkpoint blocks are
     # GC-reclaimed instead of pinned in the CacheManager until session end
@@ -1203,35 +1104,9 @@ def geometry_distance_join(
     bparts = geometry_parts_df(b_df).localCheckpoint()
     if res is None:
         res = _radius_res(bparts, r)
-    aexp = aparts.select(
-        "key", "wkb",
-        (F.col("xmin") - rp).alias("xmin"), (F.col("ymin") - rp).alias("ymin"),
-        (F.col("xmax") + rp).alias("xmax"), (F.col("ymax") + rp).alias("ymax"),
-    )
-    acov = polygon_cells_df(aexp, res, classify=False).select(
-        "cell", F.col("pkey").alias("akey"))
-    bcov = polygon_cells_df(bparts, res, classify=False).select(
-        "cell", F.col("pkey").alias("bkey"))
-    pairs = acov.join(bcov, "cell").select("akey", "bkey").distinct()
-    aa = aparts.select(
-        F.col("key").alias("akey"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    )
-    bb = bparts.select(
-        F.col("key").alias("bkey"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(aa, "akey").join(bb, "bkey")
-        .filter(
-            (F.col("axmin") - rp <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax") + rp)
-            & (F.col("aymin") - rp <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax") + rp)
-        )
-        .select("akey", "bkey", "wkb_a", "wkb_b")
-    )
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    # qdist <= floor(r*1e7) admits distances up to r + 1e-7; pad the
+    # geometric prunes so the quantization granularity can't drop a pair
+    cand = _pair_candidates(aparts, bparts, res, pad=r + 1e-6)
     rq = int(np.floor(r * 1e7))
 
     @F.pandas_udf("long")
@@ -1243,7 +1118,9 @@ def geometry_distance_join(
 
     out = cand.withColumn(
         "qdist", qdist.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
-    return out.filter(F.col("qdist") <= F.lit(rq)).select("akey", "bkey", "qdist")
+    return out.filter(F.col("qdist") <= F.lit(rq)).select(
+        F.col("a").alias("akey"), F.col("b").alias("bkey"), "qdist"
+    )
 
 
 def nearest_line_join_dist(
@@ -1276,15 +1153,8 @@ def nearest_line_join_dist(
     lparts = line_parts_df(lines_df, key_col, wkb_col).localCheckpoint()
     if res is None:
         res = _radius_res(lparts, r)
-    lexp = lparts.select(
-        "key", "wkb",
-        (F.col("xmin") - rp).alias("xmin"), (F.col("ymin") - rp).alias("ymin"),
-        (F.col("xmax") + rp).alias("xmax"), (F.col("ymax") + rp).alias("ymax"),
-    )
-    lcov = polygon_cells_df(lexp, res, classify=False).select(
+    lcov = polygon_cells_df(_grown(lparts, rp), res, classify=False).select(
         "cell", F.col("pkey").alias("lkey"))
-
-    from ..functions.spark_exprs import cell_col
 
     pts = points_df.select(
         F.col(id_col).alias("id"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py"),

@@ -252,12 +252,13 @@ def q_spatial_join_agg_oracle():
 
 
 def q_spatial_join_salted(spark, sf_dir):
-    """Same join through the SHUFFLE + hot-cell-salting path (the long-tail
-    strategy for non-broadcastable polygon sets) — same oracle as the
-    broadcast path, proving strategy equivalence at the gate."""
+    """Same join with ``salt=8``: the covering join SHUFFLES on (cell, salt)
+    with every covering cell salted 8 ways (the long-tail path for
+    non-broadcastable polygon sets) — same oracle as the broadcast path,
+    proving the two plans agree at the gate."""
     pts = _events_points(spark, sf_dir)
     polys = _supplier_polygons(spark, sf_dir)
-    return spatial_join(pts, polys, "lon", "lat", strategy="shuffle", salt=8).select(
+    return spatial_join(pts, polys, "lon", "lat", salt=8).select(
         F.col("event_id").alias("pid"), "poly_key"
     )
 
@@ -269,7 +270,7 @@ def q_spatial_join_auto_salt(spark, sf_dir):
     auto-tuned skew path must be value-identical to every other strategy."""
     pts = _events_points(spark, sf_dir)
     polys = _supplier_polygons(spark, sf_dir)
-    return spatial_join(pts, polys, "lon", "lat", strategy="shuffle", salt="auto").select(
+    return spatial_join(pts, polys, "lon", "lat", salt="auto").select(
         F.col("event_id").alias("pid"), "poly_key"
     )
 

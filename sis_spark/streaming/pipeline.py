@@ -33,16 +33,13 @@ def streaming_spatial_join(
     lat_col: str = "lat",
     res: int | None = None,
     poly_key_col: str = "poly_key",
-    interior_skip: bool = True,
 ) -> DataFrame:
     """The flagship spatial join over a streaming source (stateless plan:
     broadcast prefilter + envelope prune + Arrow PIP refine per micro-batch)."""
     if not stream_df.isStreaming:
         raise ValueError("stream_df must be a streaming DataFrame")
     return spatial_join(
-        stream_df, polygons, lon_col, lat_col,
-        res=res, poly_key_col=poly_key_col,
-        strategy="broadcast", interior_skip=interior_skip,
+        stream_df, polygons, lon_col, lat_col, res=res, poly_key_col=poly_key_col,
     )
 
 

@@ -126,7 +126,7 @@ def test_spatial_join_empty_polygons(spark, sf_dir):
     from sis_spark.queries import _events_points
 
     pts = _events_points(spark, sf_dir)
-    out = spatial_join(pts, [], "lon", "lat", strategy="shuffle", salt="auto")
+    out = spatial_join(pts, [], "lon", "lat", salt="auto")
     assert out.count() == 0
     assert "poly_key" in out.columns
 

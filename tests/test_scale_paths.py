@@ -34,11 +34,11 @@ def test_knn_cells_equals_brute(spark, sf_dir):
 def test_hot_cells_sampling(spark, sf_dir):
     from sis_spark.functions import cells as C
     from sis_spark.queries import _events_points
-    from sis_spark.operators.spatial_join import hot_cells
+    from sis_spark.operators.spatial_join import hot_cells_with_counts
     from sis_spark import synth
 
     pts = _events_points(spark, sf_dir)
-    hot = hot_cells(pts, "lon", "lat", res=5, sample_fraction=0.5, threshold=40)
+    hot = hot_cells_with_counts(pts, "lon", "lat", res=5, sample_fraction=0.5, threshold=40)
     assert len(hot) >= 4  # the 8 seeded clusters (some share coarse cells)
     # every detected hot cell contains a seeded hot center
     centers = np.asarray(synth.HOT_CENTERS)

@@ -15,7 +15,7 @@ from sis_spark.functions.spark_exprs import (
     cell_col, point_lonlat_cols, query_lonlat_cols, tile_cols,
 )
 from sis_spark.functions.udfs import cell_udf, tile_udf
-from sis_spark.operators.spatial_join import spatial_join
+from sis_spark.operators.spatial_join import spatial_join, spatial_join_dist
 from sis_spark.operators.knn import knn_join
 from sis_spark.operators.tiling import assign_tiles, tile_counts, pyramid_rollup
 
@@ -58,12 +58,9 @@ def test_tile_expr_jvm_equals_numpy_udf(events):
     assert bad.count() == 0
 
 
-def test_spatial_join_vs_oracle(spark, events, duck):
-    sup_keys = duck.execute("SELECT s_suppkey FROM supplier ORDER BY 1").fetchnumpy()["s_suppkey"]
-    polygons = synth.polygon_table_np(sup_keys)
+def _assert_pip_oracle(joined, duck):
     got = (
-        spatial_join(events, polygons, "lon", "lat")
-        .select(F.col("event_id").alias("pid"), F.col("poly_key"))
+        joined.select(F.col("event_id").alias("pid"), F.col("poly_key"))
         .toPandas()
         .sort_values(["pid", "poly_key"])
         .reset_index(drop=True)
@@ -79,16 +76,66 @@ def test_spatial_join_vs_oracle(spark, events, duck):
     assert len(exp) > 0
 
 
+def test_spatial_join_vs_oracle(spark, events, duck):
+    sup_keys = duck.execute("SELECT s_suppkey FROM supplier ORDER BY 1").fetchnumpy()["s_suppkey"]
+    _assert_pip_oracle(spatial_join(events, synth.polygon_table_np(sup_keys), "lon", "lat"), duck)
+
+
+def test_spatial_join_cover_guard_fallback(spark, events, duck, monkeypatch):
+    """Past MAX_SURE_COVER_ROWS the join drops to the coarse plan (no sure
+    cells, every candidate refined) and still matches the oracle."""
+    from sis_spark.operators import spatial_join as sj
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    sup_keys = duck.execute("SELECT s_suppkey FROM supplier ORDER BY 1").fetchnumpy()["s_suppkey"]
+    polygons = synth.polygon_table_np(sup_keys)
+    assert "Union" in plan(spatial_join(events, polygons, "lon", "lat"))  # sure ∪ refined
+    monkeypatch.setattr(sj, "MAX_SURE_COVER_ROWS", 10)
+    joined = spatial_join(events, polygons, "lon", "lat")
+    assert "Union" not in plan(joined)
+    _assert_pip_oracle(joined, duck)
+
+
+NONFINITE = [float("nan"), float("inf"), float("-inf"), None]
+ANTIMERIDIAN_VX, ANTIMERIDIAN_VY = [160.0, 200.0, 200.0, 160.0], [-10.0, -10.0, 10.0, 10.0]
+JOIN_FORMS = {
+    "broadcast": lambda pts, polys, wkb: spatial_join(pts, polys),
+    "salt4": lambda pts, polys, wkb: spatial_join(pts, polys, salt=4),
+    "salt_auto": lambda pts, polys, wkb: spatial_join(pts, polys, salt="auto"),
+    "dist": lambda pts, polys, wkb: spatial_join_dist(pts, wkb),
+    "dist_compact": lambda pts, polys, wkb: spatial_join_dist(pts, wkb, compact_levels=3),
+}
+
+
+@pytest.mark.parametrize("form", sorted(JOIN_FORMS))
+def test_spatial_join_nonfinite_coordinates(spark, form):
+    """NaN, ±inf and null lon or lat never match, in every join form; the
+    finite controls on both sides of the antimeridian split do."""
+    from sis_spark.functions import geometry as geo
+
+    rows = [(i, bad, 0.0) for i, bad in enumerate(NONFINITE, 1)]
+    rows += [(i, 170.0, bad) for i, bad in enumerate(NONFINITE, 5)]
+    rows += [(9, 170.0, 0.0), (10, -170.0, 5.0)]
+    pts = spark.createDataFrame(rows, "event_id long, lon double, lat double")
+    polys = [{"key": 7, "vx": ANTIMERIDIAN_VX, "vy": ANTIMERIDIAN_VY}]
+    ring = (np.array(ANTIMERIDIAN_VX), np.array(ANTIMERIDIAN_VY))
+    wkb = spark.createDataFrame([(7, bytes(geo.wkb_polygon([ring])))], "key long, wkb binary")
+    got = JOIN_FORMS[form](pts, polys, wkb).select("event_id", "poly_key").collect()
+    assert sorted(map(tuple, got)) == [(9, 7), (10, 7)]
+
+
 def test_spatial_join_shuffle_salted_same_result(spark, events, duck):
     sup_keys = duck.execute("SELECT s_suppkey FROM supplier").fetchnumpy()["s_suppkey"]
     polygons = synth.polygon_table_np(sup_keys)
     a = (
-        spatial_join(events, polygons, "lon", "lat", strategy="broadcast")
+        spatial_join(events, polygons, "lon", "lat")
         .select("event_id", "poly_key").toPandas()
         .sort_values(["event_id", "poly_key"]).reset_index(drop=True)
     )
     b = (
-        spatial_join(events, polygons, "lon", "lat", strategy="shuffle", salt=4)
+        spatial_join(events, polygons, "lon", "lat", salt=4)
         .select("event_id", "poly_key").toPandas()
         .sort_values(["event_id", "poly_key"]).reset_index(drop=True)
     )

@@ -51,29 +51,10 @@ def main():
 
     out = {}
 
-    # ---- polygon pairs: candidates as built inside polygon_pair_join
+    # ---- polygon pairs: the candidates polygon_pair_join refines
     polys = Q._supplier_polygons_df(spark, sf_dir)
     parts = SJ.polygon_parts_df(polys, "key", "wkb").localCheckpoint()
-    res = SJ._choose_res_dist(parts)
-    cov = SJ.polygon_cells_df(parts, res, classify=False).select("cell", "pkey")
-    pairs = (
-        cov.groupBy("cell").agg(F.collect_set("pkey").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids) - i - 1), "
-            "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))")).alias("p"))
-        .select("p.a", "p.b").distinct()
-    )
-    pa = parts.select(F.col("key").alias("a"), F.col("wkb").alias("wkb_a"),
-                      F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-                      F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"))
-    pb = parts.select(F.col("key").alias("b"), F.col("wkb").alias("wkb_b"),
-                      F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-                      F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"))
-    cand = (pairs.join(pa, "a").join(pb, "b")
-            .filter((F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-                    & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))))
+    cand = SJ._pair_candidates(parts)
     A, B = collect_pairs(cand, "wkb_a", "wkb_b", cap)
 
     def pp_scalar():
@@ -90,7 +71,7 @@ def main():
     # ---- line-polygon predicates + clip: the shared candidate set
     lines = Q._gate_lines_df(spark, sf_dir)
     lp_cand = SJ._line_poly_candidates(lines, polys, 3)
-    L, P = collect_pairs(lp_cand, "wkb_l", "wkb_p", cap)
+    L, P = collect_pairs(lp_cand, "wkb_a", "wkb_b", cap)
 
     def lp_scalar():
         for l, p in zip(L, P):
@@ -121,25 +102,9 @@ def main():
     gl = lines.filter(F.col("key") % 3 == 0)
     gp = polys.filter(F.col("key") % 5 == 0)
     r = Q.GEOM_DIST_JOIN_RADIUS
-    rp = r + 1e-6
     aparts = SJ.geometry_parts_df(gl).localCheckpoint()
     bparts = SJ.geometry_parts_df(gp).localCheckpoint()
-    gres = SJ._radius_res(bparts, r)
-    aexp = aparts.select("key", "wkb",
-                         (F.col("xmin") - rp).alias("xmin"), (F.col("ymin") - rp).alias("ymin"),
-                         (F.col("xmax") + rp).alias("xmax"), (F.col("ymax") + rp).alias("ymax"))
-    acov = SJ.polygon_cells_df(aexp, gres, classify=False).select("cell", F.col("pkey").alias("akey"))
-    bcov = SJ.polygon_cells_df(bparts, gres, classify=False).select("cell", F.col("pkey").alias("bkey"))
-    gpairs = acov.join(bcov, "cell").select("akey", "bkey").distinct()
-    aa = aparts.select(F.col("key").alias("akey"), F.col("wkb").alias("wkb_a"),
-                       F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-                       F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"))
-    bb = bparts.select(F.col("key").alias("bkey"), F.col("wkb").alias("wkb_b"),
-                       F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-                       F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"))
-    gcand = (gpairs.join(aa, "akey").join(bb, "bkey")
-             .filter((F.col("axmin") - rp <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax") + rp)
-                     & (F.col("aymin") - rp <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax") + rp)))
+    gcand = SJ._pair_candidates(aparts, bparts, SJ._radius_res(bparts, r), pad=r + 1e-6)
     GA, GB = collect_pairs(gcand, "wkb_a", "wkb_b", cap)
 
     def gd_scalar():
