@@ -29,6 +29,82 @@ import numpy as np
 EARTH_RADIUS_M = 6371008.8  # IUGG mean radius
 
 
+# ---------------------------------------------------------------- edge grids
+#
+# Every exact-geometry kernel (PIP, DE-9IM, clip, distance) is built from
+# the helpers below.  Callers shape the operands (points or segments along
+# one axis, edges along another, padded batch rows along a third) and numpy
+# broadcasts the grid.  Each expression keeps a fixed operand order: the
+# DuckDB oracles in synth.py and queries.py replicate it term for term, so
+# a reordering would change results in the last ulp.
+
+def ring_edges(rings):
+    """Directed edges (vx, vy, wx, wy) of a ring set as flat float64 arrays:
+    each ring closed by its own roll (vertex k -> k+1, last -> first),
+    rings concatenated in order."""
+    xs = [np.asarray(vx, np.float64) for vx, _ in rings]
+    ys = [np.asarray(vy, np.float64) for _, vy in rings]
+    if not xs:
+        e = np.empty(0, np.float64)
+        return e, e, e, e
+    # np.roll(v, -1) per ring, without np.roll's overhead on small rings
+    succ = lambda vs: np.concatenate([np.concatenate((v[1:], v[:1])) for v in vs])
+    return np.concatenate(xs), np.concatenate(ys), succ(xs), succ(ys)
+
+
+def ray_crossings(px, py, vx, vy, wx, wy) -> np.ndarray:
+    """Does the +x ray from (px, py) cross edge (vx, vy) -> (wx, wy)?
+
+    PNPOLY: half-open in y, strict on the intersection abscissa, so a
+    point exactly on an edge follows a deterministic convention, and the
+    crossing parity over a ring set is even-odd membership (holes
+    subtract).  A zero-length edge never crosses."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (wx - vx) * (py - vy) / (wy - vy) + vx
+    return ((vy > py) != (wy > py)) & (px < xint)
+
+
+def proper_crossings(ax, ay, aX, aY, bx, by, bX, bY) -> np.ndarray:
+    """Does segment (ax, ay) -> (aX, aY) properly cross (bx, by) -> (bX, bY)?
+
+    Orientation o(p, q, r) = (qx-px)*(ry-py) - (qy-py)*(rx-px); a proper
+    crossing has strictly opposite orientations on both sides, exact in
+    doubles.  Touching, collinear and zero-length segments never cross."""
+    o1 = (aX - ax) * (by - ay) - (aY - ay) * (bx - ax)
+    o2 = (aX - ax) * (bY - ay) - (aY - ay) * (bX - ax)
+    o3 = (bX - bx) * (ay - by) - (bY - by) * (ax - bx)
+    o4 = (bX - bx) * (aY - by) - (bY - by) * (aX - bx)
+    return (o1 * o2 < 0.0) & (o3 * o4 < 0.0)
+
+
+def segment_params(px, py, rx, ry, qx, qy, sx, sy):
+    """Parameters (t, u) where the lines p + t*r and q + u*s meet:
+    t = (q-p)x s / r x s and u = (q-p)x r / r x s.
+
+    Parallel pairs (r x s == 0) give inf or nan, which fail every bounds
+    test on [0, 1]; callers apply their own open or closed bounds."""
+    denom = rx * sy - ry * sx
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = ((qx - px) * sy - (qy - py) * sx) / denom
+        u = ((qx - px) * ry - (qy - py) * rx) / denom
+    return t, u
+
+
+def grid_chunks(sizes, width: int):
+    """Consecutive (start, stop) slices of items whose ``sizes`` sum to at
+    most 4e6 / ``width``, so each slice's (items x width) broadcast grid
+    stays near 4e6 elements.  A slice always holds at least one item."""
+    lim = max(1, int(4e6 // max(1, width)))
+    c0, n = 0, len(sizes)
+    while c0 < n:
+        c1, acc = c0, 0
+        while c1 < n and (c1 == c0 or acc + sizes[c1] <= lim):
+            acc += sizes[c1]
+            c1 += 1
+        yield c0, c1
+        c0 = c1
+
+
 # ---------------------------------------------------------------- PIP
 
 def points_in_polygon(px: np.ndarray, py: np.ndarray, vx: np.ndarray, vy: np.ndarray) -> np.ndarray:
@@ -38,26 +114,16 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, vx: np.ndarray, vy: np.nda
     Returns bool array.  O(P*V) vectorized; used inside the refine stage
     after the cell-join prefilter has cut candidates.
     """
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    vx = np.asarray(vx, dtype=np.float64)
-    vy = np.asarray(vy, dtype=np.float64)
-    wx = np.roll(vx, -1)
-    wy = np.roll(vy, -1)
-    cross = (vy[None, :] > py) != (wy[None, :] > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (wx - vx)[None, :] * (py - vy[None, :]) / (wy - vy)[None, :] + vx[None, :]
-    hits = cross & (px < xint)
-    return (hits.sum(axis=1) % 2).astype(bool)
+    return points_in_polygon_with_holes(px, py, [(vx, vy)])
 
 
 def points_in_polygon_with_holes(px, py, rings) -> np.ndarray:
     """Even-odd over all rings: a point inside an odd number of rings is inside
     (outer ring + holes follow even-odd naturally)."""
-    acc = np.zeros(len(np.asarray(px)), dtype=np.int64)
-    for vx, vy in rings:
-        acc += points_in_polygon(px, py, vx, vy).astype(np.int64)
-    return (acc % 2).astype(bool)
+    vx, vy, wx, wy = ring_edges(rings)
+    px = np.asarray(px, dtype=np.float64)[:, None]
+    py = np.asarray(py, dtype=np.float64)[:, None]
+    return (ray_crossings(px, py, vx, vy, wx, wy).sum(axis=1) % 2).astype(bool)
 
 
 def pad_polygons(polys_vx, polys_vy, pad_to: int | None = None):
@@ -77,33 +143,13 @@ def pad_polygons(polys_vx, polys_vy, pad_to: int | None = None):
     return VX, VY
 
 
-def _ring_crossings(px2, py2, vx, vy) -> np.ndarray:
-    """Ray-crossing counts of points (column vectors) vs gathered rings (N, K)."""
-    wx = np.roll(vx, -1, axis=1)
-    wy = np.roll(vy, -1, axis=1)
-    cross = (vy > py2) != (wy > py2)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (wx - vx) * (py2 - vy) / (wy - vy) + vx
-    return (cross & (px2 < xint)).sum(axis=1)
-
-
-def points_in_padded_polygons(px, py, gi, VX, VY) -> np.ndarray:
-    """Fully vectorized PIP of point i against polygon gi[i] (padded dense
-    rings).  One (N, K) crossing evaluation — no per-polygon loops; this is
-    the hot kernel of the spatial-join refine."""
-    px2 = np.asarray(px, dtype=np.float64)[:, None]
-    py2 = np.asarray(py, dtype=np.float64)[:, None]
-    hits = _ring_crossings(px2, py2, VX[gi], VY[gi])
-    return (hits % 2).astype(bool)
-
-
 def points_in_padded_rings(px, py, gi, RVX, RVY, ring_start) -> np.ndarray:
-    """Even-odd PIP where polygon gi[i] owns rings
+    """Even-odd PIP where polygon gi[i] owns the padded rings
     RVX[ring_start[gi]:ring_start[gi+1]] (outer ring + holes).  Crossing
     counts are summed across a polygon's rings — a point inside an odd
-    number of rings is inside (holes fall out naturally).  Costs one (N, K)
-    pass per ring ordinal, so hole-free polygon sets pay exactly the
-    points_in_padded_polygons price."""
+    number of rings is inside (holes fall out naturally).  One (N, K)
+    crossing evaluation per ring ordinal and no per-polygon loop: this is
+    the hot kernel of the spatial-join refine."""
     px2 = np.asarray(px, dtype=np.float64)[:, None]
     py2 = np.asarray(py, dtype=np.float64)[:, None]
     gi = np.asarray(gi, dtype=np.int64)
@@ -111,10 +157,10 @@ def points_in_padded_rings(px, py, gi, RVX, RVY, ring_start) -> np.ndarray:
     counts = np.zeros(gi.shape, dtype=np.int64)
     for j in range(int(nr.max()) if nr.size else 0):
         m = nr > j
-        if not m.any():
-            break
         r = ring_start[gi[m]] + j
-        counts[m] += _ring_crossings(px2[m], py2[m], RVX[r], RVY[r])
+        vx, vy = RVX[r], RVY[r]
+        counts[m] += ray_crossings(px2[m], py2[m], vx, vy,
+                                   np.roll(vx, -1, axis=1), np.roll(vy, -1, axis=1)).sum(axis=1)
     return (counts % 2).astype(bool)
 
 
@@ -171,26 +217,6 @@ def segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1) -> np.ndarray:
         t_lo = np.where((pk < 0) & (t > t_lo), t, t_lo)
         t_hi = np.where((pk > 0) & (t < t_hi), t, t_hi)
     return (ok & (t_lo <= t_hi)).any(axis=1)
-
-
-def points_in_many_polygons(px, py, starts, vx, vy):
-    """PIP of N points against M polygons stored as concatenated rings.
-
-    ``starts``: int array of length M+1 — ring i is vx[starts[i]:starts[i+1]].
-    Returns (point_idx, poly_idx) arrays of matches.  Vectorized per polygon;
-    callers prefilter by cell so each batch is small.
-    """
-    p_idx_out = []
-    g_idx_out = []
-    for g in range(len(starts) - 1):
-        s, e = starts[g], starts[g + 1]
-        inside = points_in_polygon(px, py, vx[s:e], vy[s:e])
-        idx = np.nonzero(inside)[0]
-        p_idx_out.append(idx)
-        g_idx_out.append(np.full(idx.shape, g, dtype=np.int64))
-    if not p_idx_out:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    return np.concatenate(p_idx_out), np.concatenate(g_idx_out)
 
 
 # ---------------------------------------------------------------- distance

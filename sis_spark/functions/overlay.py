@@ -32,6 +32,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from . import geometry as geo
 from .sqlmm import shoelace_area
 
 
@@ -207,9 +208,21 @@ def _insert_sorted(edge_start: _Node, node: _Node):
 
 
 def _point_in_ring(x: float, y: float, vx: np.ndarray, vy: np.ndarray) -> bool:
-    from .geometry import points_in_polygon
+    return bool(geo.points_in_polygon(np.array([x]), np.array([y]), vx, vy)[0])
 
-    return bool(points_in_polygon(np.array([x]), np.array([y]), vx, vy)[0])
+
+def _edge_hits(a_edges, b_edges):
+    """Proper intersections between two directed edge sets, both segments
+    open: arrays (i, j, t, u, x, y) row-major over (edge i of a, edge j of
+    b), where (x, y) = a_i + t * (a_i's direction)."""
+    avx, avy, awx, awy = a_edges
+    bvx, bvy, bwx, bwy = b_edges
+    adx, ady = awx - avx, awy - avy
+    t, u = geo.segment_params(avx[:, None], avy[:, None], adx[:, None], ady[:, None],
+                              bvx[None, :], bvy[None, :], bwx - bvx, bwy - bvy)
+    i, j = np.nonzero((t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0))
+    t, u = t[i, j], u[i, j]
+    return i, j, t, u, avx[i] + adx[i] * t, avy[i] + ady[i] * t
 
 
 def overlay(avx, avy, bvx, bvy, op: str):
@@ -231,25 +244,12 @@ def overlay(avx, avy, bvx, bvy, op: str):
     heada = _build_ring(avx, avy)
     headb = _build_ring(bvx, bvy)
 
-    # 1. pairwise edge intersections (vectorized inner loop over B edges)
-    bx1, by1 = bvx, bvy
-    bx2, by2 = np.roll(bvx, -1), np.roll(bvy, -1)
-    a_nodes = [nd for nd in _ring_nodes(heada) if not nd.inter]
-    b_nodes = [nd for nd in _ring_nodes(headb) if not nd.inter]
-    pairs = []  # (a_edge_node, b_edge_node, ax, ay, ta, tb)
-    for ai, na in enumerate(a_nodes):
-        ax1, ay1 = na.x, na.y
-        ax2, ay2 = a_nodes[(ai + 1) % len(a_nodes)].x, a_nodes[(ai + 1) % len(a_nodes)].y
-        rx, ry = ax2 - ax1, ay2 - ay1
-        sx, sy = bx2 - bx1, by2 - by1
-        denom = rx * sy - ry * sx
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = ((bx1 - ax1) * sy - (by1 - ay1) * sx) / denom
-            u = ((bx1 - ax1) * ry - (by1 - ay1) * rx) / denom
-        hit = (denom != 0.0) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
-        for bi in np.nonzero(hit)[0]:
-            pairs.append((na, b_nodes[int(bi)], ax1 + t[bi] * rx, ay1 + t[bi] * ry,
-                          float(t[bi]), float(u[bi])))
+    # 1. pairwise edge intersections, one (A edges x B edges) grid
+    a_nodes = list(_ring_nodes(heada))
+    b_nodes = list(_ring_nodes(headb))
+    hits = _edge_hits(geo.ring_edges([(avx, avy)]), geo.ring_edges([(bvx, bvy)]))
+    pairs = [(a_nodes[i], b_nodes[j], x, y, float(ta), float(tb))
+             for i, j, ta, tb, x, y in zip(*hits)]
 
     if not pairs:  # disjoint or containment
         a_in_b = _point_in_ring(avx[0], avy[0], bvx, bvy)
@@ -391,10 +391,10 @@ def clip_line_polygon(vx, vy, rings, keep_inside=True):
     a shared crossing), and ``qlen`` = int64 sum over kept intervals of
     floor(seg_len * (t_i+1 - t_i) * 1e7) — the order-independent quantized
     length used by the oracle gate."""
-    from . import geometry as geo
-
     vx = np.asarray(vx, np.float64)
     vy = np.asarray(vy, np.float64)
+    e0x, e0y, e1x, e1y = geo.ring_edges(rings)
+    edx, edy = e1x - e0x, e1y - e0y
     pieces: list[tuple[np.ndarray, np.ndarray]] = []
     qlen = np.int64(0)
     cur: list[tuple[float, float]] | None = None
@@ -412,18 +412,8 @@ def clip_line_polygon(vx, vy, rings, keep_inside=True):
     for s in range(len(vx) - 1):
         p0x, p0y = vx[s], vy[s]
         dx, dy = vx[s + 1] - p0x, vy[s + 1] - p0y
-        ts = [0.0, 1.0]
-        for rvx, rvy in rings:
-            e0x, e0y = rvx, rvy
-            e1x, e1y = np.roll(rvx, -1), np.roll(rvy, -1)
-            edx, edy = e1x - e0x, e1y - e0y
-            denom = dx * edy - dy * edx
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t = ((e0x - p0x) * edy - (e0y - p0y) * edx) / denom
-                u = ((e0x - p0x) * dy - (e0y - p0y) * dx) / denom
-            ok = np.isfinite(t) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
-            ts.extend(t[ok].tolist())
-        ts = sorted(ts)
+        t, u = geo.segment_params(p0x, p0y, dx, dy, e0x, e0y, edx, edy)
+        ts = sorted([0.0, 1.0] + t[(t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)].tolist())
         seg_len = np.sqrt(dx * dx + dy * dy)
         for t0, t1 in zip(ts[:-1], ts[1:]):
             if t1 <= t0:
@@ -453,8 +443,6 @@ def st_intersection_line_poly_udf():
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from . import geometry as geo
-
     @F.pandas_udf(T.BinaryType())
     def clip(l_s: pd.Series, p_s: pd.Series) -> pd.Series:
         from ..sources import polygons_from_wkb
@@ -475,29 +463,10 @@ def st_intersection_line_poly_udf():
 
 # ------------------------------------------------- union-of-pieces + ST_Buffer (r2)
 
-def _piece_edges(rings):
-    """Directed edges (vx, vy, wx, wy arrays) of a ring set, closing edges
-    included; rings are used as supplied (orientation matters to the caller)."""
-    evx, evy, ewx, ewy = [], [], [], []
-    for vx, vy in rings:
-        vx = np.asarray(vx, np.float64)
-        vy = np.asarray(vy, np.float64)
-        evx.append(vx)
-        evy.append(vy)
-        ewx.append(np.roll(vx, -1))
-        ewy.append(np.roll(vy, -1))
-    return (np.concatenate(evx), np.concatenate(evy),
-            np.concatenate(ewx), np.concatenate(ewy))
-
-
 def _strictly_inside_even_odd(px, py, rings) -> bool:
     """Even-odd membership at a single point (boundary points are undefined —
     callers only probe generic midpoints, never lattice points)."""
-    inside = False
-    for vx, vy in rings:
-        if _point_in_ring(px, py, np.asarray(vx, float), np.asarray(vy, float)):
-            inside = not inside
-    return inside
+    return bool(geo.points_in_polygon_with_holes(np.array([px]), np.array([py]), rings)[0])
 
 
 def union_pieces(pieces, round_decimals: int = 9):
@@ -524,33 +493,17 @@ def union_pieces(pieces, round_decimals: int = 9):
     Reference operator: ST_Buffer / ST_Union composition
     (F/filter/sqlmm/SQLMM.java:129,:141, delegating to JTS buffer/union).
     """
-    E = [_piece_edges(p) for p in pieces]
+    E = [geo.ring_edges(p) for p in pieces]
     key = lambda x, y: (round(float(x), round_decimals), round(float(y), round_decimals))
     # per (piece, edge) cut lists; each intersection point is computed ONCE
     # and shared by both edges, so the stitch keys are identical floats
     cuts = [[[] for _ in range(len(e[0]))] for e in E]
     for i in range(len(E)):
-        avx, avy, awx, awy = E[i]
         for j in range(i + 1, len(E)):
-            bvx, bvy, bwx, bwy = E[j]
-            # pairwise proper intersections, vectorized over the (n, m) grid
-            adx = (awx - avx)[:, None]
-            ady = (awy - avy)[:, None]
-            bdx = (bwx - bvx)[None, :]
-            bdy = (bwy - bvy)[None, :]
-            den = adx * bdy - ady * bdx
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t = ((bvx[None, :] - avx[:, None]) * bdy
-                     - (bvy[None, :] - avy[:, None]) * bdx) / den
-                u = ((bvx[None, :] - avx[:, None]) * ady
-                     - (bvy[None, :] - avy[:, None]) * adx) / den
-            hit = (den != 0.0) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
-            for ei, ej in zip(*np.nonzero(hit)):
-                tt, uu = float(t[ei, ej]), float(u[ei, ej])
-                x = float(avx[ei] + (awx[ei] - avx[ei]) * tt)
-                y = float(avy[ei] + (awy[ei] - avy[ei]) * tt)
-                cuts[i][ei].append((tt, x, y))
-                cuts[j][ej].append((uu, x, y))
+            for ei, ej, tt, uu, x, y in zip(*_edge_hits(E[i], E[j])):
+                x, y = float(x), float(y)
+                cuts[i][ei].append((float(tt), x, y))
+                cuts[j][ej].append((float(uu), x, y))
     out_edges = []
     for i, (avx, avy, awx, awy) in enumerate(E):
         for ei in range(len(avx)):
@@ -688,31 +641,11 @@ def union_geometries(parsed_geoms):
     return _assemble_rings(union_pieces(pieces))
 
 
-def st_buffer_udf(radius: float, n_seg: int = 24):
-    """ST_Buffer over a WKB column, any geometry type."""
-    from . import geometry as geo
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.BinaryType())
-    def _f(wkb: pd.Series) -> pd.Series:
-        out = []
-        for b in wkb:
-            typ, rings = buffer_geometry(*geo.wkb_parse(bytes(b)), radius, n_seg)
-            out.append(geo.wkb_write(typ, rings) if rings else None)
-        return pd.Series(out)
-
-    return _f
-
-
 def st_union_agg(df, group_col: str = "gid", wkb_col: str = "wkb"):
     """Distributed aggregate ST_Union: one union geometry per group.  The
     shuffle moves only (group, wkb) rows; each group's union is a single
     numpy union_pieces call inside applyInPandas (Statistics-combine
     pattern of S/storage/aggregate applied to geometry)."""
-    from . import geometry as geo
-
     from pyspark.sql import functions as F  # noqa: F401  (plan helpers)
 
     def fn(key, pdf):
@@ -741,8 +674,6 @@ def st_difference_line_poly_udf():
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from . import geometry as geo
-
     @F.pandas_udf(T.BinaryType())
     def fn(l_s: pd.Series, p_s: pd.Series) -> pd.Series:
         from ..sources import polygons_from_wkb
@@ -767,9 +698,8 @@ def line_line_intersection_points(avx, avy, bvx, bvy):
     the remaining cell of the mixed-dimension intersection matrix; collinear
     overlap is out of the general-position scope, as in relate.py).
 
-    Vectorized over the (n_edges_a, n_edges_b) parameter grids — the same
-    crossing expressions as relate._cross_edge_sets, here solved for the
-    parametric point.  Returns (px, py) float64 arrays, deduplicated exactly
+    Vectorized over the (n_edges_a, n_edges_b) grid of
+    geometry.segment_params, open on both segments.  Returns (px, py) float64 arrays, deduplicated exactly
     (a shared crossing computed from adjacent edge pairs yields identical
     IEEE values, so exact dedup suffices)."""
     avx = np.asarray(avx, np.float64); avy = np.asarray(avy, np.float64)
@@ -778,11 +708,8 @@ def line_line_intersection_points(avx, avy, bvx, bvy):
     adx, ady = (avx[1:] - avx[:-1])[:, None], (avy[1:] - avy[:-1])[:, None]
     b0x, b0y = bvx[None, :-1], bvy[None, :-1]
     bdx, bdy = (bvx[1:] - bvx[:-1])[None, :], (bvy[1:] - bvy[:-1])[None, :]
-    denom = adx * bdy - ady * bdx
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((b0x - a0x) * bdy - (b0y - a0y) * bdx) / denom
-        u = ((b0x - a0x) * ady - (b0y - a0y) * adx) / denom
-    ok = np.isfinite(t) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
+    t, u = geo.segment_params(a0x, a0y, adx, ady, b0x, b0y, bdx, bdy)
+    ok = (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
     # mask t before the multiply: inf/nan entries would raise RuntimeWarning
     # in the product even though ok excludes them from the result
     tm = np.where(ok, t, 0.0)
@@ -799,8 +726,6 @@ def st_intersection_line_line_udf():
     crossing points (empty MultiPoint when the lines do not cross)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from . import geometry as geo
 
     @F.pandas_udf(T.BinaryType())
     def fn(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
@@ -828,7 +753,6 @@ def clip_qlen_batch(l_bufs, p_bufs) -> np.ndarray:
     interval lengths per pair.  All FP expressions are the scalar
     kernel's, and the int64 interval sum is order-independent, so the
     result is bit-identical to clip_line_polygon(...)[1] pair by pair."""
-    from . import geometry as geo
     from ..sources import polygons_from_wkb
 
     n = len(l_bufs)
@@ -847,13 +771,8 @@ def clip_qlen_batch(l_bufs, p_bufs) -> np.ndarray:
             (poly,) = polygons_from_wkb([(0, buf)])
             rings = [(poly["vx"], poly["vy"])] + list(poly.get("holes", []))
             pcache[buf] = rings
-        # flat ring edges (per-ring roll closure, the scalar's edge sets)
-        e0x = np.concatenate([np.asarray(r[0], np.float64) for r in rings])
-        e0y = np.concatenate([np.asarray(r[1], np.float64) for r in rings])
-        e1x = np.concatenate([np.roll(np.asarray(r[0], np.float64), -1) for r in rings])
-        e1y = np.concatenate([np.roll(np.asarray(r[1], np.float64), -1) for r in rings])
+        e0x, e0y, e1x, e1y = geo.ring_edges(rings)
         edx, edy = e1x - e0x, e1y - e0y
-        ne = len(e0x)
 
         lines = []
         for i in idxs:
@@ -866,23 +785,13 @@ def clip_qlen_batch(l_bufs, p_bufs) -> np.ndarray:
                                       np.asarray(lvy, np.float64))
             lines.append(ln)
 
-        lim = max(1, int(4e6 // max(ne, 1)))
-        c0 = 0
-        while c0 < len(idxs):
-            c1, acc = c0, 0
-            while c1 < len(idxs) and (c1 == c0
-                                      or acc + len(lines[c1][0]) <= lim):
-                acc += len(lines[c1][0])
-                c1 += 1
+        for c0, c1 in geo.grid_chunks([len(ln[0]) for ln in lines], len(e0x)):
             _clip_qlen_group(lines[c0:c1], idxs[c0:c1],
                              e0x, e0y, edx, edy, rings, out)
-            c0 = c1
     return out
 
 
 def _clip_qlen_group(lines, idxs, e0x, e0y, edx, edy, rings, out):
-    from . import geometry as geo
-
     # flatten segments with owner pair-index
     p0x, p0y, dx, dy, owner = [], [], [], [], []
     for j, (lvx, lvy) in enumerate(lines):
@@ -898,14 +807,10 @@ def _clip_qlen_group(lines, idxs, e0x, e0y, edx, edy, rings, out):
     owner = np.concatenate(owner)
     S = len(p0x)
 
-    # crossing parameters, the scalar expressions elementwise on the grid
-    denom = dx[:, None] * edy[None, :] - dy[:, None] * edx[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((e0x[None, :] - p0x[:, None]) * edy[None, :]
-             - (e0y[None, :] - p0y[:, None]) * edx[None, :]) / denom
-        u = ((e0x[None, :] - p0x[:, None]) * dy[:, None]
-             - (e0y[None, :] - p0y[:, None]) * dx[:, None]) / denom
-    ok = np.isfinite(t) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
+    # crossing parameters, the scalar kernel's on a (segments x edges) grid
+    t, u = geo.segment_params(p0x[:, None], p0y[:, None], dx[:, None], dy[:, None],
+                              e0x, e0y, edx, edy)
+    ok = (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
 
     # per-segment sorted parameter runs [0, crossings..., 1]
     kk = ok.sum(axis=1)

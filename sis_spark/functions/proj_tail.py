@@ -145,15 +145,25 @@ class CylindricalEqualArea:
             phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
             return np.degrees(lam) + self.lon0, np.degrees(phi)
         e, e2 = self.e, self.e2
-        # authalic -> geodetic, the same fixed-point LAEA.inverse uses
-        phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
+        # authalic -> geodetic by LAEA.inverse's Newton step, started from
+        # the authalic latitude asin(q/qp): near the pole q'(phi) -> 0 and
+        # a start at asin(q/2) only halves the error per step, while this
+        # one is within a factor 1 + O(e2) of the answer.  |q| within the
+        # rounding of the forward/inverse scaling of qp is the pole itself,
+        # where the step would divide by cos(phi) ~ 0.
+        pole = np.abs(q) >= self.qp - 4.0 * np.spacing(self.qp)
+        phi = np.arcsin(np.clip(q / self.qp, -1.0, 1.0))
         for _ in range(12):
             s = np.sin(phi)
-            phi = phi + (1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi)) * (
+            step = np.where(pole, 0.0, (1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi)) * (
                 q / (1.0 - e2)
                 - s / (1.0 - e2 * s * s)
                 + (1.0 / (2.0 * e)) * np.log((1.0 - e * s) / (1.0 + e * s))
-            )
+            ))
+            phi = phi + step
+            if not (np.abs(step) > 1e-15).any():
+                break
+        phi = np.where(pole, np.copysign(np.pi / 2.0, q), phi)
         return np.degrees(lam) + self.lon0, np.degrees(phi)
 
 
@@ -762,8 +772,9 @@ class ZonedTransverseMercator:
 
             a, f = self.ellipsoid
             lon0 = self.initial_lon + (zone - 0.5) * self.zone_width
+            # f == 0 is a sphere: inverse flattening infinity
             tm = self._tms[zone] = TransverseMercator(
-                0.0, lon0, self.k0, self.fe, self.fn, (a, 1.0 / f))
+                0.0, lon0, self.k0, self.fe, self.fn, (a, 1.0 / f if f else np.inf))
         return tm
 
     def zone_of(self, lon):

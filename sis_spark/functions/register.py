@@ -77,7 +77,7 @@ def _st_envelope_wkb_udf():
 
 def _st_buffer_param_udf(n_seg: int = 24):
     """ST_Buffer(geom, radius) with the radius as a SQL argument
-    (SQLMM.java:129 signature — the factory variant bakes it in)."""
+    (SQLMM.java:129 signature)."""
     from .overlay import buffer_geometry
 
     @F.pandas_udf(T.BinaryType())

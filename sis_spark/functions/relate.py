@@ -23,8 +23,11 @@ model:
 * CROSSES is False for area/area pairs by the DE-9IM definition
   (dim(I(a)∩I(b)) must be LESS than both operand dimensions).
 
-All kernels are numpy; ``st_relate_pair_udf`` / ``st_predicate_pair_udf``
-batch them per Arrow block over WKB columns.
+All kernels are numpy, built on the edge-grid helpers of functions/geometry
+(``ray_crossings``, ``proper_crossings``, ``ring_edges``).  The SQL surface
+(``st_predicate_any_udf`` / ``st_relate_any_udf``) dispatches every simple
+operand pair to them; the joins refine whole Arrow batches with the
+``*_batch`` kernels at the end of this module.
 """
 
 from __future__ import annotations
@@ -37,38 +40,17 @@ import pandas as pd
 from . import geometry as geo
 
 
-def _edges(vx: np.ndarray, vy: np.ndarray):
-    return vx, vy, np.roll(vx, -1), np.roll(vy, -1)
-
-
 def _open_edges(vx: np.ndarray, vy: np.ndarray):
     """Edges of an OPEN polyline: consecutive pairs, no closing edge."""
     return vx[:-1], vy[:-1], vx[1:], vy[1:]
 
 
 def _cross_edge_sets(a_edges, b_edges) -> bool:
-    """True iff any edge of set a properly crosses any edge of set b.
-
-    Orientation o(p,q,r) = (qx-px)*(ry-py) - (qy-py)*(rx-px); a proper
-    crossing has strictly opposite orientations on both sides — identical
-    FP expression order as the SQL oracle (synth.polygon_pair_oracle_sql)."""
-    ax, ay, aX, aY = (np.asarray(v, float) for v in a_edges)
-    bx, by, bX, bY = (np.asarray(v, float) for v in b_edges)
-    # (n, m) orientation grids
-    ax_, ay_, aX_, aY_ = ax[:, None], ay[:, None], aX[:, None], aY[:, None]
-    o1 = (aX_ - ax_) * (by[None, :] - ay_) - (aY_ - ay_) * (bx[None, :] - ax_)
-    o2 = (aX_ - ax_) * (bY[None, :] - ay_) - (aY_ - ay_) * (bX[None, :] - ax_)
-    o3 = (bX - bx)[None, :] * (ay_ - by[None, :]) - (bY - by)[None, :] * (ax_ - bx[None, :])
-    o4 = (bX - bx)[None, :] * (aY_ - by[None, :]) - (bY - by)[None, :] * (aX_ - bx[None, :])
-    return bool(((o1 * o2 < 0.0) & (o3 * o4 < 0.0)).any())
-
-
-def any_proper_cross(avx, avy, bvx, bvy) -> bool:
-    """Ring-vs-ring proper crossing (closed edge sets)."""
-    return _cross_edge_sets(
-        _edges(np.asarray(avx, float), np.asarray(avy, float)),
-        _edges(np.asarray(bvx, float), np.asarray(bvy, float)),
-    )
+    """True iff any edge of set a properly crosses any edge of set b
+    (geometry.proper_crossings over the (n, m) edge grid)."""
+    ax, ay, aX, aY = (np.asarray(v, float)[:, None] for v in a_edges)
+    bx, by, bX, bY = (np.asarray(v, float)[None, :] for v in b_edges)
+    return bool(geo.proper_crossings(ax, ay, aX, aY, bx, by, bX, bY).any())
 
 
 def _rings_of(part: dict):
@@ -107,14 +89,7 @@ def _rings_equal(a: dict, b: dict) -> bool:
 def relate_flags(a: dict, b: dict) -> dict:
     """Primitive flags for one polygon pair (dicts in polygons_from_wkb
     shape: vx/vy/holes)."""
-    cross = False
-    for rvx, rvy in _rings_of(a):
-        for svx, svy in _rings_of(b):
-            if any_proper_cross(rvx, rvy, svx, svy):
-                cross = True
-                break
-        if cross:
-            break
+    cross = _cross_edge_sets(geo.ring_edges(_rings_of(a)), geo.ring_edges(_rings_of(b)))
     a_in_b = _verts_in(a, b)
     b_in_a = _verts_in(b, a)
     # hole violation for containment: a hole-ring vertex of the would-be
@@ -182,35 +157,6 @@ def relate_polygons_wkb(a_buf: bytes, b_buf: bytes) -> dict:
     return out
 
 
-def st_predicate_pair_udf(name: str):
-    """Scalar Arrow UDF (wkb_a, wkb_b) -> boolean for a named predicate
-    (ST_Intersects/ST_Contains/ST_Within/ST_Overlaps/ST_Equals/ST_Disjoint/
-    ST_Touches/ST_Crosses on polygon pairs, SQLMM.java:165-231)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    key = name.lower().replace("st_", "")
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        return pd.Series(relate_polygons_pred_batch(a_s, b_s)[key])
-
-    return pred
-
-
-def st_relate_pair_udf():
-    """Scalar Arrow UDF (wkb_a, wkb_b) -> DE-9IM pattern string
-    (ST_Relate on polygon pairs, SQLMM.java:177)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.StringType())
-    def rel(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        return pd.Series(relate_polygons_pred_batch(a_s, b_s)["pattern"])
-
-    return rel
-
-
 # ------------------------------------------------- line operands (r2, cont.)
 #
 # Line-vs-polygon and line-vs-line DE-9IM under the same general-position
@@ -224,11 +170,8 @@ def st_relate_pair_udf():
 
 def line_polygon_flags(vx: np.ndarray, vy: np.ndarray, poly: dict) -> dict:
     """Primitive flags for one (polyline, polygon) pair."""
-    a_edges = _open_edges(np.asarray(vx, float), np.asarray(vy, float))
-    cross = any(
-        _cross_edge_sets(a_edges, _edges(np.asarray(rvx, float), np.asarray(rvy, float)))
-        for rvx, rvy in _rings_of(poly)
-    )
+    cross = _cross_edge_sets(_open_edges(np.asarray(vx, float), np.asarray(vy, float)),
+                             geo.ring_edges(_rings_of(poly)))
     inside = geo.points_in_polygon_with_holes(vx, vy, _rings_of(poly))
     return {"cross": cross, "any_in": bool(inside.any()), "all_in": bool(inside.all())}
 
@@ -297,39 +240,6 @@ def relate_lines_wkb(a_buf: bytes, b_buf: bytes) -> dict:
     if ta != "linestring" or tb != "linestring":
         raise ValueError("both operands must be LineStrings")
     return line_line_predicates(line_line_flags(va[0], va[1], vb[0], vb[1]))
-
-
-def st_predicate_line_poly_udf(name: str):
-    """Scalar Arrow UDF (line_wkb, poly_wkb) -> boolean for a named
-    mixed-dimension predicate."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    key = name.lower().replace("st_", "")
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [relate_line_polygon_wkb(bytes(a), bytes(b))[key] for a, b in zip(a_s, b_s)]
-        )
-
-    return pred
-
-
-def st_predicate_line_line_udf(name: str):
-    """Scalar Arrow UDF (wkb_a, wkb_b) -> boolean for a line-line predicate."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    key = name.lower().replace("st_", "")
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [relate_lines_wkb(bytes(a), bytes(b))[key] for a, b in zip(a_s, b_s)]
-        )
-
-    return pred
 
 
 # ------------------------------------------------ any-type dispatch (SQL surface)
@@ -588,8 +498,8 @@ def st_relate_any_udf():
 # The joins' refine stages (operators/spatial_join.line_polygon_join,
 # polygon_pair_join &c.) must not loop Python per candidate pair: these
 # kernels evaluate a whole Arrow batch of WKB pairs with padded numpy grids
-# using the IDENTICAL per-element FP expressions as the scalar kernels above
-# (orientation products, even-odd xint) so results stay oracle-exact — the
+# of the same geometry.ray_crossings / proper_crossings helpers the scalar
+# kernels above use, so results stay oracle-exact — the
 # reference's own batch-array discipline (R/referencing/operation/transform/
 # AbstractMathTransform.java:436 transform(double[], ...)).
 #
@@ -614,13 +524,7 @@ def _poly_arrays(p: dict) -> dict:
     ``_n_outer`` = outer-ring vertex count.  Edge k runs (_pvx[k], _pvy[k])
     -> (_pwx[k], _pwy[k]); the vertex list and edge-start list coincide."""
     if "_pvx" not in p:
-        rings = [(np.asarray(p["vx"], float), np.asarray(p["vy"], float))]
-        rings += [(np.asarray(hx, float), np.asarray(hy, float))
-                  for hx, hy in p.get("holes", [])]
-        p["_pvx"] = np.concatenate([vx for vx, _ in rings])
-        p["_pvy"] = np.concatenate([vy for _, vy in rings])
-        p["_pwx"] = np.concatenate([np.roll(vx, -1) for vx, _ in rings])
-        p["_pwy"] = np.concatenate([np.roll(vy, -1) for _, vy in rings])
+        p["_pvx"], p["_pvy"], p["_pwx"], p["_pwy"] = geo.ring_edges(_rings_of(p))
         p["_n_outer"] = len(p["vx"])
     return p
 
@@ -645,30 +549,19 @@ def _pad_poly_block(parsed, idx, Em):
 
 def _members_grid(PX, PY, EVX, EVY, EWX, EWY):
     """(rows, P) even-odd membership of padded point rows against padded
-    edge-set rows (rows, E) — geometry.points_in_polygon's expressions,
-    parity summed over ALL rings' edges so holes subtract."""
-    px = PX[:, :, None]; py = PY[:, :, None]
-    vx = EVX[:, None, :]; vy = EVY[:, None, :]
-    wx = EWX[:, None, :]; wy = EWY[:, None, :]
-    crossed = (vy > py) != (wy > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (wx - vx) * (py - vy) / (wy - vy) + vx
-    hits = crossed & (px < xint)
+    edge-set rows (rows, E), parity summed over ALL rings' edges so holes
+    subtract."""
+    hits = geo.ray_crossings(PX[:, :, None], PY[:, :, None], EVX[:, None, :],
+                             EVY[:, None, :], EWX[:, None, :], EWY[:, None, :])
     return (hits.sum(axis=2) % 2).astype(bool)
 
 
 def _cross_grid(AVX, AVY, AWX, AWY, BVX, BVY, BWX, BWY):
-    """(rows,) any-proper-crossing between two padded edge-set rows —
-    _cross_edge_sets' orientation-product expressions on a 3-D grid."""
-    ax = AVX[:, :, None]; ay = AVY[:, :, None]
-    aX = AWX[:, :, None]; aY = AWY[:, :, None]
-    bx = BVX[:, None, :]; by = BVY[:, None, :]
-    bX = BWX[:, None, :]; bY = BWY[:, None, :]
-    o1 = (aX - ax) * (by - ay) - (aY - ay) * (bx - ax)
-    o2 = (aX - ax) * (bY - ay) - (aY - ay) * (bX - ax)
-    o3 = (bX - bx) * (ay - by) - (bY - by) * (ax - bx)
-    o4 = (bX - bx) * (aY - by) - (bY - by) * (aX - bx)
-    return ((o1 * o2 < 0.0) & (o3 * o4 < 0.0)).any(axis=(1, 2))
+    """(rows,) any-proper-crossing between two padded edge-set rows."""
+    return geo.proper_crossings(
+        AVX[:, :, None], AVY[:, :, None], AWX[:, :, None], AWY[:, :, None],
+        BVX[:, None, :], BVY[:, None, :], BWX[:, None, :], BWY[:, None, :],
+    ).any(axis=(1, 2))
 
 
 def line_polygon_flags_batch(LVX, LVY, EVX, EVY, EWX, EWY):
@@ -714,10 +607,8 @@ def line_polygon_relate_batch(l_bufs, p_bufs):
 
     Lmax = max(len(lvx) for lvx, _ in l_parsed)
     Em = max(len(p["_pvx"]) for p in p_parsed)
-    # bound the (chunk, L, E) broadcast to ~4e6 elements per array
-    chunk_rows = max(1, int(4e6 // max(1, Lmax * Em)))
-    for c0 in range(0, B, chunk_rows):
-        idx = list(range(c0, min(c0 + chunk_rows, B)))
+    for c0, c1 in geo.grid_chunks([1] * B, Lmax * Em):
+        idx = list(range(c0, c1))
         nb = len(idx)
         LVX = np.empty((nb, Lmax)); LVY = np.empty((nb, Lmax))
         for r, i in enumerate(idx):
@@ -732,23 +623,6 @@ def line_polygon_relate_batch(l_bufs, p_bufs):
         within[bi] = ~cr & all_in & any_in
         crosses[bi] = cr
     return intersects, within, crosses
-
-
-def polygon_pair_flags_batch(AVX, AVY, BVX, BVY):
-    """Hole-free compatibility kernel: (rows, Am) x (rows, Bm) padded outer
-    rings (roll-closure) -> (cross, any_ab, all_ab, any_ba, all_ba).
-
-    Kept for callers/tests that pre-pad plain rings; the WKB entry point
-    (relate_polygons_pred_batch) uses the all-ring edge-list path."""
-    AVX = np.asarray(AVX, float); AVY = np.asarray(AVY, float)
-    BVX = np.asarray(BVX, float); BVY = np.asarray(BVY, float)
-    AWX = np.roll(AVX, -1, axis=1); AWY = np.roll(AVY, -1, axis=1)
-    BWX = np.roll(BVX, -1, axis=1); BWY = np.roll(BVY, -1, axis=1)
-    in_ab = _members_grid(AVX, AVY, BVX, BVY, BWX, BWY)
-    in_ba = _members_grid(BVX, BVY, AVX, AVY, AWX, AWY)
-    cross = _cross_grid(AVX, AVY, AWX, AWY, BVX, BVY, BWX, BWY)
-    return (cross, in_ab.any(axis=1), in_ab.all(axis=1),
-            in_ba.any(axis=1), in_ba.all(axis=1))
 
 
 def relate_polygons_pred_batch(a_bufs, b_bufs):
@@ -796,9 +670,8 @@ def relate_polygons_pred_batch(a_bufs, b_bufs):
     if B:
         Am = max(len(p["_pvx"]) for p in pa)
         Bm = max(len(p["_pvx"]) for p in pb)
-        chunk_rows = max(1, int(4e6 // max(1, Am * Bm)))
-        for c0 in range(0, B, chunk_rows):
-            idx = list(range(c0, min(c0 + chunk_rows, B)))
+        for c0, c1 in geo.grid_chunks([1] * B, Am * Bm):
+            idx = list(range(c0, c1))
             AVX, AVY, AWX, AWY, AHM = _pad_poly_block(pa, idx, Am)
             BVX, BVY, BWX, BWY, BHM = _pad_poly_block(pb, idx, Bm)
             in_ab = _members_grid(AVX, AVY, BVX, BVY, BWX, BWY)  # (nb, Am)

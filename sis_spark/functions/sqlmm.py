@@ -292,15 +292,9 @@ def is_simple_ring(vx: np.ndarray, vy: np.ndarray) -> bool:
     i, j = np.triu_indices(n, k=2)
     adj = (i == 0) & (j == n - 1)  # first and last edge are adjacent too
     i, j = i[~adj], j[~adj]
-    p1x, p1y, p2x, p2y = vx[i], vy[i], wx[i], wy[i]
-    q1x, q1y, q2x, q2y = vx[j], vy[j], wx[j], wy[j]
-    r_x, r_y = p2x - p1x, p2y - p1y
-    s_x, s_y = q2x - q1x, q2y - q1y
-    denom = r_x * s_y - r_y * s_x
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((q1x - p1x) * s_y - (q1y - p1y) * s_x) / denom
-        u = ((q1x - p1x) * r_y - (q1y - p1y) * r_x) / denom
-    hit = (denom != 0) & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
+    t, u = geo.segment_params(vx[i], vy[i], wx[i] - vx[i], wy[i] - vy[i],
+                              vx[j], vy[j], wx[j] - vx[j], wy[j] - vy[j])
+    hit = (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
     return not bool(hit.any())
 
 
@@ -588,25 +582,6 @@ def st_overlay_udf(op: str):
     return _f
 
 
-def st_overlay_area_udf(op: str):
-    """Area of the boolean combination of two polygon WKB columns (the
-    measure form of ST_Intersection/Union/Difference — rings_area over the
-    Greiner–Hormann result)."""
-    from . import overlay as ov
-
-    @F.pandas_udf(T.DoubleType())
-    def _f(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(wa, wb):
-            _, va = geo.wkb_parse(bytes(ba))
-            _, vb = geo.wkb_parse(bytes(bb))
-            rings = ov.overlay(va[0][0], va[0][1], vb[0][0], vb[0][1], op)
-            out.append(ov.rings_area(rings))
-        return pd.Series(out)
-
-    return _f
-
-
 def point_on_ring(px, py, vx: np.ndarray, vy: np.ndarray) -> np.ndarray:
     """Exact point-on-boundary test: collinear (cross == 0) and within the
     edge's closed bounding segment.  Vectorized points x edges."""
@@ -638,16 +613,6 @@ def relate_point_polygon(px, py, vx: np.ndarray, vy: np.ndarray) -> list[str]:
         RELATE_POINT_ON_BOUNDARY if b else (RELATE_POINT_IN_POLYGON if i else RELATE_POINT_OUTSIDE)
         for b, i in zip(on_b, inside)
     ]
-
-
-def st_relate_point_udf(vx: np.ndarray, vy: np.ndarray):
-    """ST_Relate(point column, polygon literal) -> DE-9IM pattern string."""
-
-    @F.pandas_udf(T.StringType())
-    def _f(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(relate_point_polygon(x.to_numpy(), y.to_numpy(), vx, vy))
-
-    return _f
 
 
 def st_contains_point_udf(vx: np.ndarray, vy: np.ndarray):
@@ -1177,53 +1142,22 @@ def geom_distance(a, b) -> float:
 
 
 def _flat_ring_edges(polys):
-    """All ring edges of a decomposed geometry's polygons as flat arrays,
-    with per-polygon edge offsets: (vx, vy, wx, wy, poly_offsets).  Edges
-    are the roll-closure of each ring — identical values to the per-ring
-    np.roll the scalar PIP uses."""
-    evx, evy, ewx, ewy, offs = [], [], [], [], []
-    n = 0
-    for rings in polys:
-        offs.append(n)
-        for rvx, rvy in rings:
-            rvx = np.asarray(rvx, np.float64)
-            rvy = np.asarray(rvy, np.float64)
-            evx.append(rvx); evy.append(rvy)
-            ewx.append(np.roll(rvx, -1)); ewy.append(np.roll(rvy, -1))
-            n += len(rvx)
-    cat = lambda a: (np.concatenate(a) if a else np.empty(0, np.float64))
-    return cat(evx), cat(evy), cat(ewx), cat(ewy), np.asarray(offs, np.int64)
+    """All ring edges of a decomposed geometry's polygons as flat arrays
+    (geometry.ring_edges), with per-polygon edge offsets:
+    (vx, vy, wx, wy, poly_offsets)."""
+    counts = [sum(len(rvx) for rvx, _ in rings) for rings in polys]
+    offs = np.cumsum([0] + counts, dtype=np.int64)[:-1]
+    return (*geo.ring_edges([r for rings in polys for r in rings]), offs)
 
 
 def _pip_parity_grid(px, py, evx, evy, ewx, ewy):
-    """Crossing counts of each point's +x ray against each edge —
-    the points_in_polygon FP expressions, returned UN-reduced as an
-    int64 (n_points, n_edges) grid so callers can reduceat per polygon
-    (parity of the segment sum == sum of per-ring parities mod 2)."""
+    """Crossing counts of each point's +x ray against each edge, returned
+    UN-reduced as an int64 (n_points, n_edges) grid so callers can
+    reduceat per polygon (parity of the segment sum == sum of per-ring
+    parities mod 2)."""
     px = np.asarray(px, np.float64)[:, None]
     py = np.asarray(py, np.float64)[:, None]
-    vx = np.asarray(evx, np.float64)[None, :]
-    vy = np.asarray(evy, np.float64)[None, :]
-    wx = np.asarray(ewx, np.float64)[None, :]
-    wy = np.asarray(ewy, np.float64)[None, :]
-    crossed = (vy > py) != (wy > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (wx - vx) * (py - vy) / (wy - vy) + vx
-    return (crossed & (px < xint)).astype(np.int64)
-
-
-def _seg_cross_any_grid(A, sbx, sby, sbX, sbY):
-    """(n_a_segs, n_b_segs) proper-crossing bool grid between A's segment
-    set and flat B segments — relate._cross_edge_sets expressions."""
-    ax = A["svx"][:, None]; ay = A["svy"][:, None]
-    aX = A["swx"][:, None]; aY = A["swy"][:, None]
-    bx = sbx[None, :]; by = sby[None, :]
-    bX = sbX[None, :]; bY = sbY[None, :]
-    o1 = (aX - ax) * (by - ay) - (aY - ay) * (bx - ax)
-    o2 = (aX - ax) * (bY - ay) - (aY - ay) * (bX - ax)
-    o3 = (bX - bx) * (ay - by) - (bY - by) * (ax - bx)
-    o4 = (bX - bx) * (aY - by) - (bY - by) * (aX - bx)
-    return (o1 * o2 < 0.0) & (o3 * o4 < 0.0)
+    return geo.ray_crossings(px, py, evx, evy, ewx, ewy).astype(np.int64)
 
 
 def _reduceat_min(vals, counts):
@@ -1286,22 +1220,10 @@ def geom_distance_batch(a_bufs, b_bufs):
                                        geo.wkb_parse(bbufs[i]))
             continue
         Bs = [dec(bbufs[i]) for i in idxs]
-        # chunk so every grid stays ~4e6 elements
         per_b = [max(len(b["px"]), len(b["svx"]), len(b["_redges"][0]), 1)
                  for b in Bs]
-        wide = max(ka, nsa, 1)
-        lim = max(1, int(4e6 // wide))
-        c0 = 0
-        while c0 < len(idxs):
-            c1, acc = c0, 0
-            while c1 < len(idxs) and (c1 == c0 or acc + per_b[c1] <= lim):
-                acc += per_b[c1]
-                c1 += 1
-            sel = list(range(c0, c1))
-            _geom_distance_group(A, [Bs[j] for j in sel],
-                                 [idxs[j] for j in sel], out,
-                                 abufs, bbufs)
-            c0 = c1
+        for c0, c1 in geo.grid_chunks(per_b, max(ka, nsa)):
+            _geom_distance_group(A, Bs[c0:c1], idxs[c0:c1], out, abufs, bbufs)
     return out
 
 
@@ -1366,7 +1288,9 @@ def _geom_distance_group(A, Bs, idxs, out, abufs, bbufs):
 
     # proper segment crossing
     if nsa and len(SBvx):
-        cr = _seg_cross_any_grid(A, SBvx, SBvy, SBwx, SBwy).any(axis=0)
+        cr = geo.proper_crossings(
+            A["svx"][:, None], A["svy"][:, None], A["swx"][:, None], A["swy"][:, None],
+            SBvx, SBvy, SBwx, SBwy).any(axis=0)
         zero |= _reduceat_any(cr, nsb)
 
     best = np.full(m, np.inf)

@@ -29,10 +29,6 @@ TILE = 256
 
 # ---------------------------------------------------------------- affine
 
-def affine_identity() -> tuple:
-    return (1.0, 0.0, 0.0, 0.0, 1.0, 0.0)
-
-
 def affine_apply(a: tuple, x: np.ndarray, y: np.ndarray):
     """(x,y) -> (a0*x + a1*y + a2, a3*x + a4*y + a5)."""
     x = np.asarray(x, dtype=np.float64)

@@ -8,13 +8,11 @@ all math is numpy.  No per-row Python anywhere (input_hint mandate).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import cells as _cells
-from . import geometry as _geo
 from . import transforms as _tr
 
 
@@ -46,28 +44,3 @@ def tile_udf(zoom: int):
         return pd.DataFrame({"tx": tx, "ty": ty})
 
     return _tile
-
-
-def mercator_udf():
-    schema = T.StructType(
-        [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
-    )
-
-    @F.pandas_udf(schema)
-    def _merc(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = _tr.mercator_forward(lon.to_numpy(), lat.to_numpy())
-        return pd.DataFrame({"x": x, "y": y})
-
-    return _merc
-
-
-def haversine_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _hav(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-        return pd.Series(
-            _geo.haversine_m(
-                lon1.to_numpy(), lat1.to_numpy(), lon2.to_numpy(), lat2.to_numpy()
-            )
-        )
-
-    return _hav

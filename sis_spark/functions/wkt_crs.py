@@ -376,11 +376,6 @@ def crs_from_wkt(text: str, prefer_id: bool = True):
     raise ValueError(f"unsupported projection method {method!r}")
 
 
-def read_prj(path: str):
-    with open(path, "r") as f:
-        return crs_from_wkt(f.read())
-
-
 def crs_code_of(text: str) -> str | None:
     """WKT text -> its authority code ('EPSG:nnnn') if declared, else None.
     The identifier string GridGeometry carries (the stores' readPRJ

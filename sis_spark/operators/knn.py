@@ -36,6 +36,12 @@ from ..functions.spark_exprs import haversine_col
 #: fine the join resolution is (VERDICT r3 item 3 — bounded driver memory).
 SEED_RES_CAP = 8
 
+#: knn_join_cells runs at most MAX_ITERATIONS ring-doubling rounds; queries
+#: whose ring would exceed RING_CAP (~(2*64+1)^2 cells) or that are still
+#: pending after the last round go to the exact brute plan.
+MAX_ITERATIONS = 8
+RING_CAP = 64
+
 
 def _seed_sat(hist_ix, hist_iy, hist_cnt, nh: int) -> np.ndarray:
     """Dense (nh+1, nh+1) summed-area table over the coarse cell histogram:
@@ -128,9 +134,10 @@ def knn_join(
     )
 
 
-def _ring_bound_m(qlon: float, qlat: float, res: int, ring: int) -> float:
-    """Lower bound on the haversine distance from (qlon, qlat) to any point
-    OUTSIDE its Chebyshev-`ring` cell neighborhood at resolution ``res``.
+def _ring_bound_m_np(qlon: np.ndarray, qlat: np.ndarray, res: int, ring: np.ndarray) -> np.ndarray:
+    """Lower bound on the haversine distance from each query (qlon, qlat)
+    to any point OUTSIDE its Chebyshev-``ring`` cell neighborhood at
+    resolution ``res``, vectorized over query arrays.
 
     y-separation: the nearest uncovered row starts `ring` rows away — the
     latitude gap to that boundary bounds d >= R * dphi.  x-separation: a
@@ -138,41 +145,6 @@ def _ring_bound_m(qlon: float, qlat: float, res: int, ring: int) -> float:
     h >= cos^2(phi_max) sin^2(dlam/2) bounds d (phi_max = band's extreme
     latitude).  Wrap/clamp: a side that reaches the globe edge contributes
     no uncovered region (bound = +inf on that side)."""
-    import math
-
-    from ..functions.cells import lonlat_to_ixiy
-    from ..functions.geometry import EARTH_RADIUS_M
-
-    n = 1 << res
-    cellw = 360.0 / n
-    cellh = 180.0 / n
-    ix, iy = lonlat_to_ixiy(np.array([qlon]), np.array([qlat]), res)
-    ix, iy = int(ix[0]), int(iy[0])
-    bounds = []
-    # vertical: covered rows [iy-ring, iy+ring]
-    lo_row, hi_row = iy - ring, iy + ring
-    if lo_row > 0:  # uncovered region below
-        lat_edge = lo_row * cellh - 90.0
-        bounds.append(EARTH_RADIUS_M * math.radians(qlat - lat_edge))
-    if hi_row < n - 1:  # uncovered above
-        lat_edge = (hi_row + 1) * cellh - 90.0
-        bounds.append(EARTH_RADIUS_M * math.radians(lat_edge - qlat))
-    # horizontal: covered cols [ix-ring, ix+ring] (mod n)
-    if 2 * ring + 1 < n:
-        lon_lo = (ix - ring) * cellw - 180.0
-        lon_hi = (ix + ring + 1) * cellw - 180.0
-        dlam = math.radians(min((qlon - lon_lo) % 360.0, (lon_hi - qlon) % 360.0))
-        band_lo = max(lo_row, 0) * cellh - 90.0
-        band_hi = (min(hi_row, n - 1) + 1) * cellh - 90.0
-        phi_max = max(abs(band_lo), abs(band_hi))
-        cosb = math.cos(math.radians(min(phi_max, 90.0)))
-        s = max(0.0, min(1.0, cosb * math.sin(dlam / 2.0)))
-        bounds.append(2.0 * EARTH_RADIUS_M * math.asin(s))
-    return min(bounds) if bounds else float("inf")
-
-
-def _ring_bound_m_np(qlon: np.ndarray, qlat: np.ndarray, res: int, ring: np.ndarray) -> np.ndarray:
-    """Vectorized _ring_bound_m over query arrays (same math, same clamps)."""
     from ..functions.cells import lonlat_to_ixiy
     from ..functions.geometry import EARTH_RADIUS_M
 
@@ -219,8 +191,6 @@ def knn_join_cells(
     query_id: str = "query_id",
     query_lon: str = "qlon",
     query_lat: str = "qlat",
-    max_iterations: int = 8,
-    ring_cap: int = 64,
 ) -> DataFrame:
     """Exact kNN via k-ring expansion — DISTRIBUTED formulation (r2 rewrite
     of the per-query driver loop, VERDICT r1 item 8).
@@ -234,7 +204,7 @@ def knn_join_cells(
       rest double their ring.
     Per-round driver traffic is a single pending-count scalar (loop
     control); no result rows or memberships are ever collected.  Queries
-    whose ring would exceed ``ring_cap`` (~(2*64+1)^2 cells) — near-empty
+    whose ring would exceed ``RING_CAP`` (~(2*64+1)^2 cells) — near-empty
     neighborhoods, or fewer than k candidates on the globe — fall back to
     the exact brute partial/final plan, still in Spark (the ADVICE r1
     meshgrid-OOM hazard is gone with the cap).
@@ -245,9 +215,9 @@ def knn_join_cells(
     rectangle sums in one Arrow stage (plan-input role of GridDerivation,
     F/coverage/grid/GridDerivation.java:332).  Seeds affect only the
     starting ring; the per-round certification stays exact."""
-    import pandas as pd
+    from pyspark.sql import types as T
 
-    from ..functions.cells import k_ring
+    from ..functions.cells import cell_to_ixiy, k_ring, lonlat_to_ixiy
     from ..functions.spark_exprs import cell_col
 
     spark = candidates.sparkSession
@@ -266,15 +236,12 @@ def knn_join_cells(
     # plan pruning, F/coverage/grid/GridDerivation.java:332).  Seeds only
     # set the STARTING ring — the exact per-ring certification below is
     # untouched, so seed coarseness never changes results.
-    from ..functions.cells import cell_to_ixiy, lonlat_to_ixiy
-    from ..functions.spark_exprs import cell_col as _cell_col
-
     hres = min(res, SEED_RES_CAP)
     nh = 1 << hres
     seed_scale = 1 << (res - hres)
     hist = (
         cand.groupBy(
-            _cell_col(F.col(cand_lon), F.col(cand_lat), hres).alias("__hc"))
+            cell_col(F.col(cand_lon), F.col(cand_lat), hres).alias("__hc"))
         .agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
     if hist:
@@ -286,14 +253,12 @@ def knn_join_cells(
     else:
         bc_hist = spark.sparkContext.broadcast((None, 0))
 
-    from pyspark.sql import types as T
-
     @F.pandas_udf(T.LongType())
     def seed_ring(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
         sat_, total = bc_hist.value
         m = len(lon_s)
         if total < k:  # fewer than k candidates on the globe -> straight to brute
-            return pd.Series(np.full(m, ring_cap + 1, dtype=np.int64))
+            return pd.Series(np.full(m, RING_CAP + 1, dtype=np.int64))
         qx, qy = lonlat_to_ixiy(lon_s.to_numpy(), lat_s.to_numpy(), hres)
         qx = qx.astype(np.int64)
         qy = qy.astype(np.int64)
@@ -312,7 +277,7 @@ def knn_join_cells(
     q = queries.select(query_id, query_lon, query_lat)
     pending = q.select(
         query_id, query_lon, query_lat,
-        F.least(seed_ring(F.col(query_lon), F.col(query_lat)), F.lit(ring_cap + 1)).alias("__ring"),
+        F.least(seed_ring(F.col(query_lon), F.col(query_lat)), F.lit(RING_CAP + 1)).alias("__ring"),
         cell_col(F.col(query_lon), F.col(query_lat), res).alias("__qcell"),
     )
 
@@ -329,8 +294,6 @@ def knn_join_cells(
                 yield pd.DataFrame({query_id: np.concatenate(out_q),
                                     "__cell": np.concatenate(out_c)})
 
-    from pyspark.sql import types as T
-
     @F.pandas_udf(T.DoubleType())
     def bound_udf(lon_s: pd.Series, lat_s: pd.Series, ring_s: pd.Series) -> pd.Series:
         return pd.Series(
@@ -340,7 +303,7 @@ def knn_join_cells(
 
     done_parts: list[DataFrame] = []
     over_parts: list[DataFrame] = []
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         # localCheckpoint truncates the logical plan: without it the round-
         # over-round lineage (joins + windows + UDF stages) makes Catalyst
         # analysis of the final union take minutes of driver CPU.  Data stays
@@ -348,9 +311,9 @@ def knn_join_cells(
         pending = pending.localCheckpoint()
         if pending.count() == 0:
             break
-        live = pending.filter(F.col("__ring") <= ring_cap)
+        live = pending.filter(F.col("__ring") <= RING_CAP)
         over_parts.append(
-            pending.filter(F.col("__ring") > ring_cap).select(query_id, query_lon, query_lat)
+            pending.filter(F.col("__ring") > RING_CAP).select(query_id, query_lon, query_lat)
         )
         member = live.select(query_id, "__qcell", "__ring").mapInPandas(
             gen_rings, schema=member_schema
@@ -392,7 +355,7 @@ def knn_join_cells(
             F.least(F.col("__ring") * 2, F.lit(n)).alias("__ring"), "__qcell",
         )
 
-    # ring_cap overflow / leftover rounds: exact brute, still in Spark
+    # RING_CAP overflow / leftover rounds: exact brute, still in Spark
     rest_q = pending.select(query_id, query_lon, query_lat)
     for op in over_parts:
         rest_q = rest_q.unionByName(op)

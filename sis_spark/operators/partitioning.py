@@ -63,21 +63,6 @@ def str_partition(
     )
 
 
-def str_repartition(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    nx: int,
-    ny: int,
-    id_col: str,
-) -> DataFrame:
-    """``str_partition`` + physical repartitioning so that each Spark
-    partition IS one STR tile (downstream mapInPandas sees spatially
-    coherent, size-balanced batches)."""
-    out = str_partition(df, x_col, y_col, nx, ny, id_col)
-    return out.repartition(int(nx * ny), "part_id")
-
-
 def str_partition_sql(
     base_select: str,
     x_col: str,

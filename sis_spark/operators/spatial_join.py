@@ -75,15 +75,9 @@ def _sure_cells(cells: np.ndarray, rings: list, res: int) -> np.ndarray:
     x0 = ix.astype(np.float64) * cw - 180.0
     y0 = iy.astype(np.float64) * ch - 90.0
     x1, y1 = x0 + cw, y0 + ch
-    sure = np.ones(len(cells), dtype=bool)
+    sure = ~_geo.segments_intersect_rects(*_geo.ring_edges(rings), x0, y0, x1, y1)
     for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-        acc = np.zeros(len(cells), dtype=np.int64)
-        for vx, vy in rings:
-            acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
-        sure &= (acc % 2).astype(bool)
-    for vx, vy in rings:
-        wx, wy = np.roll(vx, -1), np.roll(vy, -1)
-        sure &= ~_geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
+        sure &= _geo.points_in_polygon_with_holes(cx, cy, rings)
     return sure
 
 
@@ -630,14 +624,10 @@ def spatial_join_dist(
         for i, b in enumerate(wkb_s):
             grp.setdefault(bytes(b), []).append(i)
         for buf, idxs in grp.items():
-            _, rings = _geo.wkb_parse(buf)
             ii = np.asarray(idxs, dtype=np.int64)
-            acc = np.zeros(len(ii), dtype=np.int64)
-            for vx, vy in rings:
-                if len(vx) >= 2 and vx[0] == vx[-1] and vy[0] == vy[-1]:
-                    vx, vy = vx[:-1], vy[:-1]  # open the ring (implicit close)
-                acc += _geo.points_in_polygon(px[ii], py[ii], vx, vy).astype(np.int64)
-            out[ii] = (acc % 2).astype(bool)
+            # a closed WKB ring's duplicate last vertex adds a zero-length
+            # edge, which never crosses
+            out[ii] = _geo.points_in_polygon_with_holes(px[ii], py[ii], _geo.wkb_parse(buf)[1])
         return pd.Series(out)
 
     refined = _point_join(

@@ -479,13 +479,6 @@ def _scan_segments(buf: bytes, pos: int) -> tuple[list[bytes], int]:
     return segs, pos
 
 
-def parse_tables_stream(buf: bytes) -> _JpegState:
-    """Parse an abbreviated tables-only stream (TIFF JPEGTables tag 347)."""
-    state = _JpegState()
-    _walk_markers(buf, state, stop_at_sos=True)
-    return state
-
-
 def _walk_markers(buf: bytes, state: _JpegState, stop_at_sos: bool = False):
     assert buf[:2] == b"\xff\xd8", "not a JPEG stream (missing SOI)"
     pos = 2

@@ -262,8 +262,8 @@ ORDER BY p.pid, poly_key
 def polygon_pair_oracle_sql(supplier_rel: str = "supplier", key: str = "s_suppkey") -> str:
     """DuckDB oracle for the polygon-vs-polygon pair join: envelope-overlap
     candidates, proper-crossing detection (orientation sign products, the
-    exact FP expression order of relate.any_proper_cross), strict even-odd
-    vertex containment (the points_in_polygon expression), and the same
+    exact FP expression order of geometry.proper_crossings), strict even-odd
+    vertex containment (the geometry.ray_crossings expression), and the same
     general-position predicate derivations as relate.predicates_from_flags.
     Output (a, b, contains_ab, contains_ba) for intersecting pairs a < b."""
     return f"""

@@ -67,6 +67,17 @@ def test_cylindrical_equal_area_is_equal_area():
     assert np.allclose(cell, want, rtol=1e-12)
 
 
+def test_cylindrical_equal_area_roundtrip_at_poles():
+    """EPSG:6933 forward -> inverse stays on the pole and within the
+    northing's resolution next to it: one ulp of the northing is ~4e-9 deg
+    of latitude at 89.9999, so that row gets a looser bound."""
+    p = PT.CylindricalEqualArea(30.0, 0.0, 0.0, 0.0, WGS84)
+    for lats, tol in (([90.0, 89.999, -89.999, -90.0], 1e-9), ([89.9999, -89.9999], 2e-8)):
+        lat = np.array(lats)
+        _lon, back = p.inverse(*p.forward(np.full_like(lat, 10.0), lat))
+        assert np.max(np.abs(back - lat)) <= tol, back - lat
+
+
 def test_cassini_soldner_epsg_example():
     # EPSG Trinidad 1903 example (reference CassiniSoldnerTest.java:110)
     a = 31706587.88
@@ -312,6 +323,14 @@ def test_zoned_tm_matches_utm_and_roundtrips():
         # compose, don't subtract: (31e6 + zx) - 31e6 loses low bits
         assert np.array_equal(x[m], 31e6 + ux)
         assert np.array_equal(y[m], uy)
+
+
+def test_zoned_tm_on_a_sphere_roundtrips():
+    zt = PT.ZonedTransverseMercator(ellipsoid=(6371000.0, 0.0))
+    x, y = zt.forward(np.array([10.0]), np.array([45.0]))
+    assert np.floor(x[0] / 1e6) == 32
+    lon, lat = zt.inverse(x, y)
+    assert abs(lon[0] - 10.0) < 1e-9 and abs(lat[0] - 45.0) < 1e-9
 
 
 def test_zoned_tm_wkt_roundtrip():

@@ -126,6 +126,41 @@ def test_spatial_join_nonfinite_coordinates(spark, form):
     assert sorted(map(tuple, got)) == [(9, 7), (10, 7)]
 
 
+BOUNDARY_POINTS = [(0, 2), (4, 2), (2, 0), (2, 4), (0, 0), (4, 0), (4, 4), (0, 4),
+                   (1, 2), (3, 2), (2, 1), (2, 3), (1, 1), (0.5, 0.5), (2, 2)]
+
+
+def _square(x0, y0, x1, y1):
+    return np.array([x0, x1, x1, x0], float), np.array([y0, y0, y1, y1], float)
+
+
+@pytest.mark.parametrize("form", sorted(JOIN_FORMS))
+def test_spatial_join_boundary_points(spark, form):
+    """Points on edges, vertices, shared borders and a hole's boundary follow
+    the half-open even-odd rule in every join form: each shared-border point
+    matches exactly one polygon."""
+    from sis_spark.functions import geometry as geo
+
+    rings = {
+        1: [_square(0, 0, 4, 4), _square(1, 1, 3, 3)],  # square with a hole
+        2: [_square(4, 0, 8, 4)],                       # shares x=4 with 1
+        3: [_square(0, 4, 4, 8)],                       # shares y=4 with 1
+    }
+    polys = [{"key": k, "vx": r[0][0], "vy": r[0][1], "holes": r[1:]} for k, r in rings.items()]
+    wkb = spark.createDataFrame([(k, bytes(geo.wkb_polygon(r))) for k, r in rings.items()],
+                                "key long, wkb binary")
+    pts = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(BOUNDARY_POINTS)],
+                                "event_id long, lon double, lat double")
+    got = JOIN_FORMS[form](pts, polys, wkb).select("event_id", "poly_key").collect()
+    want = {
+        1: [(0, 2), (2, 0), (0, 0), (3, 2), (2, 3), (0.5, 0.5)],
+        2: [(4, 2), (4, 0)],
+        3: [(2, 4), (0, 4)],
+    }
+    assert sorted((BOUNDARY_POINTS[e], k) for e, k in got) == sorted(
+        (p, k) for k, ps in want.items() for p in ps)
+
+
 def test_spatial_join_shuffle_salted_same_result(spark, events, duck):
     sup_keys = duck.execute("SELECT s_suppkey FROM supplier").fetchnumpy()["s_suppkey"]
     polygons = synth.polygon_table_np(sup_keys)

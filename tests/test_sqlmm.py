@@ -81,7 +81,7 @@ def test_padded_pip_equals_plain():
     px = rng.uniform(-180, 180, 2000)
     py = rng.uniform(-85, 85, 2000)
     gi = rng.integers(0, len(keys), 2000)
-    got = geo.points_in_padded_polygons(px, py, gi, VX, VY)
+    got = geo.points_in_padded_rings(px, py, gi, VX, VY, ring_start=np.arange(len(keys) + 1))
     for i in range(len(keys)):
         sel = gi == i
         exp = geo.points_in_polygon(px[sel], py[sel], polys_vx[i], polys_vy[i])
