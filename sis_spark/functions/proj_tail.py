@@ -144,26 +144,9 @@ class CylindricalEqualArea:
         if self.e == 0.0:
             phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
             return np.degrees(lam) + self.lon0, np.degrees(phi)
-        e, e2 = self.e, self.e2
-        # authalic -> geodetic by LAEA.inverse's Newton step, started from
-        # the authalic latitude asin(q/qp): near the pole q'(phi) -> 0 and
-        # a start at asin(q/2) only halves the error per step, while this
-        # one is within a factor 1 + O(e2) of the answer.  |q| within the
-        # rounding of the forward/inverse scaling of qp is the pole itself,
-        # where the step would divide by cos(phi) ~ 0.
-        pole = np.abs(q) >= self.qp - 4.0 * np.spacing(self.qp)
-        phi = np.arcsin(np.clip(q / self.qp, -1.0, 1.0))
-        for _ in range(12):
-            s = np.sin(phi)
-            step = np.where(pole, 0.0, (1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi)) * (
-                q / (1.0 - e2)
-                - s / (1.0 - e2 * s * s)
-                + (1.0 / (2.0 * e)) * np.log((1.0 - e * s) / (1.0 + e * s))
-            ))
-            phi = phi + step
-            if not (np.abs(step) > 1e-15).any():
-                break
-        phi = np.where(pole, np.copysign(np.pi / 2.0, q), phi)
+        from .projections import _authalic_inverse  # lazy: see _q_authalic
+
+        phi = _authalic_inverse(q, self.qp, self.e, self.e2)
         return np.degrees(lam) + self.lon0, np.degrees(phi)
 
 

@@ -267,6 +267,29 @@ def _q_authalic(phi, e, e2):
     )
 
 
+def _authalic_inverse(q, qp, e, e2):
+    """Geodetic latitude (radians) whose authalic helper is ``q`` (Snyder
+    1987 eq. 3-16 Newton step), shared by LAEA and ellipsoidal CEA.  The
+    step starts from the authalic latitude asin(q/qp): near the pole
+    q'(phi) -> 0 and a start at asin(q/2) only halves the error per step,
+    while this one is within a factor 1 + O(e2) of the answer.  |q| within
+    the rounding of qp is the pole itself, where the step would divide
+    by cos(phi) ~ 0."""
+    pole = np.abs(q) >= qp - 4.0 * np.spacing(qp)
+    phi = np.arcsin(np.clip(q / qp, -1.0, 1.0))
+    for _ in range(12):
+        s = np.sin(phi)
+        step = np.where(pole, 0.0, (1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi)) * (
+            q / (1.0 - e2)
+            - s / (1.0 - e2 * s * s)
+            + (1.0 / (2.0 * e)) * np.log((1.0 - e * s) / (1.0 + e * s))
+        ))
+        phi = phi + step
+        if not (np.abs(step) > 1e-15).any():
+            break
+    return np.where(pole, np.copysign(np.pi / 2.0, q), phi)
+
+
 class LambertAzimuthalEqualArea:
     """EPSG method 9820 (oblique ellipsoidal Lambert Azimuthal Equal Area) —
     Guidance Note 7-2 §3.1.3.2 / Snyder 1987 eq. 24-2..24-16 via the
@@ -296,7 +319,8 @@ class LambertAzimuthalEqualArea:
         lam = np.radians(np.asarray(lon, np.float64) - self.lon0)
         q = _q_authalic(np.radians(np.asarray(lat, np.float64)), self.e, self.e2)
         sinb = q / self.qp
-        cosb = np.sqrt(1.0 - sinb * sinb)
+        # q(-pi/2)/qp may round past -1
+        cosb = np.sqrt(np.maximum(1.0 - sinb * sinb, 0.0))
         B = self.Rq * np.sqrt(
             2.0 / (1.0 + self.sinb0 * sinb + self.cosb0 * cosb * np.cos(lam)))
         x = self.fe + (B * self.D) * (cosb * np.sin(lam))
@@ -319,15 +343,7 @@ class LambertAzimuthalEqualArea:
             dx * np.sin(ce),
             self.D * rho * np.cos(ce) * self.cosb0
             - self.D * self.D * dy * np.sin(ce) * self.sinb0)
-        e, e2 = self.e, self.e2
-        phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-        for _ in range(12):
-            s = np.sin(phi)
-            phi = phi + (1.0 - e2 * s * s) ** 2 / (2.0 * np.cos(phi)) * (
-                q / (1.0 - e2)
-                - s / (1.0 - e2 * s * s)
-                + (1.0 / (2.0 * e)) * np.log((1.0 - e * s) / (1.0 + e * s))
-            )
+        phi = _authalic_inverse(q, self.qp, self.e, self.e2)
         return np.degrees(lam) + self.lon0, np.degrees(phi)
 
 

@@ -496,7 +496,7 @@ def ivf_topk_df(
     iters: int = 1,
     query_id_col: str | None = None,
     query_vec_col: str | None = None,
-    exclude_self: bool = True,
+    exclude_self: bool = False,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF top-k by quantized cosine over a query DATAFRAME.
@@ -511,7 +511,9 @@ def ivf_topk_df(
     nprobe == nlist degrades gracefully to the exact brute answer
     (asserted in pytest).  ``broadcast_queries=False`` drops the broadcast
     hints for a query table too large to broadcast (the joins then shuffle
-    on list_id / query_id — the right plan at batch-retrieval scale)."""
+    on list_id / query_id — the right plan at batch-retrieval scale).
+    ``exclude_self=True`` drops the candidate whose id equals the query
+    id — only for queries drawn from the collection itself."""
     cent = train_ivf(vectors, nlist, id_col, vec_col, iters)
 
     q = vectors.select(
@@ -552,10 +554,12 @@ def ivf_topk(
     iters: int = 1,
 ) -> DataFrame:
     """List-of-ids convenience wrapper over ivf_topk_df (few-query serving
-    probes drawn from the collection itself); identical results."""
+    probes drawn from the collection itself, so each query's own row is
+    excluded); identical results."""
     queries = vectors.filter(F.col(id_col).isin([int(i) for i in query_ids]))
     return ivf_topk_df(
-        vectors, queries, k, nlist, nprobe, id_col, vec_col, iters)
+        vectors, queries, k, nlist, nprobe, id_col, vec_col, iters,
+        exclude_self=True)
 
 
 def ivf_topk_sql(
@@ -755,7 +759,7 @@ def pq_topk_df(
     iters: int = 1,
     query_id_col: str | None = None,
     query_vec_col: str | None = None,
-    exclude_self: bool = True,
+    exclude_self: bool = False,
 ) -> DataFrame:
     """PQ-compressed top-k by asymmetric distance (ADC) over a query
     DATAFRAME, all-int64 exact.  Output (query_id, rank, cand_id, adist);
@@ -771,7 +775,8 @@ def pq_topk_df(
     driver only repackages the collected tables into one broadcast
     (nq*m*ksub int64 — ~100 MB at 1e5 queries, the exhaustive-ADC
     broadcast bound; past that use ivf_pq_topk's posting lists, which is
-    the correct batch-retrieval shape anyway)."""
+    the correct batch-retrieval shape anyway).  ``exclude_self`` as in
+    ivf_topk_df."""
     spark = vectors.sparkSession
     books = train_pq(vectors, m, ksub, id_col, vec_col, iters)
 
@@ -842,9 +847,11 @@ def pq_topk(
     iters: int = 1,
 ) -> DataFrame:
     """List-of-ids convenience wrapper over pq_topk_df (few-query serving
-    probes drawn from the collection itself); identical results."""
+    probes drawn from the collection itself, so each query's own row is
+    excluded); identical results."""
     queries = vectors.filter(F.col(id_col).isin([int(i) for i in query_ids]))
-    return pq_topk_df(vectors, queries, k, m, ksub, id_col, vec_col, iters)
+    return pq_topk_df(vectors, queries, k, m, ksub, id_col, vec_col, iters,
+                      exclude_self=True)
 
 
 def _pq_train_blocks(dim, m, ksub, rel="embeddings",
@@ -944,7 +951,7 @@ def ivf_pq_topk_df(
     iters: int = 1,
     query_id_col: str | None = None,
     query_vec_col: str | None = None,
-    exclude_self: bool = True,
+    exclude_self: bool = False,
 ) -> DataFrame:
     """IVF-PQ over a query DATAFRAME: coarse posting lists (train_ivf) +
     product-quantized RESIDUALS (v - centroid[list]) + per-(query, list)
@@ -957,7 +964,8 @@ def ivf_pq_topk_df(
     broadcast (nq*nprobe*m*ksub int64 cells — the broadcast bound for the
     scatter-gather serving shape).  All arithmetic int64-exact, ties ->
     lowest id; nprobe == nlist and ksub >= n degrades to the exact brute
-    answer (asserted in pytest).  Output (query_id, rank, cand_id, adist)."""
+    answer (asserted in pytest).  Output (query_id, rank, cand_id, adist);
+    ``exclude_self`` as in ivf_topk_df."""
     spark = vectors.sparkSession
     cent = train_ivf(vectors, nlist, id_col, vec_col, iters)
     q = vectors.select(
@@ -1106,10 +1114,12 @@ def ivf_pq_topk(
     iters: int = 1,
 ) -> DataFrame:
     """List-of-ids convenience wrapper over ivf_pq_topk_df (few-query
-    serving probes drawn from the collection itself); identical results."""
+    serving probes drawn from the collection itself, so each query's own
+    row is excluded); identical results."""
     queries = vectors.filter(F.col(id_col).isin([int(i) for i in query_ids]))
     return ivf_pq_topk_df(
-        vectors, queries, k, nlist, nprobe, m, ksub, id_col, vec_col, iters)
+        vectors, queries, k, nlist, nprobe, m, ksub, id_col, vec_col, iters,
+        exclude_self=True)
 
 
 def ivf_pq_sql(

@@ -109,6 +109,8 @@ def encode_mh(arr: np.ndarray) -> bytes:
     a = (arr != 0).astype(np.int8)
     out = bytearray()
     for row in a:
+        if not len(row):  # a zero-width row holds no runs (decode reads none)
+            continue
         bits = []
         # run-length extraction: change positions over the row
         changes = np.flatnonzero(np.diff(row)) + 1

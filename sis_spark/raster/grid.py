@@ -8,6 +8,10 @@
 * Tile index = floorDiv(cell, tile_size) (S/tiling/TiledGridCoverage.java:326).
 * GridDerivation-style pruning (request ∩ data, rounded to tiles,
   F/coverage/grid/GridDerivation.java:332-401) is `derive_read_extent`.
+* The tile-neighbourhood gather every tiled neighbourhood operator shares
+  (the source-tile gather of F/image/ComputedImage.java) is
+  `_halo_groups` (which tiles a group needs) + `_place_blocks` (the
+  group's tiles pasted into one halo array).
 """
 
 from __future__ import annotations
@@ -15,6 +19,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..functions import transforms as tr
 
@@ -59,6 +65,72 @@ def tile_index(cell: np.ndarray, tile_size: int) -> np.ndarray:
     """floorDiv — negative-safe, matching java Math.floorDiv used by
     TiledGridCoverage (S/tiling/TiledGridCoverage.java:326)."""
     return np.floor_divide(np.asarray(cell, dtype=np.int64), tile_size)
+
+
+def _halo_groups(
+    src: DataFrame,
+    gg: GridGeometry,
+    tile_size: int,
+    dxs=(-1, 0, 1),
+    dys=(-1, 0, 1),
+    col: str = "data",
+) -> DataFrame:
+    """Tile -> halo-group explode: tile (tx, ty) joins the group of every
+    tile (tx + dx, ty + dy), dx in ``dxs``, dy in ``dys``; groups off the
+    ntx x nty tile grid of ``gg`` are dropped.  -> (gtx, gty, tx, ty, col),
+    ready for groupBy("gtx", "gty")."""
+    ntx = (gg.width + tile_size - 1) // tile_size
+    nty = (gg.height + tile_size - 1) // tile_size
+    return (
+        src.select(
+            F.explode(F.array(*[
+                F.struct((F.col("tx") + dx).alias("gtx"),
+                         (F.col("ty") + dy).alias("gty"))
+                for dx in dxs for dy in dys
+            ])).alias("g"),
+            "tx", "ty", col,
+        )
+        .select("g.gtx", "g.gty", "tx", "ty", col)
+        .filter((F.col("gtx") >= 0) & (F.col("gty") >= 0)
+                & (F.col("gtx") < ntx) & (F.col("gty") < nty))
+    )
+
+
+def _place_blocks(key, pdf, tile_size: int, dtype, lo, hi, fill,
+                  halo_dtype=np.float64, extent: GridGeometry | None = None,
+                  block_fn=None):
+    """Paste a halo group's tiles into one array -> (gtx, gty, halo).
+
+    The halo covers the group tile (gtx, gty) plus ``lo`` pixels before
+    and ``hi`` after it on each axis (an int, or a (y, x) pair): shape
+    (lo_y + T + hi_y, lo_x + T + hi_x), global pixel (gtx*T - lo_x + i,
+    gty*T - lo_y + j) at [j, i].  Cells no tile covers (missing tiles,
+    off-grid) read ``fill``; with ``extent`` so do cells outside the
+    raster extent (the zero-padded remainder of edge tiles).  Tiles are
+    ``dtype`` planes of T x T, optionally mapped by ``block_fn`` before
+    they are cast into the ``halo_dtype`` array."""
+    gtx, gty = int(key[0]), int(key[1])
+    ts = tile_size
+    ly, lx = (lo, lo) if np.isscalar(lo) else lo
+    hy, hx = (hi, hi) if np.isscalar(hi) else hi
+    H, W = ly + ts + hy, lx + ts + hx
+    halo = np.full((H, W), fill, dtype=halo_dtype)
+    for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
+        block = np.frombuffer(data, dtype=dtype).reshape(ts, ts)
+        if block_fn is not None:
+            block = block_fn(block)
+        oy = (int(ty) - gty) * ts + ly
+        ox = (int(tx) - gtx) * ts + lx
+        y0, x0 = max(oy, 0), max(ox, 0)
+        y1, x1 = min(oy + ts, H), min(ox + ts, W)
+        if y1 > y0 and x1 > x0:
+            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+    if extent is not None:
+        gx = gtx * ts - lx + np.arange(W)
+        gy = gty * ts - ly + np.arange(H)
+        halo[:, (gx < 0) | (gx >= extent.width)] = fill
+        halo[(gy < 0) | (gy >= extent.height), :] = fill
+    return gtx, gty, halo
 
 
 def derive_read_extent(

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import transforms as _tr
-from .grid import GridGeometry
+from .grid import GridGeometry, _halo_groups, _place_blocks
 
 SEG_SCHEMA = "level double, x1 double, y1 double, x2 double, y2 double"
 
@@ -118,38 +118,17 @@ def isolines(
     """Distributed contour segments for each level, in CRS coordinates
     (CELL_CENTER registration: pixel (i, j) samples the CRS point of its
     center, PixelInCell.CELL_CENTER semantics)."""
-    spark = tiles_df.sparkSession
     h, w = gg.height, gg.width
     center_affine = _tr.grid_to_crs(gg.affine, cell_center=True)
-    bdt = np.dtype(dtype)
 
-    src = tiles_df.filter(F.col("band") == band)
     # 4-way halo explode: tile (tx, ty) serves groups (tx-d, ty-e)
-    contrib = src.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.col("tx") - dx).alias("gtx"), (F.col("ty") - dy).alias("gty")
-                )
-                for dx in (0, 1) for dy in (0, 1)
-            ])
-        ).alias("g"),
-        "tx", "ty", "data",
-    ).select("g.gtx", "g.gty", "tx", "ty", "data").filter(
-        (F.col("gtx") >= 0) & (F.col("gty") >= 0)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg,
+                           tile_size, dxs=(0, -1), dys=(0, -1))
 
     lv = [float(x) for x in levels]
 
     def march(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((tile_size + 1, tile_size + 1), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size).astype(np.float64)
-            oy = (int(ty) - gty) * tile_size
-            ox = (int(tx) - gtx) * tile_size
-            sub = block[: max(0, tile_size + 1 - oy), : max(0, tile_size + 1 - ox)]
-            halo[oy : oy + sub.shape[0], ox : ox + sub.shape[1]] = sub
+        gtx, gty, halo = _place_blocks(key, pdf, tile_size, dtype, 0, 1, np.nan)
         # clip the halo to the real raster extent (edge tiles are zero-padded)
         vh = min(tile_size + 1, h - gty * tile_size)
         vw = min(tile_size + 1, w - gtx * tile_size)

@@ -1,28 +1,38 @@
-"""Terrain derivatives over tiled rasters: gradient, slope, hillshade.
+"""Tiled neighbourhood operators: terrain, hydrology, morphology, features.
 
-DEM analysis operators in the distributed tile model (the neighborhood-
-operator counterpart of the marching-squares halo in raster/isolines.py —
-the reference's image-processing neighborhood contract,
-F/image/ImageProcessor.java pipeline style):
+DEM and image operators in the distributed tile model (tiles_df rows
+(tx, ty, band, data) of T x T pixels, the raster extent in a
+GridGeometry) — the reference's neighbourhood contract, where
+F/image/ComputedImage.java gathers the source tiles once and each
+F/image/ImageProcessor.java operation only computes its own tile.
 
-1. **Halo gather**: a central-difference pixel needs its 4-neighborhood, so
-   each destination tile gathers a 1-pixel ring from up to 8 neighbor tiles
-   — a 9-way explode + groupBy, the same shuffle shape as isolines (no
-   broadcast, no dense mosaic).
-2. **Gradient** follows ``numpy.gradient`` semantics exactly: central
-   differences (f(x+1) - f(x-1)) / 2 in the interior, one-sided differences
-   at the raster's global edges — deterministic from pixel COORDINATES (not
-   from NaN sniffing), so the SQL oracle can replay every pixel.
-3. **Slope / hillshade** are transcendental reductions of the gradient
-   (Horn/ESRI hillshade formula).  The gradient is oracle-gated through
-   integer checksums (gate `gradient`); hillshade is ALSO oracle-gated
-   (gate `hillshade`) because the formula raster's gradients are exact
-   dyadics and its shade values sit >=2.5e-3 from every rounding boundary
-   (measured), so numpy-vs-DuckDB libm agreement holds with ~10 orders of
-   magnitude of margin.
-4. **TRI** (Riley 1999 terrain ruggedness, gate `tri`) stays PURE INTEGER:
-   the sum of squared 8-neighbor differences needs no sqrt to rank or
-   threshold, so the whole op is exact int64 end to end.
+**The halo contract** (written once, in raster/grid.py):
+
+* **Gather** — ``_halo_groups`` explodes every tile to the groups of the
+  tiles whose neighbourhood it touches (the 9-way ring for centred
+  stencils, fewer for one-sided ones: template apron, stereo/flow
+  search, isolines), dropping groups off the ntx x nty tile grid, then
+  one groupBy per operator — no broadcast, no dense mosaic.
+* **Margins** — ``_place_blocks`` pastes the group's tiles into one halo
+  array of T + lo + hi pixels per axis around the group tile (1 for
+  3x3 stencils, 2 for Sobel-based Harris/Canny, 3 for the FAST ring, r
+  for a radius-r kernel, one-sided for the template apron, stereo and
+  flow).  A margin must fit one tile ring (<= T).
+* **Fill and missing tiles** — cells no tile covers read the operator's
+  fill: NaN for the float64 halos (a missing neighbour tile or the
+  raster edge then disqualifies the pixel), 0 (zero padding), or a
+  sentinel (rank min 2^62, chamfer/Voronoi infinity, extrema -2^62).
+* **Extent masking** — edge tiles are zero-padded past (width, height).
+  Operators whose padding value is a real value mask those halo cells
+  back to the fill (``extent=gg``); every operator then confines its
+  output to the extent (zeroed planes, interior masks, or dropped
+  sparse rows), so a result never depends on the tile size.
+
+Semantics are deterministic from pixel COORDINATES, so each operator's
+SQL oracle replays every pixel: e.g. the gradient follows
+``numpy.gradient`` (central differences inside, one-sided at the raster
+edges), and the integer operators (TRI, rank filters, FAST, Harris,
+Euler, ...) are exact int64 end to end.
 """
 
 from __future__ import annotations
@@ -34,30 +44,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import transforms as _tr
-from .grid import GridGeometry
+from .grid import GridGeometry, _halo_groups, _place_blocks
 
 GRAD_SCHEMA = "tx long, ty long, dzdx binary, dzdy binary"
 
 
-def _halo_groups(src: DataFrame) -> DataFrame:
-    """Each tile contributes to its own group and its 8 neighbors' groups."""
-    return (
-        src.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.col("tx") + dx).alias("gtx"),
-                        (F.col("ty") + dy).alias("gty"),
-                    )
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                ])
-            ).alias("g"),
-            "tx", "ty", "data",
-        )
-        .select("g.gtx", "g.gty", "tx", "ty", "data")
-        .filter((F.col("gtx") >= 0) & (F.col("gty") >= 0))
-    )
+def _interior(gtx, gty, ts, gg, r=1):
+    """(ts, ts) mask of tile (gtx, gty)'s pixels at least ``r`` pixels
+    inside every raster edge (a full (2r+1)^2 window in the extent)."""
+    px = gtx * ts + np.arange(ts)
+    py = gty * ts + np.arange(ts)
+    return ((px[None, :] >= r) & (px[None, :] <= gg.width - 1 - r)
+            & (py[:, None] >= r) & (py[:, None] <= gg.height - 1 - r))
 
 
 def gradient_tiles(
@@ -72,37 +70,16 @@ def gradient_tiles(
     CRS units).  Tiles are emitted only for the raster's real extent;
     padding pixels beyond (width, height) never contribute."""
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.full((ts + 2, ts + 2), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts)
-                .astype(np.float64)
-            )
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         # global pixel coordinates of the halo's interior window
         px = gtx * ts + np.arange(ts)
         py = gty * ts + np.arange(ts)
         vw = int(np.count_nonzero(px < w))
         vh = int(np.count_nonzero(py < h))
-        if vw == 0 or vh == 0:
-            return pd.DataFrame({"tx": [], "ty": [], "dzdx": [], "dzdy": []})
         c = halo[1:1 + ts, 1:1 + ts]
         lf, rt = halo[1:1 + ts, 0:ts], halo[1:1 + ts, 2:2 + ts]
         up, dn = halo[0:ts, 1:1 + ts], halo[2:2 + ts, 1:1 + ts]
@@ -203,26 +180,11 @@ def convolve_tiles(
     if r > tile_size:
         raise ValueError("kernel radius exceeds one tile ring")
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.zeros((ts + 2 * r, ts + 2 * r), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + r
-            ox = (int(tx) - gtx) * ts + r
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * r), min(ox + ts, ts + 2 * r)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, r, r, 0, np.int64)
         out = np.zeros((ts, ts), dtype=np.int64)
         for ky in range(2 * r + 1):
             for kx in range(2 * r + 1):
@@ -286,26 +248,11 @@ def flow_dir_tiles(
     missing tile — NaN halo) can never be chosen (the isolines NaN lesson
     applied at design time)."""
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.full((ts + 2, ts + 2), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.float64)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         px = gtx * ts + np.arange(ts)[None, :]
         py = gty * ts + np.arange(ts)[:, None]
         c = halo[1:1 + ts, 1:1 + ts]
@@ -471,32 +418,14 @@ def rank_filter_tiles(
     if mode not in ("max", "min", "median"):
         raise ValueError("mode must be max/min/median")
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
     pad = 0 if mode in ("max", "median") else (1 << 62)
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((ts + 2, ts + 2), pad, dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
         # out-of-extent pixels inside the halo must read as padding too
-        hx = gtx * ts - 1 + np.arange(ts + 2)[None, :]
-        hy = gty * ts - 1 + np.arange(ts + 2)[:, None]
-        oob = (hx < 0) | (hx >= w) | (hy < 0) | (hy >= h)
-        halo[oob] = pad
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, pad,
+                                       np.int64, extent=gg)
         stack = np.stack([
             halo[dy:dy + ts, dx:dx + ts]
             for dy in range(3) for dx in range(3)
@@ -565,6 +494,68 @@ def chamfer_dense(seeds: np.ndarray) -> np.ndarray:
     return _chamfer_window(d)
 
 
+def _chamfer_sweep(tiles_df, gg, band, ts, dtype, seed_value, max_rounds,
+                   scale, inf):
+    """Block-Jacobi 3-4 chamfer sweep over int64 tiles: pixels equal to
+    ``seed_value`` start at 0 (scale 1) or at their global pixel id
+    (scale > 1: the packed dist*scale + id field), the rest at ``inf``.
+    Each round gathers a 1-pixel halo ring of the neighbours' current
+    values and re-solves every tile EXACTLY with ``_chamfer_window``;
+    information crosses one tile per round, so convergence takes at most
+    (grid diameter in tiles) rounds — not O(max distance) pixel steps.
+    One scalar (the global sum) crosses the driver per round; lineage is
+    truncated per round."""
+    h, w = gg.height, gg.width
+
+    def init(batches):
+        for pdf in batches:
+            rows = []
+            for tx, ty, bd, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
+                if int(bd) != band:
+                    continue
+                v = np.frombuffer(data, dtype=dtype).reshape(ts, ts)
+                px = int(tx) * ts + np.arange(ts)[None, :]
+                py = int(ty) * ts + np.arange(ts)[:, None]
+                inext = (px < w) & (py < h)
+                seed = (py * w + px).astype(np.int64) if scale > 1 else 0
+                d = np.where((v == seed_value) & inext, seed, inf).astype(np.int64)
+                rows.append({"tx": int(tx), "ty": int(ty), "data": d.tobytes()})
+            if rows:
+                yield pd.DataFrame(rows)
+
+    def relax(key, pdf):
+        gtx, gty, halo = _place_blocks(key, pdf, ts, np.int64, 1, 1, inf,
+                                       np.int64)
+        out = _chamfer_window(halo, scale)[1:1 + ts, 1:1 + ts]
+        out = np.minimum(out, inf)
+        px = gtx * ts + np.arange(ts)[None, :]
+        py = gty * ts + np.arange(ts)[:, None]
+        out[~((px < w) & (py < h))] = inf
+        return pd.DataFrame([{"tx": gtx, "ty": gty, "data": out.tobytes()}])
+
+    def total(df):
+        def s(batches):
+            for pdf in batches:
+                yield pd.DataFrame([{
+                    "t": int(sum(
+                        np.frombuffer(b, np.int64).sum() for b in pdf["data"]
+                    ))
+                }])
+        return df.mapInPandas(s, "t long").agg(F.sum("t")).collect()[0][0]
+
+    dist = tiles_df.mapInPandas(init, CONV_SCHEMA).localCheckpoint()
+    prev = total(dist)
+    for _ in range(max_rounds):
+        dist = _halo_groups(dist, gg, ts).groupBy("gtx", "gty").applyInPandas(
+            relax, schema=CONV_SCHEMA
+        ).localCheckpoint()
+        cur = total(dist)
+        if cur == prev:
+            break
+        prev = cur
+    return dist
+
+
 def chamfer_dt_tiles(
     tiles_df: DataFrame,
     gg: GridGeometry,
@@ -578,78 +569,10 @@ def chamfer_dt_tiles(
     pixel to the nearest ``seed_value`` pixel, under the chamfer metric
     (orthogonal step 3, diagonal 4 — closed form 3*max(|dx|,|dy|) +
     min(|dx|,|dy|) in open space, which is what the oracle replays).
-
-    BLOCK-JACOBI iteration: each round gathers a 1-pixel halo ring of the
-    neighbors' current distances and re-solves the tile EXACTLY with the
-    two-pass chamfer sweep; distance information crosses one tile per
-    round, so convergence takes at most (grid diameter in tiles) rounds —
-    not O(max distance) pixel steps.  One scalar (global distance sum)
-    crosses the driver per round; lineage truncated per round."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-
-    def init(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, bd, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                if int(bd) != band:
-                    continue
-                v = np.frombuffer(data, dtype=bdt).reshape(ts, ts)
-                px = int(tx) * ts + np.arange(ts)[None, :]
-                py = int(ty) * ts + np.arange(ts)[:, None]
-                inext = (px < w) & (py < h)
-                d = np.where((v == seed_value) & inext, 0, _CH_INF).astype(np.int64)
-                rows.append({"tx": int(tx), "ty": int(ty), "data": d.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    dist = tiles_df.mapInPandas(init, CONV_SCHEMA).localCheckpoint()
-
-    def relax(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((ts + 2, ts + 2), _CH_INF, dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, np.int64).reshape(ts, ts)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        out = _chamfer_window(halo)[1:1 + ts, 1:1 + ts]
-        out = np.minimum(out, _CH_INF)
-        px = gtx * ts + np.arange(ts)[None, :]
-        py = gty * ts + np.arange(ts)[:, None]
-        out[~((px < w) & (py < h))] = _CH_INF
-        return pd.DataFrame([{"tx": gtx, "ty": gty, "data": out.tobytes()}])
-
-    def total(df):
-        def s(batches):
-            for pdf in batches:
-                yield pd.DataFrame([{
-                    "t": int(sum(
-                        np.frombuffer(b, np.int64).sum() for b in pdf["data"]
-                    ))
-                }])
-        return df.mapInPandas(s, "t long").agg(F.sum("t")).collect()[0][0]
-
-    prev = total(dist)
-    for _ in range(max_rounds):
-        contrib = _halo_groups(dist).filter(
-            (F.col("gtx") < ntx) & (F.col("gty") < nty)
-        )
-        dist = contrib.groupBy("gtx", "gty").applyInPandas(
-            relax, schema=CONV_SCHEMA
-        ).localCheckpoint()
-        cur = total(dist)
-        if cur == prev:
-            break
-        prev = cur
-    return dist
+    Pixels with no seed keep _CH_INF.  Block-Jacobi over tiles
+    (``_chamfer_sweep``)."""
+    return _chamfer_sweep(tiles_df, gg, band, tile_size, dtype, seed_value,
+                          max_rounds, 1, _CH_INF)
 
 
 _VOR_SCALE = 1 << 20  # id field width: dist*SCALE + seed_id, lexicographic
@@ -674,74 +597,10 @@ def voronoi_tiles(
     the minimum is the LEXICOGRAPHIC (distance, id) minimum, so the
     nearest-site assignment falls out of the distance transform for free
     — no argmin bookkeeping, no extra passes.  Requires w*h < 2^20."""
-    h, w = gg.height, gg.width
-    if w * h >= _VOR_SCALE:
+    if gg.width * gg.height >= _VOR_SCALE:
         raise ValueError("voronoi id field needs w*h < 2^20")
-    bdt = np.dtype(dtype)
-    ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-
-    def init(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, bd, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                if int(bd) != band:
-                    continue
-                v = np.frombuffer(data, dtype=bdt).reshape(ts, ts)
-                px = int(tx) * ts + np.arange(ts)[None, :]
-                py = int(ty) * ts + np.arange(ts)[:, None]
-                inext = (px < w) & (py < h)
-                sid = (py * w + px).astype(np.int64)
-                d = np.where((v == seed_value) & inext, sid, _VOR_INF)
-                rows.append({"tx": int(tx), "ty": int(ty), "data": d.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    dist = tiles_df.mapInPandas(init, CONV_SCHEMA).localCheckpoint()
-
-    def relax(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((ts + 2, ts + 2), _VOR_INF, dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, np.int64).reshape(ts, ts)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        out = _chamfer_window(halo, scale=_VOR_SCALE)[1:1 + ts, 1:1 + ts]
-        out = np.minimum(out, _VOR_INF)
-        px = gtx * ts + np.arange(ts)[None, :]
-        py = gty * ts + np.arange(ts)[:, None]
-        out[~((px < w) & (py < h))] = _VOR_INF
-        return pd.DataFrame([{"tx": gtx, "ty": gty, "data": out.tobytes()}])
-
-    def total(df):
-        def s(batches):
-            for pdf in batches:
-                yield pd.DataFrame([{
-                    "t": int(sum(
-                        np.frombuffer(b, np.int64).sum() for b in pdf["data"]
-                    ))
-                }])
-        return df.mapInPandas(s, "t long").agg(F.sum("t")).collect()[0][0]
-
-    prev = total(dist)
-    for _ in range(max_rounds):
-        contrib = _halo_groups(dist).filter(
-            (F.col("gtx") < ntx) & (F.col("gty") < nty)
-        )
-        dist = contrib.groupBy("gtx", "gty").applyInPandas(
-            relax, schema=CONV_SCHEMA
-        ).localCheckpoint()
-        cur = total(dist)
-        if cur == prev:
-            break
-        prev = cur
-    return dist
+    return _chamfer_sweep(tiles_df, gg, band, tile_size, dtype, seed_value,
+                          max_rounds, _VOR_SCALE, _VOR_INF)
 
 
 TRI_SCHEMA = "tx long, ty long, n_int long, sum_tri2 long, max_tri2 long"
@@ -763,37 +622,12 @@ def tri_tiles(
     Same halo-gather shuffle shape as the gradient: shuffled volume is
     the tile perimeter, the 8 squared differences are one vectorized
     numpy expression per tile."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.zeros((ts + 2, ts + 2), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts)
-                .astype(np.int64)
-            )
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, 0, np.int64)
+        interior = _interior(gtx, gty, ts, gg)
         c = halo[1:1 + ts, 1:1 + ts]
         tri2 = np.zeros((ts, ts), dtype=np.int64)
         for dy in (-1, 0, 1):
@@ -812,25 +646,6 @@ def tri_tiles(
         ])
 
     return contrib.groupBy("gtx", "gty").applyInPandas(fn, schema=TRI_SCHEMA)
-
-
-def _assemble_halo(key, pdf, tile_size, bdt):
-    """(gtx, gty, (ts+2, ts+2) float64 halo with NaN where no tile)."""
-    gtx, gty = int(key[0]), int(key[1])
-    ts = tile_size
-    halo = np.full((ts + 2, ts + 2), np.nan)
-    for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-        block = (
-            np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.float64)
-        )
-        oy = (int(ty) - gty) * ts + 1
-        ox = (int(tx) - gtx) * ts + 1
-        y0, x0 = max(oy, 0), max(ox, 0)
-        y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-        if y1 <= y0 or x1 <= x0:
-            continue
-        halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-    return gtx, gty, halo
 
 
 def _hog_octants(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
@@ -879,29 +694,18 @@ def hog_tiles(
     to the lower octant), and each interior pixel adds its L1 magnitude
     |gx|+|gy| to its octant bin — all int64, one halo gather, zero
     Python in the aggregation."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty, halo = _assemble_halo(key, pdf, tile_size, bdt)
-        ts = tile_size
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         lf, rt = halo[1:1 + ts, 0:ts], halo[1:1 + ts, 2:2 + ts]
         up, dn = halo[0:ts, 1:1 + ts], halo[2:2 + ts, 1:1 + ts]
         valid = (
             np.isfinite(lf) & np.isfinite(rt)
             & np.isfinite(up) & np.isfinite(dn)
         )
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        interior = _interior(gtx, gty, ts, gg)
         m = valid & interior
         gx = np.where(m, rt - lf, 0).astype(np.int64)
         gy = np.where(m, dn - up, 0).astype(np.int64)
@@ -933,28 +737,17 @@ def mode_filter_tiles(
     the classic categorical-raster smoother (land-cover cleanup, public
     literature).  Exact integers, one halo gather; window pixels outside
     the raster (or on missing tiles) disqualify the pixel."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty, halo = _assemble_halo(key, pdf, tile_size, bdt)
-        ts = tile_size
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         stack = np.stack([
             halo[1 + dy:1 + dy + ts, 1 + dx:1 + dx + ts]
             for dy in (-1, 0, 1) for dx in (-1, 0, 1)
         ])  # (9, ts, ts)
         valid = np.isfinite(stack).all(axis=0)
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        interior = _interior(gtx, gty, ts, gg)
         s = np.nan_to_num(stack, nan=0.0).astype(np.int64)
         # mode of 9 values with tie -> smallest: score = cnt*256 + (255 - v)
         best = np.full((ts, ts), -1, np.int64)
@@ -995,29 +788,18 @@ def range_filter_tiles(
     exact int64 aggregates (n_px, n_in, v_in_sum) — the smoothed value
     floor(v_in_sum / n_in) per pixel is derivable and edges never bleed.
     One halo gather, zero Python aggregation."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty, halo = _assemble_halo(key, pdf, tile_size, bdt)
-        ts = tile_size
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         c = halo[1:1 + ts, 1:1 + ts]
         stack = np.stack([
             halo[1 + dy:1 + dy + ts, 1 + dx:1 + dx + ts]
             for dy in (-1, 0, 1) for dx in (-1, 0, 1)
         ])
         valid = np.isfinite(stack).all(axis=0)
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        interior = _interior(gtx, gty, ts, gg)
         m = valid & interior
         s = np.nan_to_num(stack, nan=0.0).astype(np.int64)
         ci = np.nan_to_num(c, nan=0.0).astype(np.int64)
@@ -1075,31 +857,12 @@ def fast_corners_tiles(
     Shape: one 3-pixel halo gather (each tile ships to its 8 neighbor
     groups — same shuffle count as the gradient machinery, 3 rows wider),
     then map-side numpy; output is the sparse corner list."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     R = 3
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.full((ts + 2 * R, ts + 2 * R), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts).astype(np.float64)
-            )
-            oy = (int(ty) - gty) * ts + R
-            ox = (int(tx) - gtx) * ts + R
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * R), min(ox + ts, ts + 2 * R)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, R, R, np.nan)
         c = halo[R:R + ts, R:R + ts]
         bright = np.zeros((ts, ts), np.int64)
         dark = np.zeros((ts, ts), np.int64)
@@ -1109,12 +872,7 @@ def fast_corners_tiles(
             valid &= np.isfinite(nb)
             bright |= (nb > c + t).astype(np.int64) << i
             dark |= (nb < c - t).astype(np.int64) << i
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= R) & (px[None, :] <= w - 1 - R)
-            & (py[:, None] >= R) & (py[:, None] <= h - 1 - R)
-        )
+        interior = _interior(gtx, gty, ts, gg, R)
         is_b = _run_ge9(bright)
         is_d = _run_ge9(dark)
         sel = valid & interior & (is_b | is_d)
@@ -1227,17 +985,11 @@ def curvature_tiles(
     public literature) a terrain or image-sharpness audit aggregates.
     Pixels whose 3x3 window leaves the raster or touches a missing tile
     are skipped; one halo gather, map-side sums."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty, halo = _assemble_halo(key, pdf, tile_size, bdt)
-        ts = tile_size
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
         c = halo[1:1 + ts, 1:1 + ts]
         xm = halo[1:1 + ts, 0:ts]
         xp = halo[1:1 + ts, 2:2 + ts]
@@ -1250,12 +1002,7 @@ def curvature_tiles(
         valid = np.isfinite(c)
         for nb in (xm, xp, ym, yp, pp, pm, mp, mm):
             valid &= np.isfinite(nb)
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        interior = _interior(gtx, gty, ts, gg)
         sel = valid & interior
         if not sel.any():
             return pd.DataFrame({
@@ -1286,6 +1033,38 @@ _COST_STEPS = [(1, 0, 2), (-1, 0, 2), (0, 1, 2), (0, -1, 2),
                (1, 1, 3), (1, -1, 3), (-1, 1, 3), (-1, -1, 3)]
 
 
+def _pixel_rows(tiles_df, gg, band, tile_size, dtype) -> DataFrame:
+    """Tiles -> one (x, y, z) row per pixel of ``band`` inside the
+    raster extent, the value widened to int64: the sparse cell table of
+    the graph-shaped operators (cost distance, viewshed)."""
+    h, w = gg.height, gg.width
+
+    def px(batches):
+        gi = np.arange(tile_size, dtype=np.int64)
+        for pdf in batches:
+            out = []
+            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
+                block = np.frombuffer(data, dtype=dtype).reshape(
+                    tile_size, tile_size
+                ).astype(np.int64)
+                gx, gy = np.meshgrid(int(tx) * tile_size + gi,
+                                     int(ty) * tile_size + gi)
+                keep = ((gx < w) & (gy < h)).ravel()
+                out.append(pd.DataFrame({
+                    "x": gx.ravel()[keep], "y": gy.ravel()[keep],
+                    "z": block.ravel()[keep],
+                }))
+            yield pd.concat(out) if out else pd.DataFrame(
+                {"x": [], "y": [], "z": []}
+            )
+
+    return (
+        tiles_df.filter(F.col("band") == band)
+        .select("tx", "ty", "data")
+        .mapInPandas(px, schema="x long, y long, z long")
+    )
+
+
 def cost_distance_tiles(
     tiles_df: DataFrame,
     gg: GridGeometry,
@@ -1309,34 +1088,10 @@ def cost_distance_tiles(
     destination cell), then one keyed join + min-agg per round with
     localCheckpoint truncation — the grid twin of graph.shortest_paths;
     everything shuffles on the cell key, nothing on the driver."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-
-    def px(batches):
-        gi = np.arange(tile_size, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(
-                    tile_size, tile_size
-                ).astype(np.int64)
-                gx, gy = np.meshgrid(int(tx) * tile_size + gi,
-                                     int(ty) * tile_size + gi)
-                keep = ((gx < w) & (gy < h)).ravel()
-                out.append(pd.DataFrame({
-                    "x": gx.ravel()[keep], "y": gy.ravel()[keep],
-                    "c": block.ravel()[keep] + 1,
-                }))
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"x": [], "y": [], "c": []}
-            )
-
-    cells = (
-        tiles_df.filter(F.col("band") == band)
-        .select("tx", "ty", "data")
-        .mapInPandas(px, schema="x long, y long, c long")
-        .localCheckpoint()
-    )
+    w = gg.width
+    cells = _pixel_rows(tiles_df, gg, band, tile_size, dtype).select(
+        "x", "y", (F.col("z") + 1).alias("c")
+    ).localCheckpoint()
     node = (F.col("y") * w + F.col("x")).alias("node")
     arms = cells.select(
         "x", "y", F.col("c").alias("cu"),
@@ -1409,34 +1164,7 @@ def viewshed_tiles(
     linear in cells); the full-raster form here is O(n * diameter).
     Beyond-reference raster analytics in the hillshade/TRI family
     (reference neighborhood contract: F/image/ImageProcessor.java)."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-
-    def px(batches):
-        gi = np.arange(tile_size, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(
-                    tile_size, tile_size
-                ).astype(np.int64)
-                gx, gy = np.meshgrid(int(tx) * tile_size + gi,
-                                     int(ty) * tile_size + gi)
-                keep = ((gx < w) & (gy < h)).ravel()
-                out.append(pd.DataFrame({
-                    "x": gx.ravel()[keep], "y": gy.ravel()[keep],
-                    "z": block.ravel()[keep],
-                }))
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"x": [], "y": [], "z": []}
-            )
-
-    cells = (
-        tiles_df.filter(F.col("band") == band)
-        .select("tx", "ty", "data")
-        .mapInPandas(px, schema="x long, y long, z long")
-        .localCheckpoint()
-    )
+    cells = _pixel_rows(tiles_df, gg, band, tile_size, dtype).localCheckpoint()
     zo = int(
         cells.filter((F.col("x") == ox) & (F.col("y") == oy))
         .first()["z"]
@@ -1512,40 +1240,13 @@ def template_match_tiles(
     if max(th, tw) > tile_size + 1:
         raise ValueError("template exceeds one tile ring")
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = (
-        tiles_df.filter(F.col("band") == band)
-        .select(
-            F.explode(F.array(*[
-                F.struct((F.col("tx") + dx).alias("gtx"),
-                         (F.col("ty") + dy).alias("gty"))
-                for dx in (-1, 0) for dy in (-1, 0)
-            ])).alias("g"),
-            "tx", "ty", "data",
-        )
-        .select("g.gtx", "g.gty", "tx", "ty", "data")
-        .filter((F.col("gtx") >= 0) & (F.col("gty") >= 0)
-                & (F.col("gtx") < ntx) & (F.col("gty") < nty))
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts,
+                           dxs=(-1, 0), dys=(-1, 0))
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        apron = np.zeros((ts + th - 1, ts + tw - 1), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(
-                np.int64
-            )
-            oy = (int(ty) - gty) * ts
-            ox = (int(tx) - gtx) * ts
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1 = min(oy + ts, ts + th - 1)
-            x1 = min(ox + ts, ts + tw - 1)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            apron[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, apron = _place_blocks(key, pdf, ts, dtype, 0,
+                                        (th - 1, tw - 1), 0, np.int64)
         ssd = np.zeros((ts, ts), dtype=np.int64)
         for v in range(th):
             for u in range(tw):
@@ -1589,32 +1290,13 @@ def harris_tiles(
     Shape: one 2-pixel halo gather (the same 9-way shuffle as the
     gradient machinery), then map-side integer numpy; output is the
     sparse corner list."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     R = 2
     thr = int(threshold)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.full((ts + 2 * R, ts + 2 * R), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts).astype(np.float64)
-            )
-            oy = (int(ty) - gty) * ts + R
-            ox = (int(tx) - gtx) * ts + R
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * R), min(ox + ts, ts + 2 * R)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, R, R, np.nan)
 
         # Sobel on the (ts+2)-wide inner frame; sub(dy,dx) is that frame
         # shifted — float64 holds these (< 2^11) exactly.
@@ -1655,12 +1337,7 @@ def harris_tiles(
             for dx in (-1, 0, 1):
                 ok &= gvalid[1 + dy:1 + dy + ts, 1 + dx:1 + dx + ts]
         r = 20 * (sxx * syy - sxy * sxy) - (sxx + syy) * (sxx + syy)
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= R) & (px[None, :] <= w - 1 - R)
-            & (py[:, None] >= R) & (py[:, None] <= h - 1 - R)
-        )
+        interior = _interior(gtx, gty, ts, gg, R)
         sel = ok & interior & (r >= thr)
         ys, xs = np.nonzero(sel)
         if not len(ys):
@@ -1700,42 +1377,19 @@ def disparity_tiles(
     if d_max > tile_size:
         raise ValueError("d_max must be <= tile_size")
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
     left = left_df.filter(F.col("band") == band)
-    rcontrib = (
-        right_df.filter(F.col("band") == band)
-        .select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.col("tx") + dx).alias("gtx"),
-                        F.col("ty").alias("gty"),
-                    )
-                    for dx in (0, 1)
-                ])
-            ).alias("g"),
-            "tx", "ty", "data",
-        )
-        .select("g.gtx", "g.gty", "tx", "ty", "data")
-        .filter((F.col("gtx") < ntx) & (F.col("gty") < nty))
-    )
+    rcontrib = _halo_groups(right_df.filter(F.col("band") == band), gg, ts,
+                            dxs=(0, 1), dys=(0,))
 
     def fn(key, l_pdf, r_pdf):
         empty = pd.DataFrame({"bx": [], "by": [], "d": [], "ssd": []})
         if not len(l_pdf) or not len(r_pdf):
             return empty
-        tx, ty = int(key[0]), int(key[1])
-        L = np.frombuffer(l_pdf["data"].iloc[0], dtype=bdt).reshape(
+        L = np.frombuffer(l_pdf["data"].iloc[0], dtype=dtype).reshape(
             ts, ts).astype(np.float64)
-        rh = np.full((ts, 2 * ts), np.nan)   # columns [tx*ts - ts, tx*ts + ts)
-        for data, rtx in zip(r_pdf["data"], r_pdf["tx"]):
-            blockr = np.frombuffer(data, dtype=bdt).reshape(
-                ts, ts).astype(np.float64)
-            ox = (int(rtx) - tx + 1) * ts
-            rh[:, ox:ox + ts] = blockr
+        # columns [tx*ts - ts, tx*ts + ts)
+        tx, ty, rh = _place_blocks(key, r_pdf, ts, dtype, (0, ts), 0, np.nan)
         nb = ts // block
         best_ssd = np.full((nb, nb), np.inf)
         best_d = np.zeros((nb, nb), np.int64)
@@ -1798,44 +1452,20 @@ def optical_flow_tiles(
     if s_max > tile_size:
         raise ValueError("s_max must be <= tile_size")
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
     a = a_df.filter(F.col("band") == band)
-    bcontrib = (
-        b_df.filter(F.col("band") == band)
-        .select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.col("tx") + dx).alias("gtx"),
-                        (F.col("ty") + dy).alias("gty"),
-                    )
-                    for dx in (0, 1) for dy in (0, 1)
-                ])
-            ).alias("g"),
-            "tx", "ty", "data",
-        )
-        .select("g.gtx", "g.gty", "tx", "ty", "data")
-        .filter((F.col("gtx") < ntx) & (F.col("gty") < nty))
-    )
+    bcontrib = _halo_groups(b_df.filter(F.col("band") == band), gg, ts,
+                            dxs=(0, 1), dys=(0, 1))
 
     def fn(key, a_pdf, b_pdf):
         empty = pd.DataFrame(
             {"bx": [], "by": [], "dx": [], "dy": [], "ssd": []})
         if not len(a_pdf) or not len(b_pdf):
             return empty
-        tx, ty = int(key[0]), int(key[1])
-        A = np.frombuffer(a_pdf["data"].iloc[0], dtype=bdt).reshape(
+        A = np.frombuffer(a_pdf["data"].iloc[0], dtype=dtype).reshape(
             ts, ts).astype(np.float64)
-        bh = np.full((2 * ts, 2 * ts), np.nan)  # rows/cols [g*ts - ts, g*ts + ts)
-        for data, btx, bty in zip(b_pdf["data"], b_pdf["tx"], b_pdf["ty"]):
-            blockb = np.frombuffer(data, dtype=bdt).reshape(
-                ts, ts).astype(np.float64)
-            ox = (int(btx) - tx + 1) * ts
-            oy = (int(bty) - ty + 1) * ts
-            bh[oy:oy + ts, ox:ox + ts] = blockb
+        # rows/cols [g*ts - ts, g*ts + ts)
+        tx, ty, bh = _place_blocks(key, b_pdf, ts, dtype, ts, 0, np.nan)
         nb = ts // block
         best_ssd = np.full((nb, nb), np.inf)
         best_dx = np.zeros((nb, nb), np.int64)
@@ -1900,32 +1530,13 @@ def canny_nms_tiles(
     oracle), keep pixels whose m2 >= both axis neighbors (plateaus
     survive on both sides — deterministic) and m2 >= t_low.  2-px halo
     gather; hysteresis is ``canny_edges`` downstream."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     R = 2
     tl = int(t_low)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.full((ts + 2 * R, ts + 2 * R), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts).astype(np.float64)
-            )
-            oy = (int(ty) - gty) * ts + R
-            ox = (int(tx) - gtx) * ts + R
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * R), min(ox + ts, ts + 2 * R)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, R, R, np.nan)
 
         def sub(dy, dx):
             return halo[1 + dy:1 + dy + ts + 2, 1 + dx:1 + dx + ts + 2]
@@ -1949,12 +1560,7 @@ def canny_nms_tiles(
             sel = caxis == a
             n1 = np.where(sel, m2[1 + dy:1 + dy + ts, 1 + dx:1 + dx + ts], n1)
             n2 = np.where(sel, m2[1 - dy:1 - dy + ts, 1 - dx:1 - dx + ts], n2)
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= R) & (px[None, :] <= w - 1 - R)
-            & (py[:, None] >= R) & (py[:, None] <= h - 1 - R)
-        )
+        interior = _interior(gtx, gty, ts, gg, R)
         keep = (
             np.isfinite(c) & np.isfinite(n1) & np.isfinite(n2)
             & (c >= n1) & (c >= n2) & (c >= tl) & interior
@@ -2034,36 +1640,14 @@ def euler_tiles(
     y=-1 padding columns belong to the first tile row/column (same rule
     as the oracle's greatest(x,0)//T).  One 1-px halo gather; missing
     neighbor tiles read as background."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     thr = int(threshold)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.zeros((ts + 2, ts + 2), np.int64)   # pad/missing = 0
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = (
-                block[y0 - oy:y1 - oy, x0 - ox:x1 - ox] >= thr
-            )
-        # mask out-of-extent pixels (right/bottom padding of edge tiles)
-        gx0, gy0 = gtx * ts - 1, gty * ts - 1
-        xs_g = gx0 + np.arange(ts + 2)
-        ys_g = gy0 + np.arange(ts + 2)
-        halo[:, (xs_g < 0) | (xs_g >= w)] = 0
-        halo[(ys_g < 0) | (ys_g >= h), :] = 0
+        # mask plane; pad, missing and out-of-extent pixels = 0
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, 0, np.int64,
+                                       extent=gg, block_fn=lambda b: b >= thr)
         # anchors owned by this tile: x in [gtx*ts .. +ts-1], plus the
         # -1 padding column/row for the first tile col/row
         lx0 = 0 if gtx == 0 else 1
@@ -2116,35 +1700,13 @@ def zhang_suen_tiles(
     R = 2 * int(rounds)
     if R > tile_size:
         raise ValueError("rounds too large for the 1-tile halo")
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     thr = int(threshold)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        M = np.zeros((ts + 2 * R, ts + 2 * R), np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts)
-            oy = (int(ty) - gty) * ts + R
-            ox = (int(tx) - gtx) * ts + R
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * R), min(ox + ts, ts + 2 * R)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            M[y0:y1, x0:x1] = (
-                block[y0 - oy:y1 - oy, x0 - ox:x1 - ox] >= thr
-            )
-        gx0, gy0 = gtx * ts - R, gty * ts - R
-        xs_g = gx0 + np.arange(ts + 2 * R)
-        ys_g = gy0 + np.arange(ts + 2 * R)
-        M[:, (xs_g < 0) | (xs_g >= w)] = 0
-        M[(ys_g < 0) | (ys_g >= h), :] = 0
+        gtx, gty, M = _place_blocks(key, pdf, ts, dtype, R, R, 0, np.int64,
+                                    extent=gg, block_fn=lambda b: b >= thr)
 
         for it in range(2 * int(rounds)):
             P = np.pad(M, 1)
@@ -2229,30 +1791,11 @@ def demosaic_tiles(
     0 in all three planes — interior-only semantics shared with the
     oracle.  One 1-px halo gather; output values <= 1020 ship as uint16
     little-endian bytes."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((ts + 2, ts + 2), np.nan)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts).astype(np.float64)
-            )
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, np.nan)
 
         def nb(dy, dx):
             return halo[1 + dy:1 + dy + ts, 1 + dx:1 + dx + ts]
@@ -2274,10 +1817,7 @@ def demosaic_tiles(
                                np.where(~ex & ey, 2 * ns, diags)))
         g4 = np.where(ex == ey, edges, 4 * m)   # broadcast XNOR of parities
         valid = np.isfinite(m + edges + diags)
-        interior = (
-            (gx[None, :] >= 1) & (gx[None, :] <= w - 2)
-            & (gy[:, None] >= 1) & (gy[:, None] <= h - 2)
-        )
+        interior = _interior(gtx, gty, ts, gg)
         ok = valid & interior
         rows = []
         for bidx, plane in ((0, r4), (1, g4), (2, b4)):
@@ -2311,39 +1851,14 @@ def lbp_tiles(
     Same halo-gather shuffle as the gradient (shuffled volume = tile
     perimeter); the 8 comparisons are one vectorized expression and the
     histogram one bincount per tile."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    ts = tile_size
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
     offs = [(-1, -1), (0, -1), (1, -1), (-1, 0),
             (1, 0), (-1, 1), (0, 1), (1, 1)]
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        ts = tile_size
-        halo = np.zeros((ts + 2, ts + 2), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = (
-                np.frombuffer(data, dtype=bdt)
-                .reshape(ts, ts)
-                .astype(np.int64)
-            )
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        px = gtx * ts + np.arange(ts)
-        py = gty * ts + np.arange(ts)
-        interior = (
-            (px[None, :] >= 1) & (px[None, :] <= w - 2)
-            & (py[:, None] >= 1) & (py[:, None] <= h - 2)
-        )
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, 0, np.int64)
+        interior = _interior(gtx, gty, ts, gg)
         c = halo[1:1 + ts, 1:1 + ts]
         code = np.zeros((ts, ts), dtype=np.int64)
         for k, (dx, dy) in enumerate(offs):
@@ -2391,31 +1906,13 @@ def bilateral_tiles(
     Same single halo-gather shuffle as rank_filter_tiles (tile_size >= 2
     covers the radius-2 stencil from the 8 neighbor tiles); the 25
     shifted adds are vectorized numpy."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
+    r = 2
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        r = 2
-        halo = np.zeros((ts + 2 * r, ts + 2 * r), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + r
-            ox = (int(tx) - gtx) * ts + r
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * r), min(ox + ts, ts + 2 * r)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        hx = gtx * ts - r + np.arange(ts + 2 * r)[None, :]
-        hy = gty * ts - r + np.arange(ts + 2 * r)[:, None]
-        halo[(hx < 0) | (hx >= w) | (hy < 0) | (hy >= h)] = 0
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, r, r, 0, np.int64,
+                                       extent=gg)
         v0 = halo[r:r + ts, r:r + ts]
         num = np.zeros((ts, ts), dtype=np.int64)
         den = np.zeros((ts, ts), dtype=np.int64)
@@ -2460,30 +1957,13 @@ def adaptive_threshold_tiles(
     Same single halo-gather shuffle as bilateral_tiles (radius <=
     tile_size); per-tile work is one 2-D cumsum + vectorized compares."""
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
     r = int(radius)
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.zeros((ts + 2 * r, ts + 2 * r), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + r
-            ox = (int(tx) - gtx) * ts + r
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2 * r), min(ox + ts, ts + 2 * r)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        hx = gtx * ts - r + np.arange(ts + 2 * r)[None, :]
-        hy = gty * ts - r + np.arange(ts + 2 * r)[:, None]
-        halo[(hx < 0) | (hx >= w) | (hy < 0) | (hy >= h)] = 0
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, r, r, 0, np.int64,
+                                       extent=gg)
         ii = np.zeros((ts + 2 * r + 1, ts + 2 * r + 1), dtype=np.int64)
         ii[1:, 1:] = halo.cumsum(0).cumsum(1)
         # box sum for every tile pixel (window spans the full halo)
@@ -2526,30 +2006,12 @@ def census_tiles(
     convention.  Same 9-way halo shuffle as rank_filter_tiles; pure
     integer comparisons, so the oracle replays every bit."""
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.zeros((ts + 2, ts + 2), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
-        hx = gtx * ts - 1 + np.arange(ts + 2)[None, :]
-        hy = gty * ts - 1 + np.arange(ts + 2)[:, None]
-        oob = (hx < 0) | (hx >= w) | (hy < 0) | (hy >= h)
-        halo[oob] = 0
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, 1, 1, 0, np.int64,
+                                       extent=gg)
         center = halo[1:1 + ts, 1:1 + ts]
         out = np.zeros((ts, ts), dtype=np.int64)
         bit = 0
@@ -2597,31 +2059,15 @@ def brief_descriptors_tiles(
     computes its own keypoints from a margin-wide halo assembled from
     the 9-way neighbor shuffle (pattern offsets never leave it)."""
     h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     ts = tile_size
     M = int(margin)
     assert all(
         abs(o) <= M for p in BRIEF_PAIRS for o in p
     ), "pattern exceeds margin"
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.filter(F.col("band") == band)).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df.filter(F.col("band") == band), gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.zeros((ts + 2 * M, ts + 2 * M), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-            oy = (int(ty) - gty) * ts + M
-            ox = (int(tx) - gtx) * ts + M
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1 = min(oy + ts, ts + 2 * M)
-            x1 = min(ox + ts, ts + 2 * M)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
+        gtx, gty, halo = _place_blocks(key, pdf, ts, dtype, M, M, 0, np.int64)
         x0g, y0g = gtx * ts, gty * ts
         kxs = np.arange(
             ((max(x0g, M) + step - 1) // step) * step,
@@ -2765,31 +2211,13 @@ def local_extrema_tiles(
     sentinel and the oracle's window frames agree on that) and v > thr.
     Same 9-way halo shuffle as convolve_tiles; input tiles are int64
     planes without a band column (the convolve output shape)."""
-    h, w = gg.height, gg.width
     ts = tile_size
-    ntx = (w + ts - 1) // ts
-    nty = (h + ts - 1) // ts
-    contrib = _halo_groups(tiles_df.select("tx", "ty", "data")).filter(
-        (F.col("gtx") < ntx) & (F.col("gty") < nty)
-    )
+    contrib = _halo_groups(tiles_df, gg, ts)
 
     def fn(key, pdf):
-        gtx, gty = int(key[0]), int(key[1])
-        halo = np.full((ts + 2, ts + 2), _EXTREMA_SENTINEL, dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, np.int64).reshape(ts, ts)
-            oy = (int(ty) - gty) * ts + 1
-            ox = (int(tx) - gtx) * ts + 1
-            y0, x0 = max(oy, 0), max(ox, 0)
-            y1, x1 = min(oy + ts, ts + 2), min(ox + ts, ts + 2)
-            if y1 <= y0 or x1 <= x0:
-                continue
-            halo[y0:y1, x0:x1] = block[y0 - oy:y1 - oy, x0 - ox:x1 - ox]
         # pixels beyond the extent must never be treated as values
-        px = gtx * ts + np.arange(-1, ts + 1)
-        py = gty * ts + np.arange(-1, ts + 1)
-        halo[:, (px < 0) | (px >= w)] = _EXTREMA_SENTINEL
-        halo[(py < 0) | (py >= h), :] = _EXTREMA_SENTINEL
+        gtx, gty, halo = _place_blocks(key, pdf, ts, np.int64, 1, 1,
+                                       _EXTREMA_SENTINEL, np.int64, extent=gg)
         c = halo[1:-1, 1:-1]
         nmax = np.full_like(c, _EXTREMA_SENTINEL)
         for dy in (-1, 0, 1):

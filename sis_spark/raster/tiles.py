@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as _geo
 from ..functions import transforms as _tr
-from .grid import GridGeometry
+from .grid import GridGeometry, _halo_groups
 
 TILE_SCHEMA = "tx long, ty long, band int, data binary"
 
@@ -1518,23 +1518,7 @@ def clahe_tiles(tiles_df: DataFrame, gg: GridGeometry, clip_limit: int = 64,
     ntx = (gg.width + T - 1) // T
     nty = (gg.height + T - 1) // T
     luts = clahe_luts(tiles_df, gg, clip_limit, band, T, dtype)
-    halo = (
-        luts.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.col("tx") + dx).alias("gtx"),
-                        (F.col("ty") + dy).alias("gty"),
-                    )
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                ])
-            ).alias("g"),
-            "tx", "ty", "lut",
-        )
-        .select("g.gtx", "g.gty", "tx", "ty", "lut")
-        .filter((F.col("gtx") >= 0) & (F.col("gty") >= 0)
-                & (F.col("gtx") < ntx) & (F.col("gty") < nty))
-    )
+    halo = _halo_groups(luts, gg, T, col="lut")
     bdt = np.dtype(dtype)
 
     def fn(key, tiles_pdf, luts_pdf):

@@ -28,16 +28,20 @@ def test_ivf_df_matches_list_api(spark):
     qids = [3, 77, 120]
     want = sorted(tuple(r) for r in ivf_topk(df, qids, 5, nlist=8, nprobe=3).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
-    got = sorted(tuple(r) for r in ivf_topk_df(df, queries, 5, nlist=8, nprobe=3).collect())
+    got = sorted(tuple(r) for r in ivf_topk_df(
+        df, queries, 5, nlist=8, nprobe=3, exclude_self=True).collect())
     assert got == want
 
 
 def test_ivf_df_external_queries_exact_at_full_probe(spark):
-    """External query table (ids disjoint from the collection), nprobe ==
-    nlist: every query scores the whole collection -> equals brute cosine."""
+    """External query table, nprobe == nlist: every query scores the
+    whole collection -> equals brute cosine.  The last query reuses
+    collection id 17 for a copy of vector 17: an external query id that
+    equals a collection id must not drop that candidate (it ranks first)."""
     df = _emb(spark, 200, 8, seed=9)
     rng = np.random.default_rng(31)
     qrows = [(10_000 + i, rng.uniform(-1, 1, 8).tolist()) for i in range(4)]
+    qrows.append((17, df.filter(F.col("vec_id") == 17).first()["embedding"]))
     queries = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
     got = ivf_topk_df(df, queries, 6, nlist=5, nprobe=5).collect()
     # reference: quantized cosine vs every collection vector
@@ -62,7 +66,8 @@ def test_pq_df_matches_list_api(spark):
     qids = [0, 55]
     want = sorted(tuple(r) for r in pq_topk(df, qids, 4, m=4, ksub=8).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
-    got = sorted(tuple(r) for r in pq_topk_df(df, queries, 4, m=4, ksub=8).collect())
+    got = sorted(tuple(r) for r in pq_topk_df(
+        df, queries, 4, m=4, ksub=8, exclude_self=True).collect())
     assert got == want
 
 
@@ -75,7 +80,8 @@ def test_ivf_pq_df_matches_list_api(spark):
         df, qids, 4, nlist=6, nprobe=2, m=4, ksub=8).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
     got = sorted(tuple(r) for r in ivf_pq_topk_df(
-        df, queries, 4, nlist=6, nprobe=2, m=4, ksub=8).collect())
+        df, queries, 4, nlist=6, nprobe=2, m=4, ksub=8,
+        exclude_self=True).collect())
     assert got == want
 
 

@@ -273,6 +273,10 @@ def test_ccitt_extremes_and_wide_runs():
     img[2, :] = 1
     img[3, 40:60] = 1
     assert np.array_equal(decode_mh(encode_mh(img), 4, 97), img)
+    # zero-width rows encode to no bytes
+    img = np.zeros((3, 0), np.uint8)
+    assert encode_mh(img) == b""
+    assert np.array_equal(decode_mh(encode_mh(img), 3, 0), img)
 
 
 def test_ccitt_codewords_are_t4():

@@ -153,6 +153,14 @@ def test_laea_roundtrip_origin_and_equal_area():
     assert np.abs(lon - lo2).max() < 1e-9
     assert np.abs(lat - la2).max() < 1e-9
 
+    # the poles: a finite forward at +-90 and a round trip within 2e-8 deg
+    # (one ulp of the northing is ~4e-9 deg of latitude at 89.9999)
+    polar = np.array([89.999, 89.9999, 90.0, -89.999, -89.9999, -90.0])
+    X, Y = p.forward(np.full(polar.shape, 10.0), polar)
+    assert np.isfinite(X).all() and np.isfinite(Y).all()
+    _, la2 = p.inverse(X, Y)
+    assert np.abs(polar - la2).max() <= 2e-8
+
     for lat0 in (40.0, 65.0):
         dd = 0.01
         quad_lon = np.array([10.0, 10.0 + dd, 10.0 + dd, 10.0])
