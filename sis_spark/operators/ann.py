@@ -9,7 +9,8 @@ otherwise differ between engines and flip near-tie rankings.)
 
 * ``brute_topk``: exact baseline — broadcast query vectors, crossJoin,
   partial per-partition top-k (numpy matmul over Arrow batches), final
-  window top-k.  Same partial/final shape as operators.knn.
+  window top-k.  The same partial/final shape that Spark's WindowGroupLimit
+  gives operators.knn.
 * ``lsh_topk``: scale path — sign-random-projection buckets (hyperplanes
   derived deterministically from md5 bits), equi-join on bucket, exact
   re-rank inside buckets.  Approximate: recall measured in tests.

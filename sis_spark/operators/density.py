@@ -1816,7 +1816,7 @@ def all_nearest_neighbors(
     cannot split engines).  The Clark-Evans / spatial-description
     building block.
 
-    Scale shape (the knn_join_cells ring discipline on the plane): round
+    Scale shape (a ring-doubling loop on the plane): round
     r joins the still-uncertified points against their (2r+1)^2 grid-cell
     block; a candidate best is CERTIFIED exact when best_d2 < clearance^2,
     clearance = the point's integer distance to the block boundary (any

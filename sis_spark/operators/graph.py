@@ -14,10 +14,10 @@ Beyond" — the min-label-propagation + pointer-jumping variant):
 Label propagation alone needs O(diameter) rounds; the pointer-jumping step
 (path halving over the functional node->comp map) brings convergence to
 O(log n) rounds.  Per round the driver sees ONE scalar (the number of
-changed labels) and the lineage is truncated with localCheckpoint — the same
-iterative-loop discipline as knn_join_cells (NOTES.md plan-shape lesson 6;
-without truncation Catalyst re-analysis of round-over-round lineage costs
-minutes of driver CPU).
+changed labels) and the lineage is truncated with localCheckpoint — the
+iterative-loop discipline of NOTES.md plan-shape lesson 6 (without
+truncation Catalyst re-analysis of round-over-round lineage costs minutes
+of driver CPU).
 
 Works for any orderable node type (BIGINT ids, string doc/image ids): the
 component label is the MINIMUM node id in the component — deterministic and

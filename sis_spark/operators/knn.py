@@ -6,26 +6,27 @@ north star ("H3 k-ring kNN search").  Distance metric: spherical haversine
 (the reference's geodesics are ellipsoidal, R/GeodeticCalculator.java:405;
 spherical documented + tested).
 
-Strategies
-----------
-``brute``  exact: broadcast the (small) query set, crossJoin, then a
-           **partial top-k per partition** (Arrow-vectorized) followed by a
-           final top-k — the classic partial/final aggregate shape, so the
-           cross join never shuffles more than ~k rows per (query,
-           partition).  Scales to any candidate count as long as the query
-           set broadcasts.
-``cells``  cell-prefiltered: candidates restricted to the k-ring of each
-           query's cell, ring radius grown (driver-side plan loop, the
-           GridDerivation style) until the kth distance is provably below
-           the distance to the nearest uncovered cell — exact, and touches
-           only candidates near the queries.  On a cell-partitioned table
-           the per-iteration filter partition-prunes.
+Plans
+-----
+Both plans end in the same top-k (``_topk``): each (query, candidate) pair
+gets its haversine ``dist_m``, then ``row_number()`` over the query ordered
+by (dist_m, cand_id) and ``rank <= k``.  Spark plans that filter as a
+``WindowGroupLimit`` Partial before the shuffle and Final after it, so at
+most k rows per (query, partition) leave a task.
+
+``knn_join``        brute: every candidate against the broadcast query set.
+``knn_join_cells``  ring: each query meets only the candidates in the
+                    Chebyshev ring R around its cell, with R certified
+                    before the join — one round, exact.
+
+Input rule (both plans): a row takes part only with a finite lon and a lat
+in [-90, 90]; lon is wrapped into [-180, 180) before any cell id, so a
+candidate at lon 190 sits in the cell of lon -170, where haversine puts it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,10 +37,8 @@ from ..functions.spark_exprs import haversine_col
 #: fine the join resolution is (VERDICT r3 item 3 — bounded driver memory).
 SEED_RES_CAP = 8
 
-#: knn_join_cells runs at most MAX_ITERATIONS ring-doubling rounds; queries
-#: whose ring would exceed RING_CAP (~(2*64+1)^2 cells) or that are still
-#: pending after the last round go to the exact brute plan.
-MAX_ITERATIONS = 8
+#: Queries whose certified ring would exceed RING_CAP (~(2*64+1)^2 cells)
+#: rank every candidate, as the brute plan does.
 RING_CAP = 64
 
 
@@ -79,59 +78,47 @@ def _cheb_count(sat: np.ndarray, qx: np.ndarray, qy: np.ndarray,
     return out
 
 
-def knn_join(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int,
-    cand_id: str = "cand_id",
-    cand_lon: str = "lon",
-    cand_lat: str = "lat",
-    query_id: str = "query_id",
-    query_lon: str = "qlon",
-    query_lat: str = "qlat",
-) -> DataFrame:
-    """Exact kNN: output (query cols, cand_id, dist_m, rank 1..k).
+def _coarse_radius(sat: np.ndarray, qlon, qlat, k: int, hres: int) -> np.ndarray:
+    """Smallest Chebyshev radius, in cells of the SAT's resolution ``hres``,
+    whose window around each query holds >= k candidates — a vectorized
+    binary search (log2(nh) probes of O(1) rectangle sums).  The SAT must
+    hold >= k candidates in total."""
+    from ..functions.cells import lonlat_to_ixiy
 
-    Ties broken by candidate id (deterministic, matches the oracle).
-    """
-    spark = candidates.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    cand = candidates.select(cand_id, cand_lon, cand_lat)
-    if cand.rdd.getNumPartitions() < max(2, par // 2):
-        cand = cand.repartition(par)  # small-scan artifact; see spatial_join
-    q = queries.select(query_id, query_lon, query_lat)
-    joined = cand.crossJoin(F.broadcast(q))
-    joined = joined.withColumn(
-        "dist_m",
-        haversine_col(F.col(cand_lon), F.col(cand_lat), F.col(query_lon), F.col(query_lat)),
-    )
+    nh = 1 << hres
+    qx, qy = (a.astype(np.int64) for a in lonlat_to_ixiy(qlon, qlat, hres))
+    lo = np.zeros(len(qx), np.int64)
+    hi = np.full(len(qx), nh, np.int64)  # r = nh covers the globe
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = _cheb_count(sat, qx, qy, mid, nh) >= k
+        hi = np.where(ok, mid, hi)
+        lo = np.where(ok, lo, mid + 1)
+    return lo
 
-    # partial top-k inside each partition (Arrow batch, no shuffle) ...
-    schema = joined.schema
 
-    def partial_topk(batches):
-        best: dict = {}
-        cols = None
-        for pdf in batches:
-            cols = pdf.columns
-            for qid, grp in pdf.groupby(query_id, sort=False):
-                sub = grp.nsmallest(k, ["dist_m", cand_id])
-                prev = best.get(qid)
-                best[qid] = (
-                    sub if prev is None
-                    else pd.concat([prev, sub]).nsmallest(k, ["dist_m", cand_id])
-                )
-        if best:
-            yield pd.concat(best.values())[cols]
+def _window_far_m(qlon, qlat, radius, hres: int) -> np.ndarray:
+    """Upper bound D on the haversine distance from each query to any point
+    of its Chebyshev-``radius`` window at resolution ``hres``: the farthest
+    of the window box's 4 corners, x (1 + 1e-9) for rounding.  Corners
+    suffice while the box reaches at most 90 degrees of longitude from the
+    query (over such a box the distance peaks at a corner); beyond that D
+    is half the globe's circumference."""
+    from ..functions.cells import lonlat_to_ixiy
+    from ..functions.geometry import EARTH_RADIUS_M, haversine_m
 
-    pruned = joined.mapInPandas(partial_topk, schema=schema)
-
-    # ... then the final exact top-k (tiny input: <= k * n_partitions per query)
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(cand_id).asc())
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    qlon = np.asarray(qlon, dtype=np.float64)
+    qlat = np.asarray(qlat, dtype=np.float64)
+    nh = 1 << hres
+    qx, qy = (a.astype(np.int64) for a in lonlat_to_ixiy(qlon, qlat, hres))
+    west = (qx - radius) * (360.0 / nh) - 180.0
+    east = (qx + radius + 1) * (360.0 / nh) - 180.0
+    south = np.maximum(qy - radius, 0) * (180.0 / nh) - 90.0
+    north = (np.minimum(qy + radius, nh - 1) + 1) * (180.0 / nh) - 90.0
+    far = np.max([haversine_m(qlon, qlat, x, y)
+                  for x in (west, east) for y in (south, north)], axis=0)
+    reach = np.maximum(qlon - west, east - qlon)
+    return np.where(reach <= 90.0, far * (1.0 + 1e-9), np.pi * EARTH_RADIUS_M)
 
 
 def _ring_bound_m_np(qlon: np.ndarray, qlat: np.ndarray, res: int, ring: np.ndarray) -> np.ndarray:
@@ -180,6 +167,70 @@ def _ring_bound_m_np(qlon: np.ndarray, qlat: np.ndarray, res: int, ring: np.ndar
     return out
 
 
+def _certified_ring(qlon, qlat, res: int, far_m: np.ndarray) -> np.ndarray:
+    """Smallest ring r in 0..RING_CAP at ``res`` whose outside is provably
+    farther than ``far_m`` from each query, else RING_CAP + 1.  A linear
+    scan, not a binary search: near the poles the bound is not monotone
+    in r."""
+    ring = np.full(len(far_m), RING_CAP + 1, np.int64)
+    for r in range(RING_CAP, -1, -1):
+        ok = _ring_bound_m_np(qlon, qlat, res, np.full(len(far_m), r)) > far_m
+        ring[ok] = r
+    return ring
+
+
+def _prelude(candidates: DataFrame, queries: DataFrame, cols: tuple):
+    """The (candidate, query) inputs of both plans: the named columns of the
+    rows with a finite lon and a lat in [-90, 90] (Spark orders NaN above
+    +inf, so both comparisons also drop NaN; they drop null too), and
+    candidates spread over the cores when the scan has too few
+    partitions (a small-scan artifact; see spatial_join)."""
+    cand_id, cand_lon, cand_lat, query_id, query_lon, query_lat = cols
+
+    def valid(df, lon, lat):
+        return df.filter((F.abs(F.col(lon)) < F.lit(float("inf")))
+                         & (F.col(lat) >= -90.0) & (F.col(lat) <= 90.0))
+
+    par = candidates.sparkSession.sparkContext.defaultParallelism
+    cand = valid(candidates.select(cand_id, cand_lon, cand_lat), cand_lon, cand_lat)
+    if cand.rdd.getNumPartitions() < max(2, par // 2):
+        cand = cand.repartition(par)
+    q = valid(queries.select(query_id, query_lon, query_lat), query_lon, query_lat)
+    return cand, q
+
+
+def _topk(pairs: DataFrame, k: int, cols: tuple) -> DataFrame:
+    """(candidate, query) pairs -> + dist_m, rank 1..k per query, ties to
+    the smaller cand_id (deterministic, matches the oracle)."""
+    cand_id, cand_lon, cand_lat, query_id, query_lon, query_lat = cols
+    w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(cand_id).asc())
+    return (
+        pairs.withColumn("dist_m", haversine_col(F.col(cand_lon), F.col(cand_lat),
+                                                 F.col(query_lon), F.col(query_lat)))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def knn_join(
+    candidates: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cand_id: str = "cand_id",
+    cand_lon: str = "lon",
+    cand_lat: str = "lat",
+    query_id: str = "query_id",
+    query_lon: str = "qlon",
+    query_lat: str = "qlat",
+) -> DataFrame:
+    """Exact kNN, brute plan: output (candidate cols, query cols, dist_m,
+    rank 1..k).  Scales to any candidate count as long as the query set
+    broadcasts."""
+    cols = (cand_id, cand_lon, cand_lat, query_id, query_lon, query_lat)
+    cand, q = _prelude(candidates, queries, cols)
+    return _topk(cand.crossJoin(F.broadcast(q)), k, cols)
+
+
 def knn_join_cells(
     candidates: DataFrame,
     queries: DataFrame,
@@ -192,183 +243,75 @@ def knn_join_cells(
     query_lon: str = "qlon",
     query_lat: str = "qlat",
 ) -> DataFrame:
-    """Exact kNN via k-ring expansion — DISTRIBUTED formulation (r2 rewrite
-    of the per-query driver loop, VERDICT r1 item 8).
+    """Exact kNN via one certified k-ring round -> (query_id, rank, cand_id),
+    the rows of ``knn_join``.
 
-    Query state (query_id, coords, ring) lives in a DataFrame; each round
-    * explodes the pending queries' ring cells (Arrow stage),
-    * equi-joins candidates on cell, windows the per-query top-k,
-    * certifies per query IN SPARK: k found AND kth distance <= the
-      vectorized ring bound (or ring covers the globe),
-    * certified rows accumulate as a union of per-round DataFrames; the
-      rest double their ring.
-    Per-round driver traffic is a single pending-count scalar (loop
-    control); no result rows or memberships are ever collected.  Queries
-    whose ring would exceed ``RING_CAP`` (~(2*64+1)^2 cells) — near-empty
-    neighborhoods, or fewer than k candidates on the globe — fall back to
-    the exact brute partial/final plan, still in Spark (the ADVICE r1
-    meshgrid-OOM hazard is gone with the cap).
+    The certificate: one histogram collect at the coarse resolution
+    min(res, SEED_RES_CAP) (<= 65k driver rows at any ``res``), folded into
+    a summed-area table, gives each query the smallest coarse window that
+    holds >= k candidates, so its k-th neighbour is at most D away, D the
+    window's farthest point (``_window_far_m``).  The query's ring R at
+    ``res`` is the smallest one whose outside is provably farther than D
+    (``_ring_bound_m_np``): the k nearest all lie in ring R, and the top-k
+    over ring R's candidates is the brute one.  This per-cell count bound
+    is the one of "Random Sampling Over Spatial Range Joins" (ICDE 2025),
+    used here as a certificate, and the window plays the plan-input role of
+    GridDerivation (F/coverage/grid/GridDerivation.java:332).
 
-    START rings are density-seeded from a BOUNDED coarse histogram: one
-    collect at min(res, SEED_RES_CAP) (<= 65k rows regardless of ``res``),
-    folded into a summed-area table, binary-searched per query with O(1)
-    rectangle sums in one Arrow stage (plan-input role of GridDerivation,
-    F/coverage/grid/GridDerivation.java:332).  Seeds affect only the
-    starting ring; the per-round certification stays exact."""
+    One Arrow stage picks each query's R and explodes its ring cells; one
+    equi-join on the cell and the shared top-k follow.  Queries with no
+    R <= ``RING_CAP`` (near-empty neighbourhoods, polar queries at fine
+    ``res``, fewer than k candidates on the globe) leave that stage as one
+    row with cell -1, and every candidate also enters the join under cell
+    -1, so those queries rank all candidates, as the brute plan does, in
+    the same join and top-k.  The Arrow stage runs once.  Nothing but the
+    histogram reaches the driver."""
     from pyspark.sql import types as T
 
-    from ..functions.cells import cell_to_ixiy, k_ring, lonlat_to_ixiy
+    from ..functions.cells import cell_to_ixiy, encode_cell, k_ring
     from ..functions.spark_exprs import cell_col
 
-    spark = candidates.sparkSession
+    cols = (cand_id, cand_lon, cand_lat, query_id, query_lon, query_lat)
+    cand, q = _prelude(candidates, queries, cols)
     n = 1 << res
-    par = spark.sparkContext.defaultParallelism
-    cand = candidates.select(cand_id, cand_lon, cand_lat)
-    if cand.rdd.getNumPartitions() < max(2, par // 2):
-        cand = cand.repartition(par)
-    cand = cand.withColumn("__cell", cell_col(F.col(cand_lon), F.col(cand_lat), res)).persist()
-
-    # ---- density seeding: ONE histogram collect at the COARSE resolution
-    # min(res, SEED_RES_CAP) — <= 65k rows on the driver no matter how fine
-    # ``res`` is — folded into a summed-area table; per-query start rings
-    # come from a VECTORIZED binary search over O(1) rectangle sums inside
-    # an Arrow stage (no per-query histogram scan; GridDerivation-style
-    # plan pruning, F/coverage/grid/GridDerivation.java:332).  Seeds only
-    # set the STARTING ring — the exact per-ring certification below is
-    # untouched, so seed coarseness never changes results.
     hres = min(res, SEED_RES_CAP)
-    nh = 1 << hres
-    seed_scale = 1 << (res - hres)
+    # lon wrapped into [-180, 180) before the cell id, as for the queries
+    wrapped = F.pmod(F.col(cand_lon) + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
+    cand = cand.withColumn("__cell", cell_col(wrapped, F.col(cand_lat), res)).persist()
+
     hist = (
-        cand.groupBy(
-            cell_col(F.col(cand_lon), F.col(cand_lat), hres).alias("__hc"))
+        cand.groupBy(F.shiftright("__cell", 2 * (res - hres)).alias("__hc"))
         .agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
-    if hist:
-        hcell = np.array([r["__hc"] for r in hist], dtype=np.int64)
-        hcnt = np.array([r["cnt"] for r in hist], dtype=np.int64)
-        hix, hiy = cell_to_ixiy(hcell, hres)
-        sat = _seed_sat(hix.astype(np.int64), hiy.astype(np.int64), hcnt, nh)
-        bc_hist = spark.sparkContext.broadcast((sat, int(hcnt.sum())))
-    else:
-        bc_hist = spark.sparkContext.broadcast((None, 0))
+    hix, hiy = cell_to_ixiy(np.array([r["__hc"] for r in hist], dtype=np.int64), hres)
+    bc_sat = cand.sparkSession.sparkContext.broadcast(_seed_sat(
+        hix.astype(np.int64), hiy.astype(np.int64),
+        np.array([r["cnt"] for r in hist], dtype=np.int64), 1 << hres))
 
-    @F.pandas_udf(T.LongType())
-    def seed_ring(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        sat_, total = bc_hist.value
-        m = len(lon_s)
-        if total < k:  # fewer than k candidates on the globe -> straight to brute
-            return pd.Series(np.full(m, RING_CAP + 1, dtype=np.int64))
-        qx, qy = lonlat_to_ixiy(lon_s.to_numpy(), lat_s.to_numpy(), hres)
-        qx = qx.astype(np.int64)
-        qy = qy.astype(np.int64)
-        # smallest coarse radius whose window holds >= k candidates,
-        # binary-searched vectorized (log2(nh) probes, each O(m))
-        lo = np.zeros(m, dtype=np.int64)
-        hi = np.full(m, nh, dtype=np.int64)   # r = nh covers the globe
-        while (lo < hi).any():
-            mid = (lo + hi) // 2
-            ok = _cheb_count(sat_, qx, qy, mid, nh) >= k
-            hi = np.where(ok, mid, hi)
-            lo = np.where(ok, lo, mid + 1)
-        # +1 margin ring, then scale the coarse radius to ``res`` units
-        return pd.Series(((lo + 1) * seed_scale).astype(np.int64))
-
-    q = queries.select(query_id, query_lon, query_lat)
-    pending = q.select(
-        query_id, query_lon, query_lat,
-        F.least(seed_ring(F.col(query_lon), F.col(query_lat)), F.lit(RING_CAP + 1)).alias("__ring"),
-        cell_col(F.col(query_lon), F.col(query_lat), res).alias("__qcell"),
-    )
-
-    member_schema = f"{query_id} long, __cell long"
-
-    def gen_rings(batches):
+    def ring_cells(batches):
+        """Per query: R, then its ring's cells — or one row with cell -1 (no
+        cell id is negative) when the query ranks every candidate."""
+        sat = bc_sat.value
         for pdf in batches:
-            out_q, out_c = [], []
-            for qid, qc, r in zip(pdf[query_id], pdf["__qcell"], pdf["__ring"]):
-                cells_arr = k_ring(int(qc), res, min(int(r), n))
-                out_q.append(np.full(len(cells_arr), qid, dtype=np.int64))
-                out_c.append(cells_arr.astype(np.int64))
-            if out_q:
-                yield pd.DataFrame({query_id: np.concatenate(out_q),
-                                    "__cell": np.concatenate(out_c)})
+            if not len(pdf):
+                continue
+            lon = np.mod(pdf[query_lon].to_numpy() + 180.0, 360.0) - 180.0
+            lat = pdf[query_lat].to_numpy()
+            if sat[-1, -1] < k:  # fewer than k candidates on the globe
+                ring = np.full(len(pdf), RING_CAP + 1, np.int64)
+            else:
+                far = _window_far_m(lon, lat, _coarse_radius(sat, lon, lat, k, hres), hres)
+                ring = _certified_ring(lon, lat, res, far)
+            cells = [k_ring(int(c), res, min(int(r), n)) if r <= RING_CAP else np.array([-1])
+                     for c, r in zip(encode_cell(lon, lat, res), ring)]
+            out = pdf.loc[pdf.index.repeat([len(x) for x in cells])]
+            yield out.assign(__cell=np.concatenate(cells).astype(np.int64))
 
-    @F.pandas_udf(T.DoubleType())
-    def bound_udf(lon_s: pd.Series, lat_s: pd.Series, ring_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            _ring_bound_m_np(lon_s.to_numpy(), lat_s.to_numpy(), res,
-                             np.minimum(ring_s.to_numpy(), n))
-        )
-
-    done_parts: list[DataFrame] = []
-    over_parts: list[DataFrame] = []
-    for _ in range(MAX_ITERATIONS):
-        # localCheckpoint truncates the logical plan: without it the round-
-        # over-round lineage (joins + windows + UDF stages) makes Catalyst
-        # analysis of the final union take minutes of driver CPU.  Data stays
-        # distributed; the count() is the round's loop-control scalar.
-        pending = pending.localCheckpoint()
-        if pending.count() == 0:
-            break
-        live = pending.filter(F.col("__ring") <= RING_CAP)
-        over_parts.append(
-            pending.filter(F.col("__ring") > RING_CAP).select(query_id, query_lon, query_lat)
-        )
-        member = live.select(query_id, "__qcell", "__ring").mapInPandas(
-            gen_rings, schema=member_schema
-        )
-        sub = (
-            cand.join(member, "__cell")
-            .join(live.select(query_id, query_lon, query_lat), query_id)
-            .withColumn(
-                "dist_m",
-                haversine_col(F.col(cand_lon), F.col(cand_lat),
-                              F.col(query_lon), F.col(query_lat)),
-            )
-        )
-        w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(cand_id).asc())
-        topk = (
-            sub.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, "rank", cand_id, "dist_m")
-            .localCheckpoint()
-        )
-        stats = topk.groupBy(query_id).agg(
-            F.max("dist_m").alias("__kth"), F.count(F.lit(1)).alias("__cnt")
-        )
-        verdict = (
-            live.join(stats, query_id, "left")
-            .withColumn("__bound", bound_udf(F.col(query_lon), F.col(query_lat), F.col("__ring")))
-            .withColumn(
-                "__ok",
-                ((F.coalesce(F.col("__cnt"), F.lit(0)) >= k) & (F.col("__kth") <= F.col("__bound")))
-                | (F.col("__ring") >= n),
-            )
-        )
-        done_parts.append(
-            topk.join(verdict.filter(F.col("__ok")).select(query_id), query_id, "left_semi")
-            .select(query_id, "rank", cand_id)
-        )
-        pending = verdict.filter(~F.col("__ok")).select(
-            query_id, query_lon, query_lat,
-            F.least(F.col("__ring") * 2, F.lit(n)).alias("__ring"), "__qcell",
-        )
-
-    # RING_CAP overflow / leftover rounds: exact brute, still in Spark
-    rest_q = pending.select(query_id, query_lon, query_lat)
-    for op in over_parts:
-        rest_q = rest_q.unionByName(op)
-    brute = knn_join(
-        cand.drop("__cell"), rest_q, k, cand_id, cand_lon, cand_lat,
-        query_id, query_lon, query_lat,
-    ).select(query_id, "rank", cand_id)
-    done_parts.append(brute)
-
-    out = done_parts[0]
-    for part in done_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    member = q.mapInPandas(ring_cells, schema=T.StructType(
+        q.schema.fields + [T.StructField("__cell", T.LongType())]))
+    # every candidate once more under cell -1, where the brute queries meet it
+    keyed = cand.unionByName(cand.withColumn("__cell", F.lit(-1).cast("long")))
+    return _topk(keyed.join(member, "__cell"), k, cols).select(query_id, "rank", cand_id)
 
 
 def idw_interpolate(
@@ -429,8 +372,6 @@ def knn_classify(
     majority label among the k nearest candidates (knn_join's exact
     deterministic neighbor set), ties -> smallest label.  One extra
     equi-join (labels) + one argmax window over <= k rows per query."""
-    from pyspark.sql import Window
-
     cand_id = kw.get("cand_id", "cand_id")
     query_id = kw.get("query_id", "query_id")
     nn = knn_join(

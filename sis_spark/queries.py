@@ -1528,9 +1528,10 @@ WHERE rank <= {KNN_K} ORDER BY query_id, rank"""
 
 
 def q_knn_cells(spark, sf_dir):
-    """Same kNN contract via the k-ring cell-prefilter strategy (exactness
-    proven per query by the uncovered-ring distance bound) — checked against
-    the same DuckDB oracle as the brute strategy."""
+    """Same kNN contract via the one-round k-ring plan (each query's ring is
+    certified before the join: its outside is provably farther than the
+    k-th neighbour can be) — checked against the same DuckDB oracle as the
+    brute plan."""
     from .operators.knn import knn_join_cells
 
     cand = _events_points(spark, sf_dir).withColumnRenamed("event_id", "cand_id")

@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``SIS_SPARK_DRIVER_MEM``, else half of physical RAM capped at 48g."""
+    env = os.environ.get("SIS_SPARK_DRIVER_MEM")
+    if env:
+        return env
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "sis_spark",
     cores: int | None = None,
@@ -40,7 +49,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SIS_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -116,13 +116,16 @@ def test_holed_batch_throughput_vs_scalar():
     polys = _holed_corpus(rng, 80, holed_frac=0.7)
     a_bufs, b_bufs = _pairs(rng, polys, 3000)
 
-    t0 = time.perf_counter()
-    relate_polygons_pred_batch(a_bufs, b_bufs)
-    t_batch = time.perf_counter() - t0
+    def best_of_5(fn):
+        best = float("inf")
+        for _ in range(5):
+            t0 = time.perf_counter()
+            fn(a_bufs, b_bufs)
+            best = min(best, time.perf_counter() - t0)
+        return best
 
-    t0 = time.perf_counter()
-    _scalar_answers(a_bufs, b_bufs)
-    t_scalar = time.perf_counter() - t0
+    t_batch = best_of_5(relate_polygons_pred_batch)
+    t_scalar = best_of_5(_scalar_answers)
 
     speedup = t_scalar / max(t_batch, 1e-9)
     assert speedup >= 3.0, f"batch only {speedup:.1f}x faster ({t_batch:.3f}s vs {t_scalar:.3f}s)"
