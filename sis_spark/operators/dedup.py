@@ -20,18 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .buckets import DEFAULT_MAX_BUCKET
+from .partitioning import spread_small_scan
 
-
-def _parallelize_scan(docs: DataFrame) -> DataFrame:
-    """Small parquet files scan as ONE split (single rowgroup), which would
-    serialize the shingle explode + 8x md5 — the most expensive map work in
-    the dedup pipelines.  Restore parallelism when the source lacks it
-    (same guard as spatial_join; at 100 TB the scan has thousands of
-    splits and this is a no-op)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < max(2, par // 2):
-        return docs.repartition(par)
-    return docs
 
 # ---------------------------------------------------------------- exact
 
@@ -94,7 +84,7 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_common: int = 2,
     stop-shingle pruning); sizes (na/nb) still count every shingle, so the
     reported jaccard becomes a LOWER BOUND for pairs that relied on capped
     shingles — None (default) keeps the exact oracle semantics."""
-    sh = shingles(_parallelize_scan(docs), n, text_col, id_col)
+    sh = shingles(spread_small_scan(docs), n, text_col, id_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
     if max_shingle_df is not None:
         rare = (
@@ -150,7 +140,7 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     of an 8x explode (string-min minhash keeps every stage portable to the
     SQL oracle).  Built on shingles_raw: duplicate shingles cannot change a
     MIN, so the distinct's extra full shuffle is skipped entirely."""
-    sh = shingles_raw(_parallelize_scan(docs), n, text_col, id_col)
+    sh = shingles_raw(spread_small_scan(docs), n, text_col, id_col)
     aggs = [
         F.min(
             F.md5(F.concat(F.lit(f"{i}:"), F.col("s")).cast("binary"))
@@ -235,7 +225,7 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.25,
     once, and unlike a CacheManager persist (which pins blocks until an
     explicit unpersist — the r2 leak) checkpoint blocks are reclaimed by
     the ContextCleaner as soon as the plan is unreachable."""
-    docs = _parallelize_scan(docs)
+    docs = spread_small_scan(docs)
     sigs = minhash_signatures(docs, n, text_col, id_col)
     cand = lsh_candidates(sigs, id_col, max_bucket=max_bucket).localCheckpoint()
     cand_ids = (
@@ -303,7 +293,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     bits 60..63 stay 0 — documented deviation, keeps conv() in int64 range).
     Bit b of the signature = 1 iff sum over tokens of (bit_b(h)*2-1) > 0.
     """
-    docs = _parallelize_scan(docs)
+    docs = spread_small_scan(docs)
     toks = docs.select(
         F.col(id_col), F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("t")
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.spark_exprs import haversine_col
+from .partitioning import spread_small_scan
 
 #: Seeding histograms are collected at min(res, SEED_RES_CAP): the driver
 #: never holds more than 4^SEED_RES_CAP histogram rows (65k) no matter how
@@ -184,17 +185,15 @@ def _prelude(candidates: DataFrame, queries: DataFrame, cols: tuple):
     rows with a finite lon and a lat in [-90, 90] (Spark orders NaN above
     +inf, so both comparisons also drop NaN; they drop null too), and
     candidates spread over the cores when the scan has too few
-    partitions (a small-scan artifact; see spatial_join)."""
+    partitions (partitioning.spread_small_scan)."""
     cand_id, cand_lon, cand_lat, query_id, query_lon, query_lat = cols
 
     def valid(df, lon, lat):
         return df.filter((F.abs(F.col(lon)) < F.lit(float("inf")))
                          & (F.col(lat) >= -90.0) & (F.col(lat) <= 90.0))
 
-    par = candidates.sparkSession.sparkContext.defaultParallelism
-    cand = valid(candidates.select(cand_id, cand_lon, cand_lat), cand_lon, cand_lat)
-    if cand.rdd.getNumPartitions() < max(2, par // 2):
-        cand = cand.repartition(par)
+    cand = spread_small_scan(
+        valid(candidates.select(cand_id, cand_lon, cand_lat), cand_lon, cand_lat))
     q = valid(queries.select(query_id, query_lon, query_lat), query_lon, query_lat)
     return cand, q
 

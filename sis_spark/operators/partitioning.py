@@ -39,6 +39,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to ``defaultParallelism`` when it has fewer than
+    ``max(2, defaultParallelism // 2)`` partitions, else unchanged.  A small
+    parquet file (one row group) scans as ONE split, which would serialize
+    the CPU-bound map work that follows (PIP refine, shingle hashing, kNN
+    rings); at scale the scan has thousands of splits and this is a no-op.
+    Only ever spreads upwards.  Streaming sources own their partitioning
+    (``.rdd`` is illegal there) and pass through."""
+    if df.isStreaming:
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < max(2, par // 2):
+        return df.repartition(par)
+    return df
+
+
 def str_partition(
     df: DataFrame,
     x_col: str,

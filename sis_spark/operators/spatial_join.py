@@ -13,11 +13,13 @@ Phase 1 (prefilter, plan-time + map-side):
     * candidates = points ⋈ broadcast(poly_cells) on cell — a broadcast hash
       join, so the skewed hot cells never shuffle.
 
-Phase 2 (refine, Arrow-vectorized):
-    * mapInPandas ray-casting PIP (numpy even-odd kernel) against the
-      polygon vertex arrays shipped once per executor via a Spark broadcast —
-      the "broadcast STRtree" role of the north star; envelopes are checked
-      first (cheap numpy mask), then full PIP.
+Phase 2 (refine, one map pass):
+    * candidates in a provably-interior ("sure") covering cell or inside
+      their polygon's envelope (a codegen compare) reach a scalar Arrow UDF
+      in a filter; it returns True for sure rows without the geometry
+      kernel and ray-casts the rest (numpy even-odd kernel) against the
+      polygon vertex arrays shipped once per executor via a Spark broadcast
+      — the "broadcast STRtree" role of the north star.
 
 With ``salt`` set, the covering join shuffles on cell instead, salting hot
 cells (fact side salted, dimension side repeated per salt value) — the
@@ -39,6 +41,7 @@ from pyspark.sql import types as T
 from ..functions import cells as _cells
 from ..functions import geometry as _geo
 from ..functions.spark_exprs import cell_col
+from .partitioning import spread_small_scan
 
 # rows of one hot cell that should land in a single shuffle partition before
 # another salt bucket is added (sized for the Arrow-refine throughput)
@@ -46,7 +49,7 @@ TARGET_ROWS_PER_SALT = 250_000
 
 # covering-table guardrail: when the fine interior-skip covering exceeds this
 # many rows (huge polygons would swamp the broadcast side), spatial_join
-# backs off to the coarse resolution without sure-cell classification
+# backs off to the coarse resolution
 MAX_SURE_COVER_ROWS = 2_000_000
 
 
@@ -92,9 +95,9 @@ def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.
 
     ``classify=True`` additionally marks each covering cell ``sure`` when it
     is PROVABLY interior to the polygon (_sure_cells).  Points in a sure
-    cell are matches by construction and skip the PIP refine entirely — at
-    the engine's skewed workloads ~70% of candidate pairs fall in sure cells
-    at res+3."""
+    cell are matches by construction and skip the PIP kernel; they cross
+    the Arrow boundary as four scalars — at the engine's skewed workloads
+    ~70% of candidate pairs fall in sure cells at res+3."""
     cell_list = []
     idx_list = []
     envs = []
@@ -197,39 +200,23 @@ def _pack_polygons(parts: list[dict]):
 
 
 def _point_join(points: DataFrame, lon_col: str, lat_col: str, res: int,
-                join, pip, drop: list[str], split_sure: bool) -> DataFrame:
+                join, pip, drop: list[str]) -> DataFrame:
     """The tail every point-in-polygon join shares: points get their cell id
     ``__cell`` in codegen, ``join`` matches them to a covering table
-    (cell, e_xmin..e_ymax[, sure], polygon key, ...), and the candidates
-    are refined by the boolean Arrow column ``pip``.  Output: the candidate
-    columns minus ``__cell`` and ``drop`` (by name).
-
-    ``split_sure``: rows in provably-interior cells ARE matches (no
-    envelope, no PIP); only the other rows pass the envelope prune and the
-    refine.  Two pipelines over the same map-side join — the join is cheap
-    next to the Arrow refine it avoids."""
-    spark = points.sparkSession
-    # CPU-bound refine must not inherit a tiny-scan partitioning: a small
-    # parquet (1 rowgroup) scans as ONE split, which would serialize the
-    # whole map-side pipeline.  At 100 TB the scan has thousands of splits;
-    # here we restore parallelism explicitly when the source lacks it.
-    par = spark.sparkContext.defaultParallelism
-    if not points.isStreaming and points.rdd.getNumPartitions() < max(2, par // 2):
-        # (streaming sources own their partitioning; .rdd is illegal there)
-        points = points.repartition(par)
-    cand = join(points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res)))
-    drop = ["__cell", *drop]
-    # exact-envelope prune in codegen (plain column compares) so rows the
-    # PIP could never accept don't pay the Arrow transfer
+    (cell, e_xmin..e_ymax, sure, polygon key, ...), and one filter chain
+    keeps the candidates that are ``sure`` or inside the polygon envelope
+    (codegen compares, so rows the PIP could never accept don't pay the
+    Arrow transfer) and then pass the boolean Arrow column ``pip``, which
+    returns True for sure rows without running the geometry kernel.
+    Output: the candidate columns minus ``__cell`` and ``drop`` (by name)."""
+    # CPU-bound refine must not inherit a tiny-scan partitioning
+    cand = join(spread_small_scan(points).withColumn(
+        "__cell", cell_col(F.col(lon_col), F.col(lat_col), res)))
     env_ok = (
         (F.col(lon_col) >= F.col("e_xmin")) & (F.col(lon_col) <= F.col("e_xmax"))
         & (F.col(lat_col) >= F.col("e_ymin")) & (F.col(lat_col) <= F.col("e_ymax"))
     )
-    if not split_sure:
-        return cand.filter(env_ok).filter(pip).drop(*drop)
-    return cand.filter(F.col("sure")).drop(*drop).unionByName(
-        cand.filter(~F.col("sure")).filter(env_ok).filter(pip).drop(*drop)
-    )
+    return cand.filter(F.col("sure") | env_ok).filter(pip).drop("__cell", *drop)
 
 
 def spatial_join(
@@ -247,11 +234,11 @@ def spatial_join(
     shape, or built from WKB via sources.polygons_from_wkb).
 
     Interior skip: the prefilter runs 3 resolutions finer and classifies
-    covering cells at plan time; candidates in provably-interior cells are
-    emitted as matches WITHOUT the Arrow PIP refine (~70% of pairs under
-    the engine's skewed workloads).  Exact — a sure cell admits no false
-    positives by construction.  A covering table over MAX_SURE_COVER_ROWS
-    falls back to the coarse resolution with every candidate refined.
+    covering cells at plan time; candidates in provably-interior cells skip
+    the PIP kernel; they cross the Arrow boundary as four scalars.  Exact —
+    a sure cell admits no false positives by construction.  A covering
+    table over MAX_SURE_COVER_ROWS falls back to the coarse resolution,
+    classified the same way.
 
     ``salt``: None broadcasts the covering table.  Otherwise the covering
     join shuffles on cell with hot cells salted (_salted_join): an int
@@ -268,10 +255,9 @@ def spatial_join(
     bc = spark.sparkContext.broadcast(packed)
 
     pc = polygon_cells(polygons, res, classify=True)
-    split_sure = len(pc) <= MAX_SURE_COVER_ROWS
-    if not split_sure:
+    if len(pc) > MAX_SURE_COVER_ROWS:
         res = choose_resolution(polygons)
-        pc = polygon_cells(polygons, res)
+        pc = polygon_cells(polygons, res, classify=True)
     pc = pc.astype({"cell": "int64", "poly_idx": "int64"})
 
     def join(pts: DataFrame) -> DataFrame:
@@ -281,24 +267,25 @@ def spatial_join(
         return pts.join(cells, pts["__cell"] == cells["cell"], "inner")
 
     # Refine as a SCALAR Arrow UDF used in a filter: only (lon, lat,
-    # poly_idx) cross the Python boundary; every other column stays JVM-side
-    # (ArrowEvalPython is a projection, not a row pipe).
+    # poly_idx, sure) cross the Python boundary; every other column stays
+    # JVM-side (ArrowEvalPython is a projection, not a row pipe).
     @F.pandas_udf(T.BooleanType())
-    def pip_ok(lon_s: pd.Series, lat_s: pd.Series, gi_s: pd.Series) -> pd.Series:
+    def pip_ok(lon_s: pd.Series, lat_s: pd.Series, gi_s: pd.Series,
+               sure_s: pd.Series) -> pd.Series:
         p = bc.value
-        px = lon_s.to_numpy(dtype=np.float64)
-        py = lat_s.to_numpy(dtype=np.float64)
-        gi = gi_s.to_numpy(dtype=np.int64)
+        keep = sure_s.to_numpy(dtype=bool, copy=True)
+        todo = ~keep
         # dense (N, K) crossing passes, one per ring ordinal (1 for hole-free)
-        keep = _geo.points_in_padded_rings(
-            px, py, gi, p["RVX"], p["RVY"], p["ring_start"]
+        keep[todo] = _geo.points_in_padded_rings(
+            lon_s.to_numpy(dtype=np.float64)[todo], lat_s.to_numpy(dtype=np.float64)[todo],
+            gi_s.to_numpy(dtype=np.int64)[todo], p["RVX"], p["RVY"], p["ring_start"],
         )
         return pd.Series(keep)
 
     refined = _point_join(
         points, lon_col, lat_col, res, join,
-        pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx")),
-        [c for c in pc.columns if c != "poly_idx"], split_sure,
+        pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx"), F.col("sure")),
+        [c for c in pc.columns if c != "poly_idx"],
     )
     keys_arr = packed["keys"]
     key_map = spark.createDataFrame(
@@ -381,7 +368,7 @@ def hot_cells_with_counts(points: DataFrame, lon_col: str, lat_col: str, res: in
 # stages on executors, so millions of polygons never materialize driver-side
 # (JoinFeatureSet's set-vs-set contract, S/aggregate/JoinFeatureSet.java:74).
 # Boundary ("unsure") covering cells carry their part's WKB through the cell
-# equi-join; interior cells carry NULL and skip the refine entirely.
+# equi-join; interior cells carry NULL and skip the PIP kernel.
 
 def _choose_res_dist(parts: DataFrame) -> int:
     """choose_resolution over a distributed parts table: approximate median
@@ -541,8 +528,8 @@ def spatial_join_dist(
     the Arrow batch, grouped by geometry so each part is decoded once per
     batch.
 
-    ``interior_skip``: classify covering cells 3 resolutions finer and emit
-    provably-interior candidates without the refine (as spatial_join).
+    ``interior_skip``: classify covering cells 3 resolutions finer and pass
+    provably-interior candidates without the PIP kernel (as spatial_join).
 
     ``broadcast_threshold``: ADAPTIVE strategy pick (the AQE-style decision
     the reference leaves to its store, SQLStore pushdown analog) — when the
@@ -618,11 +605,12 @@ def spatial_join_dist(
     def pip_ok_wkb(lon_s: pd.Series, lat_s: pd.Series, wkb_s: pd.Series) -> pd.Series:
         px = lon_s.to_numpy(dtype=np.float64)
         py = lat_s.to_numpy(dtype=np.float64)
-        out = np.zeros(len(px), dtype=bool)
+        # a null WKB marks a sure (provably-interior) row: a match as shipped
+        out = wkb_s.isna().to_numpy()
         # group rows by geometry: each part decoded once per Arrow batch
         grp: dict[bytes, list[int]] = {}
-        for i, b in enumerate(wkb_s):
-            grp.setdefault(bytes(b), []).append(i)
+        for i in np.flatnonzero(~out):
+            grp.setdefault(bytes(wkb_s.iat[i]), []).append(i)
         for buf, idxs in grp.items():
             ii = np.asarray(idxs, dtype=np.int64)
             # a closed WKB ring's duplicate last vertex adds a zero-length
@@ -633,7 +621,7 @@ def spatial_join_dist(
     refined = _point_join(
         points, lon_col, lat_col, res, join,
         pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb")),
-        [c for c in cov.columns if c != "pkey"], interior_skip,
+        [c for c in cov.columns if c != "pkey"],
     )
     return refined.withColumnRenamed("pkey", poly_key_col)
 

@@ -30,6 +30,7 @@ scope here (single-level manifests, single-writer commit protocol).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -186,25 +187,7 @@ def read(spark: SparkSession, root: str, snapshot: int | None = None,
     files = m["files"]
     if partition_filter is not None:
         files = [f for f in files if partition_filter(f["partition"])]
-    if not files:
-        return spark.read.parquet(os.path.join(root, "data")).limit(0)
-    paths = [os.path.join(root, f["path"]) for f in files]
-    if m["partition_by"]:
-        # hive partition dirs live under each write-id directory; one read
-        # per write dir with basePath recovers the partition columns, and
-        # the union count is the number of commits, not partitions
-        import functools
-
-        groups: dict[str, list[str]] = {}
-        for f in files:
-            wdir = f["path"].split("/")[1]  # data/<wN>/...
-            groups.setdefault(wdir, []).append(os.path.join(root, f["path"]))
-        parts = [
-            spark.read.option("basePath", os.path.join(root, "data", wdir)).parquet(*ps)
-            for wdir, ps in sorted(groups.items())
-        ]
-        return functools.reduce(lambda a, b: a.unionByName(b), parts)
-    return spark.read.parquet(*paths)
+    return _read_files(spark, root, m, files)
 
 
 def scan_row_counts(root: str, snapshot: int | None = None) -> int:
@@ -222,14 +205,16 @@ def scan_row_counts(root: str, snapshot: int | None = None) -> int:
 
 
 def _grouped_reads(spark: SparkSession, root: str, m: dict, files: list[dict]):
-    """One file-source read per write-dir (recovers hive partition columns
-    via basePath), as in read(); yields the per-group DataFrames."""
+    """One file-source read per write-dir, the per-group DataFrames: hive
+    partition dirs live under each write-id directory, so each read's
+    basePath recovers the partition columns, and the group count is the
+    number of commits, not partitions."""
     if not files:
         return []
     if m["partition_by"]:
         groups: dict[str, list[str]] = {}
         for f in files:
-            wdir = f["path"].split("/")[1]
+            wdir = f["path"].split("/")[1]  # data/<wN>/...
             groups.setdefault(wdir, []).append(os.path.join(root, f["path"]))
         return [
             spark.read.option("basePath", os.path.join(root, "data", wdir)).parquet(*ps)
@@ -238,11 +223,21 @@ def _grouped_reads(spark: SparkSession, root: str, m: dict, files: list[dict]):
     return [spark.read.parquet(*[os.path.join(root, f["path"]) for f in files])]
 
 
+def _read_files(spark: SparkSession, root: str, m: dict, files: list[dict]) -> DataFrame:
+    """The union of ``files`` (manifest entries of ``m``) with the table's
+    partition columns.  An empty selection reads one table file under
+    limit 0 for the schema: a read of the whole data dir spans the write
+    dirs, which Spark rejects as conflicting partition layouts."""
+    if not files and m["files"]:
+        return _read_files(spark, root, m, m["files"][:1]).limit(0)
+    if not files:
+        return spark.read.parquet(os.path.join(root, "data")).limit(0)
+    return functools.reduce(DataFrame.unionByName, _grouped_reads(spark, root, m, files))
+
+
 def _read_with_path(spark: SparkSession, root: str, m: dict, files: list[dict]) -> DataFrame:
     """Snapshot read carrying ``__file`` = manifest-relative path of the
     source file for each row (from the parquet _metadata column)."""
-    import functools
-
     from pyspark.sql import functions as F
 
     prefix = "file:" + os.path.abspath(root) + os.sep
@@ -256,7 +251,7 @@ def _read_with_path(spark: SparkSession, root: str, m: dict, files: list[dict]) 
                 ),
             )
         )
-    return functools.reduce(lambda a, b: a.unionByName(b), parts)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def _rewrite_commit(
@@ -409,14 +404,7 @@ def read_pruned(
     files = [
         f for f in m["files"] if "stats" not in f or stats_filter(f["stats"])
     ]
-    if not files:
-        return (
-            spark.read.parquet(os.path.join(root, "data")).limit(0),
-            0,
-            total,
-        )
-    paths = [os.path.join(root, f["path"]) for f in files]
-    return spark.read.parquet(*paths), len(files), total
+    return _read_files(spark, root, m, files), len(files), total
 
 
 def compact_files(

@@ -82,19 +82,30 @@ def test_spatial_join_vs_oracle(spark, events, duck):
 
 
 def test_spatial_join_cover_guard_fallback(spark, events, duck, monkeypatch):
-    """Past MAX_SURE_COVER_ROWS the join drops to the coarse plan (no sure
-    cells, every candidate refined) and still matches the oracle."""
+    """Past MAX_SURE_COVER_ROWS the join drops to the coarse plan and still
+    matches the oracle.  Every point-join form scans the point side once:
+    sure cells are decided inside the refine column, not in a second
+    pipeline over the same candidates."""
+    from sis_spark.functions import geometry as geo
     from sis_spark.operators import spatial_join as sj
 
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
+    def point_scans(df):
+        # the events parquet is the only file relation in these plans
+        # (covering tables are local relations or checkpoints)
+        return df._jdf.queryExecution().optimizedPlan().toString().count("] parquet")
 
     sup_keys = duck.execute("SELECT s_suppkey FROM supplier ORDER BY 1").fetchnumpy()["s_suppkey"]
     polygons = synth.polygon_table_np(sup_keys)
-    assert "Union" in plan(spatial_join(events, polygons, "lon", "lat"))  # sure ∪ refined
+    assert point_scans(spatial_join(events, polygons, "lon", "lat")) == 1
+    wkb = spark.createDataFrame(
+        [(p["key"], bytes(geo.wkb_polygon([(p["vx"], p["vy"])]))) for p in polygons],
+        "key long, wkb binary",
+    )
+    assert point_scans(spatial_join_dist(events, wkb)) == 1
+    assert point_scans(spatial_join_dist(events, wkb, compact_levels=3)) == 1
     monkeypatch.setattr(sj, "MAX_SURE_COVER_ROWS", 10)
     joined = spatial_join(events, polygons, "lon", "lat")
-    assert "Union" not in plan(joined)
+    assert point_scans(joined) == 1
     _assert_pip_oracle(joined, duck)
 
 

@@ -31,6 +31,10 @@ def test_create_append_read_and_counts(spark, tmp_path):
     assert got == {0, 1, 2, 3}
     row = tf.read(spark, root).filter(F.col("id") == 120).collect()[0]
     assert row["p"] == 0 and row["val"] == 360
+    # the stats-pruned read keeps the partition column too
+    pruned, kept, total = tf.read_pruned(spark, root, lambda stats: True)
+    assert (kept, pruned.count()) == (total, 150)
+    assert sorted(pruned.columns) == sorted(tf.read(spark, root).columns)
 
 
 def test_time_travel_and_snapshot_isolation(spark, tmp_path):
@@ -108,6 +112,11 @@ def test_create_refuses_existing_and_empty_read(spark, tmp_path):
     # pruning everything still returns a well-formed empty frame
     empty = tf.read(spark, root, partition_filter=lambda part: False)
     assert empty.count() == 0
+    # ... with the table's columns, also once a second write dir exists
+    tf.append(spark, root, mk_df(spark, 10, 20))
+    empty = tf.read(spark, root, partition_filter=lambda part: False)
+    assert empty.count() == 0
+    assert sorted(empty.columns) == sorted(tf.read(spark, root).columns)
 
 
 def test_images_table_on_table_format(spark, tmp_path):
