@@ -82,11 +82,13 @@ def main(argv=None):
 
     s_tiles = pipe.stage("tiles", build_tiles, params={"zoom": args.zoom}, upstream=[s_join])
 
+    # (count desc, cell id): a resumed stage re-reads its manifest key-sorted
+    hot = s_cells.manifest.get("cell_histogram_top", {})
     print(json.dumps({
         "images": s_img.manifest["row_count"],
         "join_rows": s_join.manifest["row_count"],
         "tile_rows": s_tiles.manifest["row_count"],
-        "hot_cells": s_cells.manifest.get("cell_histogram_top", {}),
+        "hot_cells": dict(sorted(hot.items(), key=lambda kv: (-kv[1], int(kv[0])))),
         "out": args.out,
     }))
 

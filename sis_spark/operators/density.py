@@ -20,7 +20,7 @@ bit-for-bit with a recursive-CTE closure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import connected_components
@@ -37,6 +37,63 @@ def grid_expr(axis: str, n: int, lon_col: str = "lon", lat_col: str = "lat") -> 
     return (
         f"CAST(LEAST(GREATEST(floor((({lat_col}) + 90.0) / 180.0 * {n}.0), "
         f"0.0), {n - 1}.0) AS BIGINT)"
+    )
+
+
+def _cell(col: str, side) -> Column:
+    """Grid cell index of coordinate column ``col`` at cell side ``side``:
+    floor(x / side) in doubles, as int64 — the one cell key of every
+    fixed-radius join below."""
+    return F.floor(F.col(col).cast("double") / F.lit(float(int(side)))).cast("long")
+
+
+def _ring_cells(df: DataFrame, x_col: str, y_col: str, cell: int,
+                r: int = 1) -> DataFrame:
+    """Explode each row over its (2r+1)^2 cell neighborhood at grid side
+    ``cell`` -> every column of ``df`` + (cx, cy)."""
+    ring = F.array(*[
+        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+        for dx in range(-r, r + 1) for dy in range(-r, r + 1)
+    ])
+    return df.select(
+        "*", _cell(x_col, cell).alias("__cx"), _cell(y_col, cell).alias("__cy"),
+        F.explode(ring).alias("__o"),
+    ).select(
+        *[F.col(c) for c in df.columns],
+        (F.col("__cx") + F.col("__o.dx")).alias("cx"),
+        (F.col("__cy") + F.col("__o.dy")).alias("cy"),
+    )
+
+
+def within_distance_join(
+    a_pts: DataFrame,
+    b_pts: DataFrame,
+    radius: int,
+    keys: tuple = (),
+) -> DataFrame:
+    """All (a, b) pairs with squared planar distance <= radius^2 over
+    int64 coordinates (x, y) whose ``keys`` columns are equal -> every
+    column of both sides but x/y (``keys`` once) + d2.  ONE bounded
+    equi-join: grid side = radius, the a-side explodes its 3x3 cell ring
+    (every pair within radius provably shares a ring cell, and b's cell
+    is unique, so each pair is emitted once), exact int64 verify — never
+    an all-pairs product.  Callers name the non-key columns of the two
+    sides apart."""
+    def xy(df, tag):
+        return df.withColumnRenamed("x", f"__{tag}x").withColumnRenamed(
+            "y", f"__{tag}y")
+
+    ae = _ring_cells(xy(a_pts, "a"), "__ax", "__ay", radius)
+    b = xy(b_pts, "b").select("*", _cell("__bx", radius).alias("cx"),
+                              _cell("__by", radius).alias("cy"))
+    dx = F.col("__ax").cast("long") - F.col("__bx").cast("long")
+    dy = F.col("__ay").cast("long") - F.col("__by").cast("long")
+    r2 = F.lit(int(radius)).cast("long") * F.lit(int(radius)).cast("long")
+    return (
+        ae.join(b, ["cx", "cy", *keys])
+        .withColumn("d2", dx * dx + dy * dy)
+        .filter(F.col("d2") <= r2)
+        .drop("cx", "cy", "__ax", "__ay", "__bx", "__by")
     )
 
 
@@ -63,31 +120,15 @@ def grid_cluster(
         .filter(F.col("n") >= min_pts)
         .select("ix", "iy", (F.col("ix") * grid_n + F.col("iy")).alias("key"))
     )
-    # 8-neighbor edges between core cells: explode the ring, semi-join back
-    nbr = core.select(
-        "key",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col("ix") + dx).alias("nx"),
-                        (F.col("iy") + dy).alias("ny"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                    if (dx, dy) != (0, 0)
-                ]
-            )
-        ).alias("g"),
-    ).select("key", "g.nx", "g.ny")
+    # 8-neighbor edges between core cells: explode the ring (its (0, 0)
+    # offset is each cell's self-loop, which keeps isolated cores), join back
     other = core.select(
-        F.col("ix").alias("nx"), F.col("iy").alias("ny"), F.col("key").alias("nkey")
+        F.col("ix").alias("cx"), F.col("iy").alias("cy"), F.col("key").alias("b")
     )
-    edges = nbr.join(other, ["nx", "ny"]).select(
-        F.col("key").alias("a"), F.col("nkey").alias("b")
+    edges = _ring_cells(core, "ix", "iy", 1).join(other, ["cx", "cy"]).select(
+        F.col("key").alias("a"), "b"
     )
-    loops = core.select(F.col("key").alias("a"), F.col("key").alias("b"))
-    comp = connected_components(edges.unionByName(loops))
+    comp = connected_components(edges)
     return (
         cells.join(core, ["ix", "iy"])
         .join(comp, core.key == comp.node)
@@ -669,49 +710,22 @@ def ripley_pairs(
     point-pattern statistic (Ripley 1977, public literature) behind
     clustered-vs-dispersed corpus diagnostics.
 
-    Scale shape: the all-pairs definition is never materialized — points
-    are binned into cells of side r_max, each point probes only its 3x3
-    neighborhood (one explode + one equi-join), and every surviving
-    candidate is verified with an exact integer d^2.  A pair lands in the
-    candidate set exactly once (the right side keeps its own cell), so no
-    distinct is needed."""
+    Scale shape: the all-pairs definition is never materialized — one
+    ``within_distance_join`` at radius r_max (cell side r_max, 3x3 probe,
+    exact integer d^2), each unordered pair kept once by ``ida < idb``."""
     rmax = int(max(radii))
-    q = points.select(
-        F.col(id_col).alias("id"),
-        F.floor(F.col(lon_col) * scale).cast("long").alias("qx"),
-        F.floor(F.col(lat_col) * scale).cast("long").alias("qy"),
-    )
-    b = q.select(
-        "id", "qx", "qy",
-        F.floor(F.col("qx") / rmax).cast("long").alias("cx"),
-        F.floor(F.col("qy") / rmax).cast("long").alias("cy"),
-    )
-    probes = b.select(
-        F.col("id").alias("ida"), F.col("qx").alias("xa"),
-        F.col("qy").alias("ya"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.col("cx") + dx).alias("cx"),
-                    (F.col("cy") + dy).alias("cy"),
-                )
-                for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            ])
-        ).alias("g"),
-    ).select("ida", "xa", "ya", "g.cx", "g.cy")
-    cand = probes.join(
-        b.select(
-            F.col("id").alias("idb"), F.col("qx").alias("xb"),
-            F.col("qy").alias("yb"), "cx", "cy",
-        ),
-        ["cx", "cy"],
-    ).filter(F.col("ida") < F.col("idb"))
-    d2 = (
-        (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-        + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb"))
-    )
-    return cand.agg(*[
-        F.sum((d2 <= r * r).cast("long")).alias(f"n_{int(r)}")
+
+    def q(tag):
+        return points.select(
+            F.col(id_col).alias(f"id{tag}"),
+            F.floor(F.col(lon_col) * scale).cast("long").alias("x"),
+            F.floor(F.col(lat_col) * scale).cast("long").alias("y"),
+        )
+
+    pairs = within_distance_join(q("a"), q("b"), rmax).filter(
+        F.col("ida") < F.col("idb"))
+    return pairs.agg(*[
+        F.sum((F.col("d2") <= r * r).cast("long")).alias(f"n_{int(r)}")
         for r in radii
     ])
 
@@ -836,43 +850,19 @@ def cross_pairs(
 ) -> DataFrame:
     """Bivariate (cross-K) pair counts: points of A within each planar
     radius of points of B — the co-location statistic between two event
-    categories (Ripley cross-K, public literature).  Same cell-binned
-    candidate shape as ``ripley_pairs`` (bin side = r_max, 3x3 probe,
-    exact integer d^2 verify), full bipartite — no ordering filter."""
+    categories (Ripley cross-K, public literature).  Same
+    ``within_distance_join`` at radius r_max as ``ripley_pairs``, full
+    bipartite — no ordering filter."""
     rmax = int(max(radii))
 
-    def q(df, tag):
+    def q(df):
         return df.select(
-            F.floor(F.col(lon_col) * scale).cast("long").alias(f"x{tag}"),
-            F.floor(F.col(lat_col) * scale).cast("long").alias(f"y{tag}"),
+            F.floor(F.col(lon_col) * scale).cast("long").alias("x"),
+            F.floor(F.col(lat_col) * scale).cast("long").alias("y"),
         )
 
-    qa = q(a, "a").select(
-        "xa", "ya",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.floor(F.col("xa") / rmax).cast("long") + dx)
-                    .alias("cx"),
-                    (F.floor(F.col("ya") / rmax).cast("long") + dy)
-                    .alias("cy"),
-                )
-                for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            ])
-        ).alias("g"),
-    ).select("xa", "ya", "g.cx", "g.cy")
-    qb = q(b, "b").select(
-        "xb", "yb",
-        F.floor(F.col("xb") / rmax).cast("long").alias("cx"),
-        F.floor(F.col("yb") / rmax).cast("long").alias("cy"),
-    )
-    cand = qa.join(qb, ["cx", "cy"])
-    d2 = (
-        (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-        + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb"))
-    )
-    return cand.agg(*[
-        F.sum((d2 <= r * r).cast("long")).alias(f"n_{int(r)}")
+    return within_distance_join(q(a), q(b), rmax).agg(*[
+        F.sum((F.col("d2") <= r * r).cast("long")).alias(f"n_{int(r)}")
         for r in radii
     ])
 
@@ -1210,10 +1200,10 @@ def knox_counts(
     Monte-Carlo permutation builds on.  Distances use the engine's
     standard 1e5-quantized lon/lat plane (exact int64 d^2).
 
-    Scale shape: NO all-pairs join — space candidates come from the
-    Ripley-style 3x3 cell-bin probe (bin side = r), time candidates from
-    a +-1 bin probe on t // tau; each unordered pair is counted once via
-    the lexicographic (t, id) guard.  The both-count reuses the space
+    Scale shape: NO all-pairs join — space candidates come from one
+    ``within_distance_join`` at radius r, time candidates from a +-1 bin
+    probe on t // tau; each unordered pair is counted once via the
+    lexicographic (t, id) guard.  The both-count reuses the space
     candidates (space bins are the rarer event at sane radii)."""
     q = points.select(
         F.col(id_col).cast("long").alias("pid"),
@@ -1225,52 +1215,35 @@ def knox_counts(
     tau = int(tau)
     n = q.agg(F.count(F.lit(1)).alias("n"))
 
-    def pair_guard(a, b):
-        return (F.col(f"{a}.t") < F.col(f"{b}.t")) | (
-            (F.col(f"{a}.t") == F.col(f"{b}.t"))
-            & (F.col(f"{a}.pid") < F.col(f"{b}.pid"))
-        )
+    def pair_guard(ta, pa, tb, pb):
+        return (ta < tb) | ((ta == tb) & (pa < pb))
 
-    # --- space: 3x3 cell probe at bin side r
-    binned = q.withColumn("bx", F.floor(F.col("qx") / r)).withColumn(
-        "by", F.floor(F.col("qy") / r))
-    probe = binned.select(
-        "pid", "t", "qx", "qy",
-        F.explode(F.array(*[
-            F.struct((F.col("bx") + dx).alias("bx"),
-                     (F.col("by") + dy).alias("by"))
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ])).alias("g"),
-    ).select("pid", "t", "qx", "qy", "g.bx", "g.by")
-    d2 = (
-        (F.col("a.qx") - F.col("b.qx")) * (F.col("a.qx") - F.col("b.qx"))
-        + (F.col("a.qy") - F.col("b.qy")) * (F.col("a.qy") - F.col("b.qy"))
-    )
-    space_pairs = (
-        probe.alias("a")
-        .join(binned.alias("b"), ["bx", "by"])
-        .filter(pair_guard("a", "b"))
-        .filter(d2 <= r * r)
-        .select(
-            F.col("a.pid").alias("pa"), F.col("b.pid").alias("pb"),
-            (F.abs(F.col("a.t") - F.col("b.t")) <= tau).alias("close_t"),
+    # --- space: the shared fixed-radius join at radius r
+    def side(tag):
+        return q.select(F.col("pid").alias(f"p{tag}"), F.col("t").alias(f"t{tag}"),
+                        F.col("qx").alias("x"), F.col("qy").alias("y"))
+
+    ta, tb = F.col("ta"), F.col("tb")
+    sp = (
+        within_distance_join(side("a"), side("b"), r)
+        .filter(pair_guard(ta, F.col("pa"), tb, F.col("pb")))
+        .agg(
+            F.count(F.lit(1)).alias("n_space"),
+            F.sum((F.abs(ta - tb) <= tau).cast("long")).alias("n_both"),
         )
-    )
-    sp = space_pairs.agg(
-        F.count(F.lit(1)).alias("n_space"),
-        F.sum(F.col("close_t").cast("long")).alias("n_both"),
     )
     # --- time: +-1 bin probe on t // tau
-    tb = q.withColumn("tb", F.floor(F.col("t") / tau))
-    tprobe = tb.select(
+    tbin = q.withColumn("tb", F.floor(F.col("t") / tau))
+    tprobe = tbin.select(
         "pid", "t",
         F.explode(F.array(*[F.col("tb") + d for d in (-1, 0, 1)]))
         .alias("tb"),
     )
     tm = (
         tprobe.alias("a")
-        .join(tb.select("pid", "t", "tb").alias("b"), ["tb"])
-        .filter(pair_guard("a", "b"))
+        .join(tbin.select("pid", "t", "tb").alias("b"), ["tb"])
+        .filter(pair_guard(F.col("a.t"), F.col("a.pid"),
+                           F.col("b.t"), F.col("b.pid")))
         .filter(F.abs(F.col("a.t") - F.col("b.t")) <= tau)
         .agg(F.count(F.lit(1)).alias("n_time"))
     )
@@ -1377,46 +1350,19 @@ def dbscan(
     the min cluster over their core neighbors — the deterministic,
     order-free border rule), NULL for noise.
 
-    Scale shape: neighbor candidates from ONE 3x3 cell-ring equi-join
-    with cell side exactly eps (never all pairs); the connected-
-    components loop runs over the CORE adjacency only (min-label +
-    pointer jumping, O(log diameter) rounds).  The point-level exact
+    Scale shape: neighbor candidates from ONE ``within_distance_join`` at
+    radius eps (never all pairs); the connected-components loop runs over
+    the CORE adjacency only (min-label + pointer jumping, O(log diameter)
+    rounds).  The point-level exact
     companion of ``grid_cluster`` (which survives 10^12 points by
     clustering core CELLS instead)."""
     from ..operators.graph import connected_components
 
-    cell = float(int(eps))
+    def side(tag):
+        return points.select(F.col(id_col).alias(f"{tag}_id"),
+                             F.col(x_col).alias("x"), F.col(y_col).alias("y"))
 
-    def keyed(prefix):
-        return points.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(x_col).alias(f"{prefix}_x"),
-            F.col(y_col).alias(f"{prefix}_y"),
-            F.floor(F.col(x_col).cast("double") / F.lit(cell)).cast("long").alias(f"{prefix}_cx"),
-            F.floor(F.col(y_col).cast("double") / F.lit(cell)).cast("long").alias(f"{prefix}_cy"),
-        )
-
-    a, b = keyed("a"), keyed("b")
-    ring = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    ae = a.select(
-        "a_id", "a_x", "a_y", "a_cx", "a_cy", F.explode(ring).alias("o")
-    ).select(
-        "a_id", "a_x", "a_y",
-        (F.col("a_cx") + F.col("o.dx")).alias("cx"),
-        (F.col("a_cy") + F.col("o.dy")).alias("cy"),
-    )
-    dx = F.col("a_x") - F.col("b_x")
-    dy = F.col("a_y") - F.col("b_y")
-    r2 = F.lit(int(eps)).cast("long") * F.lit(int(eps)).cast("long")
-    nbr = (
-        ae.join(b, (F.col("cx") == F.col("b_cx")) & (F.col("cy") == F.col("b_cy")))
-        .filter(dx * dx + dy * dy <= r2)
-        .select("a_id", "b_id")
-        .persist()
-    )
+    nbr = within_distance_join(side("a"), side("b"), eps).select("a_id", "b_id")
     deg = nbr.groupBy("a_id").agg(F.count(F.lit(1)).alias("n_nbr"))
     core = deg.filter(F.col("n_nbr") >= int(min_pts)).select(
         F.col("a_id").alias("cid")
@@ -1447,7 +1393,6 @@ def dbscan(
                 F.lit(None).cast("long").alias("cluster"))
     )
     out = labeled.union(noise)
-    nbr.unpersist()
     return out.select(F.col("pid").alias(id_col), "role", "cluster")
 
 
@@ -1511,11 +1456,10 @@ def correlogram(
     annulus index (0 .. n_bands-1), ordered pairs counted once each
     direction (the symmetric W convention).
 
-    Shape: ONE 3x3 cell-ring self-join at cell side = max radius (never
-    all pairs), exact integer distances, one aggregation.  Caller keeps
+    Shape: ONE ``within_distance_join`` at radius = max radius (never all
+    pairs), exact integer distances, one aggregation.  Caller keeps
     |v|*n bounded so z products stay in int64."""
     R = int(band_width) * int(n_bands)
-    cell = float(R)
     b = points.select(
         F.col(id_col).alias("i"),
         F.col(x_col).cast("long").alias("x"),
@@ -1526,33 +1470,15 @@ def correlogram(
         F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
     ).collect()[0]
     n, sv = int(stats["n"]), int(stats["sv"])
-    z = (F.col("v") * n - F.lit(sv))
-    bz = b.withColumn("z", z).withColumn(
-        "cx", F.floor(F.col("x").cast("double") / F.lit(cell)).cast("long")
-    ).withColumn(
-        "cy", F.floor(F.col("y").cast("double") / F.lit(cell)).cast("long")
-    )
+    bz = b.withColumn("z", F.col("v") * n - F.lit(sv))
     sum_z2 = bz.agg(F.sum(F.col("z") * F.col("z"))).collect()[0][0]
-    ring = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    ae = bz.select(
-        "i", "x", "y", "z", "cx", "cy", F.explode(ring).alias("o")
-    ).select(
-        F.col("i").alias("ai"), F.col("x").alias("ax"),
-        F.col("y").alias("ay"), F.col("z").alias("az"),
-        (F.col("cx") + F.col("o.dx")).alias("jcx"),
-        (F.col("cy") + F.col("o.dy")).alias("jcy"),
-    )
-    j = ae.join(
-        bz.select(F.col("i").alias("bi"), F.col("x").alias("bx"),
-                  F.col("y").alias("by"), F.col("z").alias("bz"),
-                  "cx", "cy"),
-        (F.col("jcx") == F.col("cx")) & (F.col("jcy") == F.col("cy")),
-    ).filter(F.col("ai") != F.col("bi"))
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
+
+    def side(tag):
+        return bz.select(F.col("i").alias(f"{tag}i"), "x", "y",
+                         F.col("z").alias(f"{tag}z"))
+
+    j = within_distance_join(side("a"), side("b"), R).filter(
+        F.col("ai") != F.col("bi"))
     # annulus index: band k iff (k*bw)^2 <= d2 < ((k+1)*bw)^2 — exact
     # integer threshold chain (d2 // bw^2 would make the bands quadratic)
     bw = int(band_width)
@@ -1561,9 +1487,7 @@ def correlogram(
         band = F.when(F.col("d2") < (k + 1) * (k + 1) * bw * bw,
                       F.lit(k).cast("long")).otherwise(band)
     out = (
-        j.withColumn("d2", d2)
-        .filter(F.col("d2") <= R * R)
-        .withColumn("band", band)
+        j.withColumn("band", band)
         .filter(F.col("band") < int(n_bands))
         .groupBy("band")
         .agg(
@@ -1750,57 +1674,6 @@ FROM (
   FROM ({points_select}) p GROUP BY 1, 2) cells"""
 
 
-def _ring_cells(df: DataFrame, r: int, x_col: str, y_col: str, cell: int,
-                keep: list) -> DataFrame:
-    """Explode each row over its (2r+1)^2 cell neighborhood at grid side
-    ``cell`` -> keep-cols + (cx, cy)."""
-    ring = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-r, r + 1) for dy in range(-r, r + 1)
-    ])
-    cellf = float(int(cell))
-    return df.select(
-        *keep,
-        (F.floor(F.col(x_col).cast("double") / F.lit(cellf)).cast("long")).alias("__cx"),
-        (F.floor(F.col(y_col).cast("double") / F.lit(cellf)).cast("long")).alias("__cy"),
-        F.explode(ring).alias("__o"),
-    ).select(
-        *keep,
-        (F.col("__cx") + F.col("__o.dx")).alias("cx"),
-        (F.col("__cy") + F.col("__o.dy")).alias("cy"),
-    )
-
-
-def within_distance_join(
-    a_pts: DataFrame,
-    b_pts: DataFrame,
-    radius: int,
-    a_id: str = "a_id",
-    b_id: str = "b_id",
-) -> DataFrame:
-    """All (a, b) pairs with squared planar distance <= radius^2 over
-    quantized int64 coordinates -> (a_id, b_id, d2).  ONE bounded
-    equi-join: grid side = radius, the a-side explodes its 3x3 cell ring
-    (every pair within radius provably shares a ring cell), exact integer
-    verify — never an all-pairs product.  Inputs: (a_id|b_id, x, y)."""
-    ae = _ring_cells(a_pts.select(F.col(a_id), F.col("x").alias("ax"),
-                                  F.col("y").alias("ay")),
-                     1, "ax", "ay", radius, [a_id, "ax", "ay"])
-    b = b_pts.select(
-        F.col(b_id), F.col("x").alias("bx"), F.col("y").alias("by"),
-        F.floor(F.col("x").cast("double") / F.lit(float(int(radius)))).cast("long").alias("bcx"),
-        F.floor(F.col("y").cast("double") / F.lit(float(int(radius)))).cast("long").alias("bcy"),
-    )
-    dx = F.col("ax") - F.col("bx")
-    dy = F.col("ay") - F.col("by")
-    r2 = F.lit(int(radius)).cast("long") * F.lit(int(radius)).cast("long")
-    return (
-        ae.join(b, (F.col("cx") == F.col("bcx")) & (F.col("cy") == F.col("bcy")))
-        .filter(dx * dx + dy * dy <= r2)
-        .select(F.col(a_id), F.col(b_id), (dx * dx + dy * dy).alias("d2"))
-    )
-
-
 def all_nearest_neighbors(
     points: DataFrame,
     cell: int,
@@ -1831,8 +1704,7 @@ def all_nearest_neighbors(
     others = pts.select(
         F.col("pid").alias("oid"), F.col("px").alias("ox"),
         F.col("py").alias("oy"),
-        F.floor(F.col("px").cast("double") / F.lit(float(int(cell)))).cast("long").alias("ocx"),
-        F.floor(F.col("py").cast("double") / F.lit(float(int(cell)))).cast("long").alias("ocy"),
+        _cell("px", cell).alias("ocx"), _cell("py", cell).alias("ocy"),
     ).persist()
     lo_hi = pts.agg(
         F.min("px"), F.max("px"), F.min("py"), F.max("py")
@@ -1842,8 +1714,7 @@ def all_nearest_neighbors(
     pending = pts
     r = 1
     for _ in range(max_rounds):
-        cand = _ring_cells(pending, r, "px", "py", cell,
-                           ["pid", "px", "py"])
+        cand = _ring_cells(pending, "px", "py", cell, r)
         dx = F.col("px") - F.col("ox")
         dy = F.col("py") - F.col("oy")
         best = (
@@ -1859,8 +1730,7 @@ def all_nearest_neighbors(
             .select("pid", "px", "py", F.col("oid").alias("nn_id"), "d2")
         )
         cellL = F.lit(int(cell)).cast("long")
-        bx = F.floor(F.col("px").cast("double") / F.lit(float(int(cell)))).cast("long")
-        by = F.floor(F.col("py").cast("double") / F.lit(float(int(cell)))).cast("long")
+        bx, by = _cell("px", cell), _cell("py", cell)
         clear = F.least(
             F.col("px") - ((bx - r) * cellL - 1),
             (bx + r + 1) * cellL - F.col("px"),
@@ -1939,15 +1809,13 @@ def catchment_2sfca(
     over facilities within radius.  Inputs: facilities (f_id, x, y,
     supply), demand (d_id, x, y, pop).
 
-    Scale shape: the distance pairs are computed ONCE by the bounded
-    3x3-ring equi-join (within_distance_join) and reused by both steps —
-    two partial aggs over one shuffled pair set, no all-pairs product,
-    no iteration."""
+    Scale shape: the distance pairs are computed by ONE bounded 3x3-ring
+    equi-join (``within_distance_join``) feeding both steps — two partial
+    aggs over one pair set, no all-pairs product, no iteration."""
     pairs = within_distance_join(
-        facilities.select(F.col("f_id").alias("a_id"), "x", "y"),
-        demand.select(F.col("d_id").alias("b_id"), "x", "y"),
-        radius, "a_id", "b_id",
-    ).select(F.col("a_id").alias("f_id"), F.col("b_id").alias("d_id")).persist()
+        facilities.select("f_id", "x", "y"), demand.select("d_id", "x", "y"),
+        radius,
+    ).select("f_id", "d_id")
     dsum = (
         pairs.join(demand.select("d_id", "pop"), "d_id")
         .groupBy("f_id").agg(F.sum("pop").alias("dpop"))
@@ -1961,13 +1829,11 @@ def catchment_2sfca(
             .cast("long").alias("rj"),
         )
     )
-    out = (
+    return (
         pairs.join(ratio, "f_id")
         .groupBy("d_id")
         .agg(F.sum("rj").alias("access"), F.count(F.lit(1)).alias("n_fac"))
     )
-    pairs.unpersist()
-    return out
 
 
 def catchment_2sfca_sql(

@@ -1105,30 +1105,24 @@ def slic_superpixels(
     ties by centroid id), then recomputes centroids as exact floordiv
     means.  Returns the final centroid table (k, n, cx, cy, cv).
 
-    Scale shape: per round ONE 9-way pixel explode equi-joined to the
-    (tiny, broadcast) centroid table + one window argmin + one
-    aggregation — pixels never pair with more than 9 centroids, rounds
-    are a fixed constant; localCheckpoint truncates the lineage."""
+    Scale shape: ONE 9-way pixel explode (the shared
+    ``density._ring_cells``, home cell floor(x / step)), per round
+    equi-joined to the (tiny, broadcast) centroid table + one window
+    argmin + one aggregation — pixels never pair with more than 9
+    centroids, rounds are a fixed constant; localCheckpoint truncates
+    the lineage."""
     from pyspark.sql import Window
+
+    from .density import _ring_cells
 
     S = int(step)
     gw = w // S
     px = pixels.select(
         F.col("x").cast("long"), F.col("y").cast("long"),
         F.col("v").cast("long"),
-        (F.col("x").cast("long") / S).cast("long").alias("cellx"),
-        (F.col("y").cast("long") / S).cast("long").alias("celly"),
     )
-    ring = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    pe = px.select(
-        "x", "y", "v", "cellx", "celly", F.explode(ring).alias("o")
-    ).select(
-        "x", "y", "v",
-        (F.col("cellx") + F.col("o.dx")).alias("hx"),
-        (F.col("celly") + F.col("o.dy")).alias("hy"),
+    pe = _ring_cells(px, "x", "y", S).select(
+        "x", "y", "v", F.col("cx").alias("hx"), F.col("cy").alias("hy"),
     ).persist()
 
     cent = pixels.sparkSession.range(gw * (h // S)).selectExpr(

@@ -1188,7 +1188,6 @@ def nearest_line_join_dist(
 def spacetime_join(
     a: DataFrame,
     b: DataFrame,
-    grid_n: int,
     r_q: int,
     tau_us: int,
 ) -> DataFrame:
@@ -1196,49 +1195,25 @@ def spacetime_join(
     ``r_q`` quantized-coordinate units (planar int64 distance on the
     quantized grid) AND ``tau_us`` microseconds of an a-event.
 
-    Inputs: (id, lon, lat, qx, qy, ts_us) each; ``grid_n`` is the
-    per-axis cell count and the cell side must be >= r_q in quantized
-    units (the 3x3 neighbor ring then covers every possible match).
+    Inputs: (id, qx, qy, ts_us) each.
 
-    Scale shape: the a-side explodes its 3x3 cell ring (codegen), the
-    b-side keys on its exact cell — ONE equi-join on the cell, exact
-    integer distance + time predicates after; each pair emitted once
-    (b's cell is unique).  Compose with time bucketing (range_join's
-    bins) when a cell's population is time-dominated."""
-    from pyspark.sql import functions as F
+    Scale shape: ONE ``density.within_distance_join`` at radius ``r_q``
+    (cells of side ``r_q`` on the quantized plane, the a-side's 3x3 ring
+    equi-joined to b's cell, so the candidate set is complete by
+    construction), exact integer distance in the join and the time
+    predicate after; each pair emitted once.  Compose with time bucketing
+    (range_join's bins) when a cell's population is time-dominated."""
+    from .density import within_distance_join
 
-    from .density import grid_expr
-
-    def with_cell(df, prefix):
+    def side(df, tag):
         return df.select(
-            F.col("id").alias(f"{prefix}_id"),
-            F.col("qx").alias(f"{prefix}_qx"),
-            F.col("qy").alias(f"{prefix}_qy"),
-            F.col("ts_us").alias(f"{prefix}_ts"),
-            F.expr(grid_expr("x", grid_n)).alias(f"{prefix}_ix"),
-            F.expr(grid_expr("y", grid_n)).alias(f"{prefix}_iy"),
+            F.col("id").alias(f"{tag}_id"), F.col("ts_us").alias(f"{tag}_ts"),
+            F.col("qx").alias("x"), F.col("qy").alias("y"),
         )
 
-    aa = with_cell(a, "a")
-    bb = with_cell(b, "b")
-    offs = a.sparkSession.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
-        "dx long, dy long",
-    )
-    ae = aa.join(F.broadcast(offs)).select(
-        "a_id", "a_qx", "a_qy", "a_ts",
-        (F.col("a_ix") + F.col("dx")).alias("cx"),
-        (F.col("a_iy") + F.col("dy")).alias("cy"),
-    )
-    j = ae.join(
-        bb,
-        (F.col("cx") == F.col("b_ix")) & (F.col("cy") == F.col("b_iy")),
-    )
-    dx = F.col("a_qx") - F.col("b_qx")
-    dy = F.col("a_qy") - F.col("b_qy")
     dt = F.col("a_ts") - F.col("b_ts")
-    r2 = F.lit(int(r_q)).cast("long") * F.lit(int(r_q)).cast("long")
-    return j.filter(
-        (dx * dx + dy * dy <= r2)
-        & (F.abs(dt) <= F.lit(int(tau_us)).cast("long"))
-    ).select("a_id", "b_id")
+    return (
+        within_distance_join(side(a, "a"), side(b, "b"), r_q)
+        .filter(F.abs(dt) <= F.lit(int(tau_us)).cast("long"))
+        .select("a_id", "b_id")
+    )

@@ -1649,51 +1649,24 @@ def link_tracks(
 
     Returns (frame, a_id, b_id, d2): the accepted links out of frame f.
 
-    Scale shape: the a-side explodes a 3x3 ring of cells of side exactly
-    ``r_q`` (every pair within r_q shares the ring), joined as ONE
-    equi-join on (next frame, cell) — never frame x frame pairs — then
-    two window argmins over the candidate table.  Cost is candidate-
-    bounded; crowded cells are bounded by physical detection density."""
-    cell = float(int(r_q))
+    Scale shape: ONE ``within_distance_join`` at radius ``r_q`` keyed on
+    the next frame (cells of side exactly ``r_q``, 3x3 ring) — never
+    frame x frame pairs — then two window argmins over the candidate
+    table.  Cost is candidate-bounded; crowded cells are bounded by
+    physical detection density."""
+    from .density import within_distance_join
 
-    def keyed(prefix):
-        return dets.select(
-            F.col(frame_col).alias(f"{prefix}_f"),
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(x_col).alias(f"{prefix}_x"),
-            F.col(y_col).alias(f"{prefix}_y"),
-            F.floor(F.col(x_col).cast("double") / F.lit(cell)).cast("long").alias(f"{prefix}_cx"),
-            F.floor(F.col(y_col).cast("double") / F.lit(cell)).cast("long").alias(f"{prefix}_cy"),
-        )
-
-    a, b = keyed("a"), keyed("b")
-    ring = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    ae = a.select(
-        "a_f", "a_id", "a_x", "a_y", "a_cx", "a_cy",
-        F.explode(ring).alias("o"),
-    ).select(
-        "a_f", "a_id", "a_x", "a_y",
-        (F.col("a_f") + 1).alias("nf"),
-        (F.col("a_cx") + F.col("o.dx")).alias("cx"),
-        (F.col("a_cy") + F.col("o.dy")).alias("cy"),
+    a = dets.select(
+        F.col(frame_col).alias("a_f"), (F.col(frame_col) + 1).alias("nf"),
+        F.col(id_col).alias("a_id"), F.col(x_col).alias("x"),
+        F.col(y_col).alias("y"),
     )
-    dx = F.col("a_x") - F.col("b_x")
-    dy = F.col("a_y") - F.col("b_y")
-    r2 = F.lit(int(r_q)).cast("long") * F.lit(int(r_q)).cast("long")
-    cand = (
-        ae.join(
-            b,
-            (F.col("nf") == F.col("b_f"))
-            & (F.col("cx") == F.col("b_cx"))
-            & (F.col("cy") == F.col("b_cy")),
-        )
-        .withColumn("d2", dx * dx + dy * dy)
-        .filter(F.col("d2") <= r2)
-        .select("a_f", "a_id", "b_id", "d2")
+    b = dets.select(
+        F.col(frame_col).alias("nf"), F.col(id_col).alias("b_id"),
+        F.col(x_col).alias("x"), F.col(y_col).alias("y"),
     )
+    cand = within_distance_join(a, b, r_q, keys=("nf",)).select(
+        "a_f", "a_id", "b_id", "d2")
     wa = Window.partitionBy("a_f", "a_id").orderBy("d2", "b_id")
     wb = Window.partitionBy("a_f", "b_id").orderBy("d2", "a_id")
     return (

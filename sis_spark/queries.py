@@ -10741,7 +10741,7 @@ def q_spacetime_join(spark, sf_dir):
     a = ev.filter(F.col("event_type") == "click")
     b = ev.filter(F.col("event_type") == "purchase")
     return spacetime_join(
-        a, b, grid_n=16, r_q=200_000, tau_us=86_400_000_000
+        a, b, r_q=200_000, tau_us=86_400_000_000
     ).orderBy("a_id", "b_id")
 
 

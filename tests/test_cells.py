@@ -141,15 +141,17 @@ def test_spacetime_join_matches_brute(spark):
     schema = "id long, lon double, lat double, qx long, qy long, ts_us long"
     a = spark.createDataFrame(rows[:60], schema)
     b = spark.createDataFrame(rows[60:], schema)
-    r_q, tau = 2_000_000, 4_000_000  # < lat cell side 180/8 deg = 2.25e6 q-units
-    got = sorted((r["a_id"], r["b_id"])
-                 for r in spacetime_join(a, b, grid_n=8, r_q=r_q, tau_us=tau).collect())
-    want = sorted(
-        (x[0], y[0]) for x in rows[:60] for y in rows[60:]
-        if (x[3] - y[3]) ** 2 + (x[4] - y[4]) ** 2 <= r_q * r_q
-        and abs(x[5] - y[5]) <= tau
-    )
-    assert got == want and len(got) > 0
+    tau = 4_000_000
+    # radii from one pair to most of the globe, 5e6 above a 2^3-grid cell
+    for r_q in (300_000, 2_000_000, 5_000_000, 20_000_000):
+        got = sorted((r["a_id"], r["b_id"])
+                     for r in spacetime_join(a, b, r_q=r_q, tau_us=tau).collect())
+        want = sorted(
+            (x[0], y[0]) for x in rows[:60] for y in rows[60:]
+            if (x[3] - y[3]) ** 2 + (x[4] - y[4]) ** 2 <= r_q * r_q
+            and abs(x[5] - y[5]) <= tau
+        )
+        assert got == want and len(got) > 0, r_q
 
 
 def test_morton_ranges_cover_exactly(spark):

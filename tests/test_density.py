@@ -4,7 +4,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from sis_spark.operators.density import grid_cluster
+from sis_spark.operators.density import grid_cluster, within_distance_join
 from sis_spark.operators.sampling import weighted_topk
 
 
@@ -50,6 +50,49 @@ def test_adjacent_cells_merge_diagonally(spark):
     df = spark.createDataFrame(rows, "event_id long, lon double, lat double")
     out = grid_cluster(df, grid_n=n, min_pts=3).collect()
     assert len({r["cluster"] for r in out}) == 1 and len(out) == 10
+
+
+def test_within_distance_join_matches_brute(spark):
+    # radius 10 over coordinates on and beside the cell borders (multiples
+    # of 10), negative ones, exact-radius pairs (6, 8) ~ (0, 0), coincident
+    # points on both sides, and an equality key
+    r = 10
+    coords = [-30, -21, -20, -11, -10, -9, -1, 0, 1, 6, 8, 9, 10, 11, 20, 29]
+    rng = np.random.default_rng(8)
+
+    def side(n, fixed):
+        pts = fixed + [(int(rng.choice(coords)), int(rng.choice(coords)))
+                       for _ in range(n)]
+        return [(i % 2, i, x, y) for i, (x, y) in enumerate(pts)]
+
+    fixed = [(0, 0), (0, 0), (6, 8), (-10, 0), (-20, -20), (-30, -10)]
+    a_rows, b_rows = side(60, fixed), side(60, fixed[::-1])
+    a = spark.createDataFrame(a_rows, "k long, a_id long, x long, y long")
+    b = spark.createDataFrame(b_rows, "k long, b_id long, x long, y long")
+
+    def brute(keyed):
+        return sorted(
+            (p[1], q[1], (p[2] - q[2]) ** 2 + (p[3] - q[3]) ** 2)
+            for p in a_rows for q in b_rows
+            if (p[2] - q[2]) ** 2 + (p[3] - q[3]) ** 2 <= r * r
+            and (not keyed or p[0] == q[0])
+        )
+
+    for keyed in (True, False):
+        if keyed:
+            out = within_distance_join(a, b, r, keys=("k",))
+            cols = ["a_id", "b_id", "d2", "k"]
+        else:
+            out = within_distance_join(a.drop("k"), b.drop("k"), r)
+            cols = ["a_id", "b_id", "d2"]
+        assert sorted(out.columns) == cols
+        got = sorted((t["a_id"], t["b_id"], t["d2"]) for t in out.collect())
+        want = brute(keyed)
+        assert got == want
+        d2s = {t[2] for t in want}
+        assert 0 in d2s and r * r in d2s  # coincident and exactly-r pairs
+    for x, y in ((a, b.limit(0)), (a.limit(0), b)):
+        assert within_distance_join(x, y, r, keys=("k",)).count() == 0
 
 
 def test_weighted_topk_monotone_and_stable(spark):
