@@ -74,18 +74,20 @@ def within_distance_join(
     """All (a, b) pairs with squared planar distance <= radius^2 over
     int64 coordinates (x, y) whose ``keys`` columns are equal -> every
     column of both sides but x/y (``keys`` once) + d2.  ONE bounded
-    equi-join: grid side = radius, the a-side explodes its 3x3 cell ring
-    (every pair within radius provably shares a ring cell, and b's cell
-    is unique, so each pair is emitted once), exact int64 verify — never
-    an all-pairs product.  Callers name the non-key columns of the two
-    sides apart."""
+    equi-join: grid side = max(radius, 1), the a-side explodes its 3x3
+    cell ring (every pair within radius provably shares a ring cell when
+    the side is >= radius, and b's cell is unique, so each pair is
+    emitted once), exact int64 verify — never an all-pairs product;
+    radius 0 returns exactly the coincident pairs.  Callers name the
+    non-key columns of the two sides apart."""
     def xy(df, tag):
         return df.withColumnRenamed("x", f"__{tag}x").withColumnRenamed(
             "y", f"__{tag}y")
 
-    ae = _ring_cells(xy(a_pts, "a"), "__ax", "__ay", radius)
-    b = xy(b_pts, "b").select("*", _cell("__bx", radius).alias("cx"),
-                              _cell("__by", radius).alias("cy"))
+    side = max(int(radius), 1)
+    ae = _ring_cells(xy(a_pts, "a"), "__ax", "__ay", side)
+    b = xy(b_pts, "b").select("*", _cell("__bx", side).alias("cx"),
+                              _cell("__by", side).alias("cy"))
     dx = F.col("__ax").cast("long") - F.col("__bx").cast("long")
     dy = F.col("__ay").cast("long") - F.col("__by").cast("long")
     r2 = F.lit(int(radius)).cast("long") * F.lit(int(radius)).cast("long")
@@ -1364,9 +1366,10 @@ def dbscan(
 
     nbr = within_distance_join(side("a"), side("b"), eps).select("a_id", "b_id")
     deg = nbr.groupBy("a_id").agg(F.count(F.lit(1)).alias("n_nbr"))
+    # eager localCheckpoint, not persist: GC-reclaimed, no cache entry left behind
     core = deg.filter(F.col("n_nbr") >= int(min_pts)).select(
         F.col("a_id").alias("cid")
-    ).persist()
+    ).localCheckpoint()
     # core-core edges (self-loops keep isolated cores in the output)
     cc_edges = (
         nbr.join(core, nbr.a_id == core.cid).drop("cid")
@@ -1701,11 +1704,13 @@ def all_nearest_neighbors(
         F.col(id_col).alias("pid"), F.col(x_col).alias("px"),
         F.col(y_col).alias("py"),
     ).persist()
+    # others and each round's best: eager localCheckpoints, not persist —
+    # the GC reclaims them, so the call leaves no cache entry behind
     others = pts.select(
         F.col("pid").alias("oid"), F.col("px").alias("ox"),
         F.col("py").alias("oy"),
         _cell("px", cell).alias("ocx"), _cell("py", cell).alias("ocy"),
-    ).persist()
+    ).localCheckpoint()
     lo_hi = pts.agg(
         F.min("px"), F.max("px"), F.min("py"), F.max("py")
     ).collect()[0]
@@ -1740,7 +1745,7 @@ def all_nearest_neighbors(
         # a block wider than the data span holds every point: best is exact
         # even when the boundary-clearance test cannot certify it
         ok = (F.col("d2") < clear * clear) | F.lit(r >= span_cells)
-        best = best.withColumn("__ok", ok).persist()
+        best = best.withColumn("__ok", ok).localCheckpoint()
         certified = best.filter(F.col("__ok")).select("pid", "nn_id", "d2")
         done = certified if done is None else done.unionByName(certified)
         pending = (

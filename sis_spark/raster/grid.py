@@ -11,7 +11,12 @@
 * The tile-neighbourhood gather every tiled neighbourhood operator shares
   (the source-tile gather of F/image/ComputedImage.java) is
   `_halo_groups` (which tiles a group needs) + `_place_blocks` (the
-  group's tiles pasted into one halo array).
+  group's tiles pasted into one halo array); `_gather_2x2` is its aligned
+  2x2 case (one overview step).
+* The per-tile computation every tile operator shares
+  (F/image/ComputedImage.java:123 computeTile) is `_map_tiles`: one Arrow
+  batch loop that decodes each row's byte planes, cuts them to the
+  `_valid_window` when asked, and runs the operator's numpy body.
 """
 
 from __future__ import annotations
@@ -19,10 +24,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import transforms as tr
+
+TILE_SCHEMA = "tx long, ty long, band int, data binary"
 
 
 @dataclass(frozen=True)
@@ -131,6 +139,93 @@ def _place_blocks(key, pdf, tile_size: int, dtype, lo, hi, fill,
         halo[:, (gx < 0) | (gx >= extent.width)] = fill
         halo[(gy < 0) | (gy >= extent.height), :] = fill
     return gtx, gty, halo
+
+
+def _gather_2x2(tiles_df: DataFrame, tile_size: int, dtype, halo_dtype,
+                reduce) -> DataFrame:
+    """Aligned 2x2 gather: output tile (dtx, dty) of each band pastes its
+    source tiles (2dtx..2dtx+1, 2dty..2dty+1) into one 2T x 2T
+    ``halo_dtype`` mosaic (missing tiles read 0) and emits the T x T plane
+    ``reduce(mosaic)`` -> (tx, ty, band, data) rows."""
+    ts = tile_size
+    src = tiles_df.select(
+        (F.col("tx") / 2).cast("long").alias("dtx"),
+        (F.col("ty") / 2).cast("long").alias("dty"),
+        "tx", "ty", "band", "data",
+    )
+
+    def build(key, pdf):
+        dtx, dty, band = (int(k) for k in key)
+        _, _, mosaic = _place_blocks((2 * dtx, 2 * dty), pdf, ts, dtype, 0, ts,
+                                     0, halo_dtype)
+        return pd.DataFrame({"tx": [dtx], "ty": [dty], "band": [band],
+                             "data": [reduce(mosaic).tobytes()]})
+
+    return src.groupBy("dtx", "dty", "band").applyInPandas(
+        build, schema=TILE_SCHEMA)
+
+
+def _valid_window(gg: GridGeometry, tx, ty, tile_size: int) -> tuple[int, int]:
+    """(rows, cols) of tile (tx, ty) inside the extent of ``gg``: the whole
+    tile, the leading part of an edge tile, 0 for a tile off the extent
+    (tile (0, 0) starts at pixel 0, so no tile is cut on its low side)."""
+    def span(t, n):
+        return 0 if t < 0 else max(0, min(tile_size, n - t * tile_size))
+
+    return span(int(ty), gg.height), span(int(tx), gg.width)
+
+
+def _tile_row(row: dict, plane: np.ndarray) -> dict:
+    """A ``_map_tiles`` output row: the input tile's key with ``plane``."""
+    return {"tx": row["tx"], "ty": row["ty"], "band": row["band"],
+            "data": plane.tobytes()}
+
+
+def _map_tiles(df: DataFrame, schema: str, tile_size: int | None, planes,
+               body, gg: GridGeometry | None = None) -> DataFrame:
+    """The per-tile core: one mapInPandas over tile rows.
+
+    ``planes`` is a dtype (the ``data`` column) or {column: dtype}; each
+    row's planes decode as T x T arrays (flat when ``tile_size`` is None).
+    With ``gg`` they are cut to the tile's ``_valid_window`` and rows off
+    the extent are skipped.  ``body(row, *planes)`` gets the row's other
+    columns as a dict and returns None or one output row as a column dict;
+    a list or array value there makes one row per element (scalars
+    repeat).  Batches that produce no rows yield nothing."""
+    if not isinstance(planes, dict):
+        planes = {"data": planes}
+    names, dts = list(planes), [np.dtype(d) for d in planes.values()]
+    shape = (-1,) if tile_size is None else (tile_size, tile_size)
+
+    def fn(batches):
+        for pdf in batches:
+            keys = [c for c in pdf.columns if c not in planes]
+            cols, n = {}, 0
+            for row, *datas in zip(pdf[keys].to_dict("records"),
+                                   *(pdf[c] for c in names)):
+                arrs = [np.frombuffer(d, dt).reshape(shape)
+                        for d, dt in zip(datas, dts)]
+                if gg is not None:
+                    vh, vw = _valid_window(gg, row["tx"], row["ty"], tile_size)
+                    if not (vh and vw):
+                        continue
+                    arrs = [a[:vh, :vw] for a in arrs]
+                out = body(row, *arrs)
+                if out is None:
+                    continue
+                many = [len(v) for v in out.values()
+                        if isinstance(v, (list, np.ndarray))]
+                k = max(many, default=1)
+                for c, v in out.items():
+                    if isinstance(v, np.ndarray):
+                        v = v.tolist()
+                    cols.setdefault(c, []).extend(
+                        v if isinstance(v, list) else [v] * k)
+                n += k
+            if n:
+                yield pd.DataFrame(cols)
+
+    return df.mapInPandas(fn, schema=schema)
 
 
 def derive_read_extent(

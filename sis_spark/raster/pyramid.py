@@ -16,20 +16,19 @@ queries.py chains lag/lead weighted sums — separability of the binomial
 kernel makes the 2-D convolution two 1-D passes).
 
 Scale shape: reduce/expand ride the convolve_tiles halo machinery (one
-9-way neighbor shuffle per convolution); decimate gathers an aligned 2x2
-tile block (the overview_level discipline); upsample is a 1->4 tile
-flatMap; blends and sums are tile-key zips.  Nothing is ever dense on the
-driver.
+9-way neighbor shuffle per convolution); decimate is the aligned 2x2
+gather of overview_level (``grid._gather_2x2``); upsample, the per-level
+floor-divs and the blends are per-tile passes of ``grid._map_tiles`` (the
+blends over tile-key zips).  Nothing is ever dense on the driver.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .grid import GridGeometry
+from .grid import GridGeometry, _gather_2x2, _map_tiles, _tile_row
 from .terrain import convolve_tiles
 
 TS = 64
@@ -45,20 +44,6 @@ def _with_band(conv_df: DataFrame) -> DataFrame:
     )
 
 
-def _map_tiles(tiles: DataFrame, f) -> DataFrame:
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                a = np.frombuffer(data, np.int64).reshape(TS, TS)
-                rows.append({"tx": int(tx), "ty": int(ty), "band": int(band),
-                             "data": f(a).astype(np.int64).tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(fn, schema=_SCHEMA)
-
-
 def _zip_tiles(a: DataFrame, b: DataFrame, f) -> DataFrame:
     """Tile-key zip of two int64 tile sets (inner on (tx, ty); both sides
     must cover the same tile grid).  ``f(pa, pb, tx, ty)`` -> plane."""
@@ -66,70 +51,32 @@ def _zip_tiles(a: DataFrame, b: DataFrame, f) -> DataFrame:
         b.select("tx", "ty", F.col("data").alias("db")), ["tx", "ty"]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, da, db in zip(pdf["tx"], pdf["ty"], pdf["da"], pdf["db"]):
-                pa = np.frombuffer(da, np.int64).reshape(TS, TS)
-                pb = np.frombuffer(db, np.int64).reshape(TS, TS)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": 0,
-                    "data": f(pa, pb, int(tx), int(ty)).astype(np.int64).tobytes(),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def zf(r, pa, pb):
+        plane = f(pa, pb, r["tx"], r["ty"]).astype(np.int64)
+        return {"tx": r["tx"], "ty": r["ty"], "band": 0, "data": plane.tobytes()}
 
-    return j.mapInPandas(fn, schema=_SCHEMA)
-
-
-def _decimate2(conv_tiles: DataFrame, den: int) -> DataFrame:
-    """[::2, ::2] of an int64 conv level with an exact floor-div by
-    ``den``: each output tile assembles its aligned 2x2 source block
-    (missing tiles = zero, which is exact beyond the extent)."""
-    src = conv_tiles.select(
-        (F.col("tx") / 2).cast("long").alias("otx"),
-        (F.col("ty") / 2).cast("long").alias("oty"),
-        "tx", "ty", "data",
-    )
-
-    def fn(key, pdf):
-        otx, oty = int(key[0]), int(key[1])
-        mosaic = np.zeros((2 * TS, 2 * TS), dtype=np.int64)
-        for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-            a = np.frombuffer(data, np.int64).reshape(TS, TS)
-            mosaic[(int(ty) - 2 * oty) * TS:(int(ty) - 2 * oty + 1) * TS,
-                   (int(tx) - 2 * otx) * TS:(int(tx) - 2 * otx + 1) * TS] = a
-        out = np.floor_divide(mosaic[::2, ::2], den)
-        return pd.DataFrame([{"tx": otx, "ty": oty, "band": 0,
-                              "data": out.tobytes()}])
-
-    return src.groupBy("otx", "oty").applyInPandas(fn, schema=_SCHEMA)
+    return _map_tiles(j, _SCHEMA, TS, {"da": np.int64, "db": np.int64}, zf)
 
 
 def _upsample2(tiles: DataFrame, out_ntx: int, out_nty: int) -> DataFrame:
     """Zero-insert upsample: input pixel (i, j) lands at (2i, 2j); each
     input tile emits its up-to-4 output tiles (1->4 flatMap)."""
-    ontx, onty = int(out_ntx), int(out_nty)
+    h = TS // 2
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                a = np.frombuffer(data, np.int64).reshape(TS, TS)
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        otx, oty = 2 * int(tx) + dx, 2 * int(ty) + dy
-                        if otx >= ontx or oty >= onty:
-                            continue
-                        z = np.zeros((TS, TS), dtype=np.int64)
-                        z[::2, ::2] = a[dy * (TS // 2):(dy + 1) * (TS // 2),
-                                        dx * (TS // 2):(dx + 1) * (TS // 2)]
-                        rows.append({"tx": otx, "ty": oty, "band": 0,
-                                     "data": z.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def up(r, a):
+        out = {"tx": [], "ty": [], "band": 0, "data": []}
+        for dy in (0, 1):
+            for dx in (0, 1):
+                otx, oty = 2 * r["tx"] + dx, 2 * r["ty"] + dy
+                if otx < out_ntx and oty < out_nty:
+                    z = np.zeros((TS, TS), dtype=np.int64)
+                    z[::2, ::2] = a[dy * h:(dy + 1) * h, dx * h:(dx + 1) * h]
+                    out["tx"].append(otx)
+                    out["ty"].append(oty)
+                    out["data"].append(z.tobytes())
+        return out
 
-    return tiles.select("tx", "ty", "data").mapInPandas(fn, schema=_SCHEMA)
+    return _map_tiles(tiles.select("tx", "ty", "data"), _SCHEMA, TS, np.int64, up)
 
 
 def reduce_level(tiles: DataFrame, gg: GridGeometry, dtype=np.int64):
@@ -137,7 +84,8 @@ def reduce_level(tiles: DataFrame, gg: GridGeometry, dtype=np.int64):
     c = _with_band(convolve_tiles(tiles, gg, K5, dtype=dtype))
     w2, h2 = (gg.width + 1) // 2, (gg.height + 1) // 2
     gg2 = GridGeometry((0, 0, w2 - 1, h2 - 1), gg.affine)
-    return _decimate2(c, 256), gg2
+    return _gather_2x2(c, TS, np.int64, np.int64,
+                       lambda m: np.floor_divide(m[::2, ::2], 256)), gg2
 
 
 def expand_level(tiles: DataFrame, gg_big: GridGeometry) -> DataFrame:
@@ -147,7 +95,8 @@ def expand_level(tiles: DataFrame, gg_big: GridGeometry) -> DataFrame:
     nty = (gg_big.height + TS - 1) // TS
     z = _with_band(_upsample2(tiles, ntx, nty))
     c = _with_band(convolve_tiles(z, gg_big, K5, dtype=np.int64))
-    return _map_tiles(c, lambda a: np.floor_divide(a, 64))
+    return _map_tiles(c, _SCHEMA, TS, np.int64,
+                      lambda r, a: _tile_row(r, np.floor_divide(a, 64)))
 
 
 def _ramp_mask(tx: int, level: int, width: int) -> np.ndarray:
@@ -188,23 +137,12 @@ def laplacian_blend(
         for lv in range(levels):
             t, g, dt = gs[lv]
             up = expand_level(gs[lv + 1][0], g)
-            t64 = t if dt == np.int64 else _u8_to_i64(t)
+            t64 = t if dt == np.int64 else _map_tiles(
+                t, _SCHEMA, TS, np.uint8,
+                lambda r, a: _tile_row(r, a.astype(np.int64)))
             outs.append(_zip_tiles(t64, up, lambda pa, pb, tx, ty: pa - pb))
         outs.append(gs[levels][0])  # top level: the Gaussian itself
         return outs
-
-    def _u8_to_i64(t):
-        def fn(batches):
-            for pdf in batches:
-                rows = []
-                for tx, ty, band, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                    a = np.frombuffer(data, np.uint8).reshape(TS, TS).astype(np.int64)
-                    rows.append({"tx": int(tx), "ty": int(ty),
-                                 "band": int(band), "data": a.tobytes()})
-                if rows:
-                    yield pd.DataFrame(rows)
-
-        return t.mapInPandas(fn, schema=_SCHEMA)
 
     la = lap(ga)
     lb = lap(gb)

@@ -7,6 +7,20 @@ GridCoverageProcessor, F/coverage/grid/GridCoverageProcessor.java):
     tile rows + a broadcast GridGeometry ==> every op is mapInPandas numpy
     over (TILE x TILE) uint8/float blocks, partitioned by (tx, ty).
 
+The per-tile contract, written once in ``grid._map_tiles``:
+
+* ``data`` is one band plane of tile (tx, ty): T x T values of the
+  operator's ``dtype``, row-major, C order; tile (tx, ty) covers pixels
+  [tx*T, tx*T + T) x [ty*T, ty*T + T).  Edge tiles are zero-padded to
+  T x T; the real extent lives in the GridGeometry.
+* The valid window (``grid._valid_window``) is the in-extent part of a
+  tile: all of it inside the extent, the leading rows/columns of an edge
+  tile.  Operators that read statistics of real pixels (band_stats, the
+  histograms, zonal_stats, clahe_luts, haar/laplacian energies) see only
+  this window.
+* A tile off the extent has an empty window and is dropped by those
+  operators: it contributes no pixels, counts or rows.
+
 Operators (SURVEY.md §2.6 mapping):
     band_stats      per-band partial stats per tile -> combine (StatisticsCalculator)
     convert         transfer function value*scale+offset (ConvertedGridCoverage)
@@ -27,9 +41,9 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as _geo
 from ..functions import transforms as _tr
-from .grid import GridGeometry, _halo_groups
-
-TILE_SCHEMA = "tx long, ty long, band int, data binary"
+from .grid import (TILE_SCHEMA, GridGeometry, _gather_2x2, _halo_groups,
+                   _map_tiles, _place_blocks, _tile_row, _valid_window,
+                   subsample)
 
 
 def raster_to_tiles(
@@ -61,9 +75,9 @@ def tiles_to_raster(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
     out = np.zeros((h, w, nb), dtype=dtype)
     for r in rows:
         block = np.frombuffer(r["data"], dtype=dtype).reshape(tile_size, tile_size)
+        vh, vw = _valid_window(gg, r["tx"], r["ty"], tile_size)
         ys, xs = r["ty"] * tile_size, r["tx"] * tile_size
-        sub = block[: max(0, min(tile_size, h - ys)), : max(0, min(tile_size, w - xs))]
-        out[ys : ys + sub.shape[0], xs : xs + sub.shape[1], r["band"]] = sub
+        out[ys : ys + vh, xs : xs + vw, r["band"]] = block[:vh, :vw]
     return out
 
 
@@ -74,29 +88,12 @@ def band_stats(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
     (U/math/Statistics.java:311; per-tile parallelism of
     F/image/StatisticsCalculator.java:124-182).  Zero-padded margins of edge
     tiles are excluded via the real extent."""
-    w, h = gg.width, gg.height
-    bdt = np.dtype(dtype)
+    def partial(r, v):
+        return {"band": r["band"], "cnt": v.size, "mn": int(v.min()),
+                "mx": int(v.max()), "sm": int(v.sum(dtype=np.int64))}
 
-    def partial(batches):
-        for pdf in batches:
-            out = []
-            for data, ty, tx, band in zip(pdf["data"], pdf["ty"], pdf["tx"], pdf["band"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vh = min(tile_size, h - ty * tile_size)
-                vw = min(tile_size, w - tx * tile_size)
-                v = block[:vh, :vw]
-                out.append(
-                    {
-                        "band": band,
-                        "cnt": v.size,
-                        "mn": int(v.min()),
-                        "mx": int(v.max()),
-                        "sm": int(v.sum(dtype=np.int64)),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    partials = tiles_df.mapInPandas(partial, schema="band int, cnt long, mn long, mx long, sm long")
+    partials = _map_tiles(tiles_df, "band int, cnt long, mn long, mx long, sm long",
+                          tile_size, dtype, partial, gg)
     return partials.groupBy("band").agg(
         F.sum("cnt").alias("n"),
         F.min("mn").alias("min"),
@@ -110,17 +107,8 @@ def convert(tiles_df: DataFrame, scale: float, offset: float, tile_size: int = 6
             dtype=np.uint8) -> DataFrame:
     """Transfer function: value*scale + offset -> float64 tiles
     (SampleDimension transfer function, F/coverage/SampleDimension.java:118)."""
-    bdt = np.dtype(dtype)
-
-    def fn(batches):
-        for pdf in batches:
-            datas = [
-                (np.frombuffer(d, dtype=bdt).astype(np.float64) * scale + offset).tobytes()
-                for d in pdf["data"]
-            ]
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band, "data": datas})
-
-    return tiles_df.mapInPandas(fn, schema=TILE_SCHEMA)
+    return _map_tiles(tiles_df, TILE_SCHEMA, None, dtype, lambda r, a: _tile_row(
+        r, a.astype(np.float64) * scale + offset))
 
 
 def band_select(tiles_df: DataFrame, bands: list[int]) -> DataFrame:
@@ -173,25 +161,20 @@ def mask_polygon(tiles_df: DataFrame, gg: GridGeometry, vx: np.ndarray, vy: np.n
     """Mask by polygon ROI (GridCoverageProcessor.mask,
     F/image/MaskedImage.java): pixels whose CELL_CENTER CRS position fails
     the PIP test are replaced by ``fill``.  Reuses the ray-cast kernel."""
-    bdt = np.dtype(dtype)
     spark = tiles_df.sparkSession
     bc = spark.sparkContext.broadcast((vx, vy, gg))
+    gxs = np.arange(tile_size)
 
-    def fn(batches):
+    def fn(r, a):
         pvx, pvy, g = bc.value
-        gxs = np.arange(tile_size)
-        for pdf in batches:
-            datas = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size).copy()
-                gx, gy = np.meshgrid(tx * tile_size + gxs, ty * tile_size + gxs)
-                cx, cy = g.cell_center_to_crs(gx.ravel(), gy.ravel())
-                m = _geo.points_in_polygon(cx, cy, pvx, pvy).reshape(tile_size, tile_size)
-                block[m != inside] = fill
-                datas.append(block.tobytes())
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band, "data": datas})
+        gx, gy = np.meshgrid(r["tx"] * tile_size + gxs, r["ty"] * tile_size + gxs)
+        cx, cy = g.cell_center_to_crs(gx.ravel(), gy.ravel())
+        m = _geo.points_in_polygon(cx, cy, pvx, pvy).reshape(tile_size, tile_size)
+        block = a.copy()
+        block[m != inside] = fill
+        return _tile_row(r, block)
 
-    return tiles_df.mapInPandas(fn, schema=TILE_SCHEMA)
+    return _map_tiles(tiles_df, TILE_SCHEMA, tile_size, dtype, fn)
 
 
 def point_eval(tiles_df: DataFrame, points: DataFrame, gg: GridGeometry,
@@ -256,49 +239,36 @@ def zonal_stats(
     spark = tiles_df.sparkSession
     packed = _pack_polygons(normalize_polygons(polygons))
     bc = spark.sparkContext.broadcast((packed, gg))
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
+    gxs = np.arange(tile_size)
 
-    def partial(batches):
+    def partial(r, block):
         p, g = bc.value
-        env, keys = p["env"], p["keys"]
-        gxs = np.arange(tile_size)
-        for pdf in batches:
-            out = []
-            for data, tx, ty, band in zip(pdf["data"], pdf["tx"], pdf["ty"], pdf["band"]):
-                vh = min(tile_size, h - ty * tile_size)
-                vw = min(tile_size, w - tx * tile_size)
-                if vh <= 0 or vw <= 0:
-                    continue
-                gx, gy = np.meshgrid(tx * tile_size + gxs[:vw], ty * tile_size + gxs[:vh])
-                cx, cy = g.cell_center_to_crs(gx.ravel(), gy.ravel())
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vals = block[:vh, :vw].ravel()
-                # tile envelope in CRS
-                txmin, txmax = cx.min(), cx.max()
-                tymin, tymax = cy.min(), cy.max()
-                for part in np.nonzero(
-                    (env[:, 0] <= txmax) & (env[:, 2] >= txmin)
-                    & (env[:, 1] <= tymax) & (env[:, 3] >= tymin)
-                )[0]:
-                    gi = np.full(cx.shape, part, dtype=np.int64)
-                    m = _geo.points_in_padded_rings(
-                        cx, cy, gi, p["RVX"], p["RVY"], p["ring_start"]
-                    )
-                    if not m.any():
-                        continue
-                    v = vals[m]
-                    out.append({
-                        "poly_key": int(keys[part]), "band": int(band),
-                        "cnt": int(v.size), "sm": int(v.sum(dtype=np.int64)),
-                        "mn": int(v.min()), "mx": int(v.max()),
-                    })
-            if out:
-                yield pd.DataFrame(out)
+        env = p["env"]
+        vh, vw = block.shape
+        gx, gy = np.meshgrid(r["tx"] * tile_size + gxs[:vw], r["ty"] * tile_size + gxs[:vh])
+        cx, cy = g.cell_center_to_crs(gx.ravel(), gy.ravel())
+        # tile envelope in CRS
+        near = np.nonzero(
+            (env[:, 0] <= cx.max()) & (env[:, 2] >= cx.min())
+            & (env[:, 1] <= cy.max()) & (env[:, 3] >= cy.min())
+        )[0]
+        hits = []
+        for part in near:
+            gi = np.full(cx.shape, part, dtype=np.int64)
+            m = _geo.points_in_padded_rings(
+                cx, cy, gi, p["RVX"], p["RVY"], p["ring_start"]
+            )
+            if m.any():
+                hits.append((int(p["keys"][part]), block.ravel()[m]))
+        return {"poly_key": [k for k, _ in hits], "band": r["band"],
+                "cnt": [v.size for _, v in hits],
+                "sm": [int(v.sum(dtype=np.int64)) for _, v in hits],
+                "mn": [int(v.min()) for _, v in hits],
+                "mx": [int(v.max()) for _, v in hits]}
 
-    partials = tiles_df.mapInPandas(
-        partial, schema="poly_key long, band int, cnt long, sm long, mn long, mx long"
-    )
+    partials = _map_tiles(
+        tiles_df, "poly_key long, band int, cnt long, sm long, mn long, mx long",
+        tile_size, dtype, partial, gg)
     return partials.groupBy("poly_key", "band").agg(
         F.sum("cnt").alias("n"),
         F.sum("sm").alias("sum"),
@@ -555,14 +525,10 @@ def resample_gather(
         stys = pdf["sty"].to_numpy()
         x_lo, x_hi = int(stxs.min()), int(stxs.max())
         y_lo, y_hi = int(stys.min()), int(stys.max())
-        mosaic = np.full(
-            ((y_hi - y_lo + 1) * tile_size, (x_hi - x_lo + 1) * tile_size),
-            fill, dtype=np.float64,
-        )
-        for stx, sty, data in zip(stxs, stys, pdf["data"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-            ys, xs = (int(sty) - y_lo) * tile_size, (int(stx) - x_lo) * tile_size
-            mosaic[ys : ys + tile_size, xs : xs + tile_size] = block
+        span = ((y_hi - y_lo) * tile_size, (x_hi - x_lo) * tile_size)
+        _, _, mosaic = _place_blocks(
+            (x_lo, y_lo), pdf.rename(columns={"stx": "tx", "sty": "ty"}),
+            tile_size, bdt, 0, span, fill)
         gx, gy = np.meshgrid(dtx * tile_size + gxs, dty * tile_size + gxs)
         fx, fy = _tr.affine_apply(center, gx.ravel().astype(np.float64), gy.ravel().astype(np.float64))
         fx -= 0.5
@@ -603,34 +569,8 @@ def overview_level(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
     takes ``[::2, ::2]`` — pixel (i, j) of level z+1 is pixel (2i, 2j) of
     level z, bit-exact, no interpolation.  Returns (tiles_df, subsampled
     GridGeometry)."""
-    from .grid import subsample
-
-    spark = tiles_df.sparkSession
-    h, w = gg.height, gg.width
-    out_gg = subsample(gg, 2, 2)
-    bdt = np.dtype(dtype)
-
-    contrib = tiles_df.select(
-        (F.col("tx") / 2).cast("long").alias("dtx"),
-        (F.col("ty") / 2).cast("long").alias("dty"),
-        "tx", "ty", "band", "data",
-    )
-
-    def build(key, pdf):
-        dtx, dty, band = int(key[0]), int(key[1]), int(key[2])
-        mosaic = np.zeros((2 * tile_size, 2 * tile_size), dtype=bdt)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-            oy = (int(ty) - 2 * dty) * tile_size
-            ox = (int(tx) - 2 * dtx) * tile_size
-            mosaic[oy : oy + tile_size, ox : ox + tile_size] = block
-        sub = mosaic[::2, ::2]
-        return pd.DataFrame(
-            {"tx": [dtx], "ty": [dty], "band": [band], "data": [sub.tobytes()]}
-        )
-
-    out = contrib.groupBy("dtx", "dty", "band").applyInPandas(build, schema=TILE_SCHEMA)
-    return out, out_gg
+    out = _gather_2x2(tiles_df, tile_size, dtype, dtype, lambda m: m[::2, ::2])
+    return out, subsample(gg, 2, 2)
 
 
 def build_overviews(tiles_df: DataFrame, gg: GridGeometry, n_levels: int,
@@ -658,34 +598,8 @@ def stretch(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
 
     Two Spark jobs: one 256-bin histogram aggregation (tiny — 256 rows per
     band regardless of raster size), one map over tiles."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
-
-    def hist_partial(batches):
-        for pdf in batches:
-            out = []
-            for data, tx, ty, band in zip(pdf["data"], pdf["tx"], pdf["ty"], pdf["band"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vh = min(tile_size, h - ty * tile_size)
-                vw = min(tile_size, w - tx * tile_size)
-                cnt = np.bincount(block[:vh, :vw].ravel(), minlength=256)
-                nz = np.nonzero(cnt)[0]
-                out.append(pd.DataFrame({
-                    "band": band, "value": nz, "cnt": cnt[nz],
-                }))
-            if out:
-                yield pd.concat(out)
-
-    hist = (
-        tiles_df.mapInPandas(hist_partial, schema="band int, value int, cnt long")
-        .groupBy("band", "value").agg(F.sum("cnt").alias("cnt"))
-        .collect()  # <= 256 rows/band: plan input, like the salting histogram
-    )
     bounds: dict[int, tuple[float, float]] = {}
-    by_band: dict[int, np.ndarray] = {}
-    for r in hist:
-        by_band.setdefault(r["band"], np.zeros(256, dtype=np.int64))[r["value"]] += r["cnt"]
-    for band, cnt in by_band.items():
+    for band, cnt in _band_hists(tiles_df, gg, tile_size, dtype).items():
         cum = np.cumsum(cnt)
         total = cum[-1]
         lo = int(np.searchsorted(cum, total * low_pct / 100.0, side="left"))
@@ -695,17 +609,12 @@ def stretch(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
             hi = lo + 1
         bounds[band] = (float(lo), float(hi))
 
-    def apply(batches):
-        for pdf in batches:
-            datas = []
-            for band, d in zip(pdf["band"], pdf["data"]):
-                lo, hi = bounds.get(int(band), (0.0, 255.0))
-                block = np.frombuffer(d, dtype=bdt).astype(np.float64)
-                out = np.clip((block - lo) * (255.0 / (hi - lo)), 0.0, 255.0)
-                datas.append(out.astype(np.uint8).tobytes())
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band, "data": datas})
+    def apply(r, a):
+        lo, hi = bounds.get(r["band"], (0.0, 255.0))
+        out = np.clip((a.astype(np.float64) - lo) * (255.0 / (hi - lo)), 0.0, 255.0)
+        return _tile_row(r, out.astype(np.uint8))
 
-    return tiles_df.mapInPandas(apply, schema=TILE_SCHEMA)
+    return _map_tiles(tiles_df, TILE_SCHEMA, None, dtype, apply)
 
 
 def hist_eq(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
@@ -721,34 +630,8 @@ def hist_eq(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
     engines and partitionings.  Two Spark jobs: one tiny histogram
     aggregation (<= 256 rows per band regardless of raster size), one map
     over tiles — same shape as ``stretch``."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
-
-    def hist_partial(batches):
-        for pdf in batches:
-            out = []
-            for data, tx, ty, band in zip(pdf["data"], pdf["tx"], pdf["ty"], pdf["band"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vh = min(tile_size, h - ty * tile_size)
-                vw = min(tile_size, w - tx * tile_size)
-                cnt = np.bincount(block[:vh, :vw].ravel(), minlength=256)
-                nz = np.nonzero(cnt)[0]
-                out.append(pd.DataFrame({
-                    "band": band, "value": nz, "cnt": cnt[nz],
-                }))
-            if out:
-                yield pd.concat(out)
-
-    hist = (
-        tiles_df.mapInPandas(hist_partial, schema="band int, value int, cnt long")
-        .groupBy("band", "value").agg(F.sum("cnt").alias("cnt"))
-        .collect()  # <= 256 rows/band: plan input, like stretch's bounds
-    )
-    by_band: dict[int, np.ndarray] = {}
-    for r in hist:
-        by_band.setdefault(r["band"], np.zeros(256, dtype=np.int64))[r["value"]] += r["cnt"]
     luts: dict[int, np.ndarray] = {}
-    for band, cnt in by_band.items():
+    for band, cnt in _band_hists(tiles_df, gg, tile_size, dtype).items():
         cum = np.cumsum(cnt)
         n = int(cum[-1])
         cdf_min = int(cum[np.nonzero(cnt)[0][0]])
@@ -758,18 +641,7 @@ def hist_eq(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,
             luts[band] = (
                 np.maximum(cum - cdf_min, 0) * 255 // (n - cdf_min)
             ).astype(np.uint8)
-
-    def apply(batches):
-        for pdf in batches:
-            datas = []
-            for band, d in zip(pdf["band"], pdf["data"]):
-                lut = luts.get(int(band))
-                block = np.frombuffer(d, dtype=bdt)
-                datas.append((block if lut is None else lut[block]).tobytes())
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band,
-                                "data": datas})
-
-    return tiles_df.mapInPandas(apply, schema=TILE_SCHEMA)
+    return _apply_luts(tiles_df, luts, dtype)
 
 
 def value_histogram(tiles_df: DataFrame, gg: GridGeometry,
@@ -778,29 +650,37 @@ def value_histogram(tiles_df: DataFrame, gg: GridGeometry,
     DataFrame (<= 256 rows per band regardless of raster size; the
     stretch/hist_eq partial kept as a composable relation instead of a
     driver collect).  Padding beyond the real extent is excluded."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
-
-    def hist_partial(batches):
-        for pdf in batches:
-            out = []
-            for data, tx, ty, band in zip(pdf["data"], pdf["tx"], pdf["ty"], pdf["band"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vh = min(tile_size, h - ty * tile_size)
-                vw = min(tile_size, w - tx * tile_size)
-                cnt = np.bincount(block[:vh, :vw].ravel(), minlength=256)
-                nz = np.nonzero(cnt)[0]
-                out.append(pd.DataFrame({
-                    "band": band, "value": nz, "cnt": cnt[nz],
-                }))
-            if out:
-                yield pd.concat(out)
+    def part(r, v):
+        cnt = np.bincount(v.ravel(), minlength=256)
+        nz = np.nonzero(cnt)[0]
+        return {"band": r["band"], "value": nz, "cnt": cnt[nz]}
 
     return (
-        tiles_df.mapInPandas(hist_partial, schema="band int, value int, cnt long")
+        _map_tiles(tiles_df, "band int, value int, cnt long", tile_size, dtype,
+                   part, gg)
         .groupBy("band", "value")
         .agg(F.sum("cnt").alias("cnt"))
     )
+
+
+def _band_hists(tiles_df: DataFrame, gg: GridGeometry, tile_size: int,
+                dtype) -> dict[int, np.ndarray]:
+    """``value_histogram`` collected -> {band: int64[256] counts} (<= 256
+    rows per band: a plan input, like the salting histogram)."""
+    out: dict[int, np.ndarray] = {}
+    for r in value_histogram(tiles_df, gg, tile_size, dtype).collect():
+        out.setdefault(r["band"], np.zeros(256, dtype=np.int64))[r["value"]] += r["cnt"]
+    return out
+
+
+def _apply_luts(tiles_df: DataFrame, luts: dict, dtype) -> DataFrame:
+    """Remap every tile through its band's 256-entry LUT; bands without a
+    LUT pass through unchanged."""
+    def fn(r, a):
+        lut = luts.get(r["band"])
+        return _tile_row(r, a if lut is None else lut[a])
+
+    return _map_tiles(tiles_df, TILE_SCHEMA, None, dtype, fn)
 
 
 def otsu_score_sql() -> str:
@@ -858,24 +738,14 @@ def color_ramp(tiles_df: DataFrame, lut: np.ndarray, band: int = 0,
     lut = np.asarray(lut, dtype=np.uint8)
     if lut.shape != (256, 3):
         raise ValueError("lut must be (256, 3) uint8")
-    bdt = np.dtype(dtype)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            sel = pdf[pdf["band"] == band]
-            for data, tx, ty in zip(sel["data"], sel["tx"], sel["ty"]):
-                block = np.frombuffer(data, dtype=bdt)
-                rgb = lut[block]  # (n, 3)
-                for ch in range(3):
-                    out.append({
-                        "tx": tx, "ty": ty, "band": ch,
-                        "data": rgb[:, ch].tobytes(),
-                    })
-            if out:
-                yield pd.DataFrame(out)
+    def fn(r, a):
+        rgb = lut[a]  # (n, 3)
+        return {"tx": r["tx"], "ty": r["ty"], "band": [0, 1, 2],
+                "data": [rgb[:, ch].tobytes() for ch in range(3)]}
 
-    return tiles_df.mapInPandas(fn, schema=TILE_SCHEMA)
+    return _map_tiles(tiles_df.filter(F.col("band") == band), TILE_SCHEMA,
+                      None, dtype, fn)
 
 
 def ssim_expr_sql() -> str:
@@ -909,36 +779,20 @@ def ssim_tiles(a: DataFrame, b: DataFrame, tile_size: int = 64,
     the FP formula runs as shared SQL expression text (``ssim_expr_sql``)
     so the DuckDB oracle cannot drift — the per-row reduction is
     embarrassingly parallel, no global state."""
-    j = (
-        a.withColumnRenamed("data", "da")
-        .join(b.withColumnRenamed("data", "db"), ["tx", "ty", "band"])
-    )
-    bdt = np.dtype(dtype)
+    def fn(r, va, vb):
+        va, vb = va.astype(np.int64), vb.astype(np.int64)
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "n_px": va.size,
+                "sum_a": int(va.sum()), "sum_b": int(vb.sum()),
+                "sumsq_a": int((va * va).sum()),
+                "sumsq_b": int((vb * vb).sum()),
+                "sum_ab": int((va * vb).sum())}
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, da, db in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["da"], pdf["db"]
-            ):
-                va = np.frombuffer(da, dtype=bdt).astype(np.int64)
-                vb = np.frombuffer(db, dtype=bdt).astype(np.int64)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "n_px": va.size,
-                    "sum_a": int(va.sum()), "sum_b": int(vb.sum()),
-                    "sumsq_a": int((va * va).sum()),
-                    "sumsq_b": int((vb * vb).sum()),
-                    "sum_ab": int((va * vb).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    ints = j.mapInPandas(
-        fn,
-        schema=("tx long, ty long, band int, n_px long, sum_a long, "
-                "sum_b long, sumsq_a long, sumsq_b long, sum_ab long"),
-    )
+    ints = _map_tiles(
+        _band_pairs(a, b),
+        "tx long, ty long, band int, n_px long, sum_a long, "
+        "sum_b long, sumsq_a long, sumsq_b long, sum_ab long",
+        None, {"da": dtype, "db": dtype}, fn)
     return ints.select(
         "tx", "ty", "band", "n_px", "sum_a", "sum_b",
         F.expr(ssim_expr_sql()).alias("ssim_q"),
@@ -955,38 +809,30 @@ def band_ratio_tiles(a: DataFrame, b: DataFrame, scale: int = 1_000_000,
 
     Scale shape: one equi-join on (tx, ty, band) co-locates band pairs,
     then a single embarrassingly-parallel mapInPandas pass."""
-    j = (
+    def fn(r, va, vb):
+        va, vb = va.astype(np.int64), vb.astype(np.int64)
+        s = va + vb
+        valid = s > 0
+        q = np.zeros_like(s)
+        q[valid] = np.floor_divide((va[valid] - vb[valid]) * scale, s[valid])
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "n_px": s.size, "n_valid": int(valid.sum()),
+                "sum_q": int(q.sum()),
+                "min_q": int(q.min()), "max_q": int(q.max())}
+
+    return _map_tiles(
+        _band_pairs(a, b),
+        "tx long, ty long, band int, n_px long, n_valid long, "
+        "sum_q long, min_q long, max_q long",
+        None, {"da": dtype, "db": dtype}, fn)
+
+
+def _band_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
+    """The (tx, ty, band) equi-join of two co-registered tile sets ->
+    rows with both planes, ``da`` from ``a`` and ``db`` from ``b``."""
+    return (
         a.withColumnRenamed("data", "da")
         .join(b.withColumnRenamed("data", "db"), ["tx", "ty", "band"])
-    )
-    bdt = np.dtype(dtype)
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, da, db in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["da"], pdf["db"]
-            ):
-                va = np.frombuffer(da, dtype=bdt).astype(np.int64)
-                vb = np.frombuffer(db, dtype=bdt).astype(np.int64)
-                s = va + vb
-                valid = s > 0
-                q = np.zeros_like(s)
-                q[valid] = np.floor_divide((va[valid] - vb[valid]) * scale,
-                                           s[valid])
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "n_px": s.size, "n_valid": int(valid.sum()),
-                    "sum_q": int(q.sum()),
-                    "min_q": int(q.min()), "max_q": int(q.max()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return j.mapInPandas(
-        fn,
-        schema=("tx long, ty long, band int, n_px long, n_valid long, "
-                "sum_q long, min_q long, max_q long"),
     )
 
 
@@ -1000,42 +846,26 @@ def glcm_tiles(tiles_df: DataFrame, levels: int = 8, tile_size: int = 64,
       contrast = sum over (i,j) of cnt * (i-j)^2   (exact int64)
       energy   = sum of cnt^2                      (exact int64)
     One embarrassingly-parallel pass, no shuffle at all."""
-    bdt = np.dtype(dtype)
     width = 256 // levels
+    ii = np.arange(levels * levels) // levels
+    jj = np.arange(levels * levels) % levels
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, d in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]
-            ):
-                block = (
-                    np.frombuffer(d, dtype=bdt)
-                    .reshape(tile_size, tile_size)
-                    .astype(np.int64)
-                    // width
-                )
-                li = block[:, :-1].ravel()
-                lj = block[:, 1:].ravel()
-                cnt = np.bincount(li * levels + lj,
-                                  minlength=levels * levels)
-                ii = np.arange(levels * levels) // levels
-                jj = np.arange(levels * levels) % levels
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "n_pairs": int(cnt.sum()),
-                    "contrast": int((cnt * (ii - jj) ** 2).sum()),
-                    "energy": int((cnt * cnt).sum()),
-                    "max_cnt": int(cnt.max()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, v):
+        block = v.astype(np.int64) // width
+        li = block[:, :-1].ravel()
+        lj = block[:, 1:].ravel()
+        cnt = np.bincount(li * levels + lj, minlength=levels * levels)
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "n_pairs": int(cnt.sum()),
+                "contrast": int((cnt * (ii - jj) ** 2).sum()),
+                "energy": int((cnt * cnt).sum()),
+                "max_cnt": int(cnt.max())}
 
-    return tiles_df.mapInPandas(
-        fn,
-        schema=("tx long, ty long, band int, n_pairs long, contrast long, "
-                "energy long, max_cnt long"),
-    )
+    return _map_tiles(
+        tiles_df,
+        "tx long, ty long, band int, n_pairs long, contrast long, "
+        "energy long, max_cnt long",
+        tile_size, dtype, fn)
 
 
 def append_bands(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1172,38 +1002,12 @@ def downsample_mean(tiles_df: DataFrame, gg: GridGeometry,
     overview, vs overview_level's stride-2 point sampling).  Same
     aligned 2x2 gather shuffle shape as overview_level.  Returns
     (tiles_df, subsampled GridGeometry)."""
-    from .grid import subsample
+    def mean4(m):
+        return ((m[0::2, 0::2] + m[0::2, 1::2] + m[1::2, 0::2] + m[1::2, 1::2])
+                // 4).astype(dtype)
 
-    out_gg = subsample(gg, 2, 2)
-    bdt = np.dtype(dtype)
-
-    contrib = tiles_df.select(
-        (F.col("tx") / 2).cast("long").alias("dtx"),
-        (F.col("ty") / 2).cast("long").alias("dty"),
-        "tx", "ty", "band", "data",
-    )
-
-    def build(key, pdf):
-        dtx, dty, band = int(key[0]), int(key[1]), int(key[2])
-        mosaic = np.zeros((2 * tile_size, 2 * tile_size), dtype=np.int64)
-        for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-            block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-            oy = (int(ty) - 2 * dty) * tile_size
-            ox = (int(tx) - 2 * dtx) * tile_size
-            mosaic[oy:oy + tile_size, ox:ox + tile_size] = block
-        sub = (
-            mosaic[0::2, 0::2] + mosaic[0::2, 1::2]
-            + mosaic[1::2, 0::2] + mosaic[1::2, 1::2]
-        ) // 4
-        return pd.DataFrame(
-            {"tx": [dtx], "ty": [dty], "band": [band],
-             "data": [sub.astype(bdt).tobytes()]}
-        )
-
-    out = contrib.groupBy("dtx", "dty", "band").applyInPandas(
-        build, schema=TILE_SCHEMA
-    )
-    return out, out_gg
+    out = _gather_2x2(tiles_df, tile_size, dtype, np.int64, mean4)
+    return out, subsample(gg, 2, 2)
 
 
 def tile_entropy_contrib_sql(n_px: int) -> str:
@@ -1225,25 +1029,14 @@ def tile_entropy(tiles_df: DataFrame, tile_size: int = 64,
     tiles by.  Exact integer histogram per tile (mapInPandas), then the
     shared-text quantized -p ln p per VALUE summed per tile — full
     tiles only (the caller clips partials); ln(1) tiles score 0."""
-    bdt = np.dtype(dtype)
+    def hist(r, a):
+        cnt = np.bincount(a, minlength=256)
+        nz = np.nonzero(cnt)[0]
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "value": nz, "cnt": cnt[nz]}
 
-    def hist(batches):
-        for pdf in batches:
-            out = []
-            for tx, ty, band, d in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                block = np.frombuffer(d, dtype=bdt)
-                cnt = np.bincount(block, minlength=256)
-                nz = np.nonzero(cnt)[0]
-                out.append(pd.DataFrame({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "value": nz, "cnt": cnt[nz],
-                }))
-            if out:
-                yield pd.concat(out)
-
-    rows = tiles_df.mapInPandas(
-        hist, schema="tx long, ty long, band int, value int, cnt long"
-    )
+    rows = _map_tiles(tiles_df, "tx long, ty long, band int, value int, cnt long",
+                      None, dtype, hist)
     n_px = tile_size * tile_size
     return (
         rows.withColumn("c", F.expr(tile_entropy_contrib_sql(n_px)))
@@ -1264,14 +1057,7 @@ def hist_match(a: DataFrame, ref: DataFrame, gg: GridGeometry,
     int64), computed from two <=256-row distributed histograms — the
     color-normalization pass a satellite/image corpus runs before
     training.  Same two-job shape as stretch/hist_eq."""
-    def hist_of(tiles_df):
-        out: dict[int, np.ndarray] = {}
-        for r in value_histogram(tiles_df, gg, tile_size, dtype).collect():
-            out.setdefault(r["band"], np.zeros(256, dtype=np.int64))[r["value"]] += r["cnt"]
-        return out
-
-    ha, hr = hist_of(a), hist_of(ref)
-    bdt = np.dtype(dtype)
+    ha, hr = (_band_hists(t, gg, tile_size, dtype) for t in (a, ref))
     luts: dict[int, np.ndarray] = {}
     for band, ca in ha.items():
         cr = hr.get(band)
@@ -1285,18 +1071,7 @@ def hist_match(a: DataFrame, ref: DataFrame, gg: GridGeometry,
             cumA[:, None] * nR - cumR[None, :] * nA
         )  # (256, 256) int64
         luts[band] = diff.argmin(axis=1).astype(np.uint8)  # first min: smallest u
-
-    def apply(batches):
-        for pdf in batches:
-            datas = []
-            for band, d in zip(pdf["band"], pdf["data"]):
-                lut = luts.get(int(band))
-                block = np.frombuffer(d, dtype=bdt)
-                datas.append((block if lut is None else lut[block]).tobytes())
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band,
-                                "data": datas})
-
-    return a.mapInPandas(apply, schema=TILE_SCHEMA)
+    return _apply_luts(a, luts, dtype)
 
 
 def blockiness(tiles_df: DataFrame, block: int = 8, tile_size: int = 64,
@@ -1307,35 +1082,20 @@ def blockiness(tiles_df: DataFrame, block: int = 8, tile_size: int = 64,
     — a compressed image shows b_sum/b_n elevated against o_sum/o_n (the
     ratio stays rational).  Horizontal only, embarrassingly parallel,
     the compression-quality audit for a scraped-image corpus."""
-    bdt = np.dtype(dtype)
+    bmask = (np.arange(tile_size - 1) % block) == block - 1
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, d in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                v = (
-                    np.frombuffer(d, dtype=bdt)
-                    .reshape(tile_size, tile_size)
-                    .astype(np.int64)
-                )
-                diff = np.abs(v[:, 1:] - v[:, :-1])
-                xs = np.arange(tile_size - 1)
-                bmask = (xs % block) == block - 1
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "b_sum": int(diff[:, bmask].sum()),
-                    "b_n": int(bmask.sum()) * tile_size,
-                    "o_sum": int(diff[:, ~bmask].sum()),
-                    "o_n": int((~bmask).sum()) * tile_size,
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, v):
+        diff = np.abs(np.diff(v.astype(np.int64), axis=1))
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "b_sum": int(diff[:, bmask].sum()),
+                "b_n": int(bmask.sum()) * tile_size,
+                "o_sum": int(diff[:, ~bmask].sum()),
+                "o_n": int((~bmask).sum()) * tile_size}
 
-    return tiles_df.mapInPandas(
-        fn,
-        schema=("tx long, ty long, band int, b_sum long, b_n long, "
-                "o_sum long, o_n long"),
-    )
+    return _map_tiles(
+        tiles_df,
+        "tx long, ty long, band int, b_sum long, b_n long, o_sum long, o_n long",
+        tile_size, dtype, fn)
 
 
 def moments_tiles(tiles_df: DataFrame, tile_size: int = 64,
@@ -1350,39 +1110,25 @@ def moments_tiles(tiles_df: DataFrame, tile_size: int = 64,
     (U/math/Statistics.java:311) applied to weighted coordinates.
     Embarrassingly parallel, no shuffle; padding pixels are zero-valued
     and contribute nothing."""
-    bdt = np.dtype(dtype)
     gx = np.arange(tile_size, dtype=np.int64)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, d in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]
-            ):
-                v = (
-                    np.frombuffer(d, dtype=bdt)
-                    .reshape(tile_size, tile_size)
-                    .astype(np.int64)
-                )
-                X = (int(tx) * tile_size + gx)[None, :]
-                Y = (int(ty) * tile_size + gx)[:, None]
-                rows.append({
-                    "tx": int(tx), "ty": int(ty), "band": int(band),
-                    "m00": int(v.sum()),
-                    "m10": int((X * v).sum()),
-                    "m01": int((Y * v).sum()),
-                    "m11": int((X * Y * v).sum()),
-                    "m20": int((X * X * v).sum()),
-                    "m02": int((Y * Y * v).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, v):
+        v = v.astype(np.int64)
+        X = (r["tx"] * tile_size + gx)[None, :]
+        Y = (r["ty"] * tile_size + gx)[:, None]
+        return {"tx": r["tx"], "ty": r["ty"], "band": r["band"],
+                "m00": int(v.sum()),
+                "m10": int((X * v).sum()),
+                "m01": int((Y * v).sum()),
+                "m11": int((X * Y * v).sum()),
+                "m20": int((X * X * v).sum()),
+                "m02": int((Y * Y * v).sum())}
 
-    return tiles_df.mapInPandas(
-        fn,
-        schema=("tx long, ty long, band int, m00 long, m10 long, "
-                "m01 long, m11 long, m20 long, m02 long"),
-    )
+    return _map_tiles(
+        tiles_df,
+        "tx long, ty long, band int, m00 long, m10 long, "
+        "m01 long, m11 long, m20 long, m02 long",
+        tile_size, dtype, fn)
 
 
 def gamma_lut(gamma: float = 2.2) -> list:
@@ -1404,24 +1150,13 @@ def lut_hist_tiles(tiles_df: DataFrame, lut: list, tile_size: int = 64,
     embarrassingly parallel."""
     lu = np.asarray(lut, dtype=np.int64)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, d in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                block = np.frombuffer(d, dtype=np.dtype(dtype)).astype(
-                    np.int64
-                )
-                out = lu[block]
-                cnt = np.bincount(out, minlength=256)
-                for v in np.nonzero(cnt)[0]:
-                    rows.append({"tx": int(tx), "ty": int(ty),
-                                 "v": int(v), "cnt": int(cnt[v])})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, a):
+        cnt = np.bincount(lu[a.astype(np.int64)], minlength=256)
+        nz = np.nonzero(cnt)[0]
+        return {"tx": r["tx"], "ty": r["ty"], "v": nz, "cnt": cnt[nz]}
 
-    return tiles_df.mapInPandas(
-        fn, schema="tx long, ty long, v long, cnt long"
-    )
+    return _map_tiles(tiles_df, "tx long, ty long, v long, cnt long", None,
+                      dtype, fn)
 
 
 def row_profile(tiles_df: DataFrame, tile_size: int = 64,
@@ -1431,29 +1166,12 @@ def row_profile(tiles_df: DataFrame, tile_size: int = 64,
     deskew primitive (row profiles locate text lines and margins).
     Per-tile partial row sums (map-only), then one tiny keyed sum —
     the Statistics.combine shape along an axis."""
-    bdt = np.dtype(dtype)
+    def fn(r, v):
+        return {"band": r["band"],
+                "y": r["ty"] * tile_size + np.arange(tile_size),
+                "p": v.astype(np.int64).sum(axis=1)}
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, band, d in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]
-            ):
-                v = (
-                    np.frombuffer(d, dtype=bdt)
-                    .reshape(tile_size, tile_size)
-                    .astype(np.int64)
-                )
-                s = v.sum(axis=1)
-                y0 = int(ty) * tile_size
-                rows.extend(
-                    {"band": int(band), "y": y0 + i, "p": int(s[i])}
-                    for i in range(tile_size)
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    part = tiles_df.mapInPandas(fn, schema="band int, y long, p long")
+    part = _map_tiles(tiles_df, "band int, y long, p long", tile_size, dtype, fn)
     return part.groupBy("band", "y").agg(F.sum("p").alias("vsum"))
 
 
@@ -1467,35 +1185,20 @@ def clahe_luts(tiles_df: DataFrame, gg: GridGeometry, clip_limit: int = 64,
     every bin, +1 to bins 0..exc%256-1 — conserves the pixel count
     exactly), then ``lut[v] = cdf[v] * 255 // npix``.  All int64; both
     engines replay it bit-exact.  Output: (tx, ty, lut binary[256])."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
     L = int(clip_limit)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(
-                    tile_size, tile_size)
-                vh = min(tile_size, h - int(ty) * tile_size)
-                vw = min(tile_size, w - int(tx) * tile_size)
-                if vh <= 0 or vw <= 0:
-                    continue
-                cnt = np.bincount(
-                    block[:vh, :vw].ravel(), minlength=256
-                ).astype(np.int64)
-                exc = int(np.maximum(cnt - L, 0).sum())
-                h2 = np.minimum(cnt, L) + exc // 256
-                h2[: exc % 256] += 1
-                cdf = np.cumsum(h2)
-                npix = int(cdf[-1])          # == vh*vw by construction
-                lut = (cdf * 255 // npix).astype(np.uint8)
-                rows.append({"tx": tx, "ty": ty, "lut": lut.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, block):
+        cnt = np.bincount(block.ravel(), minlength=256).astype(np.int64)
+        exc = int(np.maximum(cnt - L, 0).sum())
+        h2 = np.minimum(cnt, L) + exc // 256
+        h2[: exc % 256] += 1
+        cdf = np.cumsum(h2)
+        npix = int(cdf[-1])          # == vh*vw by construction
+        lut = (cdf * 255 // npix).astype(np.uint8)
+        return {"tx": r["tx"], "ty": r["ty"], "lut": lut.tobytes()}
 
-    return tiles_df.filter(F.col("band") == band).mapInPandas(
-        fn, schema="tx long, ty long, lut binary")
+    return _map_tiles(tiles_df.filter(F.col("band") == band),
+                      "tx long, ty long, lut binary", tile_size, dtype, fn, gg)
 
 
 def clahe_tiles(tiles_df: DataFrame, gg: GridGeometry, clip_limit: int = 64,
@@ -1584,42 +1287,28 @@ def haar_energy_tiles(tiles_df: DataFrame, gg: GridGeometry, band: int = 0,
     row carries the exact int64 sums of squares per subband over the
     tile's fully-valid blocks.  Tile-local (2 | tile_size), no halo, no
     FP; magnitudes <= 1024 blocks * 1020^2 < 2^31 per tile."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
-    ts = tile_size
+    def fn(r, blk):
+        nby, nbx = blk.shape[0] // 2, blk.shape[1] // 2  # fully-valid blocks only
+        if nby <= 0 or nbx <= 0:
+            return None
+        blk = blk.astype(np.int64)
+        a = blk[0:2 * nby:2, 0:2 * nbx:2]
+        b = blk[0:2 * nby:2, 1:2 * nbx:2]
+        c = blk[1:2 * nby:2, 0:2 * nbx:2]
+        d = blk[1:2 * nby:2, 1:2 * nbx:2]
+        ll = a + b + c + d
+        hl = a - b + c - d
+        lh = a + b - c - d
+        hh = a - b - c + d
+        return {"tx": r["tx"], "ty": r["ty"],
+                "e_ll": int((ll * ll).sum()),
+                "e_hl": int((hl * hl).sum()),
+                "e_lh": int((lh * lh).sum()),
+                "e_hh": int((hh * hh).sum())}
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                blk = np.frombuffer(data, dtype=bdt).reshape(
-                    ts, ts).astype(np.int64)
-                vh = min(ts, h - int(ty) * ts)
-                vw = min(ts, w - int(tx) * ts)
-                nby, nbx = vh // 2, vw // 2     # fully-valid blocks only
-                if nby <= 0 or nbx <= 0:
-                    continue
-                a = blk[0:2 * nby:2, 0:2 * nbx:2]
-                b = blk[0:2 * nby:2, 1:2 * nbx:2]
-                c = blk[1:2 * nby:2, 0:2 * nbx:2]
-                d = blk[1:2 * nby:2, 1:2 * nbx:2]
-                ll = a + b + c + d
-                hl = a - b + c - d
-                lh = a + b - c - d
-                hh = a - b - c + d
-                rows.append({
-                    "tx": tx, "ty": ty,
-                    "e_ll": int((ll * ll).sum()),
-                    "e_hl": int((hl * hl).sum()),
-                    "e_lh": int((lh * lh).sum()),
-                    "e_hh": int((hh * hh).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles_df.filter(F.col("band") == band).mapInPandas(
-        fn, schema="tx long, ty long, e_ll long, e_hl long, "
-                   "e_lh long, e_hh long")
+    return _map_tiles(tiles_df.filter(F.col("band") == band),
+                      "tx long, ty long, e_ll long, e_hl long, e_lh long, e_hh long",
+                      tile_size, dtype, fn, gg)
 
 
 def laplacian_energy_tiles(tiles_df: DataFrame, gg: GridGeometry,
@@ -1630,35 +1319,19 @@ def laplacian_energy_tiles(tiles_df: DataFrame, gg: GridGeometry,
     ``overview_level``), emitted as exact int64 (sum|L|, sum L^2, n) —
     the blur/detail score an image-curation pipeline filters on.
     Tile-local (2 | tile_size): no halo, no shuffle beyond the scan."""
-    bdt = np.dtype(dtype)
-    w, h = gg.width, gg.height
-    ts = tile_size
+    def fn(r, blk):
+        blk = blk.astype(np.int64)
+        vh, vw = blk.shape
+        up = np.repeat(np.repeat(blk[0::2, 0::2], 2, 0), 2, 1)[:vh, :vw]
+        L = blk - up
+        return {"tx": r["tx"], "ty": r["ty"],
+                "sum_abs": int(np.abs(L).sum()),
+                "sum_sq": int((L * L).sum()),
+                "n": int(L.size)}
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                blk = np.frombuffer(data, dtype=bdt).reshape(
-                    ts, ts).astype(np.int64)
-                vh = min(ts, h - int(ty) * ts)
-                vw = min(ts, w - int(tx) * ts)
-                if vh <= 0 or vw <= 0:
-                    continue
-                blk = blk[:vh, :vw]
-                dec = blk[0::2, 0::2]
-                up = np.repeat(np.repeat(dec, 2, 0), 2, 1)[:vh, :vw]
-                L = blk - up
-                rows.append({
-                    "tx": tx, "ty": ty,
-                    "sum_abs": int(np.abs(L).sum()),
-                    "sum_sq": int((L * L).sum()),
-                    "n": int(L.size),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles_df.filter(F.col("band") == band).mapInPandas(
-        fn, schema="tx long, ty long, sum_abs long, sum_sq long, n long")
+    return _map_tiles(tiles_df.filter(F.col("band") == band),
+                      "tx long, ty long, sum_abs long, sum_sq long, n long",
+                      tile_size, dtype, fn, gg)
 
 
 def brovey_tiles(ms_df: DataFrame, pan_df: DataFrame, gg: GridGeometry,
@@ -1714,26 +1387,13 @@ def areal_interpolate(tiles: DataFrame, values: DataFrame,
     map-side-combined agg = the tiny ncells table); pass 2 joins the
     broadcast ncells+values back to the same per-tile counts and sums —
     the label raster is scanned twice, nothing else shuffles."""
-    import numpy as np
-    import pandas as pd
+    def counts(r, lab):
+        ks, cs = np.unique(lab[lab > 0], return_counts=True)
+        return {"tx": r["tx"], "ty": r["ty"], "key": ks, "cnt": cs}
 
-    ts = int(tile_size)
-
-    def counts(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                lab = np.frombuffer(data, np.int32)
-                ks, cs = np.unique(lab[lab > 0], return_counts=True)
-                for k, c in zip(ks, cs):
-                    rows.append({"tx": int(tx), "ty": int(ty),
-                                 "key": int(k), "cnt": int(c)})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    tc = tiles.filter(F.col("band") == 0).mapInPandas(
-        counts, "tx long, ty long, key long, cnt long"
-    ).persist()
+    tc = _map_tiles(tiles.filter(F.col("band") == 0),
+                    "tx long, ty long, key long, cnt long", None, np.int32,
+                    counts).persist()
     ncells = tc.groupBy("key").agg(F.sum("cnt").alias("ncells"))
     per_cell = ncells.join(values, "key").selectExpr(
         "key", f"(value * {int(scale)}) DIV ncells AS share_per_cell"
@@ -1756,38 +1416,23 @@ def zonal_mode(zone_tiles: DataFrame, val_tiles: DataFrame,
     Shape: one (tx, ty) tile zip join -> per-tile (zone, v) bincount
     rows (mapInPandas) -> one map-side-combined count + one window
     argmax over the (zones x values) table — never per-pixel shuffles."""
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import Window
 
-    ts = int(tile_size)
     z = zone_tiles.filter(F.col("band") == 0).select(
         "tx", "ty", F.col("data").alias("zdata")
     )
     v = val_tiles.filter(F.col("band") == 0).select(
         "tx", "ty", F.col("data").alias("vdata")
     )
-    j = z.join(v, ["tx", "ty"])
 
-    def pairs(batches):
-        for pdf in batches:
-            rows = []
-            for zd, vd in zip(pdf["zdata"], pdf["vdata"]):
-                zl = np.frombuffer(zd, np.int32).astype(np.int64)
-                vl = np.frombuffer(vd, np.uint8).astype(np.int64)
-                m = zl > 0
-                if not m.any():
-                    continue
-                key = zl[m] * 256 + vl[m]
-                ks, cs = np.unique(key, return_counts=True)
-                for k, c in zip(ks, cs):
-                    rows.append({"zone": int(k) // 256, "v": int(k) % 256,
-                                 "cnt": int(c)})
-            if rows:
-                yield pd.DataFrame(rows)
+    def pairs(r, zl, vl):
+        m = zl > 0
+        key = zl[m].astype(np.int64) * 256 + vl[m]
+        ks, cs = np.unique(key, return_counts=True)
+        return {"zone": ks // 256, "v": ks % 256, "cnt": cs}
 
-    pv = j.mapInPandas(pairs, "zone long, v long, cnt long")
+    pv = _map_tiles(z.join(v, ["tx", "ty"]), "zone long, v long, cnt long",
+                    None, {"zdata": np.int32, "vdata": np.uint8}, pairs)
     agg = pv.groupBy("zone", "v").agg(F.sum("cnt").alias("cnt"))
     w = Window.partitionBy("zone").orderBy(F.col("cnt").desc(), "v")
     return (
@@ -1804,73 +1449,53 @@ def zone_adjacency(zone_tiles: DataFrame, tile_size: int = 64) -> DataFrame:
     (min zone, max zone) pair; background (0) participates so exterior
     borders are measurable.  Returns (za, zb, border_len).
 
-    Shape: intra-tile transitions are one mapInPandas bincount per tile;
-    the tile SEAMS come from two self-joins keyed on the neighbor tile id
-    (tx+1, ty) / (tx, ty+1) — each seam ships only its edge columns, so
-    the shuffle is O(perimeter), not O(area)."""
-    import numpy as np
-    import pandas as pd
+    Shape: intra-tile transitions are one mapInPandas count per tile;
+    the tile seams come from ``_seams`` — only edge columns and rows
+    ship, so the shuffle is O(perimeter), not O(area)."""
+    def label_pairs(a, b):
+        a, b = a.astype(np.int64), b.astype(np.int64)
+        m = a != b
+        key = np.minimum(a[m], b[m]) * (1 << 32) + np.maximum(a[m], b[m])
+        ks, cs = np.unique(key, return_counts=True)
+        return {"za": ks >> 32, "zb": ks & 0xFFFFFFFF, "border_len": cs}
 
-    ts = int(tile_size)
     z = zone_tiles.filter(F.col("band") == 0).select("tx", "ty", "data")
+    schema = "za long, zb long, border_len long"
+    intra = _map_tiles(z, schema, tile_size, np.int32,
+                       lambda r, lab: label_pairs(*_inner_pairs(lab)))
+    seams = _map_tiles(_seams(z, tile_size, np.int32), schema, None,
+                       {"a": np.int32, "b": np.int32},
+                       lambda r, a, b: label_pairs(a, b))
+    return intra.union(seams).groupBy("za", "zb").agg(
+        F.sum("border_len").alias("border_len"))
 
-    def intra(batches):
-        for pdf in batches:
-            rows = []
-            for data in pdf["data"]:
-                lab = np.frombuffer(data, np.int32).reshape(ts, ts).astype(np.int64)
-                for a, b in ((lab[:, :-1], lab[:, 1:]), (lab[:-1, :], lab[1:, :])):
-                    m = a != b
-                    if not m.any():
-                        continue
-                    lo = np.minimum(a[m], b[m])
-                    hi = np.maximum(a[m], b[m])
-                    key = lo * (1 << 32) + hi
-                    ks, cs = np.unique(key, return_counts=True)
-                    for kk, cc in zip(ks, cs):
-                        rows.append({"za": int(kk) >> 32,
-                                     "zb": int(kk) & 0xFFFFFFFF,
-                                     "border_len": int(cc)})
-            if rows:
-                yield pd.DataFrame(rows)
 
-    parts = [z.mapInPandas(intra, "za long, zb long, border_len long")]
+def _inner_pairs(v: np.ndarray):
+    """The 4-neighbour pixel pairs inside one tile -> (a, b) flat arrays:
+    every horizontal pair, then every vertical one."""
+    return (np.concatenate([v[:, :-1].ravel(), v[:-1, :].ravel()]),
+            np.concatenate([v[:, 1:].ravel(), v[1:, :].ravel()]))
 
-    def seam(df_a, df_b, axis):
-        def fn(batches):
-            for pdf in batches:
-                rows = []
-                for da, db in zip(pdf["da"], pdf["db"]):
-                    la = np.frombuffer(da, np.int32).reshape(ts, ts).astype(np.int64)
-                    lb = np.frombuffer(db, np.int32).reshape(ts, ts).astype(np.int64)
-                    a = la[:, -1] if axis == "x" else la[-1, :]
-                    b = lb[:, 0] if axis == "x" else lb[0, :]
-                    m = a != b
-                    if not m.any():
-                        continue
-                    lo = np.minimum(a[m], b[m])
-                    hi = np.maximum(a[m], b[m])
-                    key = lo * (1 << 32) + hi
-                    ks, cs = np.unique(key, return_counts=True)
-                    for kk, cc in zip(ks, cs):
-                        rows.append({"za": int(kk) >> 32,
-                                     "zb": int(kk) & 0xFFFFFFFF,
-                                     "border_len": int(cc)})
-                if rows:
-                    yield pd.DataFrame(rows)
 
-        return df_a.join(df_b, ["tx", "ty"]).mapInPandas(
-            fn, "za long, zb long, border_len long"
-        )
+def _seams(tiles: DataFrame, tile_size: int, dtype) -> DataFrame:
+    """The neighbour-seam join: every tile against the tiles at
+    (tx+1, ty) and (tx, ty+1) -> (kx, ky, axis, a, b), a = the tile's last
+    column (axis 0) or last row (axis 1), b = the neighbour's first column
+    or first row, as ``dtype`` byte strips.  Only those edges leave the
+    tile, so the shuffle is O(perimeter); a tile with no such neighbour
+    has no seam row."""
+    def edges(r, v):
+        tx, ty = r["tx"], r["ty"]
+        return {"kx": [tx, tx - 1, tx, tx], "ky": [ty, ty, ty, ty - 1],
+                "axis": [0, 0, 1, 1], "side": [0, 1, 0, 1],
+                "strip": [v[:, -1].tobytes(), v[:, 0].tobytes(),
+                          v[-1].tobytes(), v[0].tobytes()]}
 
-    right = z.selectExpr("tx - 1 AS tx", "ty", "data AS db")
-    parts.append(seam(z.selectExpr("tx", "ty", "data AS da"), right, "x"))
-    down = z.selectExpr("tx", "ty - 1 AS ty", "data AS db")
-    parts.append(seam(z.selectExpr("tx", "ty", "data AS da"), down, "y"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out.groupBy("za", "zb").agg(F.sum("border_len").alias("border_len"))
+    e = _map_tiles(tiles, "kx long, ky long, axis int, side int, strip binary",
+                   tile_size, dtype, edges)
+    side = [F.max(F.when(F.col("side") == i, F.col("strip"))).alias(c)
+            for i, c in enumerate("ab")]
+    return e.groupBy("kx", "ky", "axis").agg(*side).dropna()
 
 
 def join_counts_tiles(
@@ -1881,67 +1506,28 @@ def join_counts_tiles(
     (n1, n0, bb, ww, bw, m): the categorical spatial-autocorrelation
     test — clustered black pixels push bb above its random expectation
     m * n1(n1-1)/(n(n-1)).  Same shape as zone_adjacency: intra-tile
-    pair counts are one vectorized mapInPandas pass, tile seams ship
-    only their edge columns (O(perimeter) shuffle), one final tiny agg.
+    pair counts are one vectorized mapInPandas pass, tile seams
+    (``_seams``) ship only their edge columns and rows (O(perimeter)
+    shuffle), one final tiny agg.
     Tiles must cover the extent exactly (no partial tiles)."""
-    import numpy as np
-    import pandas as pd
-
-    ts = int(tile_size)
     th = int(thresh)
     t = tiles.filter(F.col("band") == 0).select("tx", "ty", "data")
     schema = "n1 long, n0 long, bb long, ww long, bw long"
 
     def counts(a, b):
+        a, b = (a >= th).astype(np.int64), (b >= th).astype(np.int64)
         bb = int((a & b).sum())
         ww = int(((1 - a) & (1 - b)).sum())
-        return bb, ww, int(a.size - bb - ww)
+        return {"bb": bb, "ww": ww, "bw": int(a.size - bb - ww)}
 
-    def intra(batches):
-        for pdf in batches:
-            n1 = n0 = bb = ww = bw = 0
-            for data in pdf["data"]:
-                v = np.frombuffer(data, np.uint8).reshape(ts, ts)
-                b = (v >= th).astype(np.int64)
-                n1 += int(b.sum())
-                n0 += int(b.size - b.sum())
-                for x, y in ((b[:, :-1], b[:, 1:]), (b[:-1, :], b[1:, :])):
-                    d_bb, d_ww, d_bw = counts(x, y)
-                    bb, ww, bw = bb + d_bb, ww + d_ww, bw + d_bw
-            yield pd.DataFrame(
-                [{"n1": n1, "n0": n0, "bb": bb, "ww": ww, "bw": bw}]
-            )
+    def intra(r, v):
+        n1 = int((v >= th).sum())
+        return {"n1": n1, "n0": v.size - n1, **counts(*_inner_pairs(v))}
 
-    parts = [t.mapInPandas(intra, schema)]
-
-    def seam(axis):
-        def fn(batches):
-            for pdf in batches:
-                bb = ww = bw = 0
-                for da, db in zip(pdf["da"], pdf["db"]):
-                    va = np.frombuffer(da, np.uint8).reshape(ts, ts)
-                    vb = np.frombuffer(db, np.uint8).reshape(ts, ts)
-                    a = (va[:, -1] if axis == "x" else va[-1, :]) >= th
-                    b = (vb[:, 0] if axis == "x" else vb[0, :]) >= th
-                    d_bb, d_ww, d_bw = counts(
-                        a.astype(np.int64), b.astype(np.int64)
-                    )
-                    bb, ww, bw = bb + d_bb, ww + d_ww, bw + d_bw
-                yield pd.DataFrame(
-                    [{"n1": 0, "n0": 0, "bb": bb, "ww": ww, "bw": bw}]
-                )
-
-        if axis == "x":
-            nbr = t.selectExpr("tx - 1 AS tx", "ty", "data AS db")
-        else:
-            nbr = t.selectExpr("tx", "ty - 1 AS ty", "data AS db")
-        return (
-            t.selectExpr("tx", "ty", "data AS da")
-            .join(nbr, ["tx", "ty"])
-            .mapInPandas(fn, schema)
-        )
-
-    out = parts[0].union(seam("x")).union(seam("y"))
+    seams = _map_tiles(_seams(t, tile_size, np.uint8), schema, None,
+                       {"a": np.uint8, "b": np.uint8},
+                       lambda r, a, b: {"n1": 0, "n0": 0, **counts(a, b)})
+    out = _map_tiles(t, schema, tile_size, np.uint8, intra).union(seams)
     agg = out.agg(
         F.sum("n1").alias("n1"), F.sum("n0").alias("n0"),
         F.sum("bb").alias("bb"), F.sum("ww").alias("ww"),

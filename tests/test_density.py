@@ -55,8 +55,8 @@ def test_adjacent_cells_merge_diagonally(spark):
 def test_within_distance_join_matches_brute(spark):
     # radius 10 over coordinates on and beside the cell borders (multiples
     # of 10), negative ones, exact-radius pairs (6, 8) ~ (0, 0), coincident
-    # points on both sides, and an equality key
-    r = 10
+    # points on both sides, and an equality key; radius 0 keeps exactly
+    # the coincident pairs
     coords = [-30, -21, -20, -11, -10, -9, -1, 0, 1, 6, 8, 9, 10, 11, 20, 29]
     rng = np.random.default_rng(8)
 
@@ -70,7 +70,7 @@ def test_within_distance_join_matches_brute(spark):
     a = spark.createDataFrame(a_rows, "k long, a_id long, x long, y long")
     b = spark.createDataFrame(b_rows, "k long, b_id long, x long, y long")
 
-    def brute(keyed):
+    def brute(r, keyed):
         return sorted(
             (p[1], q[1], (p[2] - q[2]) ** 2 + (p[3] - q[3]) ** 2)
             for p in a_rows for q in b_rows
@@ -78,21 +78,22 @@ def test_within_distance_join_matches_brute(spark):
             and (not keyed or p[0] == q[0])
         )
 
-    for keyed in (True, False):
-        if keyed:
-            out = within_distance_join(a, b, r, keys=("k",))
-            cols = ["a_id", "b_id", "d2", "k"]
-        else:
-            out = within_distance_join(a.drop("k"), b.drop("k"), r)
-            cols = ["a_id", "b_id", "d2"]
-        assert sorted(out.columns) == cols
-        got = sorted((t["a_id"], t["b_id"], t["d2"]) for t in out.collect())
-        want = brute(keyed)
-        assert got == want
-        d2s = {t[2] for t in want}
-        assert 0 in d2s and r * r in d2s  # coincident and exactly-r pairs
+    for r in (10, 0):
+        for keyed in (True, False):
+            if keyed:
+                out = within_distance_join(a, b, r, keys=("k",))
+                cols = ["a_id", "b_id", "d2", "k"]
+            else:
+                out = within_distance_join(a.drop("k"), b.drop("k"), r)
+                cols = ["a_id", "b_id", "d2"]
+            assert sorted(out.columns) == cols
+            got = sorted((t["a_id"], t["b_id"], t["d2"]) for t in out.collect())
+            want = brute(r, keyed)
+            assert got == want
+            d2s = {t[2] for t in want}
+            assert 0 in d2s and r * r in d2s  # coincident and exactly-r pairs
     for x, y in ((a, b.limit(0)), (a.limit(0), b)):
-        assert within_distance_join(x, y, r, keys=("k",)).count() == 0
+        assert within_distance_join(x, y, 10, keys=("k",)).count() == 0
 
 
 def test_weighted_topk_monotone_and_stable(spark):
@@ -453,10 +454,12 @@ def test_knox_counts_brute(spark):
 
 def test_dbscan_differential(spark):
     """Engine DBSCAN == a brute-force reference implementation on random
-    points, including the deterministic min-label border rule."""
+    points, including the deterministic min-label border rule; neither
+    ``dbscan`` nor ``all_nearest_neighbors`` leaves a cached frame behind
+    in the session."""
     import numpy as np
 
-    from sis_spark.operators.density import dbscan
+    from sis_spark.operators.density import all_nearest_neighbors, dbscan
 
     rng = np.random.default_rng(11)
     n, eps, min_pts = 200, 40, 4
@@ -466,9 +469,13 @@ def test_dbscan_differential(spark):
         [(i, int(x[i]), int(y[i])) for i in range(n)],
         "id long, qx long, qy long",
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     got = {r["id"]: (r["role"], r["cluster"]) for r in
            dbscan(df, eps=eps, min_pts=min_pts).collect()}
     assert len(got) == n
+    assert all_nearest_neighbors(df, cell=eps).count() == n
+    assert cache.numCachedEntries() == cached
 
     # brute reference
     d2 = (x[:, None] - x[None, :]) ** 2 + (y[:, None] - y[None, :]) ** 2

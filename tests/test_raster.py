@@ -152,17 +152,25 @@ def test_tiles_roundtrip(spark, scene):
 
 
 def test_band_stats_match_numpy(spark, scene):
-    from sis_spark.raster.tiles import band_stats
+    from sis_spark.raster.tiles import band_stats, value_histogram
 
     arr, gg, tiles = scene
-    got = {r["band"]: r for r in band_stats(tiles, gg, 64).collect()}
-    for b in range(3):
-        v = arr[:, :, b]
-        assert got[b]["n"] == v.size
-        assert got[b]["min"] == int(v.min())
-        assert got[b]["max"] == int(v.max())
-        assert got[b]["sum"] == int(v.sum(dtype=np.int64))
-        assert abs(got[b]["mean"] - v.mean()) < 1e-9
+    # the same tiles read against a 100-pixel-wide extent: tile tx = 1 is
+    # cut to 36 columns and tiles tx = 2, 3 lie beyond it, so they count
+    # nothing
+    narrow = GridGeometry((0, 0, 99, gg.extent[3]), gg.affine)
+    for g, a in ((gg, arr), (narrow, arr[:, :100])):
+        got = {r["band"]: r for r in band_stats(tiles, g, 64).collect()}
+        hist = {}
+        for r in value_histogram(tiles, g, 64).collect():
+            hist[r["band"]] = hist.get(r["band"], 0) + r["cnt"]
+        for b in range(3):
+            v = a[:, :, b]
+            assert got[b]["n"] == v.size == hist[b]
+            assert got[b]["min"] == int(v.min())
+            assert got[b]["max"] == int(v.max())
+            assert got[b]["sum"] == int(v.sum(dtype=np.int64))
+            assert abs(got[b]["mean"] - v.mean()) < 1e-9
 
 
 def test_random_window_reads_consistent(spark, scene):

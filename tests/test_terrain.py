@@ -712,13 +712,15 @@ def test_zhang_suen_matches_dense_and_thins(spark):
 
 def test_halo_operators_tile_size_invariant(spark):
     """Every halo offset and margin pinned at once: on a 37 x 29 raster
-    (a multiple of neither tile size) each halo operator gives the same
-    answer at tile sizes 8 and 16 — per-pixel planes reassembled and
+    (a multiple of neither tile size) each halo operator, and each
+    per-tile operator of raster/tiles.py on its edge windows, gives the
+    same answer at tile sizes 8 and 16 — per-pixel planes reassembled and
     cropped to the extent, per-tile aggregates as totals, sparse
     (x, y, ...) rows as sets."""
     from pyspark.sql import functions as F
 
     from sis_spark.raster import terrain as T
+    from sis_spark.raster import tiles as R
     from sis_spark.raster.isolines import isolines
 
     rng = np.random.RandomState(37)
@@ -726,12 +728,14 @@ def test_halo_operators_tile_size_invariant(spark):
     arr[[3, 20, 27], [5, 30, 11]] = 0            # chamfer / Voronoi seeds
     k5 = (np.arange(25) % 7 - 3).reshape(5, 5)
     tpl = arr[10:13, 20:23]
+    pvx, pvy = np.array([3.0, 30.0, 25.0, 5.0]), np.array([4.0, 10.0, 26.0, 20.0])
+    half = ((arr.shape[0] + 1) // 2, (arr.shape[1] + 1) // 2)
 
     def run(ts):
         tiles, gg = _tiles_from(spark, arr, ts)
 
-        def plane(df, col="data", dt=np.int64):
-            return _assemble(df.collect(), arr.shape, col, dt, ts)
+        def plane(df, col="data", dt=np.int64, shape=arr.shape):
+            return _assemble(df.collect(), shape, col, dt, ts)
 
         def rows(df):
             return {tuple(r) for r in df.collect()}
@@ -758,6 +762,23 @@ def test_halo_operators_tile_size_invariant(spark):
                                                     tile_size=ts)),
             "isolines": {tuple(np.round(r, 9)) for r in isolines(
                 tiles, gg, [64.5, 191.5], tile_size=ts).collect()},
+            # the per-tile operators of raster/tiles.py
+            "band_stats": rows(R.band_stats(tiles, gg, ts)),
+            "value_histogram": rows(R.value_histogram(tiles, gg, ts)),
+            "convert": plane(R.convert(tiles, 0.5, -3.0, ts), dt=np.float64),
+            "stretch": plane(R.stretch(tiles, gg, ts, low_pct=5.0,
+                                       high_pct=95.0), dt=np.uint8),
+            "hist_eq": plane(R.hist_eq(tiles, gg, ts), dt=np.uint8),
+            "mask_polygon": plane(R.mask_polygon(tiles, gg, pvx, pvy, fill=9,
+                                                 tile_size=ts), dt=np.uint8),
+            "overview": plane(R.overview_level(tiles, gg, ts)[0], dt=np.uint8,
+                              shape=half),
+            "downsample_mean": plane(R.downsample_mean(tiles, gg, ts)[0],
+                                     dt=np.uint8, shape=half),
+            "row_profile": rows(R.row_profile(tiles, ts)),
+            "moments": tuple(R.moments_tiles(tiles, ts).agg(
+                *[F.sum(c) for c in ("m00", "m10", "m01", "m11", "m20",
+                                     "m02")]).first()),
         }
         for mode in ("max", "min", "median"):
             out[mode] = plane(T.rank_filter_tiles(tiles, gg, mode,
