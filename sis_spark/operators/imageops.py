@@ -9,16 +9,47 @@ the reference's RasterLoadingStrategy, S/RasterLoadingStrategy.java:50-77).
 All kernels reuse raster/codec.py (pure numpy PNG/raw + the clearly-marked
 JPEG stand-in).  Throughput note: decode cost dominates; these operators
 column-prune everything except (bytes, fmt) into the Python worker.
+
+**The per-image contract**, written once in ``_map_images`` (the per-row
+loop ``raster.grid._map_rows`` with the image decoder):
+
+* **Decode** — each row's payload decodes with ``codec.decode(bytes,
+  fmt)`` to an (h, w, c) uint8 array (two per row for ``mse_pairs``).
+* **Channel rule** — operators that read RGB statistics see a gray
+  (h, w, 1) image widened to 3 equal channels, so a gray image and its
+  RGB copy give the same row; the re-encoding operators (``thumbnails``,
+  ``augment_*``, ``patchify_*``, ``resize_to_bucket``) keep the decoded
+  channels.
+* **Row expansion** — the numpy body returns one output row as a column
+  dict; a list or array value makes one row per element (scalars repeat).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..raster import codec
+from ..raster.grid import _map_rows
+
+
+def _map_images(df: DataFrame, schema: str, body, cols=("image_id",),
+                fmts=None, rgb: bool = True) -> DataFrame:
+    """The per-image core: ``body(row, *images)`` over ``df`` pruned to
+    ``cols`` and the payloads; ``fmts`` maps each payload column to its
+    format column (default bytes -> fmt).  With ``rgb`` a gray image is
+    widened to 3 channels."""
+    fmts = fmts or {"bytes": "fmt"}
+
+    def decode(row, *bufs):
+        arrs = [codec.decode(bytes(b), row[f]) for b, f in zip(bufs, fmts.values())]
+        return [np.repeat(a, 3, axis=2) if rgb and a.shape[2] == 1 else a
+                for a in arrs]
+
+    return _map_rows(df.select(*cols, *fmts, *fmts.values()), schema, fmts,
+                     decode, body)
+
 
 FEATURE_SCHEMA = (
     "image_id string, mean_r double, mean_g double, mean_b double, "
@@ -31,28 +62,21 @@ def image_features(images: DataFrame) -> DataFrame:
     gradient edge-energy score (mean |dx| + |dy|) — the quality-scoring
     analog for image rows."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.float64)
-                if arr.shape[2] == 1:
-                    arr = np.repeat(arr, 3, axis=2)
-                g = arr.mean(axis=2)
-                rows.append({
-                    "image_id": iid,
-                    "mean_r": float(arr[:, :, 0].mean()),
-                    "mean_g": float(arr[:, :, 1].mean()),
-                    "mean_b": float(arr[:, :, 2].mean()),
-                    "std": float(arr.std()),
-                    "edge_energy": float(
-                        np.abs(np.diff(g, axis=0)).mean() + np.abs(np.diff(g, axis=1)).mean()
-                    ),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        arr = arr.astype(np.float64)
+        g = arr.mean(axis=2)
+        return {
+            "image_id": r["image_id"],
+            "mean_r": float(arr[:, :, 0].mean()),
+            "mean_g": float(arr[:, :, 1].mean()),
+            "mean_b": float(arr[:, :, 2].mean()),
+            "std": float(arr.std()),
+            "edge_energy": float(
+                np.abs(np.diff(g, axis=0)).mean() + np.abs(np.diff(g, axis=1)).mean()
+            ),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(fn, schema=FEATURE_SCHEMA)
+    return _map_images(images, FEATURE_SCHEMA, fn)
 
 
 QUALITY_INT_SCHEMA = (
@@ -87,34 +111,26 @@ def image_quality(images: DataFrame) -> DataFrame:
     exact int64 and the derived doubles are shared-expression SQL over
     them.  Images smaller than 3x3 report NULL sharpness."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                luma = arr.sum(axis=2)
-                lap = (
-                    4 * luma[1:-1, 1:-1]
-                    - luma[1:-1, :-2]
-                    - luma[1:-1, 2:]
-                    - luma[:-2, 1:-1]
-                    - luma[2:, 1:-1]
-                )
-                rows.append({
-                    "image_id": iid,
-                    "n_px": int(luma.size),
-                    "sum_l": int(luma.sum()),
-                    "sumsq_l": int((luma * luma).sum()),
-                    "n_lap": int(lap.size),
-                    "sum_lap": int(lap.sum()),
-                    "sumsq_lap": int((lap * lap).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        luma = arr.astype(np.int64).sum(axis=2)
+        lap = (
+            4 * luma[1:-1, 1:-1]
+            - luma[1:-1, :-2]
+            - luma[1:-1, 2:]
+            - luma[:-2, 1:-1]
+            - luma[2:, 1:-1]
+        )
+        return {
+            "image_id": r["image_id"],
+            "n_px": int(luma.size),
+            "sum_l": int(luma.sum()),
+            "sumsq_l": int((luma * luma).sum()),
+            "n_lap": int(lap.size),
+            "sum_lap": int(lap.sum()),
+            "sumsq_lap": int((lap * lap).sum()),
+        }
 
-    ints = images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema=QUALITY_INT_SCHEMA
-    )
+    ints = _map_images(images, QUALITY_INT_SCHEMA, fn)
     d = _quality_double_exprs()
     return ints.select(
         "image_id", "n_px", "sum_l", "sumsq_l", "n_lap", "sum_lap", "sumsq_lap",
@@ -158,28 +174,12 @@ def caption_alignment(images: DataFrame, threshold: float = 0.0) -> DataFrame:
 
     Output: (image_id, c0..c2, sum_r..sum_b, alignment, keep)."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, cap, buf, fmt_ in zip(
-                pdf["image_id"], pdf["caption"], pdf["bytes"], pdf["fmt"]
-            ):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                if arr.shape[2] == 1:
-                    arr = np.repeat(arr, 3, axis=2)
-                rows.append({
-                    "image_id": iid,
-                    "caption": cap,
-                    "sum_r": int(arr[:, :, 0].sum()),
-                    "sum_g": int(arr[:, :, 1].sum()),
-                    "sum_b": int(arr[:, :, 2].sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        s = arr.astype(np.int64).sum(axis=(0, 1))
+        return {"image_id": r["image_id"], "caption": r["caption"],
+                "sum_r": int(s[0]), "sum_g": int(s[1]), "sum_b": int(s[2])}
 
-    ints = images.select("image_id", "caption", "bytes", "fmt").mapInPandas(
-        fn, schema=ALIGN_INT_SCHEMA
-    )
+    ints = _map_images(images, ALIGN_INT_SCHEMA, fn, cols=("image_id", "caption"))
     c = lambda j: (
         "aggregate(split(caption, ' '), 0L, (acc, t) -> acc + "
         f"CASE WHEN {_bucket_case('t', 'spark')} = {j} THEN 1 ELSE 0 END)"
@@ -218,23 +218,14 @@ def thumbnails(images: DataFrame, size: int = 8, fmt: str = "png") -> DataFrame:
     thumbnail/preprocess shape (decode -> numpy kernel -> encode inside one
     Arrow batch; nothing but bytes crosses the JVM boundary)."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.float64)
-                thumb = block_mean_resize(arr, size, size)
-                rows.append({
-                    "image_id": iid,
-                    "thumb": codec.encode(thumb, fmt),
-                    "tw": size, "th": size, "tfmt": fmt,
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        thumb = block_mean_resize(arr.astype(np.float64), size, size)
+        return {"image_id": r["image_id"], "thumb": codec.encode(thumb, fmt),
+                "tw": size, "th": size, "tfmt": fmt}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, thumb binary, tw int, th int, tfmt string"
-    )
+    return _map_images(
+        images, "image_id string, thumb binary, tw int, th int, tfmt string",
+        fn, rgb=False)
 
 
 AUG_OPS = ("hflip", "vflip", "rot90", "crop")
@@ -268,24 +259,17 @@ def augment_images(
     offline-augmentation shape of an image training pipeline (decode ->
     numpy kernel -> encode inside one Arrow batch)."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)
-                for op in ops:
-                    out = augment_array(arr, op)
-                    f = out_fmt or fmt_
-                    rows.append({
-                        "image_id": iid, "op": op, "bytes": codec.encode(out, f),
-                        "w": out.shape[1], "h": out.shape[0], "fmt": f,
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        outs = [augment_array(arr, op) for op in ops]
+        f = out_fmt or r["fmt"]
+        return {"image_id": r["image_id"], "op": list(ops),
+                "bytes": [codec.encode(o, f) for o in outs],
+                "w": [o.shape[1] for o in outs], "h": [o.shape[0] for o in outs],
+                "fmt": f}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, op string, bytes binary, w int, h int, fmt string"
-    )
+    return _map_images(
+        images, "image_id string, op string, bytes binary, w int, h int, fmt string",
+        fn, rgb=False)
 
 
 CHECKSUM_MOD = 9973  # prime weight cycle; max sum 64*64*3 * 9973 * 255 < 2^63
@@ -310,22 +294,11 @@ def augment_checksums(
     (image_id, op, checksum) row per augmentation — the verification path
     for the augmentation kernels (gate `augment`)."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)
-                for op in ops:
-                    rows.append({
-                        "image_id": iid, "op": op,
-                        "checksum": pixel_checksum(augment_array(arr, op)),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, op string, checksum long"
-    )
+    return _map_images(
+        images, "image_id string, op string, checksum long",
+        lambda r, arr: {"image_id": r["image_id"], "op": list(ops), "checksum": [
+            pixel_checksum(augment_array(arr, op)) for op in ops]},
+        rgb=False)
 
 
 def patchify_array(arr: np.ndarray, patch: int):
@@ -347,25 +320,18 @@ def patchify_images(images: DataFrame, patch: int = 16,
     Output (image_id, py, px, bytes, w, h, fmt); edge patches keep their
     truncated size."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)
-                f = out_fmt or fmt_
-                for py, px, tile in patchify_array(arr, patch):
-                    rows.append({
-                        "image_id": iid, "py": py, "px": px,
-                        "bytes": codec.encode(np.ascontiguousarray(tile), f),
-                        "w": tile.shape[1], "h": tile.shape[0], "fmt": f,
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        f = out_fmt or r["fmt"]
+        ps = list(patchify_array(arr, patch))
+        return {"image_id": r["image_id"], "py": [p[0] for p in ps],
+                "px": [p[1] for p in ps],
+                "bytes": [codec.encode(np.ascontiguousarray(t), f) for *_, t in ps],
+                "w": [t.shape[1] for *_, t in ps],
+                "h": [t.shape[0] for *_, t in ps], "fmt": f}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, py int, px int, bytes binary, "
-                   "w int, h int, fmt string"
-    )
+    return _map_images(
+        images, "image_id string, py int, px int, bytes binary, "
+                "w int, h int, fmt string", fn, rgb=False)
 
 
 def patchify_checksums(images: DataFrame, patch: int = 16) -> DataFrame:
@@ -374,22 +340,14 @@ def patchify_checksums(images: DataFrame, patch: int = 16) -> DataFrame:
     OWN flattened positions — the verification path for the slicing
     arithmetic (gate `patchify`)."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)
-                for py, px, tile in patchify_array(arr, patch):
-                    rows.append({
-                        "image_id": iid, "py": py, "px": px,
-                        "checksum": pixel_checksum(np.ascontiguousarray(tile)),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        ps = list(patchify_array(arr, patch))
+        return {"image_id": r["image_id"], "py": [p[0] for p in ps],
+                "px": [p[1] for p in ps], "checksum": [
+                    pixel_checksum(np.ascontiguousarray(t)) for *_, t in ps]}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, py int, px int, checksum long"
-    )
+    return _map_images(
+        images, "image_id string, py int, px int, checksum long", fn, rgb=False)
 
 
 def phash_near_dups(images: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -512,28 +470,16 @@ def resize_to_bucket(images: DataFrame, targets=BUCKET_TARGETS,
     ).select("image_id", "bucket")
     src = images.select("image_id", "bytes", "fmt").join(assign, "image_id")
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_, bk in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["bucket"]
-            ):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.float64)
-                tw, th = targets[int(bk)]
-                out = block_mean_resize(arr, th, tw)
-                f = out_fmt or fmt_
-                rows.append({
-                    "image_id": iid, "bucket": int(bk),
-                    "bytes": codec.encode(out, f),
-                    "w": tw, "h": th, "fmt": f,
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        tw, th = targets[r["bucket"]]
+        f = out_fmt or r["fmt"]
+        out = block_mean_resize(arr.astype(np.float64), th, tw)
+        return {"image_id": r["image_id"], "bucket": r["bucket"],
+                "bytes": codec.encode(out, f), "w": tw, "h": th, "fmt": f}
 
-    return src.mapInPandas(
-        fn, schema="image_id string, bucket int, bytes binary, "
-                   "w int, h int, fmt string"
-    )
+    return _map_images(
+        src, "image_id string, bucket int, bytes binary, w int, h int, fmt string",
+        fn, cols=("image_id", "bucket"), rgb=False)
 
 
 def aspect_batches_sql(batch_size: int, rel: str, id_col: str = "image_id") -> str:
@@ -576,32 +522,22 @@ def dhash(images: DataFrame) -> DataFrame:
     (no shuffle); block sums of r+g+b stay exact int64."""
     R, C = DHASH_ROWS, DHASH_COLS
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                if arr.shape[2] == 1:
-                    arr = np.repeat(arr, 3, axis=2)
-                luma = arr.sum(axis=2)
-                h, w = luma.shape
-                by = (np.arange(h) * R) // h
-                bx = (np.arange(w) * C) // w
-                idx = by[:, None] * C + bx[None, :]
-                s = np.bincount(
-                    idx.ravel(), weights=luma.ravel().astype(np.float64),
-                    minlength=R * C,
-                ).astype(np.int64).reshape(R, C)
-                bits = s[:, 1:] > s[:, :-1]          # (R, C-1)
-                weights = 1 << (62 - np.arange(R * (C - 1), dtype=np.int64))
-                rows.append({
-                    "image_id": iid,
-                    "dhash": int((bits.ravel() * weights).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        luma = arr.astype(np.int64).sum(axis=2)
+        h, w = luma.shape
+        by = (np.arange(h) * R) // h
+        bx = (np.arange(w) * C) // w
+        idx = by[:, None] * C + bx[None, :]
+        s = np.bincount(
+            idx.ravel(), weights=luma.ravel().astype(np.float64),
+            minlength=R * C,
+        ).astype(np.int64).reshape(R, C)
+        bits = s[:, 1:] > s[:, :-1]          # (R, C-1)
+        weights = 1 << (62 - np.arange(R * (C - 1), dtype=np.int64))
+        return {"image_id": r["image_id"],
+                "dhash": int((bits.ravel() * weights).sum())}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(fn, schema=DHASH_SCHEMA)
+    return _map_images(images, DHASH_SCHEMA, fn)
 
 
 # ---------------------------------------------------------------- color histogram
@@ -616,26 +552,13 @@ def color_histogram(images: DataFrame, bins: int = HIST_BINS) -> DataFrame:
     join or chi-square near-dup distance needs.  One Arrow pass, no shuffle."""
     width = 256 // bins
 
-    def fn(batches):
-        for pdf in batches:
-            out = {"image_id": [], "channel": [], "bin": [], "n": []}
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)
-                if arr.shape[2] == 1:
-                    arr = np.repeat(arr, 3, axis=2)
-                for k in range(3):
-                    counts = np.bincount(
-                        (arr[:, :, k].astype(np.int64) // width).ravel(),
-                        minlength=bins,
-                    )
-                    out["image_id"].extend([iid] * bins)
-                    out["channel"].extend([k] * bins)
-                    out["bin"].extend(range(bins))
-                    out["n"].extend(int(c) for c in counts)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def fn(r, arr):
+        n = [np.bincount((arr[:, :, k].astype(np.int64) // width).ravel(),
+                         minlength=bins) for k in range(3)]
+        return {"image_id": r["image_id"], "channel": np.repeat(np.arange(3), bins),
+                "bin": np.tile(np.arange(bins), 3), "n": np.concatenate(n)}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(fn, schema=HIST_SCHEMA)
+    return _map_images(images, HIST_SCHEMA, fn)
 
 
 def seam_cost(images: DataFrame) -> DataFrame:
@@ -649,32 +572,18 @@ def seam_cost(images: DataFrame) -> DataFrame:
     no shuffle); rows vectorize, only the h-step recurrence is
     sequential — the same per-group-recurrence shape as stay_points."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                e = arr.sum(axis=2)
-                h, w = e.shape
-                m = e[0].copy()
-                big = np.int64(2**62)
-                for y in range(1, h):
-                    left = np.concatenate(([big], m[:-1]))
-                    right = np.concatenate((m[1:], [big]))
-                    m = e[y] + np.minimum(np.minimum(left, m), right)
-                cost = int(m.min())
-                rows.append({
-                    "image_id": iid,
-                    "cost": cost,
-                    "x_end": int(np.argmin(m)),  # first minimum = smallest x
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        e = arr.astype(np.int64).sum(axis=2)
+        m = e[0].copy()
+        big = np.int64(2**62)
+        for y in range(1, e.shape[0]):
+            left = np.concatenate(([big], m[:-1]))
+            right = np.concatenate((m[1:], [big]))
+            m = e[y] + np.minimum(np.minimum(left, m), right)
+        return {"image_id": r["image_id"], "cost": int(m.min()),
+                "x_end": int(np.argmin(m))}  # first minimum = smallest x
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, cost long, x_end long"
-    )
+    return _map_images(images, "image_id string, cost long, x_end long", fn)
 
 
 # fixed 8-color palette for palette_map (RGB, public web-safe-ish picks)
@@ -694,26 +603,19 @@ def palette_map(images: DataFrame, palette=None) -> DataFrame:
     pal = np.asarray(palette if palette is not None else PALETTE8,
                      dtype=np.int64)  # (P, 3)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                d = ((arr[:, :, None, :] - pal[None, None, :, :]) ** 2).sum(
-                    axis=3
-                )  # (h, w, P)
-                p = np.argmin(d, axis=2)  # first min = smallest index
-                cnt = np.bincount(p.ravel(), minlength=len(pal))
-                for pi in np.nonzero(cnt)[0]:
-                    rows.append({"image_id": iid, "p": int(pi),
-                                 "cnt": int(cnt[pi])})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        d = ((arr.astype(np.int64)[:, :, None, :] - pal[None, None, :, :]) ** 2
+             ).sum(axis=3)  # (h, w, P)
+        p = np.argmin(d, axis=2)  # first min = smallest index
+        return _nonzero_counts(r, "p", np.bincount(p.ravel(), minlength=len(pal)))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, p long, cnt long"
-    )
+    return _map_images(images, "image_id string, p long, cnt long", fn)
+
+
+def _nonzero_counts(r, key: str, cnt: np.ndarray) -> dict:
+    """The image's (image_id, key, cnt) rows of the nonzero bins of ``cnt``."""
+    nz = np.nonzero(cnt)[0]
+    return {"image_id": r["image_id"], key: nz, "cnt": cnt[nz]}
 
 
 def mse_pairs(images: DataFrame, stride: int = 9) -> DataFrame:
@@ -733,30 +635,17 @@ def mse_pairs(images: DataFrame, stride: int = 9) -> DataFrame:
     )
     j = a.join(b, "n_a")
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for ia, ba, fa, ib, bb, fb in zip(
-                pdf["image_id_a"], pdf["bytes_a"], pdf["fmt_a"],
-                pdf["image_id_b"], pdf["bytes_b"], pdf["fmt_b"],
-            ):
-                xa = codec.decode(bytes(ba), fa).astype(np.int64)
-                xb = codec.decode(bytes(bb), fb).astype(np.int64)
-                if xa.shape != xb.shape:
-                    continue
-                rows.append({
-                    "image_id_a": ia, "image_id_b": ib,
-                    "n_px": int(xa.shape[0] * xa.shape[1]),
-                    "sse": int(((xa - xb) ** 2).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, xa, xb):
+        if xa.shape != xb.shape:
+            return None
+        return {"image_id_a": r["image_id_a"], "image_id_b": r["image_id_b"],
+                "n_px": int(xa.shape[0] * xa.shape[1]),
+                "sse": int(((xa.astype(np.int64) - xb) ** 2).sum())}
 
-    return j.mapInPandas(
-        fn,
-        schema=("image_id_a string, image_id_b string, n_px long, "
-                "sse long"),
-    )
+    return _map_images(
+        j, "image_id_a string, image_id_b string, n_px long, sse long", fn,
+        cols=("image_id_a", "image_id_b"),
+        fmts={"bytes_a": "fmt_a", "bytes_b": "fmt_b"})
 
 
 def gray_hist(images: DataFrame, bucket: int = 16) -> DataFrame:
@@ -766,25 +655,17 @@ def gray_hist(images: DataFrame, bucket: int = 16) -> DataFrame:
     exposure filtering and cheap near-dup blocking; decode + bincount
     Arrow-batched, no shuffle."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                luma = (299 * arr[:, :, 0] + 587 * arr[:, :, 1]
-                        + 114 * arr[:, :, 2]) // 1000
-                bb = luma // bucket
-                cnt = np.bincount(bb.ravel(), minlength=256 // bucket)
-                for bi in np.nonzero(cnt)[0]:
-                    rows.append({"image_id": iid, "b": int(bi),
-                                 "cnt": int(cnt[bi])})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        bb = _bt601_luma(arr) // bucket
+        return _nonzero_counts(r, "b", np.bincount(bb.ravel(), minlength=256 // bucket))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, b long, cnt long"
-    )
+    return _map_images(images, "image_id string, b long, cnt long", fn)
+
+
+def _bt601_luma(arr: np.ndarray) -> np.ndarray:
+    """Integer BT.601 luma (299 r + 587 g + 114 b) // 1000, int64."""
+    a = arr.astype(np.int64)
+    return (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
 
 
 _PATCH_P = (1 << 31) - 1  # Mersenne prime modulus for the patch hash
@@ -815,22 +696,15 @@ def patch_dedup(images: DataFrame, patch: int = 8,
     combined count — the dedup_exact plan at patch granularity."""
     lut = np.asarray(patch_pow_lut(patch * patch), dtype=np.int64)
 
-    def fn(batches):
-        for pdf in batches:
-            hs = []
-            for buf, fmt_ in zip(pdf["bytes"], pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_)[:, :, 0].astype(
-                    np.int64
-                )
-                h, w = arr.shape
-                for py0 in range(0, h - patch + 1, patch):
-                    for px0 in range(0, w - patch + 1, patch):
-                        blk = arr[py0:py0 + patch, px0:px0 + patch].ravel()
-                        hs.append(int((blk * lut).sum() % _PATCH_P))
-            if hs:
-                yield pd.DataFrame({"h": hs})
+    def fn(r, arr):
+        a = arr[:, :, 0].astype(np.int64)
+        h, w = a.shape
+        return {"h": [int((a[py0:py0 + patch, px0:px0 + patch].ravel() * lut).sum()
+                          % _PATCH_P)
+                      for py0 in range(0, h - patch + 1, patch)
+                      for px0 in range(0, w - patch + 1, patch)]}
 
-    hashes = images.select("bytes", "fmt").mapInPandas(fn, schema="h long")
+    hashes = _map_images(images, "h long", fn, cols=())
     return (
         hashes.groupBy("h")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -845,31 +719,22 @@ def channel_corr(images: DataFrame) -> DataFrame:
     detection (corr ~ 1 everywhere) and color-cast auditing for image
     corpora.  Decode + integer sums Arrow-batched, no shuffle."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-                rows.append({
-                    "image_id": iid, "n": int(r.size),
-                    "sr": int(r.sum()), "sg": int(g.sum()),
-                    "sb": int(b.sum()),
-                    "srr": int((r * r).sum()), "sgg": int((g * g).sum()),
-                    "sbb": int((b * b).sum()),
-                    "srg": int((r * g).sum()), "srb": int((r * b).sum()),
-                    "sgb": int((g * b).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(row, arr):
+        arr = arr.astype(np.int64)
+        r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
+        return {
+            "image_id": row["image_id"], "n": int(r.size),
+            "sr": int(r.sum()), "sg": int(g.sum()),
+            "sb": int(b.sum()),
+            "srr": int((r * r).sum()), "sgg": int((g * g).sum()),
+            "sbb": int((b * b).sum()),
+            "srg": int((r * g).sum()), "srb": int((r * b).sum()),
+            "sgb": int((g * b).sum()),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema=("image_id string, n long, sr long, sg long, sb long, "
-                "srr long, sgg long, sbb long, srg long, srb long, "
-                "sgb long"),
-    )
+    return _map_images(
+        images, "image_id string, n long, sr long, sg long, sb long, "
+                "srr long, sgg long, sbb long, srg long, srb long, sgb long", fn)
 
 
 def dominant_color(images: DataFrame, bits: int = 2) -> DataFrame:
@@ -879,27 +744,17 @@ def dominant_color(images: DataFrame, bits: int = 2) -> DataFrame:
     signature used for color-facet search and cheap near-dup blocking."""
     shift = 8 - bits
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                code = (
-                    (arr[:, :, 0] >> shift) << (2 * bits)
-                ) | ((arr[:, :, 1] >> shift) << bits) | (arr[:, :, 2] >> shift)
-                cnt = np.bincount(code.ravel(), minlength=1 << (3 * bits))
-                best = int(cnt.argmax())  # first max = smallest code
-                rows.append({
-                    "image_id": iid, "code": best,
-                    "cnt": int(cnt[best]), "n_px": int(code.size),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        arr = arr.astype(np.int64)
+        code = (
+            (arr[:, :, 0] >> shift) << (2 * bits)
+        ) | ((arr[:, :, 1] >> shift) << bits) | (arr[:, :, 2] >> shift)
+        cnt = np.bincount(code.ravel(), minlength=1 << (3 * bits))
+        best = int(cnt.argmax())  # first max = smallest code
+        return {"image_id": r["image_id"], "code": best,
+                "cnt": int(cnt[best]), "n_px": int(code.size)}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, code long, cnt long, n_px long"
-    )
+    return _map_images(images, "image_id string, code long, cnt long, n_px long", fn)
 
 
 def border_stats(images: DataFrame, margin: int = 2) -> DataFrame:
@@ -910,39 +765,30 @@ def border_stats(images: DataFrame, margin: int = 2) -> DataFrame:
     variance, high contrast to inner mean) is the classic crop/letterbox
     cue; all exact int64, no shuffle."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                luma = arr.sum(axis=2)
-                h, w = luma.shape
-                m = min(margin, h // 2, w // 2)
-                mask = np.zeros((h, w), bool)
-                mask[:m, :] = True
-                mask[h - m:, :] = True
-                mask[:, :m] = True
-                mask[:, w - m:] = True
-                bvals = luma[mask]
-                ivals = luma[~mask]
-                rows.append({
-                    "image_id": iid,
-                    "n_border": int(bvals.size),
-                    "s_border": int(bvals.sum()),
-                    "ss_border": int((bvals * bvals).sum()),
-                    "n_inner": int(ivals.size),
-                    "s_inner": int(ivals.sum()),
-                    "ss_inner": int((ivals * ivals).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        luma = arr.astype(np.int64).sum(axis=2)
+        h, w = luma.shape
+        m = min(margin, h // 2, w // 2)
+        mask = np.zeros((h, w), bool)
+        mask[:m, :] = True
+        mask[h - m:, :] = True
+        mask[:, :m] = True
+        mask[:, w - m:] = True
+        bvals = luma[mask]
+        ivals = luma[~mask]
+        return {
+            "image_id": r["image_id"],
+            "n_border": int(bvals.size),
+            "s_border": int(bvals.sum()),
+            "ss_border": int((bvals * bvals).sum()),
+            "n_inner": int(ivals.size),
+            "s_inner": int(ivals.sum()),
+            "ss_inner": int((ivals * ivals).sum()),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn,
-        schema=("image_id string, n_border long, s_border long, "
-                "ss_border long, n_inner long, s_inner long, ss_inner long"),
-    )
+    return _map_images(
+        images, "image_id string, n_border long, s_border long, "
+                "ss_border long, n_inner long, s_inner long, ss_inner long", fn)
 
 
 # index as _BAYER4[y % 4][x % 4] — the standard 4x4 ordered-dither matrix
@@ -958,31 +804,17 @@ def bayer_dither_stats(images: DataFrame) -> DataFrame:
 
     Shape: decode + phase-binned popcounts Arrow-batched, no shuffle."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                h, w = arr.shape[:2]
-                luma = (299 * arr[:, :, 0] + 587 * arr[:, :, 1]
-                        + 114 * arr[:, :, 2]) // 1000
-                yy, xx = np.mgrid[0:h, 0:w]
-                thr = np.asarray(_BAYER4, dtype=np.int64)[yy % 4, xx % 4]
-                bit = luma > thr * 16 + 7
-                phase = (yy % 4) * 4 + xx % 4
-                for ph in range(16):
-                    m = phase == ph
-                    rows.append({
-                        "image_id": iid, "phase": ph,
-                        "n": int(m.sum()), "ones": int(bit[m].sum()),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        h, w = arr.shape[:2]
+        yy, xx = np.mgrid[0:h, 0:w]
+        thr = np.asarray(_BAYER4, dtype=np.int64)[yy % 4, xx % 4]
+        bit = _bt601_luma(arr) > thr * 16 + 7
+        phase = (yy % 4) * 4 + xx % 4
+        return {"image_id": r["image_id"], "phase": np.arange(16),
+                "n": np.bincount(phase.ravel(), minlength=16),
+                "ones": np.bincount(phase[bit], minlength=16)}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, phase long, n long, ones long"
-    )
+    return _map_images(images, "image_id string, phase long, n long, ones long", fn)
 
 
 def median_cut_boxes(pixels: DataFrame, rounds: int = 3) -> DataFrame:
@@ -1222,32 +1054,22 @@ def gray_world(images: DataFrame) -> DataFrame:
 
     Shape: one Arrow-batched decode pass per image, no shuffle."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for iid, buf, fmt_ in zip(pdf["image_id"], pdf["bytes"],
-                                      pdf["fmt"]):
-                arr = codec.decode(bytes(buf), fmt_).astype(np.int64)
-                h, w = arr.shape[:2]
-                s = arr.reshape(-1, 3).sum(axis=0)  # (3,)
-                stot = int(s.sum())
-                bal = np.minimum(
-                    255, (arr * stot) // (3 * s[None, None, :])
-                )
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                ch = np.arange(3)[None, None, :]
-                wt = ((y * w + x) * 3 + ch) % 9973 + 1
-                rows.append({
-                    "image_id": iid, "s0": int(s[0]), "s1": int(s[1]),
-                    "s2": int(s[2]), "cs": int((bal * wt).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, arr):
+        arr = arr.astype(np.int64)
+        h, w = arr.shape[:2]
+        s = arr.reshape(-1, 3).sum(axis=0)  # (3,)
+        stot = int(s.sum())
+        bal = np.minimum(
+            255, (arr * stot) // (3 * s[None, None, :])
+        )
+        x = np.arange(w)[None, :, None]
+        y = np.arange(h)[:, None, None]
+        ch = np.arange(3)[None, None, :]
+        wt = ((y * w + x) * 3 + ch) % 9973 + 1
+        return {"image_id": r["image_id"], "s0": int(s[0]), "s1": int(s[1]),
+                "s2": int(s[2]), "cs": int((bal * wt).sum())}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, schema="image_id string, s0 long, s1 long, s2 long, cs long"
-    )
+    return _map_images(images, "image_id string, s0 long, s1 long, s2 long, cs long", fn)
 
 
 def hamming_join_bands(

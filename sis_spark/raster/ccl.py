@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .grid import GridGeometry
+from .grid import GridGeometry, _interior, _map_tiles
 
 
 def ccl_dense(mask: np.ndarray) -> np.ndarray:
@@ -88,9 +88,7 @@ def ccl_tiles(
     minimum provisional label of the merged component."""
     if tile_size * tile_size >= 1 << 20:
         raise ValueError("tile_size^2 must stay below 2^20 (label packing)")
-    w, h = gg.width, gg.height
-    ntx = (w + tile_size - 1) // tile_size
-    spark = tiles_df.sparkSession
+    ntx = (gg.width + tile_size - 1) // tile_size
 
     lab_schema = (
         "tx long, ty long, label long, n_px long, x_min long, y_min long,"
@@ -98,53 +96,32 @@ def ccl_tiles(
         " left_edge binary, top_edge binary"
     )
 
-    def label_tiles(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, b, data in zip(
-                pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]
-            ):
-                if int(b) != band:
-                    continue
-                tile = (
-                    np.frombuffer(data, np.uint8)
-                    .reshape(tile_size, tile_size)
-                    .astype(bool)
-                )
-                px = int(tx) * tile_size + np.arange(tile_size)
-                py = int(ty) * tile_size + np.arange(tile_size)
-                tile = tile & (px[None, :] < w) & (py[:, None] < h)
-                loc, n_comp = _local_labels(tile)
-                base = (int(ty) * ntx + int(tx)) << 20
-                glob = np.where(loc >= 0, loc + base, -1)
-                for i in range(n_comp):
-                    ys, xs = np.nonzero(loc == i)
-                    rows.append(
-                        {
-                            "tx": int(tx),
-                            "ty": int(ty),
-                            "label": base + i,
-                            "n_px": len(xs),
-                            "x_min": int(px[xs.min()]),
-                            "y_min": int(py[ys.min()]),
-                            "x_max": int(px[xs.max()]),
-                            "y_max": int(py[ys.max()]),
-                            "right_edge": glob[:, -1].tobytes(),
-                            "bottom_edge": glob[-1, :].tobytes(),
-                            "left_edge": glob[:, 0].tobytes(),
-                            "top_edge": glob[0, :].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "tx", "ty", "label", "n_px", "x_min", "y_min",
-                    "x_max", "y_max", "right_edge", "bottom_edge",
-                    "left_edge", "top_edge",
-                ],
-            )
+    def label_tiles(r, tile):
+        if r["band"] != band:
+            return None
+        tx, ty = r["tx"], r["ty"]
+        loc, n_comp = _local_labels(
+            (tile != 0) & _interior(tx, ty, tile_size, gg, 0))
+        base = (ty * ntx + tx) << 20
+        glob = np.where(loc >= 0, loc + base, -1)
+        comps = [np.nonzero(loc == i) for i in range(n_comp)]
+        return {
+            "tx": tx, "ty": ty, "label": [base + i for i in range(n_comp)],
+            "n_px": [len(xs) for _, xs in comps],
+            "x_min": [tx * tile_size + int(xs.min()) for _, xs in comps],
+            "y_min": [ty * tile_size + int(ys.min()) for ys, _ in comps],
+            "x_max": [tx * tile_size + int(xs.max()) for _, xs in comps],
+            "y_max": [ty * tile_size + int(ys.max()) for ys, _ in comps],
+            "right_edge": glob[:, -1].tobytes(),
+            "bottom_edge": glob[-1, :].tobytes(),
+            "left_edge": glob[:, 0].tobytes(),
+            "top_edge": glob[0, :].tobytes(),
+        }
 
-    labeled = tiles_df.mapInPandas(label_tiles, schema=lab_schema).persist()
+    # eager checkpoint: the plan below reads `labeled` three times (edges,
+    # self-loops, final join) and leaves no cache entry in the session
+    labeled = _map_tiles(tiles_df, lab_schema, tile_size, np.uint8,
+                         label_tiles).localCheckpoint()
 
     # one edge row per (tile, side); dedupe the per-component copies
     edges_tbl = labeled.select(
@@ -205,8 +182,4 @@ def ccl_tiles(
             F.max("y_max").alias("y_max"),
         )
     )
-    # labeled stays persisted until the session drops it: the returned plan
-    # consumes it three times (edges, self-loops, final join) and an eager
-    # unpersist here would force triple recomputation at materialization
-    # (the minhash_lsh_pairs lifecycle rule).
     return out

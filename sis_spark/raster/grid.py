@@ -13,10 +13,14 @@
   `_halo_groups` (which tiles a group needs) + `_place_blocks` (the
   group's tiles pasted into one halo array); `_gather_2x2` is its aligned
   2x2 case (one overview step).
-* The per-tile computation every tile operator shares
-  (F/image/ComputedImage.java:123 computeTile) is `_map_tiles`: one Arrow
-  batch loop that decodes each row's byte planes, cuts them to the
-  `_valid_window` when asked, and runs the operator's numpy body.
+* The per-row computation every tile and image operator shares
+  (F/image/ComputedImage.java:123 computeTile) is `_map_rows`: the one
+  Arrow batch loop, which decodes each row's payload columns, runs the
+  operator's numpy body and expands its column dict into rows.
+  `_map_tiles` is that loop with the plane decoder (byte planes cut to
+  the `_valid_window` when asked); `imageops._map_images` is it with the
+  image decoder.  `_interior` is the in-extent (or r-pixel interior) mask
+  of a whole tile.
 """
 
 from __future__ import annotations
@@ -175,57 +179,86 @@ def _valid_window(gg: GridGeometry, tx, ty, tile_size: int) -> tuple[int, int]:
     return span(int(ty), gg.height), span(int(tx), gg.width)
 
 
+def _interior(gtx, gty, ts, gg, r=1):
+    """(ts, ts) mask of tile (gtx, gty)'s pixels at least ``r`` pixels
+    inside every raster edge (a full (2r+1)^2 window in the extent); r = 0
+    is the whole tile's in-extent mask."""
+    px = gtx * ts + np.arange(ts)
+    py = gty * ts + np.arange(ts)
+    return ((px[None, :] >= r) & (px[None, :] <= gg.width - 1 - r)
+            & (py[:, None] >= r) & (py[:, None] <= gg.height - 1 - r))
+
+
 def _tile_row(row: dict, plane: np.ndarray) -> dict:
     """A ``_map_tiles`` output row: the input tile's key with ``plane``."""
     return {"tx": row["tx"], "ty": row["ty"], "band": row["band"],
             "data": plane.tobytes()}
 
 
-def _map_tiles(df: DataFrame, schema: str, tile_size: int | None, planes,
-               body, gg: GridGeometry | None = None) -> DataFrame:
-    """The per-tile core: one mapInPandas over tile rows.
+def _concat(parts):
+    """One output column from its per-row parts: numpy arrays concatenate
+    (a pixel explode never goes through Python lists); any list part makes
+    the column one flat list."""
+    parts = [p for p in parts if len(p)]
+    if all(isinstance(p, np.ndarray) for p in parts):
+        return np.concatenate(parts)
+    return [x for p in parts
+            for x in (p.tolist() if isinstance(p, np.ndarray) else p)]
 
-    ``planes`` is a dtype (the ``data`` column) or {column: dtype}; each
-    row's planes decode as T x T arrays (flat when ``tile_size`` is None).
-    With ``gg`` they are cut to the tile's ``_valid_window`` and rows off
-    the extent are skipped.  ``body(row, *planes)`` gets the row's other
-    columns as a dict and returns None or one output row as a column dict;
-    a list or array value there makes one row per element (scalars
-    repeat).  Batches that produce no rows yield nothing."""
-    if not isinstance(planes, dict):
-        planes = {"data": planes}
-    names, dts = list(planes), [np.dtype(d) for d in planes.values()]
-    shape = (-1,) if tile_size is None else (tile_size, tile_size)
+
+def _map_rows(df: DataFrame, schema: str, payloads, decode, body) -> DataFrame:
+    """The per-row core: one mapInPandas over ``df``.
+
+    Each row's ``payloads`` columns go to ``decode(row, *values)``, which
+    returns the row's arrays (or None to skip the row); ``row`` is a dict
+    of the other columns.  ``body(row, *arrays)`` returns None or one
+    output row as a column dict: a list or array value makes one row per
+    element (scalars repeat).  Batches that produce no rows yield
+    nothing."""
+    payloads = list(payloads)
 
     def fn(batches):
         for pdf in batches:
-            keys = [c for c in pdf.columns if c not in planes]
+            keys = [c for c in pdf.columns if c not in payloads]
             cols, n = {}, 0
-            for row, *datas in zip(pdf[keys].to_dict("records"),
-                                   *(pdf[c] for c in names)):
-                arrs = [np.frombuffer(d, dt).reshape(shape)
-                        for d, dt in zip(datas, dts)]
-                if gg is not None:
-                    vh, vw = _valid_window(gg, row["tx"], row["ty"], tile_size)
-                    if not (vh and vw):
-                        continue
-                    arrs = [a[:vh, :vw] for a in arrs]
-                out = body(row, *arrs)
+            for row, *vals in zip(pdf[keys].to_dict("records"),
+                                  *(pdf[c] for c in payloads)):
+                arrs = decode(row, *vals)
+                out = None if arrs is None else body(row, *arrs)
                 if out is None:
                     continue
-                many = [len(v) for v in out.values()
-                        if isinstance(v, (list, np.ndarray))]
-                k = max(many, default=1)
+                k = max((len(v) for v in out.values()
+                         if isinstance(v, (list, np.ndarray))), default=1)
                 for c, v in out.items():
-                    if isinstance(v, np.ndarray):
-                        v = v.tolist()
-                    cols.setdefault(c, []).extend(
-                        v if isinstance(v, list) else [v] * k)
+                    cols.setdefault(c, []).append(
+                        v if isinstance(v, (list, np.ndarray)) else [v] * k)
                 n += k
             if n:
-                yield pd.DataFrame(cols)
+                yield pd.DataFrame({c: _concat(p) for c, p in cols.items()})
 
     return df.mapInPandas(fn, schema=schema)
+
+
+def _map_tiles(df: DataFrame, schema: str, tile_size: int | None, planes,
+               body, gg: GridGeometry | None = None) -> DataFrame:
+    """The per-tile core: ``_map_rows`` over tile rows with the plane
+    decoder.  ``planes`` is a dtype (the ``data`` column) or {column:
+    dtype}; each row's planes decode as T x T arrays (flat when
+    ``tile_size`` is None).  With ``gg`` they are cut to the tile's
+    ``_valid_window`` and rows off the extent are skipped."""
+    if not isinstance(planes, dict):
+        planes = {"data": planes}
+    dts = [np.dtype(d) for d in planes.values()]
+    shape = (-1,) if tile_size is None else (tile_size, tile_size)
+
+    def decode(row, *datas):
+        arrs = [np.frombuffer(d, dt).reshape(shape) for d, dt in zip(datas, dts)]
+        if gg is None:
+            return arrs
+        vh, vw = _valid_window(gg, row["tx"], row["ty"], tile_size)
+        return [a[:vh, :vw] for a in arrs] if vh and vw else None
+
+    return _map_rows(df, schema, planes, decode, body)
 
 
 def derive_read_extent(

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .grid import GridGeometry
+from .grid import GridGeometry, _map_tiles
 
 SAT_SCHEMA = "tx long, ty long, data binary"
 
@@ -48,24 +48,15 @@ def integral_tiles(
 
     # per-tile marginals: row-cumulative totals R[y] = sum(rows <= y),
     # column-cumulative totals C[x] = sum(cols <= x), and the tile total
-    def marginals(batches):
-        for pdf in batches:
-            out = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(ts, ts).astype(np.int64)
-                rcum = np.cumsum(block.sum(axis=1))
-                ccum = np.cumsum(block.sum(axis=0))
-                out.append(pd.DataFrame({
-                    "tx": int(tx), "ty": int(ty),
-                    "i": np.arange(ts, dtype=np.int64),
-                    "rcum": rcum, "ccum": ccum,
-                }))
-            if out:
-                yield pd.concat(out)
+    def marginals(r, block):
+        block = block.astype(np.int64)
+        return {"tx": r["tx"], "ty": r["ty"], "i": np.arange(ts, dtype=np.int64),
+                "rcum": np.cumsum(block.sum(axis=1)),
+                "ccum": np.cumsum(block.sum(axis=0))}
 
-    marg = src.mapInPandas(
-        marginals, "tx long, ty long, i long, rcum long, ccum long"
-    )
+    marg = _map_tiles(src.select("tx", "ty", "data"),
+                      "tx long, ty long, i long, rcum long, ccum long", ts,
+                      bdt, marginals)
 
     # left(tx, ty)[y]: prefix over tile columns strictly left, same ty row
     wl = (

@@ -44,18 +44,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .grid import GridGeometry, _halo_groups, _place_blocks
+from .grid import (TILE_SCHEMA, GridGeometry, _halo_groups, _interior,
+                   _map_tiles, _place_blocks, _tile_row)
 
 GRAD_SCHEMA = "tx long, ty long, dzdx binary, dzdy binary"
-
-
-def _interior(gtx, gty, ts, gg, r=1):
-    """(ts, ts) mask of tile (gtx, gty)'s pixels at least ``r`` pixels
-    inside every raster edge (a full (2r+1)^2 window in the extent)."""
-    px = gtx * ts + np.arange(ts)
-    py = gty * ts + np.arange(ts)
-    return ((px[None, :] >= r) & (px[None, :] <= gg.width - 1 - r)
-            & (py[:, None] >= r) & (py[:, None] <= gg.height - 1 - r))
 
 
 def gradient_tiles(
@@ -122,29 +114,20 @@ def hillshade_tiles(
 
     grads = gradient_tiles(tiles_df, gg, band, tile_size, dtype)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, bx, by in zip(pdf["tx"], pdf["ty"], pdf["dzdx"], pdf["dzdy"]):
-                dzdx = np.frombuffer(bx, np.float64).reshape(tile_size, tile_size)
-                dzdy = np.frombuffer(by, np.float64).reshape(tile_size, tile_size)
-                gx = dzdx * (z_factor / sx)
-                gy = dzdy * (z_factor / sy)
-                slope = np.arctan(np.hypot(gx, gy))
-                aspect = np.arctan2(gy, -gx)
-                shade = 255.0 * (
-                    np.cos(zen) * np.cos(slope)
-                    + np.sin(zen) * np.sin(slope) * np.cos(az - aspect)
-                )
-                data = np.clip(np.rint(shade), 0, 255).astype(np.uint8)
-                rows.append({"tx": int(tx), "ty": int(ty), "band": 0,
-                             "data": data.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(r, dzdx, dzdy):
+        gx = dzdx * (z_factor / sx)
+        gy = dzdy * (z_factor / sy)
+        slope = np.arctan(np.hypot(gx, gy))
+        aspect = np.arctan2(gy, -gx)
+        shade = 255.0 * (
+            np.cos(zen) * np.cos(slope)
+            + np.sin(zen) * np.sin(slope) * np.cos(az - aspect)
+        )
+        data = np.clip(np.rint(shade), 0, 255).astype(np.uint8)
+        return {"tx": r["tx"], "ty": r["ty"], "band": 0, "data": data.tobytes()}
 
-    from .tiles import TILE_SCHEMA
-
-    return grads.mapInPandas(fn, schema=TILE_SCHEMA)
+    return _map_tiles(grads, TILE_SCHEMA, tile_size,
+                      {"dzdx": np.float64, "dzdy": np.float64}, fn)
 
 
 def gradient_dense(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -281,26 +264,20 @@ def flow_dir_tiles(
 def flow_cells(dirs_df: DataFrame, gg: GridGeometry, tile_size: int = 64) -> DataFrame:
     """Explode flow-direction tiles to global-coordinate cell rows
     (x, y, dir) within the raster extent."""
-    h, w = gg.height, gg.width
+    def fn(r, dirs):
+        return dict(_cells(r, dirs, tile_size), dir=dirs.ravel().astype(np.int64))
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["dirs"]):
-                ts = tile_size
-                dirs = np.frombuffer(data, np.uint8).reshape(ts, ts)
-                gx = int(tx) * ts + np.arange(ts)[None, :]
-                gy = int(ty) * ts + np.arange(ts)[:, None]
-                keep = (gx < w) & (gy < h)
-                out.append(pd.DataFrame({
-                    "x": np.broadcast_to(gx, (ts, ts))[keep].astype(np.int64),
-                    "y": np.broadcast_to(gy, (ts, ts))[keep].astype(np.int64),
-                    "dir": dirs[keep].astype(np.int64),
-                }))
-            if out:
-                yield pd.concat(out)
+    return _map_tiles(dirs_df, "x long, y long, dir long", tile_size,
+                      {"dirs": np.uint8}, fn, gg)
 
-    return dirs_df.mapInPandas(fn, "x long, y long, dir long")
+
+def _cells(r, plane, tile_size) -> dict:
+    """Global (x, y) int64 columns of a valid-window ``plane`` of tile
+    (r["tx"], r["ty"]), row-major like ``plane.ravel()``."""
+    vh, vw = plane.shape
+    gx, gy = np.meshgrid(r["tx"] * tile_size + np.arange(vw, dtype=np.int64),
+                         r["ty"] * tile_size + np.arange(vh, dtype=np.int64))
+    return {"x": gx.ravel(), "y": gy.ravel()}
 
 
 def _d8_step_cols():
@@ -507,21 +484,15 @@ def _chamfer_sweep(tiles_df, gg, band, ts, dtype, seed_value, max_rounds,
     truncated per round."""
     h, w = gg.height, gg.width
 
-    def init(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, bd, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                if int(bd) != band:
-                    continue
-                v = np.frombuffer(data, dtype=dtype).reshape(ts, ts)
-                px = int(tx) * ts + np.arange(ts)[None, :]
-                py = int(ty) * ts + np.arange(ts)[:, None]
-                inext = (px < w) & (py < h)
-                seed = (py * w + px).astype(np.int64) if scale > 1 else 0
-                d = np.where((v == seed_value) & inext, seed, inf).astype(np.int64)
-                rows.append({"tx": int(tx), "ty": int(ty), "data": d.tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def init(r, v):
+        if r["band"] != band:
+            return None
+        px = r["tx"] * ts + np.arange(ts)[None, :]
+        py = r["ty"] * ts + np.arange(ts)[:, None]
+        seed = (py * w + px).astype(np.int64) if scale > 1 else 0
+        inext = _interior(r["tx"], r["ty"], ts, gg, 0)
+        d = np.where((v == seed_value) & inext, seed, inf).astype(np.int64)
+        return {"tx": r["tx"], "ty": r["ty"], "data": d.tobytes()}
 
     def relax(key, pdf):
         gtx, gty, halo = _place_blocks(key, pdf, ts, np.int64, 1, 1, inf,
@@ -543,7 +514,7 @@ def _chamfer_sweep(tiles_df, gg, band, ts, dtype, seed_value, max_rounds,
                 }])
         return df.mapInPandas(s, "t long").agg(F.sum("t")).collect()[0][0]
 
-    dist = tiles_df.mapInPandas(init, CONV_SCHEMA).localCheckpoint()
+    dist = _map_tiles(tiles_df, CONV_SCHEMA, ts, dtype, init).localCheckpoint()
     prev = total(dist)
     for _ in range(max_rounds):
         dist = _halo_groups(dist, gg, ts).groupBy("gtx", "gty").applyInPandas(
@@ -930,30 +901,15 @@ def hough_votes(
     n_angles-way explode in codegen, one groupBy — the vote table is
     tiny (angles x rho buckets) so the shuffle is a partial-agg
     combine, not a data shuffle."""
-    h, w = gg.height, gg.width
-    bdt = np.dtype(dtype)
     cq, sq = hough_luts(n_angles)
 
-    def px(batches):
-        for pdf in batches:
-            out = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=bdt).reshape(
-                    tile_size, tile_size
-                )
-                ys, xs = np.nonzero(block > threshold)
-                gx = int(tx) * tile_size + xs
-                gy = int(ty) * tile_size + ys
-                keep = (gx < w) & (gy < h)
-                out.append(pd.DataFrame({
-                    "x": gx[keep].astype(np.int64),
-                    "y": gy[keep].astype(np.int64),
-                }))
-            yield pd.concat(out) if out else pd.DataFrame({"x": [], "y": []})
+    def px(r, block):
+        ys, xs = np.nonzero(block > threshold)
+        return {"x": r["tx"] * tile_size + xs.astype(np.int64),
+                "y": r["ty"] * tile_size + ys.astype(np.int64)}
 
-    pts = tiles_df.filter(F.col("band") == band).select(
-        "tx", "ty", "data"
-    ).mapInPandas(px, schema="x long, y long")
+    pts = _map_tiles(tiles_df.filter(F.col("band") == band).select(
+        "tx", "ty", "data"), "x long, y long", tile_size, dtype, px, gg)
     votes = pts.select(
         F.explode(F.array(*[
             F.struct(
@@ -1037,32 +993,11 @@ def _pixel_rows(tiles_df, gg, band, tile_size, dtype) -> DataFrame:
     """Tiles -> one (x, y, z) row per pixel of ``band`` inside the
     raster extent, the value widened to int64: the sparse cell table of
     the graph-shaped operators (cost distance, viewshed)."""
-    h, w = gg.height, gg.width
+    def px(r, block):
+        return dict(_cells(r, block, tile_size), z=block.ravel().astype(np.int64))
 
-    def px(batches):
-        gi = np.arange(tile_size, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for data, tx, ty in zip(pdf["data"], pdf["tx"], pdf["ty"]):
-                block = np.frombuffer(data, dtype=dtype).reshape(
-                    tile_size, tile_size
-                ).astype(np.int64)
-                gx, gy = np.meshgrid(int(tx) * tile_size + gi,
-                                     int(ty) * tile_size + gi)
-                keep = ((gx < w) & (gy < h)).ravel()
-                out.append(pd.DataFrame({
-                    "x": gx.ravel()[keep], "y": gy.ravel()[keep],
-                    "z": block.ravel()[keep],
-                }))
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"x": [], "y": [], "z": []}
-            )
-
-    return (
-        tiles_df.filter(F.col("band") == band)
-        .select("tx", "ty", "data")
-        .mapInPandas(px, schema="x long, y long, z long")
-    )
+    return _map_tiles(tiles_df.filter(F.col("band") == band).select(
+        "tx", "ty", "data"), "x long, y long, z long", tile_size, dtype, px, gg)
 
 
 def cost_distance_tiles(
@@ -2138,31 +2073,14 @@ def sauvola_threshold_tiles(
     ones = np.ones((2 * radius + 1, 2 * radius + 1), dtype=np.int64)
     src = tiles_df.filter(F.col("band") == band)
 
-    w_ext, h_ext = gg.width, gg.height
+    def mk(f):
+        return _map_tiles(src, TILE_SCHEMA, tile_size, np.uint8, lambda r, a:
+                          _tile_row(r, f(r, a.astype(np.int64)).astype(np.int64)))
 
-    def mk(f, dt):
-        def fn(batches):
-            gxs = np.arange(tile_size)
-            for pdf in batches:
-                rows = []
-                for tx, ty, b, data in zip(pdf["tx"], pdf["ty"], pdf["band"], pdf["data"]):
-                    a = np.frombuffer(data, np.uint8).reshape(tile_size, tile_size).astype(np.int64)
-                    px = int(tx) * tile_size + gxs[None, :]
-                    py = int(ty) * tile_size + gxs[:, None]
-                    inside = (px < w_ext) & (py < h_ext)
-                    rows.append({"tx": int(tx), "ty": int(ty), "band": int(b),
-                                 "data": f(a, inside).astype(dt).tobytes()})
-                if rows:
-                    yield pd.DataFrame(rows)
-
-        return src.mapInPandas(
-            fn, schema="tx long, ty long, band int, data binary"
-        )
-
-    sq = mk(lambda a, inside: a * a, np.int64)
+    sq = mk(lambda r, a: a * a)
     # the window COUNT must see only real pixels: the indicator plane is
     # 1 inside the extent, 0 on the zero-padded tile remainder
-    on = mk(lambda a, inside: inside.astype(np.int64), np.int64)
+    on = mk(lambda r, a: _interior(r["tx"], r["ty"], tile_size, gg, 0))
     S = convolve_tiles(src, gg, ones, band=band, tile_size=tile_size, dtype=np.uint8)
     Q = convolve_tiles(sq, gg, ones, band=band, tile_size=tile_size, dtype=np.int64)
     N = convolve_tiles(on, gg, ones, band=band, tile_size=tile_size, dtype=np.int64)
@@ -2175,25 +2093,15 @@ def sauvola_threshold_tiles(
     )
     kd, kn, Ri = int(k_den), int(k_num), int(R)
 
-    def decide(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, dv, ds, dq, dn in zip(pdf["tx"], pdf["ty"], pdf["dv"],
-                                              pdf["ds"], pdf["dq"], pdf["dn"]):
-                v = np.frombuffer(dv, np.uint8).reshape(tile_size, tile_size).astype(np.int64)
-                s = np.frombuffer(ds, np.int64).reshape(tile_size, tile_size)
-                q = np.frombuffer(dq, np.int64).reshape(tile_size, tile_size)
-                n = np.frombuffer(dn, np.int64).reshape(tile_size, tile_size)
-                a = kd * v * n - (kd - kn) * s
-                lhs = (Ri * a * n) ** 2
-                rhs = kn * kn * s * s * (n * q - s * s)
-                out = np.where((a >= 0) & (lhs >= rhs) & (n > 0), 255, 0)
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "data": out.astype(np.int64).tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def decide(r, v, s, q, n):
+        a = kd * v.astype(np.int64) * n - (kd - kn) * s
+        lhs = (Ri * a * n) ** 2
+        rhs = kn * kn * s * s * (n * q - s * s)
+        out = np.where((a >= 0) & (lhs >= rhs) & (n > 0), 255, 0)
+        return {"tx": r["tx"], "ty": r["ty"], "data": out.astype(np.int64).tobytes()}
 
-    return j.mapInPandas(decide, schema=CONV_SCHEMA)
+    return _map_tiles(j, CONV_SCHEMA, tile_size, {
+        "dv": np.uint8, "ds": np.int64, "dq": np.int64, "dn": np.int64}, decide)
 
 
 _EXTREMA_SENTINEL = -(1 << 62)

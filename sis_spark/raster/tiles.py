@@ -1391,9 +1391,10 @@ def areal_interpolate(tiles: DataFrame, values: DataFrame,
         ks, cs = np.unique(lab[lab > 0], return_counts=True)
         return {"tx": r["tx"], "ty": r["ty"], "key": ks, "cnt": cs}
 
+    # eager checkpoint: read by both passes, no cache entry left behind
     tc = _map_tiles(tiles.filter(F.col("band") == 0),
                     "tx long, ty long, key long, cnt long", None, np.int32,
-                    counts).persist()
+                    counts).localCheckpoint()
     ncells = tc.groupBy("key").agg(F.sum("cnt").alias("ncells"))
     per_cell = ncells.join(values, "key").selectExpr(
         "key", f"(value * {int(scale)}) DIV ncells AS share_per_cell"

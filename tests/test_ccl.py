@@ -24,11 +24,14 @@ def test_ccl_tiles_matches_dense_random(spark):
     tiles = raster_to_tiles(
         spark, mask.astype(np.uint8)[..., None], gg, tile_size=32
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     got = {
         (r.n_px, r.x_min, r.y_min, r.x_max, r.y_max)
         for r in ccl_tiles(tiles, gg, tile_size=32).collect()
     }
     assert got == _region_stats(mask)
+    assert cache.numCachedEntries() == cached
 
 
 def test_ccl_tiles_single_region_spanning_all_tiles(spark):

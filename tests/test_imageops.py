@@ -222,3 +222,51 @@ def test_slic_superpixels_properties(spark):
     assert sum(r["n"] for r in frows) == W * H
     assert all(r["n"] > 0 for r in frows)
     assert all(r["cv"] == 42 for r in frows)
+
+
+def test_image_operators_gray_equals_rgb(spark):
+    """The channel rule: every operator that reads RGB statistics gives a
+    gray (h, w, 1) image and its 3-channel copy the same rows (png and raw
+    payloads), and mse_pairs pairs a gray image with an RGB one of equal
+    size."""
+    import numpy as np
+
+    from sis_spark.operators import imageops as io
+    from sis_spark.raster import codec
+
+    rng = np.random.default_rng(10)
+    rows = []
+    for i, (fmt, h, w) in enumerate([("png", 9, 12), ("raw", 9, 12),
+                                      ("png", 3, 3), ("raw", 12, 8)]):
+        g = rng.integers(0, 256, (h, w, 1)).astype(np.uint8)
+        g[:2, :2] = 77  # a 2x2 patch every image repeats, for patch_dedup
+        for kind, arr in (("gray", g), ("rgb", np.repeat(g, 3, axis=2))):
+            rows.append((f"{kind}-{i}", codec.encode(arr, fmt), fmt,
+                         "a red cat on a mat"))
+    df = spark.createDataFrame(
+        rows, "image_id string, bytes binary, fmt string, caption string")
+    ops = {
+        "image_features": io.image_features, "image_quality": io.image_quality,
+        "caption_alignment": io.caption_alignment, "dhash": io.dhash,
+        "color_histogram": io.color_histogram, "seam_cost": io.seam_cost,
+        "palette_map": io.palette_map, "gray_hist": io.gray_hist,
+        "mse_pairs": lambda d: io.mse_pairs(d, stride=1),
+        "patch_dedup": lambda d: io.patch_dedup(d, patch=2, min_count=2),
+        "channel_corr": io.channel_corr, "dominant_color": io.dominant_color,
+        "border_stats": io.border_stats,
+        "bayer_dither_stats": io.bayer_dither_stats,
+        "gray_world": io.gray_world,
+    }
+
+    def strip(out):
+        return sorted(repr(sorted(
+            (k, v.split("-")[1] if k.startswith("image_id") else v)
+            for k, v in r.asDict().items())) for r in out.collect())
+
+    for name, op in ops.items():
+        gray = strip(op(df.filter(df.image_id.startswith("gray"))))
+        rgb = strip(op(df.filter(df.image_id.startswith("rgb"))))
+        assert gray and gray == rgb, name
+    mixed = io.mse_pairs(df, stride=1).collect()
+    assert len(mixed) == 4  # (gray|rgb)-0 x (gray|rgb)-1, all 9 x 12
+    assert len({(r["n_px"], r["sse"]) for r in mixed}) == 1

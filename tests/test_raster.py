@@ -331,6 +331,42 @@ def test_zonal_stats_matches_numpy(spark, scene):
             assert abs(r["mean"] - v.mean()) < 1e-9
 
 
+
+def test_areal_interpolate_matches_numpy(spark):
+    """Each polygon's value spreads over its labeled cells as
+    floordiv(value * scale, ncells) per cell, summed per tile; the call
+    leaves the session's cache as it found it."""
+    from sis_spark.raster.tiles import TILE_SCHEMA, areal_interpolate
+
+    lab = np.zeros((21, 21), np.int32)
+    lab[2:9, 3:12] = 1
+    lab[10:20, 5:9] = 2
+    lab[15:21, 15:21] = 3  # no value: contributes nothing
+    ts, scale = 8, 1 << 20
+    rows = []
+    for ty in range(3):
+        for tx in range(3):
+            b = np.zeros((ts, ts), np.int32)
+            sub = lab[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+            b[:sub.shape[0], :sub.shape[1]] = sub
+            rows.append((tx, ty, 0, b.tobytes()))
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
+    values = {1: 630, 2: 401}
+    vdf = spark.createDataFrame(list(values.items()), "key long, value long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
+    got = {(r["tx"], r["ty"]): r["share"]
+           for r in areal_interpolate(tiles, vdf, tile_size=ts).collect()}
+    assert cache.numCachedEntries() == cached
+    share = {k: v * scale // int((lab == k).sum()) for k, v in values.items()}
+    want = {}
+    for (y, x), k in np.ndenumerate(lab):
+        if k in share:
+            key = (x // ts, y // ts)
+            want[key] = want.get(key, 0) + share[k]
+    assert got == want
+
+
 # ------------------------------------------------- stretch / ramp / append (r2)
 
 def test_stretch_matches_numpy(spark, scene):
