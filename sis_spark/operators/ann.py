@@ -7,25 +7,46 @@ independent, overflow-free for |x|<=3, dim<=512 — and the final
 bit-identical in Spark, numpy, and DuckDB.  (Float summation order would
 otherwise differ between engines and flip near-tie rankings.)
 
-* ``brute_topk``: exact baseline — broadcast query vectors, crossJoin,
-  partial per-partition top-k (numpy matmul over Arrow batches), final
-  window top-k.  The same partial/final shape that Spark's WindowGroupLimit
-  gives operators.knn.
-* ``lsh_topk``: scale path — sign-random-projection buckets (hyperplanes
-  derived deterministically from md5 bits), equi-join on bucket, exact
-  re-rank inside buckets.  Approximate: recall measured in tests.
+Every top-k search is one plan (``_topk``): candidate rows keyed by
+``list_id`` meet the query probes of that list in one
+``cogroup(...).applyInPandas``; per group one numpy scorer builds the
+(n_cand x n_query) score matrix, a vectorised top-k keeps k rows per query,
+and one window top-k (``_rank``) ends it, ties to the lowest cand_id.  The
+plans differ only in their lists and scorer:
+
+* ``brute_topk``, ``hard_negative_topk``, ``mmr_select``'s pool and
+  ``pq_topk_df``: exhaustive — one list per core (``_all_lists``), every
+  query probes every list.
+* ``ivf_topk_df``: list = the nearest coarse centroid, a query probes its
+  ``nprobe`` nearest.
+* ``ivf_pq_topk_df``: IVF lists over PQ codes of the residuals.
+* PQ plans score by ADC: each group builds the lookup tables from its probe
+  rows' query vectors (minus the group's centroid for IVF-PQ).
+
+Centroids, codebooks, code, list and probe assignment all come from one
+exact int64 squared-distance kernel (``_sqdist``) run by the one Arrow
+batch loop (``_map_vecs``).  ``lsh_topk`` is the sign-random-projection
+bucket plan: the band keys of the near-dup path, an equi-join on bucket
+and an exact re-rank in the JVM.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .buckets import DEFAULT_MAX_BUCKET
 
 QUANT = 1e7
+#: score cells per block of a group: bounds the score matrix
+_BLOCK = 1 << 21
+#: queries per block: a candidate block then holds >= _BLOCK / _QBLOCK rows
+_QBLOCK = 1 << 12
 
 
 def quantize_col(col):
@@ -49,6 +70,230 @@ def quantize_np(vecs: np.ndarray) -> np.ndarray:
     return np.floor(vecs.astype(np.float64) * QUANT).astype(np.int64)
 
 
+def _sqdist(X: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, m, sd) x (m, ksub, sd) -> (n, m, ksub) exact int64 squared
+    distances |x - b|^2 = |x|^2 + |b|^2 - 2 x.b (|x|,|b| <= 3e7, dim <= 64
+    -> < 2^62).  m = 1 serves list and probe assignment."""
+    dots = (X.transpose(1, 0, 2) @ B.transpose(0, 2, 1)).transpose(1, 0, 2)
+    return (X * X).sum(axis=2)[:, :, None] + (B * B).sum(axis=2)[None] - 2 * dots
+
+
+def _map_vecs(df: DataFrame, vec_col: str, model: np.ndarray, body, schema) -> DataFrame:
+    """The one Arrow batch loop: ``model`` (centroids, codebooks or planes)
+    is broadcast once; each batch's ``vec_col`` decodes to one int64 matrix
+    and ``body(pdf, M, model)`` returns the batch's output frame."""
+    bc = df.sparkSession.sparkContext.broadcast(model)
+
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield body(pdf, np.array(list(pdf[vec_col]), dtype=np.int64), bc.value)
+
+    return df.mapInPandas(fn, schema=schema)
+
+
+def _plus(df: DataFrame, name: str, typ: T.DataType) -> T.StructType:
+    return T.StructType(list(df.schema.fields) + [T.StructField(name, typ)])
+
+
+def _lists(df: DataFrame, cent: np.ndarray, take: int = 1) -> DataFrame:
+    """(..., qv) -> ``take`` rows (..., qv, list_id) per row: the ``take``
+    nearest centroids by exact int64 distance, ties -> lowest list id
+    (stable argsort; take 1 is the first argmin)."""
+    take = min(take, len(cent))
+
+    def body(pdf, M, C):
+        d = _sqdist(M[:, None, :], C[None])[:, 0]
+        order = np.argsort(d, axis=1, kind="stable")[:, :take]
+        return pdf.loc[pdf.index.repeat(take)].assign(
+            list_id=order.reshape(-1).astype(np.int32))
+
+    return _map_vecs(df, "qv", cent, body, _plus(df, "list_id", T.IntegerType()))
+
+
+def _codes(df: DataFrame, books: np.ndarray) -> DataFrame:
+    """(..., qv) -> (..., qv, codes array<int>): per-subspace argmin over
+    exact int64 squared distances, ties -> lowest code."""
+    m, _, sd = books.shape
+
+    def body(pdf, M, B):
+        codes = _sqdist(M.reshape(len(M), m, sd), B).argmin(axis=2)
+        return pdf.assign(codes=list(codes.astype(np.int32)))
+
+    return _map_vecs(df, "qv", books, body,
+                     _plus(df, "codes", T.ArrayType(T.IntegerType())))
+
+
+def _qcos(Q, lid):
+    """The quantized-cosine scorer of the query rows ``Q``: a candidate
+    block C scores (n_cand, n_query) int64 dots over the int64 norms cast
+    to double, the IEEE arithmetic of ``qcos_col``."""
+    qn = (Q * Q).sum(axis=1).astype(np.float64)
+
+    def score(C):
+        cn = (C * C).sum(axis=1).astype(np.float64)
+        with np.errstate(invalid="ignore"):  # a zero vector: 0 / 0 = NaN
+            return (C @ Q.T).astype(np.float64) / np.sqrt(cn[:, None] * qn[None, :])
+
+    return score
+
+
+def _qdot(Q, lid):
+    return lambda C: C @ Q.T
+
+
+def _adc(books: np.ndarray, cent: np.ndarray | None = None):
+    """ADC scorer: the tables |q_sub - codeword|^2 of the query rows are
+    built once (q the residual against list ``lid``'s centroid when
+    ``cent`` is given, IVF-PQ); a candidate block of codes (n_cand, m)
+    scores m table lookups per query."""
+    m, _, sd = books.shape
+
+    def prep(Q, lid):
+        R = Q if cent is None else Q - cent[lid]
+        tabs = np.ascontiguousarray(
+            _sqdist(R.reshape(len(R), m, sd), books).transpose(1, 2, 0))
+        return lambda K: sum(tabs[s][K[:, s]] for s in range(m))
+
+    return prep
+
+
+def _rank_key(S, desc):
+    """Ascending ranking key of scores: negated when ``desc``; a NaN score
+    (a zero vector's cosine) ranks last: pandas hands it to Spark as null,
+    which the window also puts last."""
+    key = -S if desc else S
+    return np.where(np.isnan(key), np.inf, key) if key.dtype.kind == "f" else key
+
+
+def _first_k(key, cid, qi, k):
+    """Indices of the k smallest (key, cid) of each ``qi``."""
+    o = np.lexsort((cid, key, qi))
+    qs = qi[o]
+    return o[np.arange(len(o)) - np.searchsorted(qs, qs) < k]
+
+
+def _rank(rows: DataFrame, k: int, col: str, desc: bool) -> DataFrame:
+    """The window top-k: rank 1..k per query by ``col``, ties to the lowest
+    cand_id.  Output (query_id, rank, cand_id, col)."""
+    o = F.col(col).desc() if desc else F.col(col).asc()
+    w = Window.partitionBy("query_id").orderBy(o, F.col("cand_id").asc())
+    return rows.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k).select("query_id", "rank", "cand_id", col)
+
+
+def _scan(f, C, cid, ok, k, desc, dt, step):
+    """(ci, qi, score) of the top k candidate rows of ``C`` per query column
+    of the scorer ``f``, one block of ``step`` rows at a time: each block's
+    top k per query (an ``np.partition`` threshold) merge into the k kept
+    so far, ties to the lowest cand id.  ``ok(lo, hi)`` gives the block's
+    allowed pairs (None: all)."""
+    worst = np.inf if dt is np.float64 else np.iinfo(np.int64).max
+    ci = qi = np.empty(0, np.int64)
+    sv = np.empty(0, dt)
+    for lo in range(0, len(C), step):
+        S = f(C[lo:lo + step])
+        mask = None if ok is None else ok(lo, lo + step)
+        key = _rank_key(S, desc) if mask is None else np.where(mask, _rank_key(S, desc), worst)
+        sel = (np.ones(key.shape, bool) if len(key) <= k
+               else key <= np.partition(key, k - 1, axis=0)[k - 1])
+        if mask is not None:
+            sel &= mask
+        c2, q2 = np.nonzero(sel)
+        ci, qi = np.concatenate([ci, lo + c2]), np.concatenate([qi, q2])
+        sv = np.concatenate([sv, S[c2, q2].astype(dt)])
+        j = _first_k(_rank_key(sv, desc), cid[ci], qi, k)
+        ci, qi, sv = ci[j], qi[j], sv[j]
+    return ci, qi, sv
+
+
+def _topk(cands: DataFrame, probes: DataFrame, k: int, score, col: str = "qcos double",
+          desc: bool = True, differ: tuple[str, str] | None = None) -> DataFrame:
+    """The one ANN search.  ``cands`` (list_id, cand_id, qv, ...) meet the
+    ``probes`` (list_id, query_id, qv, ...) of their list in one cogroup
+    (qv holds the PQ codes on the candidate side of the ADC plans).  Per
+    group and block of at most _QBLOCK query rows, ``score(Q, list_id)``
+    prepares the scorer once (query norms, ADC tables) and ``_scan`` keeps
+    the top k per query over candidate blocks of at most _BLOCK score
+    cells.  ``differ`` = (cand column, query column) drops the pairs where
+    the two are equal.  ``_rank`` by ``col`` ends it.
+
+    A group holds its whole list in one Python worker: the candidate and
+    probe rows as the cogroup's pandas frames plus one int64 matrix each,
+    measured at ~1.8 KB per row at dim 64 (a 100,000-candidate list peaked
+    at 400 MB worker RSS, a 10,000 one at 240 MB, 1,000 queries each), and
+    a hot list is one task: cogroup groups cannot be split."""
+    name, typ = col.split()
+    dt = np.float64 if typ == "double" else np.int64
+
+    def group(cp, qp):
+        out = {"query_id": [np.empty(0, np.int64)], "cand_id": [np.empty(0, np.int64)],
+               name: [np.empty(0, dt)]}
+        if len(cp) and len(qp):
+            C = np.array(list(cp["qv"]), dtype=np.int64)
+            Q = np.array(list(qp["qv"]), dtype=np.int64)
+            cid = cp["cand_id"].to_numpy(np.int64)
+            qid = qp["query_id"].to_numpy(np.int64)
+            a, b = (None, None) if differ is None else (
+                cp[differ[0]].to_numpy()[:, None], qp[differ[1]].to_numpy()[None, :])
+            step = max(1, _BLOCK // min(len(Q), _QBLOCK))
+            for qlo in range(0, len(Q), _QBLOCK):
+                qs = slice(qlo, qlo + _QBLOCK)
+                ok = None if a is None else (lambda lo, hi: a[lo:hi] != b[:, qs])
+                ci, qi, sv = _scan(score(Q[qs], int(cp["list_id"].iat[0])), C, cid, ok,
+                                   k, desc, dt, step)
+                out["query_id"].append(qid[qlo + qi])
+                out["cand_id"].append(cid[ci])
+                out[name].append(sv)
+        return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+    # an explicit repartition: AQE does not coalesce it, so lists that hash
+    # to different partitions stay in different tasks
+    n = int(cands.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    rows = (cands.repartition(n, "list_id").groupBy("list_id")
+            .cogroup(probes.repartition(n, "list_id").groupBy("list_id"))
+            .applyInPandas(group, schema=f"query_id long, cand_id long, {col}"))
+    return _rank(rows, k, name, desc)
+
+
+@functools.lru_cache(maxsize=None)
+def _list_keys(n: int, P: int) -> tuple[int, ...]:
+    """keys[j]: the smallest int that Spark's hash partitioning over n
+    partitions sends to partition j, for j < P (Murmur3 with a fixed seed:
+    the same in every session, so computed once)."""
+    rows = SparkSession.active().range(64 * n).select(
+        F.col("id").cast("int").alias("key"),
+        F.expr(f"pmod(hash(CAST(id AS INT)), {n})").alias("part"),
+    ).filter(F.col("part") < P).groupBy("part").agg(F.min("key")).collect()
+    return tuple(r[1] for r in sorted(rows))
+
+
+def _all_lists(cands: DataFrame, probes: DataFrame):
+    """Exhaustive lists, one per core: a candidate's list is
+    keys[pmod(cand_id, P)] with P the default parallelism (at most the
+    shuffle partitions), and every query probes all P lists.  The keys
+    (``_list_keys``) put each list in its own partition, so in its own
+    task (the ints 0..3 would not: Murmur3 sends 0, 1 and 3 to one of 4
+    partitions)."""
+    spark = cands.sparkSession
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = _list_keys(n, min(spark.sparkContext.defaultParallelism, n))
+    lids = F.array(*[F.lit(x) for x in keys])
+    at = F.pmod("cand_id", F.lit(len(keys))).cast("int") + 1
+    return (cands.withColumn("list_id", F.element_at(lids, at)),
+            probes.withColumn("list_id", F.explode(lids)))
+
+
+def _queries(queries: DataFrame, qid_col: str, qvec_col: str, *extra) -> DataFrame:
+    return queries.select(F.col(qid_col).alias("query_id"),
+                          quantize_col(F.col(qvec_col)).alias("qv"), *extra)
+
+
+def _cands(vectors: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    return vectors.select(F.col(id_col).alias("cand_id"),
+                          quantize_col(F.col(vec_col)).alias("qv"), *extra)
+
+
 def brute_topk(
     vectors: DataFrame,
     query_ids: list[int],
@@ -56,61 +301,12 @@ def brute_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by quantized cosine.  Output (query_id, rank, cand_id, qcos).
-
-    Candidates stream through a numpy matmul per Arrow batch; only
-    k * n_partitions rows per query reach the final shuffle."""
-    spark = vectors.sparkSession
-    qrows = (
-        vectors.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, quantize_col(F.col(vec_col)).alias("qv"))
-        .collect()
-    )
-    qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.int64)
-    qnorm = (qmat.astype(np.float64) ** 2).sum(axis=1)  # exact: ints < 2^53
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    cand = vectors.select(
-        F.col(id_col).alias("cand_id"), quantize_col(F.col(vec_col)).alias("qv")
-    )
-
-    def partial(batches):
-        qids_, qmat_, qnorm_ = bc.value
-        best: dict[int, pd.DataFrame] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.array(list(pdf["qv"]), dtype=np.int64)
-            cn = (cmat.astype(np.float64) ** 2).sum(axis=1)
-            # exact integer dot via float128-free path: int64 matmul
-            dots = cmat @ qmat_.T  # int64 exact (|x|<=3e7, dim 64 -> < 2^62)
-            qcos = dots.astype(np.float64) / np.sqrt(cn[:, None] * qnorm_[None, :])
-            for j, qid in enumerate(qids_):
-                sub = pd.DataFrame(
-                    {
-                        "query_id": np.int64(qid),
-                        "cand_id": pdf["cand_id"].to_numpy(),
-                        "qcos": qcos[:, j],
-                    }
-                )
-                sub = sub[sub.cand_id != qid]
-                sub = sub.sort_values(["qcos", "cand_id"], ascending=[False, True]).head(k)
-                prev = best.get(qid)
-                best[qid] = (
-                    sub if prev is None
-                    else pd.concat([prev, sub]).sort_values(
-                        ["qcos", "cand_id"], ascending=[False, True]
-                    ).head(k)
-                )
-        if best:
-            yield pd.concat(best.values())
-
-    pruned = cand.mapInPandas(partial, schema="query_id long, cand_id long, qcos double")
-    w = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cand_id").asc())
-    return pruned.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).select(
-        "query_id", "rank", "cand_id", "qcos"
-    )
+    """Exact top-k by quantized cosine over the exhaustive lists; each
+    query's own row is excluded.  Output (query_id, rank, cand_id, qcos)."""
+    queries = vectors.filter(F.col(id_col).isin(query_ids))
+    cands, probes = _all_lists(_cands(vectors, id_col, vec_col),
+                               _queries(queries, id_col, vec_col))
+    return _topk(cands, probes, k, _qcos, differ=("cand_id", "query_id"))
 
 
 def near_dup_pairs_exact(
@@ -159,40 +355,13 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_bands: int = 4,
 ) -> DataFrame:
-    """Approximate top-k: sign-random-projection signature, banded buckets,
-    exact quantized-cosine re-rank within candidate buckets."""
-    spark = vectors.sparkSession
-    first = vectors.select(F.size(vec_col).alias("d")).first()
-    planes = _hyperplanes(int(first["d"]))
-    bcp = spark.sparkContext.broadcast(planes)
-    bits_per_band = N_PLANES // n_bands
-
-    def sign_bands(batches):
-        pl = bcp.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["qv"]), dtype=np.int64).astype(np.float64)
-            bits = (m @ pl.T) > 0
-            out = []
-            for band in range(n_bands):
-                seg = bits[:, band * bits_per_band : (band + 1) * bits_per_band]
-                key = (seg * (1 << np.arange(bits_per_band))).sum(axis=1)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "id": pdf["id"].to_numpy(),
-                            "band": band,
-                            "bkey": key.astype(np.int64),
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
+    """Approximate top-k: the banded sign-random-projection buckets of
+    ``near_dup_pairs_banded`` (``_band_keys_df``), an equi-join on bucket,
+    exact quantized-cosine re-rank of the bucket mates."""
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
     ).withColumn("nn", qnorm_col(F.col("qv")))
-    buckets = q.select("id", "qv").mapInPandas(sign_bands, schema="id long, band int, bkey long")
+    buckets = _band_keys_df(q, n_bands)
 
     qb = buckets.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), "band", "bkey"
@@ -218,8 +387,7 @@ def lsh_topk(
             qcos_col(qdot_col(F.col("vc"), F.col("vq")), F.col("nc"), F.col("nq")).alias("qcos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank(scored, k, "qcos", desc=True)
 
 
 # ------------------------------------------------- banded near-dup (scale path)
@@ -243,31 +411,20 @@ def _band_keys_df(q: DataFrame, n_bands: int) -> DataFrame:
 
     Exact: |qv|<=3e7, |plane|<=2^20, dim<=64 -> |dot| < 2^62; sign of an int64
     is deterministic across engines (ties broken by >= 0)."""
-    spark = q.sparkSession
     dim = int(q.select(F.size("qv").alias("d")).first()["d"])
-    bcp = spark.sparkContext.broadcast(planes_int(dim))
-    bits_per_band = N_PLANES // n_bands
+    bpb = N_PLANES // n_bands
 
-    def keys(batches):
-        pl = bcp.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["qv"]), dtype=np.int64)
-            bits = (m @ pl.T) >= 0
-            out = []
-            for band in range(n_bands):
-                seg = bits[:, band * bits_per_band : (band + 1) * bits_per_band]
-                key = (seg * (1 << np.arange(bits_per_band, dtype=np.int64))).sum(axis=1)
-                out.append(pd.DataFrame({
-                    "id": pdf["id"].to_numpy(),
-                    "band": np.int32(band),
-                    "bkey": key.astype(np.int64),
-                }))
-            yield pd.concat(out)
+    def body(pdf, M, pl):
+        bits = ((M @ pl.T) >= 0).reshape(len(M), n_bands, bpb)
+        keys = bits @ (1 << np.arange(bpb, dtype=np.int64))  # (n, n_bands)
+        return pd.DataFrame({
+            "id": np.tile(pdf["id"].to_numpy(), n_bands),
+            "band": np.repeat(np.arange(n_bands, dtype=np.int32), len(M)),
+            "bkey": keys.T.reshape(-1),
+        })
 
-    return q.select("id", "qv").mapInPandas(keys, schema="id long, band int, bkey long")
-
+    return _map_vecs(q.select("id", "qv"), "qv", planes_int(dim), body,
+                     "id long, band int, bkey long")
 
 def near_dup_pairs_banded(
     vectors: DataFrame,
@@ -391,68 +548,6 @@ WHERE CAST(CAST(list_sum(list_transform(list_zip(x.v, y.v), z -> z[1] * z[2])) A
 # Reference parity: the coarse-partition-then-refine shape mirrors SIS's
 # tree-index lookup (C/index/tree/QuadTree*.java) applied to vector space.
 
-def _assign_lists(q: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """(id, qv) -> (id, list_id): argmin over exact int64 squared distances.
-
-    dist = |v|^2 + |c|^2 - 2 v.c, all int64 (|v|,|c| <= 3e7, dim <= 64 ->
-    |dist| < 2^62).  np.argmin returns the first minimum -> lowest list id."""
-    spark = q.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
-
-    def go(batches):
-        C = bc.value
-        cn = (C * C).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["qv"]), dtype=np.int64)
-            nv = (M * M).sum(axis=1)
-            dist = nv[:, None] + cn[None, :] - 2 * (M @ C.T)
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(),
-                "list_id": dist.argmin(axis=1).astype(np.int32),
-            })
-
-    return q.select("id", "qv").mapInPandas(go, schema="id long, list_id int")
-
-
-def _assign_probes(qdf: DataFrame, centroids: np.ndarray, nprobe: int) -> DataFrame:
-    """(query_id, vq) -> nprobe rows (query_id, list_id): the nprobe nearest
-    centroids per query, ties -> lowest list id (stable argsort == the
-    lexsort((arange, dist)) rule), computed in the same broadcast-centroid
-    Arrow stage as _assign_lists — probe selection for a query TABLE of any
-    size with no driver-side per-query loop (r5; closes VERDICT r4
-    "What's wrong" #2)."""
-    spark = qdf.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
-    take = min(nprobe, len(centroids))
-
-    def go(batches):
-        C = bc.value
-        cn = (C * C).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["vq"]), dtype=np.int64)
-            nv = (M * M).sum(axis=1)
-            dist = nv[:, None] + cn[None, :] - 2 * (M @ C.T)
-            order = np.argsort(dist, axis=1, kind="stable")[:, :take]
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["query_id"].to_numpy(), take),
-                "list_id": order.reshape(-1).astype(np.int32),
-            })
-
-    return qdf.select("query_id", "vq").mapInPandas(
-        go, schema="query_id long, list_id int")
-
-
-def _quantized_queries(queries: DataFrame, qid_col: str, qvec_col: str) -> DataFrame:
-    return queries.select(
-        F.col(qid_col).alias("query_id"),
-        quantize_col(F.col(qvec_col)).alias("vq"),
-    )
-
-
 def train_ivf(
     vectors: DataFrame,
     nlist: int,
@@ -460,30 +555,11 @@ def train_ivf(
     vec_col: str = "embedding",
     iters: int = 1,
 ) -> np.ndarray:
-    """Deterministic k-means coarse quantizer; returns int64 (nlist, dim).
-
-    Init = the nlist lowest-id vectors; each Lloyd iteration assigns
-    distributed (one mapInPandas + one posexplode/groupBy shuffle of
-    nlist*dim rows) and updates centroids as exact floor-divided means.
-    Only nlist*dim scalars ever reach the driver per iteration."""
-    q = vectors.select(
-        F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
-    )
-    init = q.orderBy("id").limit(nlist).collect()
-    cent = np.array([r["qv"] for r in init], dtype=np.int64)
-    for _ in range(iters):
-        assigned = q.join(_assign_lists(q, cent), "id")
-        sums = (
-            assigned.select("list_id", F.posexplode("qv").alias("pos", "val"))
-            .groupBy("list_id", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        new = cent.copy()  # empty clusters keep their previous centroid
-        for r in sums:
-            new[r["list_id"], r["pos"]] = np.floor_divide(int(r["s"]), int(r["cnt"]))
-        cent = new
-    return cent
+    """Deterministic k-means coarse quantizer; returns int64 (nlist, dim):
+    ``train_pq`` with one subspace of nlist codes (lowest-id init, exact
+    floor-divided Lloyd update; only nlist*dim scalars reach the driver
+    per iteration)."""
+    return train_pq(vectors, 1, nlist, id_col, vec_col, iters)[0]
 
 
 def ivf_topk_df(
@@ -498,50 +574,23 @@ def ivf_topk_df(
     query_id_col: str | None = None,
     query_vec_col: str | None = None,
     exclude_self: bool = False,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF top-k by quantized cosine over a query DATAFRAME.
     Output (query_id, rank, cand_id, qcos).
 
-    100-TB plan: posting-list assignment is map-only; probe selection for
-    the queries runs in the same broadcast-centroid Arrow stage
-    (_assign_probes), so a query table of millions of rows stays
-    distributed end-to-end — no driver-side per-query loop anywhere.  The
-    search touches only ~nprobe/nlist of the collection per query via an
-    equi-join on list_id (no all-pairs, no BroadcastNestedLoopJoin);
-    nprobe == nlist degrades gracefully to the exact brute answer
-    (asserted in pytest).  ``broadcast_queries=False`` drops the broadcast
-    hints for a query table too large to broadcast (the joins then shuffle
-    on list_id / query_id — the right plan at batch-retrieval scale).
-    ``exclude_self=True`` drops the candidate whose id equals the query
-    id — only for queries drawn from the collection itself."""
+    Candidates are keyed by their nearest centroid and every query probes
+    its nprobe nearest lists, both in map-only Arrow stages, so a query
+    table of any size stays distributed; each list meets its probes in the
+    ``_topk`` cogroup (no all-pairs join).  nprobe == nlist is the exact
+    brute answer (asserted in pytest).  ``exclude_self=True`` drops the
+    candidate whose id equals the query id — only for queries drawn from
+    the collection itself."""
     cent = train_ivf(vectors, nlist, id_col, vec_col, iters)
-
-    q = vectors.select(
-        F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
-    ).withColumn("nn", qnorm_col(F.col("qv")))
-    lists = q.join(_assign_lists(q, cent), "id")
-
-    qdf = _quantized_queries(
-        queries, query_id_col or id_col, query_vec_col or vec_col
-    ).withColumn("nq", qnorm_col(F.col("vq")))
-    probes_df = _assign_probes(qdf, cent, nprobe)
-    if broadcast_queries:
-        probes_df = F.broadcast(probes_df)
-        qdf = F.broadcast(qdf)
-
-    scored = lists.join(probes_df, "list_id")
-    if exclude_self:
-        scored = scored.filter(F.col("id") != F.col("query_id"))
-    scored = scored.join(qdf, "query_id").select(
-        "query_id",
-        F.col("id").alias("cand_id"),
-        qcos_col(qdot_col(F.col("qv"), F.col("vq")), F.col("nn"), F.col("nq")).alias("qcos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).select(
-        "query_id", "rank", "cand_id", "qcos"
-    )
+    cands = _lists(_cands(vectors, id_col, vec_col), cent)
+    probes = _lists(_queries(queries, query_id_col or id_col,
+                             query_vec_col or vec_col), cent, nprobe)
+    return _topk(cands, probes, k, _qcos,
+                 differ=("cand_id", "query_id") if exclude_self else None)
 
 
 def ivf_topk(
@@ -644,32 +693,6 @@ WHERE rank <= {k} ORDER BY query_id, rank"""
 # ADC method (Jegou, Douze, Schmid, "Product Quantization for Nearest
 # Neighbor Search", IEEE TPAMI 2011 — public knowledge).
 
-def _assign_codes(q: DataFrame, books: np.ndarray) -> DataFrame:
-    """(id, qv) -> (id, codes array<int>): per-subspace argmin over exact
-    int64 squared distances; ties -> lowest code (np.argmin first-min)."""
-    spark = q.sparkSession
-    bc = spark.sparkContext.broadcast(books)
-
-    def go(batches):
-        B = bc.value                       # (m, ksub, subdim) int64
-        m, ksub, sd = B.shape
-        bn = (B * B).sum(axis=2)           # (m, ksub)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["qv"]), dtype=np.int64)
-            S = M.reshape(len(M), m, sd)
-            sn = (S * S).sum(axis=2)       # (n, m)
-            dots = np.einsum("nms,mks->nmk", S, B)  # int64 exact
-            dist = sn[:, :, None] + bn[None, :, :] - 2 * dots
-            codes = dist.argmin(axis=2).astype(np.int32)
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(), "codes": list(codes),
-            })
-
-    return q.select("id", "qv").mapInPandas(go, schema="id long, codes array<int>")
-
-
 def train_pq(
     vectors: DataFrame,
     m: int = 8,
@@ -680,11 +703,10 @@ def train_pq(
 ) -> np.ndarray:
     """Deterministic per-subspace k-means codebooks, int64 (m, ksub, subdim).
 
-    Same exact-integer recipe as train_ivf: init = subvectors of the ksub
-    lowest-id vectors, one distributed assignment pass for ALL subspaces at
-    once (one mapInPandas), centroid update = exact floor-divided means via
-    one posexplode/groupBy of m*ksub*subdim cells.  Empty codes keep their
-    previous centroid."""
+    Exact-integer recipe: init = subvectors of the ksub lowest-id vectors,
+    one distributed assignment pass for ALL subspaces at once (``_codes``),
+    centroid update = exact floor-divided means via one posexplode/groupBy
+    of m*ksub*subdim cells.  Empty codes keep their previous centroid."""
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
     )
@@ -700,11 +722,11 @@ def train_pq_quantized(q: DataFrame, m: int, ksub: int, iters: int = 1) -> np.nd
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sd = dim // m
-    books = arr.reshape(ksub, m, sd).transpose(1, 0, 2).copy()  # (m, ksub, sd)
+    books = arr.reshape(len(arr), m, sd).transpose(1, 0, 2).copy()  # (m, ksub, sd)
     for _ in range(iters):
-        assigned = q.join(_assign_codes(q, books), "id")
         sums = (
-            assigned.select("codes", F.posexplode("qv").alias("pos", "val"))
+            _codes(q.select("id", "qv"), books)
+            .select("codes", F.posexplode("qv").alias("pos", "val"))
             .withColumn("sub", F.expr(f"CAST(pos DIV {sd} AS INT)"))
             .withColumn("code", F.expr(f"codes[CAST(pos DIV {sd} AS INT)]"))
             .groupBy("sub", "code", "pos")
@@ -718,35 +740,6 @@ def train_pq_quantized(q: DataFrame, m: int, ksub: int, iters: int = 1) -> np.nd
             )
         books = new
     return books
-
-
-def _adc_tables(qdf: DataFrame, books: np.ndarray) -> DataFrame:
-    """(query_id, vq) -> (query_id, tab array<long> of m*ksub row-major ADC
-    cells |q_sub - codeword|^2): the per-query lookup tables, computed in
-    one broadcast-codebook Arrow stage — a query TABLE of any size builds
-    its tables distributed, no driver-side per-query einsum loop (r5)."""
-    spark = qdf.sparkSession
-    bc = spark.sparkContext.broadcast(books)
-
-    def go(batches):
-        B = bc.value                       # (m, ksub, sd) int64
-        m_, ksub_, sd_ = B.shape
-        bn = (B * B).sum(axis=2)           # (m, ksub)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["vq"]), dtype=np.int64)
-            S = M.reshape(len(M), m_, sd_)
-            sn = (S * S).sum(axis=2)       # (n, m)
-            dots = np.einsum("nms,mks->nmk", S, B)
-            tabs = sn[:, :, None] + bn[None, :, :] - 2 * dots
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy(),
-                "tab": list(tabs.reshape(len(M), -1)),
-            })
-
-    return qdf.select("query_id", "vq").mapInPandas(
-        go, schema="query_id long, tab array<long>")
 
 
 def pq_topk_df(
@@ -767,74 +760,17 @@ def pq_topk_df(
     adist = sum over subspaces of |q_sub - codeword(cand)|^2 — ranking
     ascending, ties -> lowest cand_id.
 
-    100-TB plan: the collection is scanned as m int8/int32 CODES per row
-    (dim*8 bytes -> m bytes in a real deployment — the compressed-domain
-    scan is the point of PQ), each Arrow batch does n*m table LOOKUPS
-    instead of n*dim multiply-adds, and only k rows per (query, partition)
-    reach the final shuffle (same partial/final shape as brute_topk).
-    Per-query ADC tables are computed DISTRIBUTED (_adc_tables); the
-    driver only repackages the collected tables into one broadcast
-    (nq*m*ksub int64 — ~100 MB at 1e5 queries, the exhaustive-ADC
-    broadcast bound; past that use ivf_pq_topk's posting lists, which is
-    the correct batch-retrieval shape anyway).  ``exclude_self`` as in
-    ivf_topk_df."""
-    spark = vectors.sparkSession
+    The collection is scanned as m codes per row over the exhaustive
+    lists: each ``_topk`` group builds the ADC tables of its probe rows
+    and scores a candidate with m table lookups per query instead of dim
+    multiply-adds.  ``exclude_self`` as in ivf_topk_df."""
     books = train_pq(vectors, m, ksub, id_col, vec_col, iters)
-
-    q = vectors.select(
-        F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
-    )
-    codes = _assign_codes(q, books).withColumnRenamed("id", "cand_id")
-
-    qdf = _quantized_queries(queries, query_id_col or id_col,
-                             query_vec_col or vec_col)
-    lut = _adc_tables(qdf, books).collect()
-    lut.sort(key=lambda r: r["query_id"])
-    qids_arr = np.array([r["query_id"] for r in lut], dtype=np.int64)
-    tabs_arr = (np.array([r["tab"] for r in lut], dtype=np.int64)
-                .reshape(len(lut), m, ksub)
-                if lut else np.empty((0, m, ksub), dtype=np.int64))
-    bc = spark.sparkContext.broadcast((qids_arr, tabs_arr))
-
-    def partial(batches):
-        qids_, tabs_ = bc.value            # (nq,), (nq, m, ksub)
-        best: dict[int, pd.DataFrame] = {}
-        marange = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            # ADC: per query, sum of m table lookups per candidate row
-            for j, qid in enumerate(qids_):
-                adist = tabs_[j][marange[None, :], C].sum(axis=1)
-                sub = pd.DataFrame({
-                    "query_id": np.int64(qid),
-                    "cand_id": pdf["cand_id"].to_numpy(),
-                    "adist": adist,
-                })
-                if exclude_self:
-                    sub = sub[sub.cand_id != qid]
-                sub = sub.sort_values(["adist", "cand_id"]).head(k)
-                prev = best.get(qid)
-                best[qid] = (
-                    sub if prev is None
-                    else pd.concat([prev, sub]).sort_values(
-                        ["adist", "cand_id"]).head(k)
-                )
-        if best:
-            yield pd.concat(best.values())
-
-    pruned = codes.mapInPandas(
-        partial, schema="query_id long, cand_id long, adist long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("cand_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "adist")
-    )
+    cands = _codes(_cands(vectors, id_col, vec_col), books).select(
+        "cand_id", F.col("codes").alias("qv"))
+    cands, probes = _all_lists(cands, _queries(
+        queries, query_id_col or id_col, query_vec_col or vec_col))
+    return _topk(cands, probes, k, _adc(books), "adist long", desc=False,
+                 differ=("cand_id", "query_id") if exclude_self else None)
 
 
 def pq_topk(
@@ -955,151 +891,31 @@ def ivf_pq_topk_df(
     exclude_self: bool = False,
 ) -> DataFrame:
     """IVF-PQ over a query DATAFRAME: coarse posting lists (train_ivf) +
-    product-quantized RESIDUALS (v - centroid[list]) + per-(query, list)
-    ADC tables — the standard billion-scale ANN layout (inverted file
-    limits the scan to ~nprobe/nlist of the collection; residual PQ makes
-    what IS scanned m code lookups per row).  Probe selection AND the
-    per-(query, probe) residual ADC tables are computed in distributed
-    Arrow stages (_assign_probes + a residual-table mapInPandas); the
-    driver only repackages the collected tables into the per-list
-    broadcast (nq*nprobe*m*ksub int64 cells — the broadcast bound for the
-    scatter-gather serving shape).  All arithmetic int64-exact, ties ->
-    lowest id; nprobe == nlist and ksub >= n degrades to the exact brute
-    answer (asserted in pytest).  Output (query_id, rank, cand_id, adist);
-    ``exclude_self`` as in ivf_topk_df."""
-    spark = vectors.sparkSession
+    product-quantized RESIDUALS (v - centroid[list]) — the standard
+    billion-scale ANN layout (the inverted file limits the scan to
+    ~nprobe/nlist of the collection; residual PQ makes what IS scanned m
+    code lookups per row).  Each ``_topk`` group builds the ADC tables of
+    its probe rows from the query residuals against the group's centroid.
+    All arithmetic int64-exact, ties -> lowest id; nprobe == nlist and
+    ksub >= n degrades to the exact brute answer (asserted in pytest).
+    Output (query_id, rank, cand_id, adist); ``exclude_self`` as in
+    ivf_topk_df."""
     cent = train_ivf(vectors, nlist, id_col, vec_col, iters)
-    q = vectors.select(
-        F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
-    )
-    lists = q.join(_assign_lists(q, cent), "id")
-    bc_cent = spark.sparkContext.broadcast(cent)
+    lists = _lists(_cands(vectors, id_col, vec_col), cent)
 
-    def resid(batches):
-        C = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["qv"]), dtype=np.int64)
-            L = pdf["list_id"].to_numpy()
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(), "list_id": L,
-                "qv": list(M - C[L]),
-            })
+    def resid(pdf, M, C):
+        return pdf.assign(qv=list(M - C[pdf["list_id"].to_numpy()]))
 
-    rq = lists.mapInPandas(resid, "id long, list_id int, qv array<long>")
-    rq = rq.persist()
-    try:
-        books = train_pq_quantized(rq.select("id", "qv"), m, ksub, iters)
-        bc_books = spark.sparkContext.broadcast(books)
-
-        def encode(batches):
-            B = bc_books.value
-            m_, ksub_, sd_ = B.shape
-            bnl = (B * B).sum(axis=2)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                M = np.array(list(pdf["qv"]), dtype=np.int64)
-                S = M.reshape(len(M), m_, sd_)
-                sn = (S * S).sum(axis=2)
-                dots = np.einsum("nms,mks->nmk", S, B)
-                dist = sn[:, :, None] + bnl[None, :, :] - 2 * dots
-                yield pd.DataFrame({
-                    "cand_id": pdf["id"].to_numpy(),
-                    "list_id": pdf["list_id"].to_numpy(),
-                    "codes": list(dist.argmin(axis=2).astype(np.int32)),
-                })
-
-        enc = rq.mapInPandas(encode, "cand_id long, list_id int, codes array<int>")
-
-        # per-(query, probed list) residual ADC tables, computed in one
-        # distributed Arrow stage: probe rows from _assign_probes joined
-        # back to the query vectors, residual tables built per batch
-        qdf = _quantized_queries(queries, query_id_col or id_col,
-                                 query_vec_col or vec_col)
-        probe_rows = _assign_probes(qdf, cent, nprobe).join(qdf, "query_id")
-        bc_pq = spark.sparkContext.broadcast((cent, books))
-
-        def probe_tabs(batches):
-            C, B = bc_pq.value
-            m_, ksub_, sd_ = B.shape
-            bnl = (B * B).sum(axis=2)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.array(list(pdf["vq"]), dtype=np.int64)
-                L = pdf["list_id"].to_numpy()
-                R = (V - C[L]).reshape(len(V), m_, sd_)
-                sn = (R * R).sum(axis=2)
-                dots = np.einsum("nms,mks->nmk", R, B)
-                tabs = sn[:, :, None] + bnl[None, :, :] - 2 * dots
-                yield pd.DataFrame({
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "list_id": L,
-                    "tab": list(tabs.reshape(len(V), -1)),
-                })
-
-        lut = probe_rows.mapInPandas(
-            probe_tabs, schema="query_id long, list_id int, tab array<long>"
-        ).collect()
-        lut.sort(key=lambda r: (r["list_id"], r["query_id"]))
-        probes: dict[int, list] = {}
-        for r in lut:
-            probes.setdefault(int(r["list_id"]), []).append(
-                (int(r["query_id"]),
-                 np.array(r["tab"], dtype=np.int64).reshape(m, ksub)))
-        bc_probes = spark.sparkContext.broadcast(probes)
-
-        def partial(batches):
-            P = bc_probes.value
-            best: dict[int, pd.DataFrame] = {}
-            ar = np.arange(m)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                C = np.array(list(pdf["codes"]), dtype=np.int64)
-                L = pdf["list_id"].to_numpy()
-                ids_ = pdf["cand_id"].to_numpy()
-                for lid in np.unique(L):
-                    hits = P.get(int(lid))
-                    if not hits:
-                        continue
-                    mask = L == lid
-                    Cm, im = C[mask], ids_[mask]
-                    for qid, tab in hits:
-                        adist = tab[ar[None, :], Cm].sum(axis=1)
-                        sub = pd.DataFrame({
-                            "query_id": np.int64(qid), "cand_id": im,
-                            "adist": adist,
-                        })
-                        if exclude_self:
-                            sub = sub[sub.cand_id != qid]
-                        sub = sub.sort_values(["adist", "cand_id"]).head(k)
-                        prev = best.get(qid)
-                        best[qid] = (
-                            sub if prev is None
-                            else pd.concat([prev, sub]).sort_values(
-                                ["adist", "cand_id"]).head(k)
-                        )
-            if best:
-                yield pd.concat(best.values())
-
-        pruned = enc.mapInPandas(
-            partial, schema="query_id long, cand_id long, adist long"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adist").asc(), F.col("cand_id").asc()
-        )
-        out = (
-            pruned.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "cand_id", "adist")
-        )
-        out = out.localCheckpoint()  # materialize before unpersisting rq
-        return out
-    finally:
-        rq.unpersist()
+    # eager localCheckpoint: the residuals feed the training passes and the
+    # encoding, and checkpoint blocks are not pinned in the CacheManager
+    rq = _map_vecs(lists, "qv", cent, resid, lists.schema).localCheckpoint()
+    books = train_pq_quantized(rq.select(F.col("cand_id").alias("id"), "qv"),
+                               m, ksub, iters)
+    cands = _codes(rq, books).select("list_id", "cand_id", F.col("codes").alias("qv"))
+    probes = _lists(_queries(queries, query_id_col or id_col,
+                             query_vec_col or vec_col), cent, nprobe)
+    return _topk(cands, probes, k, _adc(books, cent), "adist long", desc=False,
+                 differ=("cand_id", "query_id") if exclude_self else None)
 
 
 def ivf_pq_topk(
@@ -1266,34 +1082,19 @@ def pq_recon_error(
     trained codebook).  The compression-quality audit run before
     shipping a PQ index — rising recon error is the re-train signal.
 
-    Shape: training is the train_pq broadcast; the scan is one
-    Arrow-batched pass (n*m*ksub integer ops per batch), no shuffle."""
-    spark = vectors.sparkSession
+    Shape: training is ``train_pq``; the scan is one Arrow-batched pass of
+    the distance kernel (n*m*ksub integer ops per batch), no shuffle."""
     books = train_pq(vectors, m, ksub, id_col, vec_col, iters)
-    m_, ksub_, sd = books.shape
-    bn = (books * books).sum(axis=2)  # (m, ksub)
-    bc = spark.sparkContext.broadcast((books, bn))
+    m_, _, sd = books.shape
+
+    def body(pdf, M, B):
+        err = _sqdist(M.reshape(len(M), m_, sd), B).min(axis=2).sum(axis=1)
+        return pd.DataFrame({"id": pdf["id"].to_numpy(), "err": err})
 
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
     )
-
-    def fn(batches):
-        B, BN = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["qv"]), dtype=np.int64)
-            S = M.reshape(len(M), m_, sd)
-            sn = (S * S).sum(axis=2)
-            dots = np.einsum("nms,mks->nmk", S, B)
-            dist = sn[:, :, None] + BN[None, :, :] - 2 * dots
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(),
-                "err": dist.min(axis=2).sum(axis=1),
-            })
-
-    return q.mapInPandas(fn, schema="id long, err long")
+    return _map_vecs(q, "qv", books, body, "id long, err long")
 
 
 def pq_recon_error_sql(
@@ -1333,69 +1134,14 @@ def hard_negative_topk(
     """Hard-negative mining (the contrastive-training data op): for each
     query, the exact top-k nearest candidates whose LABEL DIFFERS from
     the query's — the near-misses a contrastive loss learns most from.
-    Same shape as ``brute_topk`` (broadcast queries, per-Arrow-batch
-    numpy matmul, k rows per query per partition reach the shuffle); the
-    label predicate is applied BEFORE the per-partition top-k so k never
-    shrinks.  Output (query_id, rank, cand_id, qcos)."""
-    spark = vectors.sparkSession
-    qrows = (
-        vectors.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, quantize_col(F.col(vec_col)).alias("qv"),
-                F.col(label_col).alias("lbl"))
-        .collect()
-    )
-    qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.int64)
-    qlbl = np.array([r["lbl"] for r in qrows], dtype=np.int64)
-    qnorm = (qmat.astype(np.float64) ** 2).sum(axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm, qlbl))
-
-    cand = vectors.select(
-        F.col(id_col).alias("cand_id"),
-        quantize_col(F.col(vec_col)).alias("qv"),
-        F.col(label_col).alias("lbl"),
-    )
-
-    def partial(batches):
-        qids_, qmat_, qnorm_, qlbl_ = bc.value
-        best: dict[int, pd.DataFrame] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.array(list(pdf["qv"]), dtype=np.int64)
-            cn = (cmat.astype(np.float64) ** 2).sum(axis=1)
-            dots = cmat @ qmat_.T
-            qcos = dots.astype(np.float64) / np.sqrt(
-                cn[:, None] * qnorm_[None, :])
-            clbl = pdf["lbl"].to_numpy()
-            for j, qid in enumerate(qids_):
-                keep = clbl != qlbl_[j]
-                sub = pd.DataFrame({
-                    "query_id": np.int64(qid),
-                    "cand_id": pdf["cand_id"].to_numpy()[keep],
-                    "qcos": qcos[keep, j],
-                })
-                sub = sub.sort_values(
-                    ["qcos", "cand_id"], ascending=[False, True]).head(k)
-                prev = best.get(qid)
-                best[qid] = (
-                    sub if prev is None
-                    else pd.concat([prev, sub]).sort_values(
-                        ["qcos", "cand_id"], ascending=[False, True]
-                    ).head(k)
-                )
-        if best:
-            yield pd.concat(best.values())
-
-    pruned = cand.mapInPandas(
-        partial, schema="query_id long, cand_id long, qcos double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cand_id").asc())
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "qcos")
-    )
+    ``brute_topk``'s exhaustive plan with the label predicate applied
+    inside each group before its top-k, so k never shrinks.  Output
+    (query_id, rank, cand_id, qcos)."""
+    lbl = F.col(label_col).alias("lbl")
+    queries = vectors.filter(F.col(id_col).isin(query_ids))
+    cands, probes = _all_lists(_cands(vectors, id_col, vec_col, lbl),
+                               _queries(queries, id_col, vec_col, lbl))
+    return _topk(cands, probes, k, _qcos, differ=("lbl", "lbl"))
 
 
 def mmr_select(
@@ -1417,59 +1163,15 @@ def mmr_select(
     ties cand_id asc.  All scores are int64 (|dot| <= 64 * (3e7)^2 *
     lam < 2^62) — both engines replay the greedy bit-exact.
 
-    Shape: broadcast queries + per-partition integer-dot top-pool (the
-    brute_topk shape), one equi-join back for candidate vectors, then a
+    Shape: the pool is ``brute_topk``'s exhaustive plan scored by the
+    integer dot, one equi-join back for candidate vectors, then a
     per-query greedy over <= pool rows (tiny) in applyInPandas.  Output
     (query_id, pos, cand_id, rel)."""
-    spark = vectors.sparkSession
-    qrows = (
-        vectors.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, quantize_col(F.col(vec_col)).alias("qv"))
-        .collect()
-    )
-    qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((qids, qmat))
-    m = int(pool)
-
-    cand = vectors.select(
-        F.col(id_col).alias("cand_id"),
-        quantize_col(F.col(vec_col)).alias("qv"),
-    )
-
-    def partial(batches):
-        qids_, qmat_ = bc.value
-        best: dict[int, pd.DataFrame] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.array(list(pdf["qv"]), dtype=np.int64)
-            dots = cmat @ qmat_.T
-            for j, qid in enumerate(qids_):
-                sub = pd.DataFrame({
-                    "query_id": np.int64(qid),
-                    "cand_id": pdf["cand_id"].to_numpy(),
-                    "rel": dots[:, j],
-                })
-                sub = sub[sub.cand_id != qid]
-                sub = sub.sort_values(
-                    ["rel", "cand_id"], ascending=[False, True]).head(m)
-                prev = best.get(qid)
-                best[qid] = (
-                    sub if prev is None
-                    else pd.concat([prev, sub]).sort_values(
-                        ["rel", "cand_id"], ascending=[False, True]
-                    ).head(m)
-                )
-        if best:
-            yield pd.concat(best.values())
-
-    pruned = cand.mapInPandas(
-        partial, schema="query_id long, cand_id long, rel long")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("cand_id").asc())
-    top = pruned.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= m)
+    queries = vectors.filter(F.col(id_col).isin(query_ids))
+    cand = _cands(vectors, id_col, vec_col)
+    cands, probes = _all_lists(cand, _queries(queries, id_col, vec_col))
+    top = _topk(cands, probes, int(pool), _qdot, "rel long",
+                differ=("cand_id", "query_id"))
     withvec = top.join(
         cand.withColumnRenamed("qv", "cv"), ["cand_id"]
     ).select("query_id", "cand_id", "rel", "cv")
@@ -1477,9 +1179,6 @@ def mmr_select(
     kk = int(k)
 
     def greedy(key, pdf):
-        if not len(pdf):
-            return pd.DataFrame({"query_id": [], "pos": [], "cand_id": [],
-                                 "rel": []})
         pdf = pdf.sort_values(["rel", "cand_id"],
                               ascending=[False, True]).reset_index(drop=True)
         V = np.array(list(pdf["cv"]), dtype=np.int64)
@@ -1487,20 +1186,17 @@ def mmr_select(
         ids = pdf["cand_id"].to_numpy().astype(np.int64)
         sims = V @ V.T
         chosen = [0]                      # row 0 = max rel, min id tie
-        remaining = list(range(1, len(pdf)))
-        while remaining and len(chosen) < kk:
-            best_i, best_score = None, None
-            for i in remaining:
-                msim = max(int(sims[i, s]) for s in chosen)
-                score = ln * int(rel[i]) - ld * msim
-                if (best_score is None or score > best_score
-                        or (score == best_score
-                            and ids[i] < ids[best_i])):
-                    best_i, best_score = i, score
-            chosen.append(best_i)
-            remaining.remove(best_i)
+        free = np.arange(len(pdf)) > 0
+        msim = sims[:, 0].copy()          # max sim to the chosen set
+        while free.any() and len(chosen) < kk:
+            score = ln * rel - ld * msim
+            rest = np.flatnonzero(free)
+            i = rest[np.lexsort((ids[rest], -score[rest]))[0]]
+            chosen.append(i)
+            free[i] = False
+            msim = np.maximum(msim, sims[:, i])
         return pd.DataFrame({
-            "query_id": np.int64(key[0]),
+            "query_id": np.full(len(chosen), key[0], dtype=np.int64),
             "pos": np.arange(1, len(chosen) + 1, dtype=np.int64),
             "cand_id": ids[chosen],
             "rel": rel[chosen],

@@ -177,13 +177,13 @@ def kmeans_assign(
     more broadcast pass; csize is a window count over k keys."""
     from pyspark.sql import Window
 
-    from .ann import _assign_lists, quantize_col, train_ivf
+    from .ann import _lists, quantize_col, train_ivf
 
     cent = train_ivf(vectors, k, id_col, vec_col, iters=iters)
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
     )
-    assigned = q.join(_assign_lists(q, cent), "id").select(
+    assigned = _lists(q, cent).select(
         F.col("id").alias(id_col), F.col("list_id").alias("cluster")
     )
     w = Window.partitionBy("cluster")

@@ -546,14 +546,14 @@ HIST_SCHEMA = "image_id string, channel int, bin int, n long"
 
 
 def color_histogram(images: DataFrame, bins: int = HIST_BINS) -> DataFrame:
-    """Per-channel color histogram (``bins`` equal-width buckets of 0..255):
+    """Per-channel color histogram (``bins`` buckets of 0..255, value v in
+    bin v * bins // 256 — equal width when ``bins`` divides 256):
     (image_id, channel, bin, n) with zero bins emitted, so every image
     yields exactly 3*bins rows — the stable shape a downstream histogram
     join or chi-square near-dup distance needs.  One Arrow pass, no shuffle."""
-    width = 256 // bins
 
     def fn(r, arr):
-        n = [np.bincount((arr[:, :, k].astype(np.int64) // width).ravel(),
+        n = [np.bincount((arr[:, :, k].astype(np.int64) * bins // 256).ravel(),
                          minlength=bins) for k in range(3)]
         return {"image_id": r["image_id"], "channel": np.repeat(np.arange(3), bins),
                 "bin": np.tile(np.arange(bins), 3), "n": np.concatenate(n)}

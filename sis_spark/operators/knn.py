@@ -276,7 +276,9 @@ def knn_join_cells(
     hres = min(res, SEED_RES_CAP)
     # lon wrapped into [-180, 180) before the cell id, as for the queries
     wrapped = F.pmod(F.col(cand_lon) + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
-    cand = cand.withColumn("__cell", cell_col(wrapped, F.col(cand_lat), res)).persist()
+    # eager localCheckpoint, not persist: the histogram and the join both
+    # read cand, and checkpoint blocks are not pinned in the CacheManager
+    cand = cand.withColumn("__cell", cell_col(wrapped, F.col(cand_lat), res)).localCheckpoint()
 
     hist = (
         cand.groupBy(F.shiftright("__cell", 2 * (res - hres)).alias("__hc"))

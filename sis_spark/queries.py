@@ -3773,7 +3773,7 @@ def q_ann_ivf(spark, sf_dir):
     """IVF top-k: deterministic k-means coarse quantizer (one exact-integer
     Lloyd iteration, lowest-id init) -> posting lists -> nprobe-list probe
     search.  The second mandated ANN scale path next to LSH buckets: the
-    search equi-joins a broadcast probe table against the list assignment, so
+    search cogroups the query probes with the posting lists on list_id, so
     each query scans ~nprobe/nlist of the collection — no all-pairs join.
     The oracle replicates the TRAINING too, bit for bit (floor-divided
     integer centroid means)."""

@@ -99,6 +99,29 @@ def test_gray_hist_exact(spark):
     assert out == want
 
 
+def test_color_histogram_bins_not_dividing_256(spark):
+    """bins = 3: value v lands in bin v * 3 // 256, so 255 is in bin 2 and
+    every image still gives 3 * bins rows whose counts sum to h * w."""
+    import numpy as np
+
+    from sis_spark.operators.imageops import color_histogram
+    from sis_spark.raster import codec
+
+    arr = np.arange(48, dtype=np.int64).reshape(4, 4, 3) * 17 % 256
+    arr[0, 0] = 255
+    df = spark.createDataFrame(
+        [("a", codec.encode(arr.astype(np.uint8), "raw"), "raw")],
+        "image_id string, bytes binary, fmt string",
+    )
+    rows = color_histogram(df, bins=3).collect()
+    assert len(rows) == 9
+    for ch in range(3):
+        got = {r["bin"]: r["n"] for r in rows if r["channel"] == ch}
+        want = np.bincount(arr[:, :, ch].ravel() * 3 // 256, minlength=3)
+        assert sum(got.values()) == 16
+        assert [got[b] for b in range(3)] == want.tolist()
+
+
 def test_gamma_lut_monotone_and_roundtrip_ends(spark):
     from sis_spark.raster.tiles import gamma_lut
 

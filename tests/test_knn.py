@@ -80,7 +80,10 @@ def _knn_sets(spark, cand, q, k, res):
     cdf = spark.createDataFrame(cand, "cand_id long, lon double, lat double")
     qdf = spark.createDataFrame(q, "query_id long, qlon double, qlat double")
     brute = {tuple(r) for r in knn_join(cdf, qdf, k).select("query_id", "rank", "cand_id").collect()}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     cells = {tuple(r) for r in knn_join_cells(cdf, qdf, k, res=res).collect()}
+    assert cache.numCachedEntries() == cached  # the call leaves no cache entry
     return brute, cells
 
 

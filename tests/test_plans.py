@@ -115,8 +115,8 @@ def test_banded_near_dup_no_nested_loop_join(spark, sf_dir):
 
 
 def test_ann_ivf_no_nested_loop_join(spark, sf_dir):
-    """The IVF search is a broadcast probe-table equi-join against the
-    posting-list assignment — per query it touches ~nprobe/nlist of the
+    """The IVF search is one cogroup of the posting lists with the query
+    probes on list_id — per query it touches ~nprobe/nlist of the
     collection; no all-pairs join may appear anywhere in the plan."""
     from sis_spark.queries import q_ann_ivf
 
