@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udfs import _map_rows
+
 
 def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — one partial-agg shuffle."""
@@ -142,8 +144,6 @@ def bpe_encode(
 
     The merge loop runs Arrow-batched over DISTINCT corpus words only; the
     per-occurrence cost is a broadcast-or-shuffle equi-join on the word."""
-    import pandas as pd
-
     ranks = {p: i for i, p in enumerate(merges)}
     spark = docs.sparkSession
     ranks_b = spark.sparkContext.broadcast(ranks)
@@ -153,17 +153,11 @@ def bpe_encode(
     )
     distinct_words = words.select("word").distinct()
 
-    def enc(batches):
-        rk = ranks_b.value
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "n_sym": [len(encode_word(w, rk)) for w in pdf["word"]],
-                }
-            )
+    def enc(row):
+        return {"word": row["word"],
+                "n_sym": len(encode_word(row["word"], ranks_b.value))}
 
-    encoded = distinct_words.mapInPandas(enc, schema="word string, n_sym long")
+    encoded = _map_rows(distinct_words, "word string, n_sym long", [], None, enc)
     return (
         words.join(encoded, "word")
         .groupBy(id_col)

@@ -456,7 +456,9 @@ def incremental_dedup(
     """
     from .graph import dedup_clusters
 
-    bands = doc_bands(new_docs, n, text_col, id_col).persist()
+    # eager localCheckpoint, not persist: GC-reclaimed instead of pinned in
+    # the CacheManager until session end
+    bands = doc_bands(new_docs, n, text_col, id_col).localCheckpoint()
 
     if seen_bands is not None:
         hist_hit = (
@@ -606,7 +608,8 @@ def minhash_calibration(docs: DataFrame, n: int = 3,
     (no all-pairs anywhere); the exact verify joins the candidate table
     to the distinct-shingle table twice (semi-bounded by candidates);
     one final tiny aggregation."""
-    sigs = minhash_signatures(docs, n, text_col, id_col).persist()
+    # eager localCheckpoint, not persist (see incremental_dedup)
+    sigs = minhash_signatures(docs, n, text_col, id_col).localCheckpoint()
     cand = lsh_candidates(sigs, id_col)
     sa = sigs.select(F.col(id_col).alias("a"),
                      *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_HASHES)])

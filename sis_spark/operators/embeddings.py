@@ -796,41 +796,31 @@ def silhouette_simplified(
     import numpy as np
     import pandas as pd
 
-    from .ann import quantize_col, train_ivf
+    from .ann import _map_vecs, _sqdist, quantize_col, train_ivf
 
     cent = train_ivf(vectors, k, id_col, vec_col, iters=iters)
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
     )
 
-    def go(batches):
-        C = bc.value
-        cn = (C * C).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(list(pdf["qv"]), dtype=np.int64)
-            nv = (M * M).sum(axis=1)
-            dist = nv[:, None] + cn[None, :] - 2 * (M @ C.T)
-            j = dist.argmin(axis=1)
-            a = dist[np.arange(len(M)), j]
-            masked = dist.copy()
-            masked[np.arange(len(M)), j] = np.iinfo(np.int64).max
-            b = masked.min(axis=1)
-            s = np.where(b > 0,
-                         np.floor_divide((b - a) * int(scale), np.where(b > 0, b, 1)),
-                         0)
-            yield pd.DataFrame({
-                "vec_id": pdf["id"].to_numpy(),
-                "cluster": j.astype(np.int32),
-                "a": a, "b": b, "s_q": s.astype(np.int64),
-            })
+    def go(pdf, M, C):
+        dist = _sqdist(M[:, None, :], C[None])[:, 0]
+        j = dist.argmin(axis=1)
+        a = dist[np.arange(len(M)), j]
+        masked = dist.copy()
+        masked[np.arange(len(M)), j] = np.iinfo(np.int64).max
+        b = masked.min(axis=1)
+        s = np.where(b > 0,
+                     np.floor_divide((b - a) * int(scale), np.where(b > 0, b, 1)),
+                     0)
+        return pd.DataFrame({
+            "vec_id": pdf["id"].to_numpy(),
+            "cluster": j.astype(np.int32),
+            "a": a, "b": b, "s_q": s.astype(np.int64),
+        })
 
-    return q.mapInPandas(
-        go, schema="vec_id long, cluster int, a long, b long, s_q long"
-    )
+    return _map_vecs(q, "qv", cent, go,
+                     "vec_id long, cluster int, a long, b long, s_q long")
 
 
 def silhouette_sql(
@@ -960,7 +950,7 @@ def kmedoids_swap(
     import numpy as np
     import pandas as pd
 
-    from .ann import quantize_col
+    from .ann import _map_vecs, _sqdist, quantize_col
 
     q = vectors.select(
         F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
@@ -976,41 +966,24 @@ def kmedoids_swap(
     )
     cand_ids = np.array([int(r["id"]) for r in cand_rows], dtype=np.int64)
     cand = np.array([list(r["qv"]) for r in cand_rows], dtype=np.int64)
-    spark = vectors.sparkSession
-    bm = spark.sparkContext.broadcast((med, np.array(med_ids, dtype=np.int64)))
-    bc = spark.sparkContext.broadcast((cand, cand_ids))
+    mids = np.array(med_ids, dtype=np.int64)
 
-    def go(batches):
-        M, mids = bm.value
-        C, cids = bc.value
-        cn = (C * C).sum(axis=1)
-        mn = (M * M).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(list(pdf["qv"]), dtype=np.int64)
-            nv = (V * V).sum(axis=1)
-            dm = nv[:, None] + mn[None, :] - 2 * (V @ M.T)
-            order = np.argsort(dm, axis=1, kind="stable")
-            near = order[:, 0]
-            d1 = dm[np.arange(len(V)), near]
-            d2 = dm[np.arange(len(V)), order[:, 1]]
-            dc = nv[:, None] + cn[None, :] - 2 * (V @ C.T)
-            rows = []
-            for mi in range(len(mids)):
-                mask = (near == mi)[:, None]
-                contrib = np.where(
-                    mask, np.minimum(d2[:, None], dc),
-                    np.minimum(d1[:, None], dc),
-                ) - d1[:, None]
-                part = contrib.sum(axis=0)
-                rows.append(pd.DataFrame({
-                    "m_out": np.full(len(cids), mids[mi], dtype=np.int64),
-                    "c_in": cids, "part": part,
-                }))
-            yield pd.concat(rows)
+    def go(pdf, V, C):
+        dm = _sqdist(V[:, None, :], med[None])[:, 0]
+        order = np.argsort(dm, axis=1, kind="stable")
+        near = order[:, 0]
+        d1 = dm[np.arange(len(V)), near]
+        d2 = dm[np.arange(len(V)), order[:, 1]]
+        dc = _sqdist(V[:, None, :], C[None])[:, 0]
+        return pd.concat([pd.DataFrame({
+            "m_out": np.full(len(cand_ids), m, dtype=np.int64),
+            "c_in": cand_ids,
+            "part": (np.where((near == mi)[:, None],
+                              np.minimum(d2[:, None], dc),
+                              np.minimum(d1[:, None], dc)) - d1[:, None]).sum(axis=0),
+        }) for mi, m in enumerate(mids)])
 
-    parts = q.mapInPandas(go, schema="m_out long, c_in long, part long")
+    parts = _map_vecs(q, "qv", cand, go, "m_out long, c_in long, part long")
     tot = parts.groupBy("m_out", "c_in").agg(F.sum("part").alias("delta"))
     from pyspark.sql import Window
 

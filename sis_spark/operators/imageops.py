@@ -11,7 +11,7 @@ JPEG stand-in).  Throughput note: decode cost dominates; these operators
 column-prune everything except (bytes, fmt) into the Python worker.
 
 **The per-image contract**, written once in ``_map_images`` (the per-row
-loop ``raster.grid._map_rows`` with the image decoder):
+loop ``functions.udfs._map_rows`` with the image decoder):
 
 * **Decode** — each row's payload decodes with ``codec.decode(bytes,
   fmt)`` to an (h, w, c) uint8 array (two per row for ``mse_pairs``).
@@ -30,8 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udfs import _map_rows
 from ..raster import codec
-from ..raster.grid import _map_rows
 
 
 def _map_images(df: DataFrame, schema: str, body, cols=("image_id",),

@@ -18,8 +18,9 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..functions.udfs import _map_rows
 
 AUDIO_SCHEMA = (
     "media_id string, payload binary, sample_rate int, n_samples long, codec string"
@@ -74,6 +75,28 @@ def _decode_video_frames(payload: bytes, codec: str, idx: np.ndarray, w: int, h:
     raise NotImplementedError(
         f"no video decoder for codec {codec!r}: register one via register_video_decoder"
     )
+
+
+def _audio(row, payload):
+    """The per-clip audio decoder of ``_map_rows``."""
+    return (_decode_audio(bytes(payload), row["codec"]),)
+
+
+def _video(video: DataFrame) -> DataFrame:
+    """A clip table pruned to what ``_frames`` reads."""
+    return video.select("media_id", "codec", "n_frames", "w", "h", "payload")
+
+
+def _frames(index):
+    """The per-clip video decoder of ``_map_rows``: the frames
+    ``index(n_frames)`` of each clip, decoded -> (idx, frames)."""
+
+    def decode(row, payload):
+        idx = index(int(row["n_frames"]))
+        return idx, _decode_video_frames(bytes(payload), row["codec"], idx,
+                                         int(row["w"]), int(row["h"]))
+
+    return decode
 
 
 def make_fake_audio(media_id: int, sample_rate: int = 8000, seconds: float = 1.0) -> dict:
@@ -139,29 +162,22 @@ def audio_features(audio: DataFrame, frame_ms: int = 25) -> DataFrame:
     """Windowed audio features: RMS energy + zero-crossing rate per frame
     (the token-counting analog for audio rows).  One output row per frame."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload, codec_, sr in zip(
-                    pdf["media_id"], pdf["payload"], pdf["codec"], pdf["sample_rate"]):
-                x = _decode_audio(bytes(payload), codec_)
-                sr = int(sr)
-                flen = max(1, sr * frame_ms // 1000)
-                n_frames = len(x) // flen
-                if n_frames == 0:
-                    continue
-                frames = x[: n_frames * flen].reshape(n_frames, flen)
-                rms = np.sqrt((frames.astype(np.float64) ** 2).mean(axis=1))
-                zcr = (np.diff(np.signbit(frames), axis=1) != 0).mean(axis=1)
-                for i in range(n_frames):
-                    rows.append({
-                        "media_id": mid, "frame": i,
-                        "rms": float(rms[i]), "zcr": float(zcr[i]),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(row, x):
+        flen = max(1, int(row["sample_rate"]) * frame_ms // 1000)
+        n_frames = len(x) // flen
+        if n_frames == 0:
+            return None
+        frames = x[: n_frames * flen].reshape(n_frames, flen)
+        return {
+            "media_id": row["media_id"], "frame": np.arange(n_frames),
+            "rms": np.sqrt((frames.astype(np.float64) ** 2).mean(axis=1)),
+            "zcr": (np.diff(np.signbit(frames), axis=1) != 0).mean(axis=1),
+        }
 
-    return audio.mapInPandas(fn, schema="media_id string, frame int, rms double, zcr double")
+    return _map_rows(
+        audio.select("media_id", "sample_rate", "codec", "payload"),
+        "media_id string, frame int, rms double, zcr double",
+        ["payload"], _audio, fn)
 
 
 def sample_frames(video: DataFrame, every_n: int = 4) -> DataFrame:
@@ -169,28 +185,16 @@ def sample_frames(video: DataFrame, every_n: int = 4) -> DataFrame:
     touches the rest — the AT_GET_TILE_TIME discipline applied to time),
     emit per-frame mean intensity + the raw frame bytes."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload, codec_, nf, w_, h_ in zip(
-                    pdf["media_id"], pdf["payload"], pdf["codec"],
-                    pdf["n_frames"], pdf["w"], pdf["h"]):
-                idx = np.arange(0, int(nf), every_n)
-                frames = _decode_video_frames(
-                    bytes(payload), codec_, idx, int(w_), int(h_)
-                )
-                for k, i in enumerate(idx):
-                    rows.append({
-                        "media_id": mid, "frame": int(i),
-                        "mean_intensity": float(frames[k].astype(np.float64).mean()),
-                        "frame_bytes": frames[k].tobytes(),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(row, idx, frames):
+        return {
+            "media_id": row["media_id"], "frame": idx,
+            "mean_intensity": [float(f.astype(np.float64).mean()) for f in frames],
+            "frame_bytes": [f.tobytes() for f in frames],
+        }
 
-    return video.mapInPandas(
-        fn, schema="media_id string, frame int, mean_intensity double, frame_bytes binary"
-    )
+    return _map_rows(
+        _video(video), "media_id string, frame int, mean_intensity double, frame_bytes binary",
+        ["payload"], _frames(lambda nf: np.arange(0, nf, every_n)), fn)
 
 
 def make_scene_video(media_id: int, n_frames: int = 12, w: int = 16,
@@ -223,29 +227,15 @@ def frame_diffs(video: DataFrame, cut_threshold: int) -> DataFrame:
     shuffle at all; a 100 TB video corpus partitions by clip."""
     thr = int(cut_threshold)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload, codec_, nf, w_, h_ in zip(
-                    pdf["media_id"], pdf["payload"], pdf["codec"],
-                    pdf["n_frames"], pdf["w"], pdf["h"]):
-                idx = np.arange(int(nf))
-                frames = _decode_video_frames(
-                    bytes(payload), codec_, idx, int(w_), int(h_)
-                ).astype(np.int64)
-                sad = np.abs(np.diff(frames, axis=0)).reshape(int(nf) - 1, -1).sum(axis=1)
-                for i in range(1, int(nf)):
-                    rows.append({
-                        "media_id": mid, "frame": int(i),
-                        "sad": int(sad[i - 1]),
-                        "is_cut": bool(sad[i - 1] > thr),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def fn(row, idx, frames):
+        frames = frames.astype(np.int64)
+        sad = np.abs(np.diff(frames, axis=0)).reshape(len(idx) - 1, -1).sum(axis=1)
+        return {"media_id": row["media_id"], "frame": idx[1:], "sad": sad,
+                "is_cut": sad > thr}
 
-    return video.mapInPandas(
-        fn, schema="media_id string, frame int, sad long, is_cut boolean"
-    )
+    return _map_rows(
+        _video(video), "media_id string, frame int, sad long, is_cut boolean",
+        ["payload"], _frames(np.arange), fn)
 
 
 def make_motion_video(media_id: int, n_frames: int = 6, w: int = 24,
@@ -281,48 +271,41 @@ def block_motion(video: DataFrame, block: int = 4, radius: int = 2) -> DataFrame
     frame_diffs discipline); embarrassingly parallel across clips."""
     b, r = int(block), int(radius)
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload, nf, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["n_frames"],
-                pdf["w"], pdf["h"],
-            ):
-                nf, w, h = int(nf), int(w), int(h)
-                arr = np.frombuffer(payload, np.uint8).reshape(nf, h, w).astype(np.int64)
-                for f in range(1, nf):
-                    cur, prev = arr[f], arr[f - 1]
-                    for by in range(h // b):
-                        y0 = by * b
-                        if y0 - r < 0 or y0 + b + r > h:
-                            continue
-                        for bx in range(w // b):
-                            x0 = bx * b
-                            if x0 - r < 0 or x0 + b + r > w:
-                                continue
-                            blk = cur[y0:y0 + b, x0:x0 + b]
-                            best = None
-                            for dy in range(-r, r + 1):
-                                for dx in range(-r, r + 1):
-                                    ref = prev[y0 + dy:y0 + dy + b,
-                                               x0 + dx:x0 + dx + b]
-                                    sad = int(np.abs(blk - ref).sum())
-                                    key = (sad, dy, dx)
-                                    if best is None or key < best:
-                                        best = key
-                            rows.append({
-                                "media_id": mid, "frame": f,
-                                "bx": bx, "by": by,
-                                "dx": best[2], "dy": best[1], "sad": best[0],
-                            })
-            if rows:
-                yield pd.DataFrame(rows)
+    def decode(row, payload):
+        nf, h, w = int(row["n_frames"]), int(row["h"]), int(row["w"])
+        return (np.frombuffer(payload, np.uint8).reshape(nf, h, w).astype(np.int64),)
 
-    return video.mapInPandas(
-        fn,
-        schema=("media_id string, frame long, bx long, by long, "
-                "dx long, dy long, sad long"),
-    )
+    def fn(row, arr):
+        nf, h, w = arr.shape
+        out = []
+        for f in range(1, nf):
+            cur, prev = arr[f], arr[f - 1]
+            for by in range(h // b):
+                y0 = by * b
+                if y0 - r < 0 or y0 + b + r > h:
+                    continue
+                for bx in range(w // b):
+                    x0 = bx * b
+                    if x0 - r < 0 or x0 + b + r > w:
+                        continue
+                    blk = cur[y0:y0 + b, x0:x0 + b]
+                    best = None
+                    for dy in range(-r, r + 1):
+                        for dx in range(-r, r + 1):
+                            ref = prev[y0 + dy:y0 + dy + b,
+                                       x0 + dx:x0 + dx + b]
+                            key = (int(np.abs(blk - ref).sum()), dy, dx)
+                            if best is None or key < best:
+                                best = key
+                    out.append((f, bx, by, best[2], best[1], best[0]))
+        cols = np.array(out, np.int64).reshape(-1, 6).T
+        return {"media_id": row["media_id"],
+                **dict(zip(("frame", "bx", "by", "dx", "dy", "sad"), cols))}
+
+    return _map_rows(
+        video.select("media_id", "n_frames", "w", "h", "payload"),
+        "media_id string, frame long, bx long, by long, dx long, dy long, sad long",
+        ["payload"], decode, fn)
 
 
 def make_formula_pcm(media_id: int, n: int = 2000) -> dict:
@@ -343,25 +326,19 @@ def pcm_resample_2_3(audio: DataFrame) -> DataFrame:
     twice the interpolated value, kept integral (the polyphase
     fractional delays are all halves).  One mapInPandas pass per clip."""
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload, n in zip(pdf["media_id"], pdf["payload"],
-                                       pdf["n_samples"]):
-                s = np.frombuffer(payload, "<i2").astype(np.int64)
-                n = int(n)
-                m = (2 * (n - 1)) // 3  # last j with k+1 <= n-1
-                j = np.arange(m + 1, dtype=np.int64)
-                k = (3 * j) // 2
-                fr = (3 * j) % 2
-                y2 = 2 * s[k] + (s[np.minimum(k + 1, n - 1)] - s[k]) * fr
-                rows.append(pd.DataFrame({
-                    "media_id": mid, "j": j, "y2": y2,
-                }))
-            if rows:
-                yield pd.concat(rows)
+    def fn(row, s):
+        n = int(row["n_samples"])
+        m = (2 * (n - 1)) // 3  # last j with k+1 <= n-1
+        j = np.arange(m + 1, dtype=np.int64)
+        k = (3 * j) // 2
+        fr = (3 * j) % 2
+        y2 = 2 * s[k] + (s[np.minimum(k + 1, n - 1)] - s[k]) * fr
+        return {"media_id": row["media_id"], "j": j, "y2": y2}
 
-    return audio.mapInPandas(fn, schema="media_id string, j long, y2 long")
+    return _map_rows(
+        audio.select("media_id", "n_samples", "payload"),
+        "media_id string, j long, y2 long", ["payload"],
+        lambda row, p: (np.frombuffer(p, "<i2").astype(np.int64),), fn)
 
 
 def _pow2_case(exp_expr: str, base_shift: int) -> str:

@@ -34,9 +34,10 @@ operator is the exact, oracle-checkable contract.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.udfs import _map_rows
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
@@ -247,18 +248,13 @@ def morton_ranges(
     ix0, iy0 = int(ix0[0]), int(iy0[0])
     rows = spark.range(iy0, iy1 + 1)
 
-    def gen(batches):
-        gx = np.arange(ix0, ix1 + 1, dtype=np.uint64)
-        for pdf in batches:
-            out = []
-            for iy in pdf["id"]:
-                cells = ixiy_to_cell(
-                    gx, np.full(len(gx), int(iy), dtype=np.uint64), res)
-                out.append(pd.DataFrame({"cell": cells}))
-            if out:
-                yield pd.concat(out)
+    gx = np.arange(ix0, ix1 + 1, dtype=np.uint64)
 
-    cells = rows.mapInPandas(gen, schema="cell long")
+    def gen(row):
+        return {"cell": ixiy_to_cell(
+            gx, np.full(len(gx), row["id"], dtype=np.uint64), res)}
+
+    cells = _map_rows(rows, "cell long", [], None, gen)
     w = Window.orderBy("cell")
     runs = cells.select(
         "cell", (F.col("cell") - F.row_number().over(w)).alias("run")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udfs import _map_rows
+
 
 def profile_table(df: DataFrame, columns: list[tuple[str, bool]]) -> DataFrame:
     """One-pass column profile -> one row per column
@@ -818,23 +820,18 @@ def damm_checksum(df: "DataFrame", num_col: str = "num",
     engine ALSO walks the published table — per key a tiny Python fold
     inside one mapInPandas pass (digits are bounded).  Output:
     (id, num, check, valid) with valid iff the interim digit is 0."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i, v in zip(pdf[id_col], pdf[num_col]):
-                c = 0
-                for ch in str(int(v)).zfill(width):
-                    c = _DAMM_TABLE[c][ord(ch) - 48]
-                rows.append({"event_id": int(i), "num": int(v),
-                             "check": c, "valid": c == 0})
-            if rows:
-                yield pd.DataFrame(rows)
+    def fold(row):
+        num = int(row["num"])
+        c = 0
+        for ch in str(num).zfill(width):
+            c = _DAMM_TABLE[c][ord(ch) - 48]
+        return {"event_id": int(row["event_id"]), "num": num, "check": c,
+                "valid": c == 0}
 
-    return df.select(id_col, num_col).mapInPandas(
-        gen, "event_id long, num long, check long, valid boolean"
-    )
+    return _map_rows(
+        df.select(F.col(id_col).alias("event_id"), F.col(num_col).alias("num")),
+        "event_id long, num long, check long, valid boolean", [], None, fold)
 
 
 def damm_checksum_sql(base_select: str, num_col: str = "num",

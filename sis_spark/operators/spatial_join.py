@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from ..functions import cells as _cells
 from ..functions import geometry as _geo
 from ..functions.spark_exprs import cell_col
+from ..functions.udfs import _map_rows
 from .partitioning import spread_small_scan
 
 # rows of one hot cell that should land in a single shuffle partition before
@@ -382,33 +383,42 @@ def _choose_res_dist(parts: DataFrame) -> int:
     return _res_for_width(float(row["med"] or 1.0) or 1.0)
 
 
+def _parts_df(df: DataFrame, key_col: str, wkb_col: str, decode) -> DataFrame:
+    """The parts core of the geometry normalisers: ``decode(key, wkb)``
+    returns a row's parts as (part wkb, xs, ys) triples (none to drop the
+    row); each part becomes one (key, wkb, xmin, ymin, xmax, ymax) row, its
+    envelope the min/max of its vertices."""
+
+    def envelope(row, *parts):
+        return {
+            "key": row["key"], "wkb": [w for w, _, _ in parts],
+            "xmin": [float(np.min(x)) for _, x, _ in parts],
+            "ymin": [float(np.min(y)) for _, _, y in parts],
+            "xmax": [float(np.max(x)) for _, x, _ in parts],
+            "ymax": [float(np.max(y)) for _, _, y in parts],
+        }
+
+    return _map_rows(
+        df.select(F.col(key_col).alias("key"), F.col(wkb_col).alias("wkb")),
+        "key long, wkb binary, xmin double, ymin double, xmax double, ymax double",
+        ["wkb"],
+        lambda row, wkb: decode(row["key"], bytes(wkb)) or None, envelope)
+
+
 def polygon_parts_df(polygons_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb") -> DataFrame:
     """(key, wkb) polygon table -> normalized parts table
     (key, wkb, xmin, ymin, xmax, ymax): anti-meridian SPLIT, MultiPolygon
     member expansion, holes preserved — the distributed analog of
     normalize_polygons (BinaryGeometryFilter.optimize plan normalization)."""
-    from ..functions import geometry as geo
     from ..sources import polygons_from_wkb
 
-    def norm(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            parts = normalize_polygons(
-                polygons_from_wkb(zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()))
-            )
-            yield pd.DataFrame({
-                "key": np.array([p["key"] for p in parts], dtype=np.int64),
-                "wkb": [bytes(geo.wkb_polygon(p["rings"])) for p in parts],
-                "xmin": np.array([p["xmin"] for p in parts]),
-                "ymin": np.array([p["ymin"] for p in parts]),
-                "xmax": np.array([p["xmax"] for p in parts]),
-                "ymax": np.array([p["ymax"] for p in parts]),
-            })
+    def decode(key, wkb):
+        return [(bytes(_geo.wkb_polygon(p["rings"])),
+                 np.concatenate([x for x, _ in p["rings"]]),
+                 np.concatenate([y for _, y in p["rings"]]))
+                for p in normalize_polygons(polygons_from_wkb([(key, wkb)]))]
 
-    return polygons_df.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
-        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
-    )
+    return _parts_df(polygons_df, key_col, wkb_col, decode)
 
 
 def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataFrame:
@@ -418,35 +428,33 @@ def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataF
     geometry transfer).  Same classification as polygon_cells."""
     from ..sources import polygons_from_wkb
 
-    def cover(batches):
-        for pdf in batches:
-            for key, wkb, xmin, ymin, xmax, ymax in zip(
-                pdf["key"], pdf["wkb"], pdf["xmin"], pdf["ymin"], pdf["xmax"], pdf["ymax"]
-            ):
-                cov = _cells.covering_cells(xmin, ymin, xmax, ymax, res)
-                m = len(cov)
-                if m == 0:
-                    continue
-                if classify:
-                    (part,) = polygons_from_wkb([(key, wkb)])
-                    sure = _sure_cells(cov, [(part["vx"], part["vy"])] + list(part["holes"]), res)
-                else:
-                    sure = np.zeros(m, dtype=bool)
-                yield pd.DataFrame({
-                    "cell": cov,
-                    "pkey": np.full(m, key, dtype=np.int64),
-                    "e_xmin": np.full(m, xmin),
-                    "e_ymin": np.full(m, ymin),
-                    "e_xmax": np.full(m, xmax),
-                    "e_ymax": np.full(m, ymax),
-                    "sure": sure,
-                    "pwkb": [None if s else bytes(wkb) for s in sure],
-                })
+    def cover(row, wkb):
+        key = row["key"]
+        cov = _cells.covering_cells(row["xmin"], row["ymin"], row["xmax"], row["ymax"], res)
+        m = len(cov)
+        if m == 0:
+            return None
+        if classify:
+            (part,) = polygons_from_wkb([(key, wkb)])
+            sure = _sure_cells(cov, [(part["vx"], part["vy"])] + list(part["holes"]), res)
+        else:
+            sure = np.zeros(m, dtype=bool)
+        return {
+            "cell": cov,
+            "pkey": np.full(m, key, dtype=np.int64),
+            "e_xmin": np.full(m, row["xmin"]),
+            "e_ymin": np.full(m, row["ymin"]),
+            "e_xmax": np.full(m, row["xmax"]),
+            "e_ymax": np.full(m, row["ymax"]),
+            "sure": sure,
+            "pwkb": [None if s else bytes(wkb) for s in sure],
+        }
 
-    return parts.mapInPandas(
-        cover,
-        schema="cell long, pkey long, e_xmin double, e_ymin double, "
-               "e_xmax double, e_ymax double, sure boolean, pwkb binary",
+    return _map_rows(
+        parts.select("key", "wkb", "xmin", "ymin", "xmax", "ymax"),
+        "cell long, pkey long, e_xmin double, e_ymin double, "
+        "e_xmax double, e_ymax double, sure boolean, pwkb binary",
+        ["wkb"], None, cover,
     )
 
 
@@ -555,7 +563,8 @@ def spatial_join_dist(
     """
     from ..sources import polygons_from_wkb
 
-    parts = polygon_parts_df(polygons_df, key_col, wkb_col).persist()
+    # eager localCheckpoint, not persist (GC-reclaimed; see geometry_distance_join)
+    parts = polygon_parts_df(polygons_df, key_col, wkb_col).localCheckpoint()
     if broadcast_threshold:
         n_parts = parts.limit(broadcast_threshold + 1).count()
         if n_parts <= broadcast_threshold:
@@ -822,31 +831,14 @@ def line_parts_df(lines_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb
     The line analog of polygon_parts_df.  No anti-meridian SPLIT for lines
     (out of the general-position model; callers with wrapping tracks split
     upstream, as the GPX store does per segment)."""
-    from ..functions import geometry as geo
 
-    def norm(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys, wkbs, x0, y0, x1, y1 = [], [], [], [], [], []
-            for k, b in zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()):
-                typ, (vx, vy) = geo.wkb_parse(bytes(b))
-                if typ != "linestring":
-                    raise ValueError(f"line_parts_df expects LineStrings, got {typ}")
-                keys.append(int(k))
-                wkbs.append(bytes(b))
-                x0.append(float(np.min(vx)))
-                y0.append(float(np.min(vy)))
-                x1.append(float(np.max(vx)))
-                y1.append(float(np.max(vy)))
-            yield pd.DataFrame({
-                "key": np.array(keys, dtype=np.int64), "wkb": wkbs,
-                "xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1,
-            })
+    def decode(key, wkb):
+        typ, val = _geo.wkb_parse(wkb)
+        if typ != "linestring":
+            raise ValueError(f"line_parts_df expects LineStrings, got {typ}")
+        return [(wkb, *val)]
 
-    return lines_df.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
-        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
-    )
+    return _parts_df(lines_df, key_col, wkb_col, decode)
 
 
 def _line_poly_candidates(
@@ -855,13 +847,12 @@ def _line_poly_candidates(
     """_pair_candidates for mixed-dimension joins: a = line key, b =
     polygon key, with wkb_a/wkb_b.
 
-    Lifecycle: both parts tables are persisted because each feeds both its
-    covering-cell branch and the WKB re-attach join (a consumed-twice plan
-    is computed twice unpersisted); they stay cached until session end —
-    callers running MANY joins per session should spark.catalog.clearCache()
-    between batches."""
+    Lifecycle: both parts tables are eager localCheckpoints because each
+    feeds both its covering-cell branch and the WKB re-attach join; unlike
+    a persist they leave no CacheManager entry behind."""
     return _pair_candidates(
-        line_parts_df(lines_df).persist(), polygon_parts_df(polygons_df).persist(), res
+        line_parts_df(lines_df).localCheckpoint(),
+        polygon_parts_df(polygons_df).localCheckpoint(), res
     )
 
 
@@ -1013,34 +1004,15 @@ def geometry_parts_df(gdf: DataFrame, key_col: str = "key",
     The fully-generic analog of polygon_parts_df/line_parts_df (no SPLIT or
     member expansion — distance semantics need the whole geometry): envelope
     from the decomposed vertex set, any of the 7 geometry types."""
-    from ..functions import geometry as geo
     from ..functions.sqlmm import geom_decompose
 
-    def norm(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys, wkbs, x0, y0, x1, y1 = [], [], [], [], [], []
-            for k, b in zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()):
-                D = geom_decompose(*geo.wkb_parse(bytes(b)))
-                ax = np.concatenate([D["px"], D["svx"], D["swx"]])
-                ay = np.concatenate([D["py"], D["svy"], D["swy"]])
-                if len(ax) == 0:
-                    continue
-                keys.append(int(k))
-                wkbs.append(bytes(b))
-                x0.append(float(ax.min()))
-                y0.append(float(ay.min()))
-                x1.append(float(ax.max()))
-                y1.append(float(ay.max()))
-            yield pd.DataFrame({
-                "key": np.array(keys, dtype=np.int64), "wkb": wkbs,
-                "xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1,
-            })
+    def decode(key, wkb):
+        D = geom_decompose(*_geo.wkb_parse(wkb))
+        ax = np.concatenate([D["px"], D["svx"], D["swx"]])
+        ay = np.concatenate([D["py"], D["svy"], D["swy"]])
+        return [(wkb, ax, ay)] if len(ax) else []
 
-    return gdf.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
-        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
-    )
+    return _parts_df(gdf, key_col, wkb_col, decode)
 
 
 def _radius_res(parts: DataFrame, radius: float) -> int:

@@ -12,8 +12,11 @@ cannot drift between engine and oracle.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.udfs import _map_rows
 
 # stopword marker lists per language for the n-gram/stopword language guesser
 LANG_MARKERS = {
@@ -2449,6 +2452,14 @@ SELECT b.{id_col}, s.n_words, b.n_sents, s.n_syll,
 FROM base b JOIN syl s USING ({id_col})"""
 
 
+def _docs(docs: DataFrame, id_col: str, text_col: str, schema: str, body) -> DataFrame:
+    """The per-document parse: ``body(row, text)`` over (doc_id, text)
+    rows -> ``doc_id long`` + ``schema`` rows."""
+    return _map_rows(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+        "doc_id long, " + schema, ["text"], None, body)
+
+
 def lz77_factors(docs: DataFrame, window: int = 64, max_len: int = 16,
                  min_len: int = 3, cap: int = 160,
                  text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -2468,34 +2479,29 @@ def lz77_factors(docs: DataFrame, window: int = 64, max_len: int = 16,
     tiny constants.  The oracle replays the parse as a lockstep recursive
     CTE (all documents advance one factor per round).
     """
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did, t in zip(pdf[id_col], pdf[text_col]):
-                t = (t or "")[:cap]
-                n = len(t)
-                pos, idx = 0, 0
-                while pos < n:
-                    w0 = max(0, pos - window)
-                    hay = t[w0:pos]
-                    ln, dist = 1, 0
-                    for l in range(min(max_len, n - pos), min_len - 1, -1):
-                        j = hay.find(t[pos:pos + l])
-                        if j >= 0:
-                            ln, dist = l, pos - (w0 + j)
-                            break
-                    rows.append({"doc_id": int(did), "idx": idx,
-                                 "pos": pos + 1, "len": ln, "dist": dist})
-                    pos += ln
-                    idx += 1
-            if rows:
-                yield pd.DataFrame(rows)
+    def factors(row, t):
+        t = (t or "")[:cap]
+        n = len(t)
+        out = []
+        pos = 0
+        while pos < n:
+            w0 = max(0, pos - window)
+            hay = t[w0:pos]
+            ln, dist = 1, 0
+            for l in range(min(max_len, n - pos), min_len - 1, -1):
+                j = hay.find(t[pos:pos + l])
+                if j >= 0:
+                    ln, dist = l, pos - (w0 + j)
+                    break
+            out.append((pos + 1, ln, dist))
+            pos += ln
+        f = np.array(out, np.int64).reshape(-1, 3)
+        return {"doc_id": row["doc_id"], "idx": np.arange(len(f)),
+                "pos": f[:, 0], "len": f[:, 1], "dist": f[:, 2]}
 
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, "doc_id long, idx long, pos long, len long, dist long"
-    )
+    return _docs(docs, id_col, text_col, "idx long, pos long, len long, dist long",
+                 factors)
 
 
 def lz77_factors_sql(rel: str = "documents", window: int = 64,
@@ -3235,24 +3241,18 @@ def mtf_encode(docs: DataFrame, cap: int = 64,
     lockstep recursive CTE (newlist = ch || replace(list, ch, '')).
 
     Output: (doc_id, i, code), i 1-based over the first ``cap`` chars."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did, t in zip(pdf[id_col], pdf[text_col]):
-                lst = list(_MTF_ALPHABET)
-                for i, ch in enumerate((t or "")[:cap]):
-                    code = lst.index(ch)
-                    lst.insert(0, lst.pop(code))
-                    rows.append({"doc_id": int(did), "i": i + 1,
-                                 "code": code})
-            if rows:
-                yield pd.DataFrame(rows)
+    def codes(row, t):
+        lst = list(_MTF_ALPHABET)
+        out = []
+        for ch in (t or "")[:cap]:
+            code = lst.index(ch)
+            lst.insert(0, lst.pop(code))
+            out.append(code)
+        return {"doc_id": row["doc_id"], "i": np.arange(1, len(out) + 1),
+                "code": out}
 
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, "doc_id long, i long, code long"
-    )
+    return _docs(docs, id_col, text_col, "i long, code long", codes)
 
 
 def mtf_encode_sql(rel: str = "documents", cap: int = 64,

@@ -153,35 +153,18 @@ def tile_cut_polygons(
     generate per-zoom with simplified geometry (ST_Simplify / the LOD hint),
     the standard MVT practice; the explode itself is distributed, so a hot
     polygon costs rows, not driver memory."""
-    import pandas as pd
-
     from ..functions.geometry import wkb_parse, wkb_polygon
     from ..functions.overlay import clip_convex, signed_area
+    from ..functions.udfs import _map_rows
+    from .spatial_join import _parts_df
 
     n = 1 << zoom
 
-    def env_stage(batches):
-        for pdf in batches:
-            rows = []
-            for k, buf in zip(pdf[key_col], pdf[wkb_col]):
-                typ, val = wkb_parse(bytes(buf))
-                rings = val if typ == "polygon" else None
-                if rings is None or not rings:
-                    continue
-                sx, sy = rings[0]
-                rows.append({
-                    key_col: k, wkb_col: bytes(buf),
-                    "xmin": float(min(sx)), "ymin": float(min(sy)),
-                    "xmax": float(max(sx)), "ymax": float(max(sy)),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def outer_ring(key, wkb):
+        typ, rings = wkb_parse(wkb)
+        return [(wkb, *rings[0])] if typ == "polygon" and rings else []
 
-    env = polys.select(key_col, wkb_col).mapInPandas(
-        env_stage,
-        f"{key_col} long, {wkb_col} binary, xmin double, ymin double, "
-        "xmax double, ymax double",
-    )
+    env = _parts_df(polys, key_col, wkb_col, outer_ring)
     cand = (
         env.withColumn("_cxlo", F.expr("greatest(0, CAST(floor(xmin) AS BIGINT))"))
         .withColumn("_cxhi", F.expr(f"least({n - 1}, CAST(floor(xmax) AS BIGINT))"))
@@ -190,53 +173,49 @@ def tile_cut_polygons(
         .filter("_cxlo <= _cxhi AND _cylo <= _cyhi")
         .withColumn("tx", F.explode(F.sequence("_cxlo", "_cxhi")))
         .withColumn("ty", F.explode(F.sequence("_cylo", "_cyhi")))
-        .select(key_col, wkb_col, "tx", "ty")
+        .select("key", "wkb", "tx", "ty")
     )
+    last: dict[bytes, list] = {}  # a polygon's candidate cells arrive together
 
-    def clip_stage(batches):
-        for pdf in batches:
-            rows = []
-            parsed: dict[bytes, list] = {}
-            for k, buf, tx, ty in zip(pdf[key_col], pdf[wkb_col], pdf["tx"], pdf["ty"]):
-                buf = bytes(buf)
-                rings = parsed.get(buf)
-                if rings is None:
-                    rings = wkb_parse(buf)[1]
-                    parsed[buf] = rings
-                tx, ty = int(tx), int(ty)
-                rx = np.array([tx, tx + 1, tx + 1, tx], dtype=np.float64)
-                ry = np.array([ty, ty, ty + 1, ty + 1], dtype=np.float64)
-                out_rings = []
-                area = 0.0
-                for i, (vx, vy) in enumerate(rings):
-                    vx = np.asarray(vx, np.float64)
-                    vy = np.asarray(vy, np.float64)
-                    if len(vx) > 1 and vx[0] == vx[-1] and vy[0] == vy[-1]:
-                        vx, vy = vx[:-1], vy[:-1]  # clip kernel wants open rings
-                    cx, cy = clip_convex(vx, vy, rx, ry)
-                    if len(cx) < 3:
-                        continue
-                    a = signed_area(cx, cy)
-                    if a == 0.0:
-                        continue
-                    out_rings.append((cx, cy))
-                    area += abs(a) if i == 0 else -abs(a)
-                if not out_rings or area <= 0.0:
-                    continue
-                q = lambda v, c: np.minimum(
-                    np.maximum(np.floor((v - c) * extent), 0), extent - 1
-                )
-                q_rings = [(q(cx, tx), q(cy, ty)) for cx, cy in out_rings]
-                rows.append({
-                    "tx": tx, "ty": ty, "pkey": int(k),
-                    "clip_wkb": wkb_polygon(out_rings),
-                    "q_wkb": wkb_polygon(q_rings),
-                    "area": float(area),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def rings_of(row, buf):
+        buf = bytes(buf)
+        if buf not in last:
+            last.clear()
+            last[buf] = wkb_parse(buf)[1]
+        return last[buf], int(row["tx"]), int(row["ty"])
 
-    return cand.mapInPandas(clip_stage, POLY_CUT_SCHEMA)
+    def clip(row, rings, tx, ty):
+        rx = np.array([tx, tx + 1, tx + 1, tx], dtype=np.float64)
+        ry = np.array([ty, ty, ty + 1, ty + 1], dtype=np.float64)
+        out_rings = []
+        area = 0.0
+        for i, (vx, vy) in enumerate(rings):
+            vx = np.asarray(vx, np.float64)
+            vy = np.asarray(vy, np.float64)
+            if len(vx) > 1 and vx[0] == vx[-1] and vy[0] == vy[-1]:
+                vx, vy = vx[:-1], vy[:-1]  # clip kernel wants open rings
+            cx, cy = clip_convex(vx, vy, rx, ry)
+            if len(cx) < 3:
+                continue
+            a = signed_area(cx, cy)
+            if a == 0.0:
+                continue
+            out_rings.append((cx, cy))
+            area += abs(a) if i == 0 else -abs(a)
+        if not out_rings or area <= 0.0:
+            return None
+        q = lambda v, c: np.minimum(
+            np.maximum(np.floor((v - c) * extent), 0), extent - 1
+        )
+        q_rings = [(q(cx, tx), q(cy, ty)) for cx, cy in out_rings]
+        return {
+            "tx": tx, "ty": ty, "pkey": row["key"],
+            "clip_wkb": wkb_polygon(out_rings),
+            "q_wkb": wkb_polygon(q_rings),
+            "area": float(area),
+        }
+
+    return _map_rows(cand, POLY_CUT_SCHEMA, ["wkb"], rings_of, clip)
 
 
 def tile_cut_oracle_sql(

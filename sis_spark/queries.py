@@ -2092,6 +2092,49 @@ def _formula_tiles(spark, w: int, h: int, bands: int = 2, tile_size: int = 64):
     return ids.mapInPandas(fill, TILE_SCHEMA)
 
 
+def _tile_checksums(tiles, W: int, H: int, TS: int, sums, planes=None):
+    """Per-tile position-weighted checksums of TS x TS tile planes (the
+    gate side of the raster oracles): pixel (px, py) weighs
+    ``(py * W + px) % 9973 + 1`` inside the W x H extent and 0 outside.
+    ``sums`` maps each output column to ``fn(wt, *planes) -> int``; a
+    column name alone is the weighted sum of the one plane.  ``planes``
+    is {column: dtype}, default the int64 ``data`` plane.
+    -> (tx, ty, <sums>) rows, all long."""
+    import numpy as _np
+
+    from .raster.grid import _map_tiles
+
+    if isinstance(sums, str):
+        sums = {sums: lambda wt, v: (v * wt).sum()}
+    planes = planes or {"data": _np.int64}
+
+    def body(row, *arrs):
+        px = row["tx"] * TS + _np.arange(TS)[None, :]
+        py = row["ty"] * TS + _np.arange(TS)[:, None]
+        wt = ((py * W + px) % 9973 + 1) * ((px < W) & (py < H))
+        return {"tx": row["tx"], "ty": row["ty"],
+                **{c: int(fn(wt, *arrs)) for c, fn in sums.items()}}
+
+    return _map_tiles(tiles.select("tx", "ty", *planes),
+                      ", ".join(f"{c} long" for c in ["tx", "ty", *sums]),
+                      TS, planes, body)
+
+
+def _cell_checksums(cells, W: int, TS: int, v, *aggs):
+    """The Spark-column form of ``_tile_checksums`` over per-pixel (x, y)
+    rows: ``cs`` = sum(v * ((y * W + x) % 9973 + 1)) per (tx, ty) tile,
+    next to ``aggs``, ordered by tile."""
+    wt = ((F.col("y") * W + F.col("x")) % 9973 + 1).cast("long")
+    return (
+        cells.groupBy(
+            (F.col("x") / TS).cast("long").alias("tx"),
+            (F.col("y") / TS).cast("long").alias("ty"),
+        )
+        .agg(F.sum(v * wt).alias("cs"), *aggs)
+        .orderBy("tx", "ty")
+    )
+
+
 def q_raster_stats(spark, sf_dir):
     """Per-band raster statistics over a distributed formula raster — the
     Statistics.combine shape (U/math/Statistics.java:311; per-tile partials
@@ -2200,7 +2243,6 @@ def q_gradient(spark, sf_dir):
     and 2*dz/dy (doubled gradients are exact integers for an integer
     raster), re-derived per pixel by the oracle."""
     import numpy as _np
-    import pandas as _pd
 
     from .raster.grid import GridGeometry
     from .raster.terrain import gradient_tiles
@@ -2210,26 +2252,10 @@ def q_gradient(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     g = gradient_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, bx, by in zip(pdf["tx"], pdf["ty"], pdf["dzdx"], pdf["dzdy"]):
-                dzdx = _np.frombuffer(bx, _np.float64).reshape(TS, TS)
-                dzdy = _np.frombuffer(by, _np.float64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty),
-                    "csx": int((_np.rint(2.0 * dzdx).astype(_np.int64) * wt).sum()),
-                    "csy": int((_np.rint(2.0 * dzdy).astype(_np.int64) * wt).sum()),
-                })
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return g.mapInPandas(cs, "tx long, ty long, csx long, csy long").orderBy(
-        "tx", "ty"
-    )
+    return _tile_checksums(g, W, H, TS, {
+        "csx": lambda wt, x, y: (_np.rint(2.0 * x).astype(_np.int64) * wt).sum(),
+        "csy": lambda wt, x, y: (_np.rint(2.0 * y).astype(_np.int64) * wt).sum(),
+    }, {"dzdx": _np.float64, "dzdy": _np.float64}).orderBy("tx", "ty")
 
 
 def q_gradient_oracle():
@@ -6338,19 +6364,7 @@ def q_rasterize(spark, sf_dir):
 
     TS, W = RAST_TS, RAST_W
 
-    def cs(batches):
-        for p in batches:
-            rows = []
-            for tx, ty, data in zip(p["tx"], p["ty"], p["data"]):
-                lab = _np.frombuffer(data, _np.int32).reshape(TS, TS).astype(_np.int64)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                rows.append({"tx": int(tx), "ty": int(ty), "cs": int((lab * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    sums = tiles.mapInPandas(cs, schema="tx long, ty long, cs long")
+    sums = _tile_checksums(tiles, W, RAST_H, TS, "cs", {"data": _np.int32})
     nx, ny = RAST_W // TS, RAST_H // TS
     grid = spark.range(nx).withColumnRenamed("id", "tx").crossJoin(
         spark.range(ny).withColumnRenamed("id", "ty")
@@ -6679,9 +6693,6 @@ def q_convolve(spark, sf_dir):
     raster -> exact int64 planes.  Raster 500x300 (not a tile multiple) so
     padding columns/rows are live in the test; per-tile position-weighted
     checksums vs the oracle's per-pixel re-derivation."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import convolve_tiles
 
@@ -6690,21 +6701,7 @@ def q_convolve(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     conv = convolve_tiles(tiles, gg, _CONV_KERNEL, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                rows.append(
-                    {"tx": int(tx), "ty": int(ty), "cs": int((v * wt).sum())}
-                )
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return conv.mapInPandas(cs, "tx long, ty long, cs long").orderBy("tx", "ty")
+    return _tile_checksums(conv, W, H, TS, "cs").orderBy("tx", "ty")
 
 
 def q_convolve_oracle():
@@ -6856,7 +6853,6 @@ def q_flow_dir(spark, sf_dir):
     gate: per-tile position-weighted integer checksums of the direction
     codes, each pixel re-derived by the oracle from the formula raster."""
     import numpy as _np
-    import pandas as _pd
 
     from .raster.grid import GridGeometry
     from .raster.terrain import flow_dir_tiles
@@ -6866,25 +6862,10 @@ def q_flow_dir(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     d = flow_dir_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["dirs"]):
-                dirs = _np.frombuffer(data, _np.uint8).reshape(TS, TS).astype(_np.int64)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty),
-                    "cs": int((dirs * wt).sum()),
-                    "pits": int((dirs == 0).sum()),
-                })
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(cs, "tx long, ty long, cs long, pits long").orderBy(
-        "tx", "ty"
-    )
+    return _tile_checksums(d, W, H, TS, {
+        "cs": lambda wt, v: (v * wt).sum(),
+        "pits": lambda wt, v: (v == 0).sum(),
+    }, {"dirs": _np.uint8}).orderBy("tx", "ty")
 
 
 def q_flow_dir_oracle():
@@ -6911,19 +6892,8 @@ def q_flow_accum(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     acc = flow_accum(cells)
-    wt = ((F.col("y") * W + F.col("x")) % 9973 + 1).cast("long")
-    return (
-        acc.groupBy(
-            (F.col("x") / TS).cast("long").alias("tx"),
-            (F.col("y") / TS).cast("long").alias("ty"),
-        )
-        .agg(
-            F.sum(F.col("acc") * wt).alias("cs"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("acc").alias("max_acc"),
-        )
-        .orderBy("tx", "ty")
-    )
+    return _cell_checksums(acc, W, TS, F.col("acc"), F.count(F.lit(1)).alias("n"),
+                           F.max("acc").alias("max_acc"))
 
 
 def q_flow_accum_oracle():
@@ -7078,18 +7048,8 @@ def q_watershed(spark, sf_dir):
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     basins = watershed_basins(cells)
     sink_id = (F.col("sink_y") * W + F.col("sink_x")).cast("long")
-    wt = ((F.col("y") * W + F.col("x")) % 9973 + 1).cast("long")
-    return (
-        basins.groupBy(
-            (F.col("x") / TS).cast("long").alias("tx"),
-            (F.col("y") / TS).cast("long").alias("ty"),
-        )
-        .agg(
-            F.sum(sink_id * wt).alias("cs"),
-            F.countDistinct(sink_id).alias("n_basins"),
-        )
-        .orderBy("tx", "ty")
-    )
+    return _cell_checksums(basins, W, TS, sink_id,
+                           F.countDistinct(sink_id).alias("n_basins"))
 
 
 def q_watershed_oracle():
@@ -7647,9 +7607,6 @@ def q_morphology(spark, sf_dir):
     500x300 (not a tile multiple) so within-tile padding is masked live.
     Per-tile weighted checksums of both planes; the oracle is a 9-term
     greatest/least per pixel."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import rank_filter_tiles
 
@@ -7659,24 +7616,8 @@ def q_morphology(spark, sf_dir):
     dil = rank_filter_tiles(tiles, gg, "max", tile_size=TS)
     ero = rank_filter_tiles(tiles, gg, "min", tile_size=TS)
 
-    def cs(tag):
-        def go(batches):
-            for pdf in batches:
-                rows = []
-                for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                    v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                    px = int(tx) * TS + _np.arange(TS)[None, :]
-                    py = int(ty) * TS + _np.arange(TS)[:, None]
-                    wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                    wt = wt * ((px < W) & (py < H))
-                    rows.append({"tx": int(tx), "ty": int(ty),
-                                 tag: int((v * wt).sum())})
-                if rows:
-                    yield _pd.DataFrame(rows)
-        return go
-
-    d = dil.mapInPandas(cs("cs_dil"), "tx long, ty long, cs_dil long")
-    e = ero.mapInPandas(cs("cs_ero"), "tx long, ty long, cs_ero long")
+    d = _tile_checksums(dil, W, H, TS, "cs_dil")
+    e = _tile_checksums(ero, W, H, TS, "cs_ero")
     return d.join(e, ["tx", "ty"]).orderBy("tx", "ty")
 
 
@@ -7714,9 +7655,6 @@ def q_distance_transform(spark, sf_dir):
     takes grid-diameter-in-TILES rounds, not O(distance) pixel steps.
     The oracle exploits the chamfer closed form in open space:
     dist = min over seeds of 3*max(|dx|,|dy|) + min(|dx|,|dy|)."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import chamfer_dt_tiles
 
@@ -7725,26 +7663,10 @@ def q_distance_transform(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     dt = chamfer_dt_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                m = (px < W) & (py < H)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty),
-                    "cs": int((v * wt * m).sum()),
-                    "dmax": int(v[m].max()),
-                })
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return dt.mapInPandas(cs, "tx long, ty long, cs long, dmax long").orderBy(
-        "tx", "ty"
-    )
+    return _tile_checksums(dt, W, H, TS, {
+        "cs": lambda wt, v: (v * wt).sum(),
+        "dmax": lambda wt, v: v[wt > 0].max(),
+    }).orderBy("tx", "ty")
 
 
 def q_distance_transform_oracle():
@@ -7814,9 +7736,6 @@ def q_integral_image(spark, sf_dir):
     one cogroup to reassemble.  Raster 500x300 (padding live); per-tile
     weighted checksums of the SAT plane vs the oracle's two chained SQL
     window cumsums."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.integral import integral_tiles
 
@@ -7825,21 +7744,7 @@ def q_integral_image(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     sat = integral_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                m = (px < W) & (py < H)
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs": int((v * wt * m).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return sat.mapInPandas(cs, "tx long, ty long, cs long").orderBy("tx", "ty")
+    return _tile_checksums(sat, W, H, TS, "cs").orderBy("tx", "ty")
 
 
 def q_integral_image_oracle():
@@ -7867,9 +7772,6 @@ def q_voronoi(spark, sf_dir):
     dist*2^20 + id values, whose min-plus minimum IS the lexicographic
     (distance, id) minimum.  Per-tile checksums of both the label and
     distance planes; the oracle takes min(packed) over seeds per pixel."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import _VOR_SCALE, voronoi_tiles
 
@@ -7878,28 +7780,10 @@ def q_voronoi(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     vt = voronoi_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                packed = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                sid = packed % _VOR_SCALE
-                dist = packed // _VOR_SCALE
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                m = (px < W) & (py < H)
-                rows.append({
-                    "tx": int(tx), "ty": int(ty),
-                    "cs_sid": int((sid * wt * m).sum()),
-                    "cs_dist": int((dist * wt * m).sum()),
-                })
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return vt.mapInPandas(
-        cs, "tx long, ty long, cs_sid long, cs_dist long"
-    ).orderBy("tx", "ty")
+    return _tile_checksums(vt, W, H, TS, {
+        "cs_sid": lambda wt, v: (v % _VOR_SCALE * wt).sum(),
+        "cs_dist": lambda wt, v: (v // _VOR_SCALE * wt).sum(),
+    }).orderBy("tx", "ty")
 
 
 def q_voronoi_oracle():
@@ -15737,9 +15621,6 @@ def q_median_filter(spark, sf_dir):
     zero padding outside the extent.  Median of 9 integers is the exact
     5th order statistic, so the oracle is list_sort(...)[5] per pixel;
     per-tile weighted checksums as `morphology`."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import rank_filter_tiles
 
@@ -15748,21 +15629,7 @@ def q_median_filter(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     med = rank_filter_tiles(tiles, gg, "median", tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                wt = wt * ((px < W) & (py < H))
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs_med": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return med.mapInPandas(cs, "tx long, ty long, cs_med long").orderBy("tx", "ty")
+    return _tile_checksums(med, W, H, TS, "cs_med").orderBy("tx", "ty")
 
 
 def q_median_filter_oracle():
@@ -16626,9 +16493,6 @@ def q_bilateral(spark, sf_dir):
     (3-|dx|)*(3-|dy|), range weight max(0, 32 - |diff|//4), exact
     floor-divided output — one halo-gather shuffle; per-tile weighted
     checksums as the median_filter gate."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import bilateral_tiles
 
@@ -16637,21 +16501,7 @@ def q_bilateral(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = bilateral_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                wt = wt * ((px < W) & (py < H))
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs_bi": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return out.mapInPandas(cs, "tx long, ty long, cs_bi long").orderBy("tx", "ty")
+    return _tile_checksums(out, W, H, TS, "cs_bi").orderBy("tx", "ty")
 
 
 def q_bilateral_oracle():
@@ -16783,9 +16633,6 @@ def q_adaptive_threshold(spark, sf_dir):
     sums over the halo on the Spark side; the oracle computes the same
     extent-clamped box sums with two separable 1-D window-frame passes
     — all-integer, per-tile weighted checksums."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import adaptive_threshold_tiles
 
@@ -16794,21 +16641,7 @@ def q_adaptive_threshold(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = adaptive_threshold_tiles(tiles, gg, radius=4, t_pct=15, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                wt = wt * ((px < W) & (py < H))
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs_at": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return out.mapInPandas(cs, "tx long, ty long, cs_at long").orderBy("tx", "ty")
+    return _tile_checksums(out, W, H, TS, "cs_at").orderBy("tx", "ty")
 
 
 def q_adaptive_threshold_oracle():
@@ -17541,9 +17374,6 @@ def q_census_transform(spark, sf_dir):
     raster: per-pixel 8-bit strict neighbor>center patterns on the
     9-way halo machinery, zero padding; per-tile weighted checksums as
     `median_filter`."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import census_tiles
 
@@ -17553,23 +17383,7 @@ def q_census_transform(spark, sf_dir):
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cen = census_tiles(tiles, gg, tile_size=TS)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                wt = wt * ((px < W) & (py < H))
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs_cen": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return cen.mapInPandas(cs, "tx long, ty long, cs_cen long").orderBy(
-        "tx", "ty"
-    )
+    return _tile_checksums(cen, W, H, TS, "cs_cen").orderBy("tx", "ty")
 
 
 def q_census_transform_oracle():
@@ -19039,9 +18853,6 @@ def q_sauvola(spark, sf_dir):
     and the in-extent count are three ones-kernel halo convolutions; the
     oracle runs the same separable window sums and the same squared
     comparison.  Per-tile weighted checksums as `adaptive_threshold`."""
-    import numpy as _np
-    import pandas as _pd
-
     from .raster.grid import GridGeometry
     from .raster.terrain import sauvola_threshold_tiles
 
@@ -19050,21 +18861,7 @@ def q_sauvola(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = sauvola_threshold_tiles(tiles, gg, radius=4)
 
-    def cs(batches):
-        for pdf in batches:
-            rows = []
-            for tx, ty, data in zip(pdf["tx"], pdf["ty"], pdf["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                wt = wt * ((px < W) & (py < H))
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs_sv": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    return out.mapInPandas(cs, "tx long, ty long, cs_sv long").orderBy("tx", "ty")
+    return _tile_checksums(out, W, H, TS, "cs_sv").orderBy("tx", "ty")
 
 
 def q_sauvola_oracle():
@@ -19868,7 +19665,7 @@ def q_rasterize_aa(spark, sf_dir):
     import pandas as _pd
 
     from .functions.geometry import wkb_polygon
-    from .raster.grid import GridGeometry
+    from .raster.grid import GridGeometry, _map_tiles
     from .raster.tiles import rasterize_polygons
 
     rects = _rasterize_rects()
@@ -19894,19 +19691,9 @@ def q_rasterize_aa(spark, sf_dir):
             )
             t = rasterize_polygons(polys, gg, tile_size=TS)
 
-            def to_mask(batches):
-                for p in batches:
-                    rows = []
-                    for tx, ty, data in zip(p["tx"], p["ty"], p["data"]):
-                        lab = _np.frombuffer(data, _np.int32).reshape(TS, TS)
-                        rows.append({
-                            "tx": int(tx), "ty": int(ty),
-                            "data": (lab > 0).astype(_np.int64).tobytes(),
-                        })
-                    if rows:
-                        yield _pd.DataFrame(rows)
-
-            m = t.mapInPandas(to_mask, schema="tx long, ty long, data binary")
+            m = _map_tiles(t.select("tx", "ty", "data"), "tx long, ty long, data binary",
+                           TS, _np.int32, lambda r, lab: {
+                               **r, "data": (lab > 0).astype(_np.int64).tobytes()})
             masks = m if masks is None else masks.unionByName(m)
 
     def summed(key, p):
@@ -19921,20 +19708,7 @@ def q_rasterize_aa(spark, sf_dir):
         summed, schema="tx long, ty long, data binary"
     )
 
-    def cs(batches):
-        for p in batches:
-            rows = []
-            for tx, ty, data in zip(p["tx"], p["ty"], p["data"]):
-                v = _np.frombuffer(data, _np.int64).reshape(TS, TS)
-                px = int(tx) * TS + _np.arange(TS)[None, :]
-                py = int(ty) * TS + _np.arange(TS)[:, None]
-                wt = ((py * W + px) % 9973 + 1).astype(_np.int64)
-                rows.append({"tx": int(tx), "ty": int(ty),
-                             "cs": int((v * wt).sum())})
-            if rows:
-                yield _pd.DataFrame(rows)
-
-    sums = cov.mapInPandas(cs, schema="tx long, ty long, cs long")
+    sums = _tile_checksums(cov, W, H, TS, "cs")
     nx, ny = W // TS, H // TS
     grid = spark.range(nx).withColumnRenamed("id", "tx").crossJoin(
         spark.range(ny).withColumnRenamed("id", "ty")
@@ -20964,19 +20738,8 @@ def q_strahler(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     o = strahler_order(cells)
-    wt = ((F.col("y") * W + F.col("x")) % 9973 + 1).cast("long")
-    return (
-        o.groupBy(
-            (F.col("x") / TS).cast("long").alias("tx"),
-            (F.col("y") / TS).cast("long").alias("ty"),
-        )
-        .agg(
-            F.sum(F.col("ord") * wt).alias("cs"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("ord").alias("max_ord"),
-        )
-        .orderBy("tx", "ty")
-    )
+    return _cell_checksums(o, W, TS, F.col("ord"), F.count(F.lit(1)).alias("n"),
+                           F.max("ord").alias("max_ord"))
 
 
 def q_strahler_oracle():

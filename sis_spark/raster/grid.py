@@ -13,14 +13,12 @@
   `_halo_groups` (which tiles a group needs) + `_place_blocks` (the
   group's tiles pasted into one halo array); `_gather_2x2` is its aligned
   2x2 case (one overview step).
-* The per-row computation every tile and image operator shares
-  (F/image/ComputedImage.java:123 computeTile) is `_map_rows`: the one
-  Arrow batch loop, which decodes each row's payload columns, runs the
-  operator's numpy body and expands its column dict into rows.
-  `_map_tiles` is that loop with the plane decoder (byte planes cut to
-  the `_valid_window` when asked); `imageops._map_images` is it with the
-  image decoder.  `_interior` is the in-extent (or r-pixel interior) mask
-  of a whole tile.
+* The per-tile computation (F/image/ComputedImage.java:123 computeTile)
+  is `_map_tiles`: the engine's one per-row loop
+  (`functions.udfs._map_rows`) with the plane decoder (byte planes cut
+  to the `_valid_window` when asked); `imageops._map_images` is the same
+  loop with the image decoder.  `_interior` is the in-extent (or r-pixel
+  interior) mask of a whole tile.
 """
 
 from __future__ import annotations
@@ -33,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import transforms as tr
+from ..functions.udfs import _map_rows
 
 TILE_SCHEMA = "tx long, ty long, band int, data binary"
 
@@ -193,50 +192,6 @@ def _tile_row(row: dict, plane: np.ndarray) -> dict:
     """A ``_map_tiles`` output row: the input tile's key with ``plane``."""
     return {"tx": row["tx"], "ty": row["ty"], "band": row["band"],
             "data": plane.tobytes()}
-
-
-def _concat(parts):
-    """One output column from its per-row parts: numpy arrays concatenate
-    (a pixel explode never goes through Python lists); any list part makes
-    the column one flat list."""
-    parts = [p for p in parts if len(p)]
-    if all(isinstance(p, np.ndarray) for p in parts):
-        return np.concatenate(parts)
-    return [x for p in parts
-            for x in (p.tolist() if isinstance(p, np.ndarray) else p)]
-
-
-def _map_rows(df: DataFrame, schema: str, payloads, decode, body) -> DataFrame:
-    """The per-row core: one mapInPandas over ``df``.
-
-    Each row's ``payloads`` columns go to ``decode(row, *values)``, which
-    returns the row's arrays (or None to skip the row); ``row`` is a dict
-    of the other columns.  ``body(row, *arrays)`` returns None or one
-    output row as a column dict: a list or array value makes one row per
-    element (scalars repeat).  Batches that produce no rows yield
-    nothing."""
-    payloads = list(payloads)
-
-    def fn(batches):
-        for pdf in batches:
-            keys = [c for c in pdf.columns if c not in payloads]
-            cols, n = {}, 0
-            for row, *vals in zip(pdf[keys].to_dict("records"),
-                                  *(pdf[c] for c in payloads)):
-                arrs = decode(row, *vals)
-                out = None if arrs is None else body(row, *arrs)
-                if out is None:
-                    continue
-                k = max((len(v) for v in out.values()
-                         if isinstance(v, (list, np.ndarray))), default=1)
-                for c, v in out.items():
-                    cols.setdefault(c, []).append(
-                        v if isinstance(v, (list, np.ndarray)) else [v] * k)
-                n += k
-            if n:
-                yield pd.DataFrame({c: _concat(p) for c, p in cols.items()})
-
-    return df.mapInPandas(fn, schema=schema)
 
 
 def _map_tiles(df: DataFrame, schema: str, tile_size: int | None, planes,

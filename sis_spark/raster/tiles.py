@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as _geo
 from ..functions import transforms as _tr
+from ..functions.udfs import _map_rows
 from .grid import (TILE_SCHEMA, GridGeometry, _gather_2x2, _halo_groups,
                    _map_tiles, _place_blocks, _tile_row, _valid_window,
                    subsample)
@@ -198,24 +199,15 @@ def point_eval(tiles_df: DataFrame, points: DataFrame, gg: GridGeometry,
         .withColumn("ty", F.floor(F.col("__gy") / tile_size))
     )
     joined = pts.join(tiles_df, ["tx", "ty"], "inner")
-    bdt = np.dtype(dtype)
     out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in points.schema.fields]
     schema = ", ".join(out_fields) + ", band int, value long"
     keep_cols = [f.name for f in points.schema.fields]
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = np.empty(len(pdf), dtype=np.int64)
-            for i, (data, gy, gx) in enumerate(zip(pdf["data"], pdf["__gy"], pdf["__gx"])):
-                block = np.frombuffer(data, dtype=bdt).reshape(tile_size, tile_size)
-                vals[i] = int(block[gy % tile_size, gx % tile_size])
-            out = pdf[keep_cols + ["band"]].copy()
-            out["value"] = vals
-            yield out
+    def fn(row, block):
+        return {**{c: row[c] for c in keep_cols + ["band"]},
+                "value": int(block[row["__gy"] % tile_size, row["__gx"] % tile_size])}
 
-    return joined.mapInPandas(fn, schema=schema)
+    return _map_tiles(joined, schema, tile_size, dtype, fn)
 
 
 def zonal_stats(
@@ -309,23 +301,17 @@ def resample(
     keys = [(tx, ty, b) for b in range(nb) for ty in range(n_ty) for tx in range(n_tx)]
     kdf = spark.createDataFrame(pd.DataFrame(keys, columns=["tx", "ty", "band"]))
 
-    def fn(batches):
-        s = bc.value
-        hs, ws = s.shape[:2]
-        gxs = np.arange(tile_size)
-        for pdf in batches:
-            datas = []
-            for tx, ty, band in zip(pdf["tx"], pdf["ty"], pdf["band"]):
-                gx, gy = np.meshgrid(tx * tile_size + gxs, ty * tile_size + gxs)
-                fx, fy = _tr.affine_apply(center, gx.ravel().astype(np.float64), gy.ravel().astype(np.float64))
-                fx -= 0.5  # to src cell-center coordinates
-                fy -= 0.5
-                v = _interp(s[:, :, band], fx, fy, method, fill)
-                block = np.clip(np.rint(v), 0, 255).astype(np.uint8).reshape(tile_size, tile_size)
-                datas.append(block.tobytes())
-            yield pd.DataFrame({"tx": pdf.tx, "ty": pdf.ty, "band": pdf.band, "data": datas})
+    gxs = np.arange(tile_size)
 
-    return kdf.mapInPandas(fn, schema=TILE_SCHEMA)
+    def fn(row):
+        gx, gy = np.meshgrid(row["tx"] * tile_size + gxs, row["ty"] * tile_size + gxs)
+        fx, fy = _tr.affine_apply(center, gx.ravel().astype(np.float64), gy.ravel().astype(np.float64))
+        fx -= 0.5  # to src cell-center coordinates
+        fy -= 0.5
+        v = _interp(bc.value[:, :, row["band"]], fx, fy, method, fill)
+        return _tile_row(row, np.clip(np.rint(v), 0, 255).astype(np.uint8))
+
+    return _map_rows(kdf, TILE_SCHEMA, [], None, fn)
 
 
 def _lanczos_kernel(t: np.ndarray, a: int = 3) -> np.ndarray:
@@ -947,32 +933,20 @@ def rasterize_polygons(polygons_df: DataFrame, gg: GridGeometry,
     ny = (h_px + tile_size - 1) // tile_size
     parts = polygon_parts_df(polygons_df)
 
-    def explode_tiles(batches):
-        for pdf in batches:
-            out = {"tx": [], "ty": [], "key": [], "wkb": []}
-            for key, wkb, xmin, ymin, xmax, ymax in zip(
-                pdf["key"], pdf["wkb"], pdf["xmin"], pdf["ymin"],
-                pdf["xmax"], pdf["ymax"],
-            ):
-                cx = np.array([xmin, xmax, xmin, xmax])
-                cy = np.array([ymin, ymin, ymax, ymax])
-                fx, fy = _tr.affine_apply(inv, cx, cy)
-                tx0 = max(0, int(np.floor(fx.min())) // tile_size)
-                tx1 = min(nx - 1, int(np.ceil(fx.max())) // tile_size)
-                ty0 = max(0, int(np.floor(fy.min())) // tile_size)
-                ty1 = min(ny - 1, int(np.ceil(fy.max())) // tile_size)
-                for ty in range(ty0, ty1 + 1):
-                    for tx in range(tx0, tx1 + 1):
-                        out["tx"].append(tx)
-                        out["ty"].append(ty)
-                        out["key"].append(key)
-                        out["wkb"].append(wkb)
-            if out["tx"]:
-                yield pd.DataFrame(out)
+    def explode_tiles(row):
+        cx = np.array([row["xmin"], row["xmax"], row["xmin"], row["xmax"]])
+        cy = np.array([row["ymin"], row["ymin"], row["ymax"], row["ymax"]])
+        fx, fy = _tr.affine_apply(inv, cx, cy)
+        tx0 = max(0, int(np.floor(fx.min())) // tile_size)
+        tx1 = min(nx - 1, int(np.ceil(fx.max())) // tile_size)
+        ty0 = max(0, int(np.floor(fy.min())) // tile_size)
+        ty1 = min(ny - 1, int(np.ceil(fy.max())) // tile_size)
+        ty, tx = np.mgrid[ty0:ty1 + 1, tx0:tx1 + 1]
+        return {"tx": tx.ravel(), "ty": ty.ravel(), "key": row["key"],
+                "wkb": row["wkb"]}
 
-    cand = parts.mapInPandas(
-        explode_tiles, schema="tx long, ty long, key long, wkb binary"
-    )
+    cand = _map_rows(parts, "tx long, ty long, key long, wkb binary", [],
+                     None, explode_tiles)
 
     def burn(pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import transforms as _tr
 from ..functions.projections import transform_points
+from ..functions.udfs import _map_rows
 from .grid import GridGeometry
 from .tiles import TILE_SCHEMA, _interp
 
@@ -80,32 +81,26 @@ def warp_crs(
     by = np.concatenate([np.zeros_like(t), np.full_like(t, tile_size), t, t])
     pad = 1.5 + margin_px
 
-    def manifest(batches):
-        for b in batches:
-            rows = []
-            for dtx, dty in zip(b["dtx"], b["dty"]):
-                fx, fy = dst_to_src_frac(
-                    int(dtx) * tile_size + bx - 0.5,
-                    int(dty) * tile_size + by - 0.5,
-                    src_gg, dst_gg,
-                )
-                ok = np.isfinite(fx) & np.isfinite(fy)
-                if not ok.any():
-                    continue
-                sx0 = max(0, int(np.floor((fx[ok].min() - pad) / tile_size)))
-                sx1 = min(s_ntx - 1, int(np.floor((fx[ok].max() + pad) / tile_size)))
-                sy0 = max(0, int(np.floor((fy[ok].min() - pad) / tile_size)))
-                sy1 = min(s_nty - 1, int(np.floor((fy[ok].max() + pad) / tile_size)))
-                if sx0 > sx1 or sy0 > sy1:
-                    continue
-                rows.append((int(dtx), int(dty), sx0, sx1, sy0, sy1))
-            yield pd.DataFrame(
-                rows, columns=["dtx", "dty", "stx0", "stx1", "sty0", "sty1"])
+    def manifest(row):
+        fx, fy = dst_to_src_frac(
+            row["dtx"] * tile_size + bx - 0.5,
+            row["dty"] * tile_size + by - 0.5,
+            src_gg, dst_gg,
+        )
+        ok = np.isfinite(fx) & np.isfinite(fy)
+        if not ok.any():
+            return None
+        sx0 = max(0, int(np.floor((fx[ok].min() - pad) / tile_size)))
+        sx1 = min(s_ntx - 1, int(np.floor((fx[ok].max() + pad) / tile_size)))
+        sy0 = max(0, int(np.floor((fy[ok].min() - pad) / tile_size)))
+        sy1 = min(s_nty - 1, int(np.floor((fy[ok].max() + pad) / tile_size)))
+        if sx0 > sx1 or sy0 > sy1:
+            return None
+        return {**row, "stx0": sx0, "stx1": sx1, "sty0": sy0, "sty1": sy1}
 
-    bounds = keys.mapInPandas(
-        manifest,
-        schema="dtx long, dty long, stx0 long, stx1 long, sty0 long, sty1 long",
-    )
+    bounds = _map_rows(
+        keys, "dtx long, dty long, stx0 long, stx1 long, sty0 long, sty1 long",
+        [], None, manifest)
     man = (
         bounds
         .select("dtx", "dty", "stx0", "stx1",

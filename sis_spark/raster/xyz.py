@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.udfs import _map_rows
 from . import codec
 
 MANIFEST_SCHEMA = "z int, x long, y long, path string, bytes long"
@@ -97,18 +98,13 @@ def read_xyz_tiles(
         max(min(len(paths), 64), 1)
     )
 
-    def rd(batches):
-        for b in batches:
-            rows = []
-            for path in b["path"]:
-                parts = path.split(os.sep)
-                z, tx = int(parts[-3]), int(parts[-2])
-                ty = int(parts[-1].rsplit(".", 1)[0])
-                arr = codec.decode(open(path, "rb").read(), fmt)
-                for band in range(arr.shape[2]):
-                    rows.append({"z": z, "tx": tx, "ty": ty, "band": band,
-                                 "data": arr[:, :, band].tobytes()})
-            if rows:
-                yield pd.DataFrame(rows)
+    def rd(row):
+        parts = row["path"].split(os.sep)
+        with open(row["path"], "rb") as fh:
+            arr = codec.decode(fh.read(), fmt)
+        return {"z": int(parts[-3]), "tx": int(parts[-2]),
+                "ty": int(parts[-1].rsplit(".", 1)[0]),
+                "band": np.arange(arr.shape[2]),
+                "data": [arr[:, :, b].tobytes() for b in range(arr.shape[2])]}
 
-    return pdf.mapInPandas(rd, TILE_READ_SCHEMA)
+    return _map_rows(pdf, TILE_READ_SCHEMA, [], None, rd)

@@ -632,6 +632,7 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from ..functions.udfs import _map_rows
     from ..raster.grid import GridGeometry
     from ..raster.tiles import TILE_SCHEMA
 
@@ -660,70 +661,49 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
         min(len(manifest), spark.sparkContext.defaultParallelism)
     )
 
-    def inflate(batches):
-        data = bc.value
-        for pdf in batches:
-            rows = []
-            for off, count, rtx, rty in zip(
-                    pdf["offset"], pdf["count"], pdf["tx"], pdf["ty"]):
-                payload = data[int(off) : int(off) + int(count)]
-                if tiled:
-                    y0, x0 = int(rty) * th, int(rtx) * tw
-                    block = _block_array(payload, comp, th, tw, c, pred, jt)
-                else:
-                    y0, x0 = int(rty) * th, 0
-                    nrows = min(th, h - y0)
-                    block = _block_array(payload, comp, nrows, w, c, pred, jt)
-                # re-chunk this native block to engine tiles (floorDiv grid)
-                for band in range(c):
-                    for ety in range(y0 // tile_size, min((y0 + block.shape[0] - 1) // tile_size + 1, (h + tile_size - 1) // tile_size)):
-                        for etx in range(x0 // tile_size, min((x0 + block.shape[1] - 1) // tile_size + 1, (w + tile_size - 1) // tile_size)):
-                            rows.append({
-                                "tx": etx, "ty": ety, "band": band,
-                                "sy": y0, "sx": x0,
-                                "data": block[:, :, band].tobytes(),
-                                "bh": block.shape[0], "bw": block.shape[1],
-                            })
-            if rows:
-                yield pd.DataFrame(rows)
+    ntx, nty = (w + tile_size - 1) // tile_size, (h + tile_size - 1) // tile_size
+
+    def decode(row):
+        """A native block's payload -> (y0, x0, block); strips are full-width."""
+        payload = bc.value[row["offset"]:row["offset"] + row["count"]]
+        y0, x0 = row["ty"] * th, (row["tx"] * tw if tiled else 0)
+        bh, bw = (th, tw) if tiled else (min(th, h - y0), w)
+        return y0, x0, _block_array(payload, comp, bh, bw, c, pred, jt)
+
+    def inflate(row, y0, x0, block):
+        # re-chunk this native block to engine tiles (floorDiv grid)
+        band, ety, etx = np.mgrid[
+            0:c,
+            y0 // tile_size:min((y0 + block.shape[0] - 1) // tile_size + 1, nty),
+            x0 // tile_size:min((x0 + block.shape[1] - 1) // tile_size + 1, ntx)]
+        return {"tx": etx.ravel(), "ty": ety.ravel(), "band": band.ravel(),
+                "sy": y0, "sx": x0,
+                "data": [block[:, :, b].tobytes() for b in band.ravel()],
+                "bh": block.shape[0], "bw": block.shape[1]}
 
     if aligned:
         # Native grid == engine grid: each block IS one engine tile per
         # band — decode straight to the final shape, no explode, NO SHUFFLE
         # (the groupBy-assemble below exists only for mis-aligned grids).
-        def inflate_aligned(batches):
-            data = bc.value
-            for pdf in batches:
-                rows = []
-                for off, count, rtx, rty in zip(
-                        pdf["offset"], pdf["count"], pdf["tx"], pdf["ty"]):
-                    payload = data[int(off) : int(off) + int(count)]
-                    block = _block_array(payload, comp, th, tw, c, pred, jt)
-                    y0, x0 = int(rty) * th, int(rtx) * tw
-                    # zero the padding beyond the image extent so the
-                    # output is bit-identical to the assemble path
-                    vy, vx = min(th, h - y0), min(tw, w - x0)
-                    if vy < th or vx < tw:
-                        block = block.copy()
-                        block[vy:, :, :] = 0
-                        block[:, vx:, :] = 0
-                    for band in range(c):
-                        rows.append({
-                            "tx": int(rtx), "ty": int(rty), "band": band,
-                            "data": block[:, :, band].tobytes(),
-                        })
-                if rows:
-                    yield pd.DataFrame(rows)
+        def inflate_aligned(row, y0, x0, block):
+            # zero the padding beyond the image extent so the
+            # output is bit-identical to the assemble path
+            vy, vx = min(th, h - y0), min(tw, w - x0)
+            if vy < th or vx < tw:
+                block = block.copy()
+                block[vy:, :, :] = 0
+                block[:, vx:, :] = 0
+            return {"tx": row["tx"], "ty": row["ty"], "band": np.arange(c),
+                    "data": [block[:, :, b].tobytes() for b in range(c)]}
 
-        tiles_df = mdf.mapInPandas(inflate_aligned, schema=TILE_SCHEMA)
+        tiles_df = _map_rows(mdf, TILE_SCHEMA, [], decode, inflate_aligned)
         gg = GridGeometry((0, 0, w - 1, h - 1), info["affine"],
                       geokeys_to_crs(info["geokeys"]) or "EPSG:4326") if info["affine"] else None
         return tiles_df, gg
 
-    pieces = mdf.mapInPandas(
-        inflate,
-        schema="tx long, ty long, band int, sy long, sx long, data binary, bh long, bw long",
-    )
+    pieces = _map_rows(
+        mdf, "tx long, ty long, band int, sy long, sx long, data binary, bh long, bw long",
+        [], decode, inflate)
 
     def assemble(key, pdf):
         tx, ty, band = int(key[0]), int(key[1]), int(key[2])

@@ -67,10 +67,13 @@ def test_minhash_calibration_matches_brute(spark):
         else:
             docs.append((d, " ".join(rng.choice(vocab, 25))))
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     got = {
         r["agree"]: (r["n_pairs"], r["sum_common"], r["sum_union"])
         for r in minhash_calibration(df).collect()
     }
+    assert cache.numCachedEntries() == cached  # the signatures are not cached
     assert got == _brute_calibration(docs)
     # the whole point of the audit: some candidate pairs must exist and
     # at least one must be a high-agreement near-dup

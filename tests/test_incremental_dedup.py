@@ -22,8 +22,11 @@ def _texts(k, n=40):
 def test_first_batch_matches_batch_pipeline(spark):
     rows = [(i, _texts(i)) for i in range(8)]
     rows += [(100, rows[0][1]), (101, rows[1][1] + " extra")]  # dup of 0, near-dup of 1
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     dec, kept = incremental_dedup(_docs(spark, rows), None)
     d = {r["doc_id"]: (r["keep"], r["reason"]) for r in dec.collect()}
+    assert cache.numCachedEntries() == cached  # the band table is not cached
     assert d[100] == (False, "batch") and d[0] == (True, None)
     assert d[101][0] is False
     n_kept = sum(1 for k, _ in d.values() if k)

@@ -123,8 +123,11 @@ def test_distributed_line_polygon_join_matches_brute(spark):
 
     ldf = spark.createDataFrame(pd.DataFrame([{"key": l["key"], "wkb": l["wkb"]} for l in lines]))
     pdf = spark.createDataFrame(pd.DataFrame(poly_rows))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     got = {(r["lkey"], r["pkey"]): (r["within"], r["crosses"])
            for r in line_polygon_join(ldf, pdf).collect()}
+    assert cache.numCachedEntries() == cached  # the parts tables are not cached
 
     exp = {}
     parsed = polygons_from_wkb([(r["key"], r["wkb"]) for r in poly_rows])

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from sis_spark import synth
 from sis_spark.functions import geometry as geo
@@ -87,10 +88,13 @@ def test_spatial_join_dist_matches_driver_path(spark, sf_dir):
         (r["event_id"], r["poly_key"])
         for r in spatial_join(pts, direct, "lon", "lat").select("event_id", "poly_key").collect()
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     b = sorted(
         (r["event_id"], r["poly_key"])
         for r in spatial_join_dist(pts, wkb_df, "lon", "lat").select("event_id", "poly_key").collect()
     )
+    assert cache.numCachedEntries() == cached  # the parts table is not cached
     assert a == b and len(a) > 0
 
 
@@ -187,6 +191,50 @@ def test_spatial_join_compact_matches_default(spark, sf_dir):
         .select("event_id", "poly_key").collect()
     )
     assert a == b and len(a) > 0
+
+
+def _square(x0, y0, x1, y1):
+    return np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1])
+
+
+_HOLED = geo.wkb_polygon([_square(-10.0, 20.0, 10.0, 40.0), _square(-5.0, 25.0, 5.0, 35.0)])
+_MULTI = geo.wkb_multipolygon([[_square(0.0, 0.0, 1.0, 1.0)], [_square(5.0, 2.0, 7.0, 3.0)]])
+_AM = geo.wkb_polygon([_square(176.0, -5.0, 184.0, 5.0)])
+_LINE = geo.wkb_linestring(np.array([0.0, 4.0, 2.0]), np.array([0.0, 1.0, 5.0]))
+
+
+@pytest.mark.parametrize("fn, wkb, rows", [
+    ("geometry_parts_df", geo.wkb_point(3.0, -2.0), [(3.0, -2.0, 3.0, -2.0)]),
+    ("geometry_parts_df", _LINE, [(0.0, 0.0, 4.0, 5.0)]),
+    ("line_parts_df", _LINE, [(0.0, 0.0, 4.0, 5.0)]),
+    ("polygon_parts_df", _HOLED, [(-10.0, 20.0, 10.0, 40.0)]),
+    ("geometry_parts_df", _HOLED, [(-10.0, 20.0, 10.0, 40.0)]),
+    ("polygon_parts_df", _MULTI, [(0.0, 0.0, 1.0, 1.0), (5.0, 2.0, 7.0, 3.0)]),
+    ("geometry_parts_df", _MULTI, [(0.0, 0.0, 7.0, 3.0)]),
+    # anti-meridian: SPLIT into two parts for polygons, whole for distance
+    ("polygon_parts_df", _AM, [(-180.0, -5.0, -176.0, 5.0), (176.0, -5.0, 180.0, 5.0)]),
+    ("geometry_parts_df", _AM, [(176.0, -5.0, 184.0, 5.0)]),
+    ("geometry_parts_df", geo.wkb_geomcollection([]), []),
+    ("line_parts_df", _HOLED, ValueError),
+])
+def test_parts_core_rows(spark, fn, wkb, rows):
+    """The three geometry normalisers share one parts core: one
+    (key, wkb, envelope) row per part, none for an empty geometry, and
+    line_parts_df refuses a non-LineString."""
+    from sis_spark.operators import spatial_join as sj
+
+    df = spark.createDataFrame([(7, bytes(wkb))], "k long, g binary")
+    out = getattr(sj, fn)(df, "k", "g")
+    if rows is ValueError:
+        with pytest.raises(Exception, match="ValueError: line_parts_df expects LineStrings"):
+            out.collect()
+        return
+    got = sorted(out.collect(), key=lambda r: (r["xmin"], r["ymin"]))
+    assert [tuple(r)[2:] for r in got] == rows
+    assert all(r["key"] == 7 for r in got)
+    for r in got:
+        typ, _ = geo.wkb_parse(bytes(r["wkb"]))
+        assert typ == ("polygon" if fn == "polygon_parts_df" else geo.wkb_parse(bytes(wkb))[0])
 
 
 def test_compact_cover_disjoint_and_exact(spark):
