@@ -13,6 +13,9 @@ every tile, image, media, text and geometry operator shares
 which decodes each row's payload columns, runs the operator's numpy body
 and expands its column dict into rows.  The per-row Python is that
 decode + body call; the math inside the body stays numpy.
+
+Every store reader of ``sources/`` is ``_map_manifest``: ``_map_rows``
+over a driver-built manifest whose rows are the store's units of I/O.
 """
 
 from __future__ import annotations
@@ -68,6 +71,31 @@ def _concat(parts):
             for x in (p.tolist() if isinstance(p, np.ndarray) else p)]
 
 
+def _outputs(pdf, payloads, decode, body):
+    """Each row of ``pdf`` through ``decode`` + ``body`` (see ``_map_rows``):
+    yields the rows' non-empty outputs as column dicts of lists/arrays."""
+    keys = [c for c in pdf.columns if c not in payloads]
+    rows = (pdf[keys].to_dict("records") if keys
+            else [{} for _ in range(len(pdf))])
+    for row, *vals in zip(rows, *(pdf[c] for c in payloads)):
+        arrs = vals if decode is None else decode(row, *vals)
+        out = None if arrs is None else body(row, *arrs)
+        if out is None:
+            continue
+        if isinstance(out, pd.DataFrame):
+            out = {c: out[c].to_numpy() for c in out.columns}
+        k = max((len(v) for v in out.values()
+                 if isinstance(v, (list, np.ndarray))), default=1)
+        if k:
+            yield {c: v if isinstance(v, (list, np.ndarray)) else [v] * k
+                   for c, v in out.items()}
+
+
+def _frame(outs):
+    """One pandas frame from column dicts of the same columns."""
+    return pd.DataFrame({c: _concat([o[c] for o in outs]) for c in outs[0]})
+
+
 def _map_rows(df: DataFrame, schema: str, payloads, decode, body) -> DataFrame:
     """The per-row core: one mapInPandas over ``df``.
 
@@ -76,27 +104,54 @@ def _map_rows(df: DataFrame, schema: str, payloads, decode, body) -> DataFrame:
     of the other columns.  ``decode=None`` passes the values through.
     ``body(row, *arrays)`` returns None or one output row as a column
     dict: a list or array value makes one row per element (scalars
-    repeat).  Batches that produce no rows yield nothing."""
+    repeat); a pandas DataFrame is taken as its columns.  Each input
+    batch yields one frame; batches that produce no rows yield nothing."""
     payloads = list(payloads)
 
     def fn(batches):
         for pdf in batches:
-            keys = [c for c in pdf.columns if c not in payloads]
-            rows = (pdf[keys].to_dict("records") if keys
-                    else [{} for _ in range(len(pdf))])
-            cols, n = {}, 0
-            for row, *vals in zip(rows, *(pdf[c] for c in payloads)):
-                arrs = vals if decode is None else decode(row, *vals)
-                out = None if arrs is None else body(row, *arrs)
-                if out is None:
-                    continue
-                k = max((len(v) for v in out.values()
-                         if isinstance(v, (list, np.ndarray))), default=1)
-                for c, v in out.items():
-                    cols.setdefault(c, []).append(
-                        v if isinstance(v, (list, np.ndarray)) else [v] * k)
-                n += k
-            if n:
-                yield pd.DataFrame({c: _concat(p) for c, p in cols.items()})
+            outs = list(_outputs(pdf, payloads, decode, body))
+            if outs:
+                yield _frame(outs)
 
     return df.mapInPandas(fn, schema=schema)
+
+
+def _map_manifest(spark, manifest: pd.DataFrame, schema: str, body,
+                  decode=None) -> DataFrame:
+    """The reader core: ``_map_rows``' decode + body over a driver-built
+    manifest.
+
+    Each manifest row is one unit of I/O — a file, a tile-row strip, a
+    record, rowid or chunk range — and its ``decode(row)`` / ``body(row,
+    ...)`` open what they read with ``with``, so no handle outlives its
+    row (a ranged GET per unit on an object store).  Each row yields its
+    own frame, so a task holds one unit's output at a time, however many
+    units its partition has.  The one spread rule: the manifest goes to
+    ``max(1, min(n, defaultParallelism))`` partitions.  ``schema`` is
+    explicit, so an empty manifest gives an empty frame of that schema."""
+    if not len(manifest):
+        return spark.createDataFrame([], schema)
+    n = max(1, min(len(manifest), spark.sparkContext.defaultParallelism))
+
+    def fn(batches):
+        for pdf in batches:
+            for out in _outputs(pdf, [], decode, body):
+                yield _frame([out])
+
+    return spark.createDataFrame(manifest).repartition(n).mapInPandas(
+        fn, schema=schema)
+
+
+def _parse_files(spark, paths: list[str], schema: str, parse) -> DataFrame:
+    """The folder shape of the text stores (GPX, KML, GeoJSON documents):
+    one manifest row per file, read and parsed task-side by ``parse``
+    (text -> pandas rows of ``schema``), each row tagged with its path."""
+    def read(row):
+        with open(row["path"], "r") as f:
+            out = parse(f.read())
+        out.insert(0, "path", row["path"])
+        return out
+
+    return _map_manifest(spark, pd.DataFrame({"path": paths}),
+                         "path string, " + schema, read)

@@ -1062,6 +1062,7 @@ def random_walks(
         )
         out = out.unionByName(nxt)
         cur = nxt
+    ranked.unpersist()  # every hop above is already checkpointed
     return out.select("walk", "step", "node")
 
 

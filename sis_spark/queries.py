@@ -2051,45 +2051,65 @@ GROUP BY p.event_id
 HAVING (count(*) % 2) = 1"""
 
 
-def _formula_tiles(spark, w: int, h: int, bands: int = 2, tile_size: int = 64):
-    """Distributed formula raster: tile (tx, ty, band) blocks filled from
-    integer pixel formulas a SQL oracle can replicate exactly —
-    band 0: (x*7 + y*13) % 256, band 1: (x*3 + y*5 + 17) % 256,
-    band 2: (x*11 + y*3 + 29) % 256.
-    Padding beyond (w, h) is zero (excluded by the stats extent mask)."""
-    import numpy as _np
-    import pandas as _pd
+# Pixel formulas of the synthetic rasters (int64 pixel grids X, Y -> values
+# 0..255); the SQL oracles restate each one in their own text.
+_FORMULAS = (
+    lambda X, Y: (X * 7 + Y * 13) % 256,
+    lambda X, Y: (X * 3 + Y * 5 + 17) % 256,
+    lambda X, Y: (X * 11 + Y * 3 + 29) % 256,
+)
 
+
+def _synth_tiles(spark, w: int, h: int, formulas, tile_size: int = 64):
+    """Distributed formula raster, one manifest row per tile: band b of
+    tile (tx, ty) is ``formulas[b](X, Y)`` over the tile's global int64
+    pixel grid, as uint8, and 0 beyond (w, h) (excluded by the stats
+    extent mask)."""
+    import numpy as _np
+
+    from .functions.udfs import _map_manifest
     from .raster.tiles import TILE_SCHEMA
 
     ntx = (w + tile_size - 1) // tile_size
     nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty * bands).repartition(
-        min(ntx * nty * bands, spark.sparkContext.defaultParallelism)
-    )
+    ty, tx = _np.divmod(_np.arange(ntx * nty, dtype=_np.int64), ntx)
+    g = _np.arange(tile_size, dtype=_np.int64)
 
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                band = i % bands
-                t = i // bands
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs, ty * tile_size + gxs)
-                if band == 0:
-                    block = (GX * 7 + GY * 13) % 256
-                elif band == 1:
-                    block = (GX * 3 + GY * 5 + 17) % 256
-                else:
-                    block = (GX * 11 + GY * 3 + 29) % 256
-                block = _np.where((GX < w) & (GY < h), block, 0).astype(_np.uint8)
-                rows.append({"tx": tx, "ty": ty, "band": band,
-                             "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
+    def fill(row):
+        X, Y = _np.meshgrid(row["tx"] * tile_size + g, row["ty"] * tile_size + g)
+        inside = (X < w) & (Y < h)
+        return {"tx": row["tx"], "ty": row["ty"],
+                "band": _np.arange(len(formulas), dtype=_np.int32),
+                "data": [_np.where(inside, f(X, Y), 0).astype(_np.uint8).tobytes()
+                         for f in formulas]}
 
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+    return _map_manifest(spark, pd.DataFrame({"tx": tx, "ty": ty}),
+                         TILE_SCHEMA, fill)
+
+
+def _pixel_rows(tiles, gg, tile_size: int, dtype):
+    """The reader gates' pixel explode: every in-extent pixel of the
+    ``dtype`` tile planes (the valid window of ``_map_tiles`` with ``gg``)
+    as (band, gx, gy, val, cx, cy) — global pixel indices, the value as a
+    double and the cell centre through the affine of ``gg``."""
+    import numpy as _np
+
+    from .raster.grid import _map_tiles
+
+    aff = gg.affine
+
+    def body(row, block):
+        yy, xx = _np.mgrid[0:block.shape[0], 0:block.shape[1]]
+        gx = (row["tx"] * tile_size + xx).ravel()
+        gy = (row["ty"] * tile_size + yy).ravel()
+        return {"band": row["band"], "gx": gx, "gy": gy,
+                "val": block.ravel().astype(_np.float64),
+                "cx": aff[2] + (gx + 0.5) * aff[0],
+                "cy": aff[5] + (gy + 0.5) * aff[4]}
+
+    return _map_tiles(
+        tiles, "band int, gx long, gy long, val double, cx double, cy double",
+        tile_size, dtype, body, gg)
 
 
 def _tile_checksums(tiles, W: int, H: int, TS: int, sums, planes=None):
@@ -2144,7 +2164,7 @@ def q_raster_stats(spark, sf_dir):
     from .raster.tiles import band_stats
 
     W, H = 1000, 800
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = band_stats(tiles, gg)
     return out.select(
@@ -2189,7 +2209,7 @@ def q_xyz_pyramid(spark, sf_dir):
     from .raster.xyz import read_xyz_tiles, write_xyz_tiles
 
     W, H = 512, 256
-    tiles = _formula_tiles(spark, W, H, bands=3)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:3])
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     levels = [(0, tiles, gg)] + build_overviews(tiles, gg, 2)
     root = _os.path.join(_tempfile.gettempdir(), "sis_xyz_gate")
@@ -2248,7 +2268,7 @@ def q_gradient(spark, sf_dir):
     from .raster.terrain import gradient_tiles
 
     W, H, TS = 512, 384, 64  # exact tile multiples: no padding anywhere
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     g = gradient_tiles(tiles, gg, tile_size=TS)
 
@@ -2511,7 +2531,7 @@ def q_zonal_stats(spark, sf_dir):
     W, H = 512, 384
     a = (0.015625, 0.0, -4.0, 0.0, -0.0078125, 3.0)
     gg = GridGeometry((0, 0, W - 1, H - 1), a)
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     polys = []
     for key, verts in ZONAL_POLYS:
         vx = _np.asarray([v[0] for v in verts], float)
@@ -2578,7 +2598,7 @@ def q_point_eval(spark, sf_dir):
     W, H = 512, 384
     a = (0.015625, 0.0, -4.0, 0.0, -0.0078125, 3.0)
     gg = GridGeometry((0, 0, W - 1, H - 1), a)
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     part = _read(spark, sf_dir, "part")
     pts = part.select(
         "p_partkey",
@@ -2627,7 +2647,7 @@ def q_resample(spark, sf_dir):
     SW, SH, DW, DH = 256, 192, 384, 288
     src_gg = GridGeometry((0, 0, SW - 1, SH - 1), (0.0625, 0.0, 0.0, 0.0, -0.0625, 12.0))
     dst_gg = GridGeometry((0, 0, DW - 1, DH - 1), (0.03125, 0.0, 0.5, 0.0, -0.03125, 11.5))
-    tiles = _formula_tiles(spark, SW, SH, bands=1)
+    tiles = _synth_tiles(spark, SW, SH, _FORMULAS[:1])
     out = resample_gather(tiles, src_gg, dst_gg, method="nearest")
 
     def chk(batches):
@@ -2684,7 +2704,7 @@ def q_stretch(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     out = stretch(tiles, gg, low_pct=2.0, high_pct=98.0)
     return band_stats(out, gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -2737,8 +2757,8 @@ def q_mosaic(spark, sf_dir):
 
     W, H = 448, 256  # multiples of 64: every tile fully real
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    a = _formula_tiles(spark, W, H, bands=1).filter((F.col("tx") + F.col("ty")) % 2 == 0)
-    b = _formula_tiles(spark, W, H, bands=2).filter(F.col("band") == 1).withColumn(
+    a = _synth_tiles(spark, W, H, _FORMULAS[:1]).filter((F.col("tx") + F.col("ty")) % 2 == 0)
+    b = _synth_tiles(spark, W, H, _FORMULAS[:2]).filter(F.col("band") == 1).withColumn(
         "band", F.lit(0).cast("int")
     )
     merged = mosaic_first(a, b)
@@ -2783,7 +2803,7 @@ def q_color_ramp(spark, sf_dir):
 
     W, H = 448, 256  # multiples of 64: every pixel real through the LUT
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     out = color_ramp(tiles, _ramp_lut())
     return band_stats(out, gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -2819,7 +2839,7 @@ def q_band_reduce(spark, sf_dir):
 
     W, H = 1000, 800
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     out = reduce_bands(tiles, op="mean")
     return band_stats(out, gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -2871,7 +2891,7 @@ def q_isolines(spark, sf_dir):
 
     W, H = 448, 256  # multiples of 64: no padding, full halo coverage
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     segs = isolines(tiles, gg, ISO_LEVELS)
     return segs.groupBy("level").agg(
         *[F.expr(e) for e in _iso_agg_exprs()]
@@ -4901,7 +4921,6 @@ def q_ascii_grid(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .sources.ascii_grid import format_ascii_grid, read_ascii_grid
     from .raster.grid import GridGeometry
@@ -4916,32 +4935,8 @@ def q_ascii_grid(spark, sf_dir):
         f.write(format_ascii_grid(arr[:, :], gg))
 
     tiles, gg2 = read_ascii_grid(spark, p)
-    tile_size = 64
-    aff = gg2.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, data in zip(b["tx"], b["ty"], b["data"]):
-                block = _np.frombuffer(data, dtype=_np.float64).reshape(
-                    tile_size, tile_size)
-                x0 = int(tx) * tile_size
-                y0 = int(ty) * tile_size
-                ww = min(tile_size, w - x0)
-                hh = min(tile_size, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                cx = aff[2] + (gxx + 0.5) * aff[0]
-                cy = aff[5] + (gyy + 0.5) * aff[4]
-                yield _pd.DataFrame({
-                    "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel(),
-                    "cx": cx, "cy": cy,
-                })
-
-    return tiles.mapInPandas(
-        explode, schema="gx long, gy long, val double, cx double, cy double"
-    ).orderBy("gy", "gx")
+    return (_pixel_rows(tiles, gg2, 64, _np.float64)
+            .select("gx", "gy", "val", "cx", "cy").orderBy("gy", "gx"))
 
 
 def q_ascii_grid_oracle():
@@ -4969,7 +4964,6 @@ def q_raw_raster(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .raster.grid import GridGeometry
     from .sources.raw_raster import format_raw_raster, read_raw_raster
@@ -4988,32 +4982,9 @@ def q_raw_raster(spark, sf_dir):
         f.write(hdr)
 
     tiles, gg2, dtype = read_raw_raster(spark, base + ".bil")
-    tile_size = 64
-    aff = gg2.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, band, data_ in zip(b["tx"], b["ty"], b["band"], b["data"]):
-                block = _np.frombuffer(data_, dtype=dtype).reshape(
-                    tile_size, tile_size)
-                x0 = int(tx) * tile_size
-                y0 = int(ty) * tile_size
-                ww = min(tile_size, w - x0)
-                hh = min(tile_size, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                yield _pd.DataFrame({
-                    "band": int(band), "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel().astype(_np.int64),
-                    "cx": aff[2] + (gxx + 0.5) * aff[0],
-                    "cy": aff[5] + (gyy + 0.5) * aff[4],
-                })
-
-    return tiles.mapInPandas(
-        explode,
-        schema="band int, gx long, gy long, val long, cx double, cy double",
-    ).orderBy("band", "gy", "gx")
+    return (_pixel_rows(tiles, gg2, 64, dtype)
+            .withColumn("val", F.col("val").cast("long"))
+            .orderBy("band", "gy", "gx"))
 
 
 def q_raw_raster_oracle():
@@ -5195,7 +5166,6 @@ def q_coveragejson(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .sources.coveragejson import coveragejson_tiles, format_coverage
 
@@ -5217,30 +5187,7 @@ def q_coveragejson(spark, sf_dir):
         paths.append(p)
 
     tiles, gg = coveragejson_tiles(spark, paths, "temp")
-    tile_size = 64
-    aff = gg.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, band, data_ in zip(b["tx"], b["ty"], b["band"], b["data"]):
-                block = _np.frombuffer(data_, dtype=_np.float64).reshape(
-                    tile_size, tile_size)
-                x0, y0 = int(tx) * tile_size, int(ty) * tile_size
-                ww, hh = min(tile_size, w - x0), min(tile_size, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                yield _pd.DataFrame({
-                    "band": int(band), "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel(),
-                    "cx": aff[2] + (gxx + 0.5) * aff[0],
-                    "cy": aff[5] + (gyy + 0.5) * aff[4],
-                })
-
-    return tiles.mapInPandas(
-        explode,
-        schema="band int, gx long, gy long, val double, cx double, cy double",
-    ).orderBy("band", "gy", "gx")
+    return _pixel_rows(tiles, gg, 64, _np.float64).orderBy("band", "gy", "gx")
 
 
 def q_coveragejson_oracle():
@@ -5271,7 +5218,6 @@ def q_netcdf_grid(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .sources.netcdf import format_netcdf, netcdf_variable_tiles
 
@@ -5294,29 +5240,8 @@ def q_netcdf_grid(spark, sf_dir):
         ))
 
     tiles, gg = netcdf_variable_tiles(spark, p, "temp", index=(1,))
-    tile_size = 64
-    aff = gg.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, data_ in zip(b["tx"], b["ty"], b["data"]):
-                block = _np.frombuffer(data_, dtype=_np.float64).reshape(
-                    tile_size, tile_size)
-                x0, y0 = int(tx) * tile_size, int(ty) * tile_size
-                ww, hh = min(tile_size, w - x0), min(tile_size, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                yield _pd.DataFrame({
-                    "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel(),
-                    "cx": aff[2] + (gxx + 0.5) * aff[0],
-                    "cy": aff[5] + (gyy + 0.5) * aff[4],
-                })
-
-    return tiles.mapInPandas(
-        explode, schema="gx long, gy long, val double, cx double, cy double"
-    ).orderBy("gy", "gx")
+    return (_pixel_rows(tiles, gg, 64, _np.float64)
+            .select("gx", "gy", "val", "cx", "cy").orderBy("gy", "gx"))
 
 
 def q_netcdf_grid_oracle():
@@ -5342,7 +5267,6 @@ def q_netcdf_cdf5(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .sources.netcdf import format_netcdf, netcdf_variable_tiles, read_header
 
@@ -5363,29 +5287,9 @@ def q_netcdf_cdf5(spark, sf_dir):
     assert read_header(p)["version"] == 5
 
     tiles, gg = netcdf_variable_tiles(spark, p, "mass")
-    tile_size = 64
-    aff = gg.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, data_ in zip(b["tx"], b["ty"], b["data"]):
-                block = _np.frombuffer(data_, dtype=_np.float64).reshape(
-                    tile_size, tile_size)
-                x0, y0 = int(tx) * tile_size, int(ty) * tile_size
-                ww, hh = min(tile_size, w - x0), min(tile_size, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                yield _pd.DataFrame({
-                    "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel().astype(_np.int64),
-                    "cx": aff[2] + (gxx + 0.5) * aff[0],
-                    "cy": aff[5] + (gyy + 0.5) * aff[4],
-                })
-
-    return tiles.mapInPandas(
-        explode, schema="gx long, gy long, val long, cx double, cy double"
-    ).orderBy("gy", "gx")
+    return (_pixel_rows(tiles, gg, 64, _np.float64)
+            .select("gx", "gy", F.col("val").cast("long"), "cx", "cy")
+            .orderBy("gy", "gx"))
 
 
 def q_netcdf_cdf5_oracle():
@@ -5411,7 +5315,6 @@ def q_netcdf4_grid(spark, sf_dir):
     import tempfile as _tempfile
 
     import numpy as _np
-    import pandas as _pd
 
     from .sources.hdf5 import format_hdf5, netcdf4_variable_tiles
 
@@ -5436,27 +5339,8 @@ def q_netcdf4_grid(spark, sf_dir):
         ))
 
     tiles, gg, (ch, cw) = netcdf4_variable_tiles(spark, p, "temp")
-    aff = gg.affine
-
-    def explode(batches):
-        for b in batches:
-            for tx, ty, data_ in zip(b["tx"], b["ty"], b["data"]):
-                block = _np.frombuffer(data_, dtype=_np.float64).reshape(ch, cw)
-                x0, y0 = int(tx) * cw, int(ty) * ch
-                ww, hh = min(cw, w - x0), min(ch, h - y0)
-                yy, xx = _np.mgrid[0:hh, 0:ww]
-                gxx = (x0 + xx).ravel()
-                gyy = (y0 + yy).ravel()
-                yield _pd.DataFrame({
-                    "gx": gxx, "gy": gyy,
-                    "val": block[:hh, :ww].ravel(),
-                    "cx": aff[2] + (gxx + 0.5) * aff[0],
-                    "cy": aff[5] + (gyy + 0.5) * aff[4],
-                })
-
-    return tiles.mapInPandas(
-        explode, schema="gx long, gy long, val double, cx double, cy double"
-    ).orderBy("gy", "gx")
+    return (_pixel_rows(tiles, gg, ch, _np.float64)  # square 64 x 64 chunks
+            .select("gx", "gy", "val", "cx", "cy").orderBy("gy", "gx"))
 
 
 def q_netcdf4_grid_oracle():
@@ -5485,7 +5369,6 @@ def q_warp_crs(spark, sf_dir):
     chosen so every pixel sits >= 1e-3 from a rounding boundary (engine
     and DuckDB libm differ only at ~1e-14)."""
     import numpy as _np
-    import pandas as _pd
 
     from .raster.grid import GridGeometry
     from .raster.tiles import raster_to_tiles
@@ -5511,24 +5394,12 @@ def q_warp_crs(spark, sf_dir):
         (F.col("id") / n_t).cast("long").alias("ty"),
         F.lit(0).alias("band"),
     )
-    joined = full.join(out, ["tx", "ty", "band"], "left")
-
-    def explode(batches):
-        zeros = _np.zeros((tile_size, tile_size), _np.uint8)
-        for b in batches:
-            for tx, ty, data_ in zip(b["tx"], b["ty"], b["data"]):
-                block = (zeros if data_ is None else
-                         _np.frombuffer(data_, dtype=_np.uint8).reshape(
-                             tile_size, tile_size))
-                yy, xx = _np.mgrid[0:tile_size, 0:tile_size]
-                yield _pd.DataFrame({
-                    "px": (int(tx) * tile_size + xx).ravel(),
-                    "py": (int(ty) * tile_size + yy).ravel(),
-                    "val": block.ravel().astype(_np.int64),
-                })
-
-    return joined.mapInPandas(
-        explode, schema="px long, py long, val long").orderBy("py", "px")
+    joined = full.join(out, ["tx", "ty", "band"], "left").withColumn(
+        "data", F.coalesce("data", F.lit(bytes(tile_size * tile_size))))
+    return (_pixel_rows(joined, dst_gg, tile_size, _np.uint8)
+            .select(F.col("gx").alias("px"), F.col("gy").alias("py"),
+                    F.col("val").cast("long"))
+            .orderBy("py", "px"))
 
 
 def q_warp_crs_oracle():
@@ -5616,7 +5487,6 @@ def q_landsat_scene(spark, sf_dir):
     coefficients; the oracle re-derives pixels, coefficients, and the band
     table closed-form."""
     import numpy as _np
-    import pandas as _pd
 
     from .sources.landsat import open_scene
 
@@ -5626,30 +5496,10 @@ def q_landsat_scene(spark, sf_dir):
         meta = scene.band(n)
         tiles, gg = scene.load_band(spark, n)
         mult, add = float(meta["reflectance_mult"]), float(meta["reflectance_add"])
-        w, h = gg.width, gg.height
-        tile_size = 64
-
-        def explode(batches, _m=mult, _a=add, _n=n, _g=meta["group"],
-                    _wl=meta["wavelength_nm"], _w=w, _h=h):
-            for b in batches:
-                for tx, ty, data_ in zip(b["tx"], b["ty"], b["data"]):
-                    block = _np.frombuffer(data_, dtype=_np.uint8).reshape(
-                        tile_size, tile_size)
-                    x0, y0 = int(tx) * tile_size, int(ty) * tile_size
-                    ww, hh2 = min(tile_size, _w - x0), min(tile_size, _h - y0)
-                    yy, xx = _np.mgrid[0:hh2, 0:ww]
-                    v = block[:hh2, :ww].ravel().astype(_np.float64)
-                    yield _pd.DataFrame({
-                        "band": _n, "grp": _g, "wavelength_nm": _wl,
-                        "gx": (x0 + xx).ravel(), "gy": (y0 + yy).ravel(),
-                        "refl": _m * v + _a,
-                    })
-
-        outs.append(tiles.mapInPandas(
-            explode,
-            schema="band int, grp string, wavelength_nm int, "
-                   "gx long, gy long, refl double",
-        ))
+        outs.append(_pixel_rows(tiles, gg, 64, _np.uint8).select(
+            F.lit(n).alias("band"), F.lit(meta["group"]).alias("grp"),
+            F.lit(int(meta["wavelength_nm"])).alias("wavelength_nm"), "gx", "gy",
+            (F.lit(mult) * F.col("val") + F.lit(add)).alias("refl")))
     out = outs[0].unionByName(outs[1])
     return out.orderBy("band", "gy", "gx")
 
@@ -6697,7 +6547,7 @@ def q_convolve(spark, sf_dir):
     from .raster.terrain import convolve_tiles
 
     W, H, TS = _CONV_W, _CONV_H, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     conv = convolve_tiles(tiles, gg, _CONV_KERNEL, tile_size=TS)
 
@@ -6858,7 +6708,7 @@ def q_flow_dir(spark, sf_dir):
     from .raster.terrain import flow_dir_tiles
 
     W, H, TS = 512, 384, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     d = flow_dir_tiles(tiles, gg, tile_size=TS)
 
@@ -6888,7 +6738,7 @@ def q_flow_accum(spark, sf_dir):
 
     W = H = 128
     TS = 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     acc = flow_accum(cells)
@@ -7043,7 +6893,7 @@ def q_watershed(spark, sf_dir):
 
     W = H = 128
     TS = 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     basins = watershed_basins(cells)
@@ -7611,7 +7461,7 @@ def q_morphology(spark, sf_dir):
     from .raster.terrain import rank_filter_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     dil = rank_filter_tiles(tiles, gg, "max", tile_size=TS)
     ero = rank_filter_tiles(tiles, gg, "min", tile_size=TS)
@@ -7659,7 +7509,7 @@ def q_distance_transform(spark, sf_dir):
     from .raster.terrain import chamfer_dt_tiles
 
     W, H, TS = 256, 192, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     dt = chamfer_dt_tiles(tiles, gg, tile_size=TS)
 
@@ -7740,7 +7590,7 @@ def q_integral_image(spark, sf_dir):
     from .raster.integral import integral_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     sat = integral_tiles(tiles, gg, tile_size=TS)
 
@@ -7776,7 +7626,7 @@ def q_voronoi(spark, sf_dir):
     from .raster.terrain import _VOR_SCALE, voronoi_tiles
 
     W, H, TS = 256, 192, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     vt = voronoi_tiles(tiles, gg, tile_size=TS)
 
@@ -9480,7 +9330,7 @@ def q_hist_eq(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     out = hist_eq(tiles, gg)
     return band_stats(out, gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -9527,7 +9377,7 @@ def q_hillshade(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     out = hillshade_tiles(tiles, gg)
     return band_stats(out, gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -9653,7 +9503,7 @@ def q_ssim_tiles(spark, sf_dir):
     from .raster.tiles import ssim_tiles
 
     W, H = 448, 256  # multiples of 64: every pixel real
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     a = tiles.filter(F.col("band") == 0)
     b = tiles.filter(F.col("band") == 1).withColumn("band", F.lit(0).cast("int"))
     return ssim_tiles(a, b).orderBy("tx", "ty")
@@ -9744,7 +9594,7 @@ def q_ndvi(spark, sf_dir):
     from .raster.tiles import band_ratio_tiles
 
     W, H = 448, 256
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     a = tiles.filter(F.col("band") == 0)
     b = tiles.filter(F.col("band") == 1).withColumn("band", F.lit(0).cast("int"))
     return band_ratio_tiles(a, b).orderBy("tx", "ty")
@@ -9779,7 +9629,7 @@ def q_glcm(spark, sf_dir):
     from .raster.tiles import glcm_tiles
 
     W, H = 448, 256
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     return glcm_tiles(tiles).orderBy("tx", "ty")
 
 
@@ -9954,7 +9804,7 @@ def q_otsu(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     return otsu_threshold(tiles, gg).orderBy("band")
 
 
@@ -10062,7 +9912,7 @@ def q_tri(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     return tri_tiles(tiles, gg).orderBy("tx", "ty")
 
 
@@ -10393,7 +10243,7 @@ def q_downsample_mean(spark, sf_dir):
 
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     out, out_gg = downsample_mean(tiles, gg)
     return band_stats(out, out_gg).select(
         "band", "n", "min", "max", "sum", "mean"
@@ -10657,7 +10507,7 @@ def q_tile_entropy(spark, sf_dir):
     from .raster.tiles import tile_entropy
 
     W, H = 448, 256
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     return tile_entropy(tiles).orderBy("tx", "ty")
 
 
@@ -10689,7 +10539,7 @@ def q_hist_match(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=2)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:2])
     a = tiles.filter(F.col("band") == 0)
     ref = tiles.filter(F.col("band") == 1).withColumn(
         "band", F.lit(0).cast("int")
@@ -10912,7 +10762,7 @@ def q_resample_bilinear(spark, sf_dir):
     SW, SH, DW, DH = 256, 192, 384, 288
     src_gg = GridGeometry((0, 0, SW - 1, SH - 1), (0.0625, 0.0, 0.0, 0.0, -0.0625, 12.0))
     dst_gg = GridGeometry((0, 0, DW - 1, DH - 1), (0.03125, 0.0, 0.5, 0.0, -0.03125, 11.5))
-    tiles = _formula_tiles(spark, SW, SH, bands=1)
+    tiles = _synth_tiles(spark, SW, SH, _FORMULAS[:1])
     out = resample_gather(tiles, src_gg, dst_gg, method="bilinear")
 
     def chk(batches):
@@ -11108,7 +10958,7 @@ def q_blockiness(spark, sf_dir):
     from .raster.tiles import blockiness
 
     W, H = 448, 256
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     return blockiness(tiles).orderBy("tx", "ty")
 
 
@@ -11528,77 +11378,15 @@ def _texture_v_sql(x: str, y: str) -> str:
             f"+ 11 * ({x}) + 13 * ({y})) % 256")
 
 
-def _texture_tiles(spark, w: int, h: int, tile_size: int = 64):
-    """Distributed quadratic-formula raster (band 0 only), the engine twin
-    of ``_texture_v_sql`` — same mapInPandas layout as ``_formula_tiles``."""
-    import numpy as _np
-    import pandas as _pd
-
-    from .raster.tiles import TILE_SCHEMA
-
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty).repartition(
-        min(ntx * nty, spark.sparkContext.defaultParallelism)
-    )
-
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                t = int(i)
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs,
-                                      ty * tile_size + gxs)
-                block = (3 * GX * GX + 7 * GX * GY + 5 * GY * GY
-                         + 11 * GX + 13 * GY) % 256
-                block = _np.where((GX < w) & (GY < h), block, 0).astype(
-                    _np.uint8
-                )
-                rows.append({"tx": tx, "ty": ty, "band": 0,
-                             "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
-
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+def _tex(X, Y):
+    """Quadratic texture formula, the pixel twin of ``_texture_v_sql``."""
+    return (3 * X * X + 7 * X * Y + 5 * Y * Y + 11 * X + 13 * Y) % 256
 
 
-def _texture_tiles_multi(spark, w: int, h: int, shifts, tile_size: int = 64):
-    """Multi-band twin of ``_texture_tiles``: band b samples the texture
-    formula at (x + shifts[b][0], y + shifts[b][1])."""
-    import numpy as _np
-    import pandas as _pd
-
-    from .raster.tiles import TILE_SCHEMA
-
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty).repartition(
-        min(ntx * nty, spark.sparkContext.defaultParallelism)
-    )
-    shifts = [tuple(s) for s in shifts]
-
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                t = int(i)
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs,
-                                      ty * tile_size + gxs)
-                for b, (sx, sy) in enumerate(shifts):
-                    X, Y = GX + sx, GY + sy
-                    block = (3 * X * X + 7 * X * Y + 5 * Y * Y
-                             + 11 * X + 13 * Y) % 256
-                    block = _np.where((GX < w) & (GY < h), block, 0).astype(
-                        _np.uint8
-                    )
-                    rows.append({"tx": tx, "ty": ty, "band": b,
-                                 "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
-
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+def _tex_at(sx: int, sy: int):
+    """The texture sampled at (x + sx, y + sy): one band of a
+    multi-band texture raster."""
+    return lambda X, Y: _tex(X + sx, Y + sy)
 
 
 def q_laplacian(spark, sf_dir):
@@ -11612,7 +11400,7 @@ def q_laplacian(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return laplacian_energy_tiles(tiles, gg).orderBy("tx", "ty")
 
 
@@ -11646,8 +11434,8 @@ def q_brovey(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    ms = _texture_tiles_multi(spark, W, H, [(0, 0), (17, 0), (34, 0)])
-    pan = _texture_tiles_multi(spark, W, H, [(0, 31)])
+    ms = _synth_tiles(spark, W, H, [_tex_at(0, 0), _tex_at(17, 0), _tex_at(34, 0)])
+    pan = _synth_tiles(spark, W, H, [_tex_at(0, 31)])
     out = brovey_tiles(ms, pan, gg)
 
     def stats(batches):
@@ -11701,7 +11489,7 @@ def q_demosaic(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     out = demosaic_tiles(tiles, gg)
 
     def stats(batches):
@@ -11767,7 +11555,7 @@ def q_lbp(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return lbp_tiles(tiles, gg).orderBy("tx", "ty", "code")
 
 
@@ -11803,7 +11591,7 @@ def q_hog(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return hog_tiles(tiles, gg).orderBy("tx", "ty")
 
 
@@ -11959,7 +11747,7 @@ def q_image_moments(spark, sf_dir):
     per-tile partials add, zero shuffles."""
     from .raster.tiles import moments_tiles
 
-    tiles = _formula_tiles(spark, 448, 256, bands=1)
+    tiles = _synth_tiles(spark, 448, 256, _FORMULAS[:1])
     return moments_tiles(tiles).orderBy("tx", "ty")
 
 
@@ -12333,7 +12121,7 @@ def q_mode_filter(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return mode_filter_tiles(tiles, gg).orderBy("tx", "ty", "v")
 
 
@@ -12634,7 +12422,7 @@ def q_gamma_lut(spark, sf_dir):
     functions) with no runtime pow anywhere."""
     from .raster.tiles import gamma_lut, lut_hist_tiles
 
-    tiles = _texture_tiles(spark, 448, 256)
+    tiles = _synth_tiles(spark, 448, 256, [_tex])
     return lut_hist_tiles(tiles, gamma_lut(2.2)).orderBy("tx", "ty", "v")
 
 
@@ -12695,7 +12483,7 @@ def q_range_filter(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return range_filter_tiles(tiles, gg, thresh=24).orderBy("tx", "ty")
 
 
@@ -12842,7 +12630,7 @@ def q_row_profile(spark, sf_dir):
     per-tile partial row sums + one tiny keyed aggregation."""
     from .raster.tiles import row_profile
 
-    tiles = _texture_tiles(spark, 448, 256)
+    tiles = _synth_tiles(spark, 448, 256, [_tex])
     return row_profile(tiles).orderBy("band", "y")
 
 
@@ -13430,7 +13218,7 @@ def q_fast_corners(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return fast_corners_tiles(tiles, gg, t=20).orderBy("x", "y")
 
 
@@ -13481,7 +13269,7 @@ def q_clahe(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     out = clahe_tiles(tiles, gg, clip_limit=64)
 
     def stats(batches):
@@ -13566,7 +13354,7 @@ def q_canny(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     nms = canny_nms_tiles(tiles, gg, t_low=_CANNY_TL)
     return canny_edges(nms, gg, t_high=_CANNY_TH).orderBy("x", "y")
 
@@ -13620,7 +13408,7 @@ def q_euler(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return euler_tiles(tiles, gg, threshold=128).orderBy("tx", "ty")
 
 
@@ -13667,7 +13455,7 @@ def q_skeleton(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return zhang_suen_tiles(
         tiles, gg, threshold=230, rounds=_ZS_ROUNDS
     ).orderBy("x", "y")
@@ -13705,7 +13493,7 @@ def q_harris(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return harris_tiles(tiles, gg, threshold=_HARRIS_THR).orderBy("x", "y")
 
 
@@ -13753,7 +13541,7 @@ def q_hough(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return hough_votes(tiles, gg, threshold=240).orderBy("k", "rho_idx")
 
 
@@ -13877,7 +13665,7 @@ def q_curvature(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return curvature_tiles(tiles, gg).orderBy("tx", "ty")
 
 
@@ -13935,7 +13723,7 @@ def q_cost_distance(spark, sf_dir):
     W, H = 192, 128
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return cost_distance_tiles(tiles, gg, hops=8).orderBy("x", "y")
 
 
@@ -13986,7 +13774,7 @@ def q_viewshed(spark, sf_dir):
     W, H = 192, 128
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return viewshed_tiles(tiles, gg, ox=96, oy=64, obs_height=20).orderBy(
         "x", "y"
     )
@@ -14039,7 +13827,7 @@ def q_template_match(spark, sf_dir):
     W, H = 192, 128
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return template_match_tiles(tiles, gg, _tmatch_template()).orderBy(
         "x", "y"
     )
@@ -14304,7 +14092,7 @@ def q_haar(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _texture_tiles(spark, W, H)
+    tiles = _synth_tiles(spark, W, H, [_tex])
     return haar_energy_tiles(tiles, gg).orderBy("tx", "ty")
 
 
@@ -14330,42 +14118,11 @@ SELECT CAST(bi // {T // 2} AS BIGINT) AS tx,
 FROM blk GROUP BY 1, 2 ORDER BY tx, ty"""
 
 
-def _texture_tiles_shifted(spark, w: int, h: int, tile_size: int = 64):
-    """Right-eye twin of ``_texture_tiles``: value at (x, y) is the
-    texture formula sampled at (x + D(y), y) with the planted disparity
-    D(y) = 2 + y//64 — so block matching should recover D almost
-    everywhere (SSD 0 at the true shift)."""
-    import numpy as _np
-    import pandas as _pd
-
-    from .raster.tiles import TILE_SCHEMA
-
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty).repartition(
-        min(ntx * nty, spark.sparkContext.defaultParallelism)
-    )
-
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                t = int(i)
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs,
-                                      ty * tile_size + gxs)
-                SX = GX + 2 + GY // 64
-                block = (3 * SX * SX + 7 * SX * GY + 5 * GY * GY
-                         + 11 * SX + 13 * GY) % 256
-                block = _np.where((GX < w) & (GY < h), block, 0).astype(
-                    _np.uint8
-                )
-                rows.append({"tx": tx, "ty": ty, "band": 0,
-                             "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
-
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+def _tex_shifted(X, Y):
+    """Right-eye twin of ``_tex``: the texture sampled at (x + D(y), y)
+    with the planted disparity D(y) = 2 + y//64 — so block matching
+    should recover D almost everywhere (SSD 0 at the true shift)."""
+    return _tex(X + 2 + Y // 64, Y)
 
 
 def q_disparity(spark, sf_dir):
@@ -14380,8 +14137,8 @@ def q_disparity(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    left = _texture_tiles(spark, W, H)
-    right = _texture_tiles_shifted(spark, W, H)
+    left = _synth_tiles(spark, W, H, [_tex])
+    right = _synth_tiles(spark, W, H, [_tex_shifted])
     return disparity_tiles(left, right, gg, d_max=8, block=8).orderBy(
         "bx", "by")
 
@@ -14545,42 +14302,11 @@ SELECT CAST(f AS BIGINT) AS file_id, CAST(seq AS BIGINT) AS seq,
 FROM pts ORDER BY file_id, seq"""
 
 
-def _texture_tiles_flowed(spark, w: int, h: int, tile_size: int = 64):
-    """Second-epoch twin of ``_texture_tiles``: value at (x, y) is the
-    texture formula sampled at (x + 1 + (y//64)%3, y + (x//64)%3) — a
-    planted per-band displacement field for the optical-flow gate."""
-    import numpy as _np
-    import pandas as _pd
-
-    from .raster.tiles import TILE_SCHEMA
-
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty).repartition(
-        min(ntx * nty, spark.sparkContext.defaultParallelism)
-    )
-
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                t = int(i)
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs,
-                                      ty * tile_size + gxs)
-                SX = GX + 1 + (GY // 64) % 3
-                SY = GY + (GX // 64) % 3
-                block = (3 * SX * SX + 7 * SX * SY + 5 * SY * SY
-                         + 11 * SX + 13 * SY) % 256
-                block = _np.where((GX < w) & (GY < h), block, 0).astype(
-                    _np.uint8
-                )
-                rows.append({"tx": tx, "ty": ty, "band": 0,
-                             "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
-
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+def _tex_flowed(X, Y):
+    """Second-epoch twin of ``_tex``: the texture sampled at
+    (x + 1 + (y//64)%3, y + (x//64)%3) — a planted per-band displacement
+    field for the optical-flow gate."""
+    return _tex(X + 1 + (Y // 64) % 3, Y + (X // 64) % 3)
 
 
 def q_optical_flow(spark, sf_dir):
@@ -14595,8 +14321,8 @@ def q_optical_flow(spark, sf_dir):
     W, H = 448, 256
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    a = _texture_tiles(spark, W, H)
-    b = _texture_tiles_flowed(spark, W, H)
+    a = _synth_tiles(spark, W, H, [_tex])
+    b = _synth_tiles(spark, W, H, [_tex_flowed])
     return optical_flow_tiles(a, b, gg, s_max=4, block=8).orderBy(
         "bx", "by")
 
@@ -15174,7 +14900,7 @@ def q_zonal_mode(spark, sf_dir):
     })
     polys = spark.createDataFrame(pdf, schema="key long, wkb binary")
     zones = rasterize_polygons(polys, _rasterize_gg(), tile_size=RAST_TS)
-    vals = _texture_tiles(spark, RAST_W, RAST_H, tile_size=RAST_TS)
+    vals = _synth_tiles(spark, RAST_W, RAST_H, [_tex], tile_size=RAST_TS)
     return zonal_mode(zones, vals, tile_size=RAST_TS).orderBy("zone")
 
 
@@ -15625,7 +15351,7 @@ def q_median_filter(spark, sf_dir):
     from .raster.terrain import rank_filter_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     med = rank_filter_tiles(tiles, gg, "median", tile_size=TS)
 
@@ -16308,7 +16034,7 @@ def q_lbp(spark, sf_dir):
 
     W, H = 500, 300
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
-    tiles = _formula_tiles(spark, W, H, bands=1)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1])
     return lbp_tiles(tiles, gg).orderBy("tx", "ty", "code")
 
 
@@ -16497,7 +16223,7 @@ def q_bilateral(spark, sf_dir):
     from .raster.terrain import bilateral_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = bilateral_tiles(tiles, gg, tile_size=TS)
 
@@ -16637,7 +16363,7 @@ def q_adaptive_threshold(spark, sf_dir):
     from .raster.terrain import adaptive_threshold_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = adaptive_threshold_tiles(tiles, gg, radius=4, t_pct=15, tile_size=TS)
 
@@ -16992,7 +16718,7 @@ def q_join_counts(spark, sf_dir):
     pass — the binary-map spatial autocorrelation test."""
     from .raster.tiles import join_counts_tiles
 
-    tiles = _texture_tiles(spark, 512, 256)
+    tiles = _synth_tiles(spark, 512, 256, [_tex])
     return join_counts_tiles(tiles, thresh=128)
 
 
@@ -17378,7 +17104,7 @@ def q_census_transform(spark, sf_dir):
     from .raster.terrain import census_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _texture_tiles(spark, W, H, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, [_tex], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cen = census_tiles(tiles, gg, tile_size=TS)
@@ -17493,41 +17219,11 @@ WHERE i <> (3 * i + o) % nn.n"""
 QUERIES["betweenness"] = (q_betweenness, q_betweenness_oracle)
 
 
-def _texture_tiles_perturbed(spark, w: int, h: int, tile_size: int = 64):
-    """Texture raster plus the deterministic +/-2 sensor-noise field
-    ((x*31 + y*17) % 5 - 2, wrapped mod 256) — the 'second exposure'
-    for matching gates."""
-    import numpy as _np
-    import pandas as _pd
-
-    from .raster.tiles import TILE_SCHEMA
-
-    ntx = (w + tile_size - 1) // tile_size
-    nty = (h + tile_size - 1) // tile_size
-    ids = spark.range(ntx * nty).repartition(
-        min(ntx * nty, spark.sparkContext.defaultParallelism)
-    )
-
-    def fill(batches):
-        gxs = _np.arange(tile_size, dtype=_np.int64)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                t = int(i)
-                tx, ty = t % ntx, t // ntx
-                GX, GY = _np.meshgrid(tx * tile_size + gxs,
-                                      ty * tile_size + gxs)
-                tex = (3 * GX * GX + 7 * GX * GY + 5 * GY * GY
-                       + 11 * GX + 13 * GY) % 256
-                block = (tex + (GX * 31 + GY * 17) % 5 + 254) % 256
-                block = _np.where((GX < w) & (GY < h), block, 0).astype(
-                    _np.uint8
-                )
-                rows.append({"tx": tx, "ty": ty, "band": 0,
-                             "data": block.tobytes()})
-            yield _pd.DataFrame(rows)
-
-    return ids.mapInPandas(fill, TILE_SCHEMA)
+def _tex_perturbed(X, Y):
+    """Texture plus the deterministic +/-2 sensor-noise field
+    ((x*31 + y*17) % 5 - 2, wrapped mod 256) — the 'second exposure' for
+    matching gates."""
+    return (_tex(X, Y) + (X * 31 + Y * 17) % 5 + 254) % 256
 
 
 def q_brief_match(spark, sf_dir):
@@ -17547,11 +17243,11 @@ def q_brief_match(spark, sf_dir):
     gg = GridGeometry((0, 0, W - 1, H - 1),
                       (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     da = brief_descriptors_tiles(
-        _texture_tiles(spark, W, H, TS), gg, step=16, margin=8,
+        _synth_tiles(spark, W, H, [_tex], TS), gg, step=16, margin=8,
         tile_size=TS,
     )
     db = brief_descriptors_tiles(
-        _texture_tiles_perturbed(spark, W, H, TS), gg, step=16, margin=8,
+        _synth_tiles(spark, W, H, [_tex_perturbed], TS), gg, step=16, margin=8,
         tile_size=TS,
     )
     out = hamming_join_bands(da, db, bits=48, band_bits=8, max_d=5)
@@ -18241,7 +17937,7 @@ def q_resample_bicubic(spark, sf_dir):
     SW, SH, DW, DH = 256, 192, 384, 288
     src_gg = GridGeometry((0, 0, SW - 1, SH - 1), (0.0625, 0.0, 0.0, 0.0, -0.0625, 12.0))
     dst_gg = GridGeometry((0, 0, DW - 1, DH - 1), (0.03125, 0.0, 0.5, 0.0, -0.03125, 11.5))
-    tiles = _formula_tiles(spark, SW, SH, bands=1)
+    tiles = _synth_tiles(spark, SW, SH, _FORMULAS[:1])
     out = resample_gather(tiles, src_gg, dst_gg, method="bicubic")
 
     def chk(batches):
@@ -18689,7 +18385,7 @@ def q_pyramid_blend(spark, sf_dir):
     from .raster.pyramid import laplacian_blend
 
     W = _PB_W
-    tiles = _formula_tiles(spark, W, W, bands=2)
+    tiles = _synth_tiles(spark, W, W, _FORMULAS[:2])
     a = tiles.filter(F.col("band") == 0)
     b = tiles.filter(F.col("band") == 1).withColumn(
         "band", F.lit(0).cast("int")
@@ -18857,7 +18553,7 @@ def q_sauvola(spark, sf_dir):
     from .raster.terrain import sauvola_threshold_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     out = sauvola_threshold_tiles(tiles, gg, radius=4)
 
@@ -19215,7 +18911,7 @@ def q_dog_extrema(spark, sf_dir):
     from .raster.terrain import convolve_tiles, local_extrema_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     k3 = _np.outer([1, 2, 1], [1, 2, 1])
     k5 = _np.outer([1, 4, 6, 4, 1], [1, 4, 6, 4, 1])
@@ -19301,7 +18997,7 @@ def q_orb_octants(spark, sf_dir):
     from .raster.terrain import convolve_tiles, local_extrema_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     k3 = _np.outer([1, 2, 1], [1, 2, 1])
     k5 = _np.outer([1, 4, 6, 4, 1], [1, 4, 6, 4, 1])
@@ -20734,7 +20430,7 @@ def q_strahler(spark, sf_dir):
 
     W = H = 128
     TS = 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     cells = flow_cells(flow_dir_tiles(tiles, gg, tile_size=TS), gg, TS)
     o = strahler_order(cells)
@@ -20888,7 +20584,7 @@ def q_rotate_nearest(spark, sf_dir):
     from .raster.tiles import resample_gather
 
     src_gg, dst_gg = _rot_geoms()
-    tiles = _formula_tiles(spark, _ROT_SW, _ROT_SH, bands=1)
+    tiles = _synth_tiles(spark, _ROT_SW, _ROT_SH, _FORMULAS[:1])
     out = resample_gather(tiles, src_gg, dst_gg, method="nearest")
 
     def chk(batches):
@@ -22078,7 +21774,7 @@ def q_focus_measure(spark, sf_dir):
     from .raster.terrain import convolve_tiles
 
     W, H, TS = 500, 300, 64
-    tiles = _formula_tiles(spark, W, H, bands=1, tile_size=TS)
+    tiles = _synth_tiles(spark, W, H, _FORMULAS[:1], tile_size=TS)
     gg = GridGeometry((0, 0, W - 1, H - 1), (1.0, 0.0, 0.0, 0.0, -1.0, float(H)))
     gx = convolve_tiles(tiles, gg, _SOBEL_GX, tile_size=TS).select(
         "tx", "ty", F.col("data").alias("dx"))

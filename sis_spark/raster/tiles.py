@@ -47,24 +47,30 @@ from .grid import (TILE_SCHEMA, GridGeometry, _gather_2x2, _halo_groups,
                    subsample)
 
 
+def _tile_cut(arr: np.ndarray, tile_size: int) -> dict:
+    """The one array-to-tile cut: an (h, w, bands) array -> TILE_SCHEMA
+    columns (band, then ty, then tx order), edge tiles zero-padded to
+    T x T.  Readers of strips override ``ty`` (and ``band``) with their
+    own scalars."""
+    h, w, nb = arr.shape
+    ts = tile_size
+    nty, ntx = -(-h // ts), -(-w // ts)
+    full = np.zeros((nb, nty * ts, ntx * ts), dtype=arr.dtype)
+    full[:, :h, :w] = arr.transpose(2, 0, 1)
+    blocks = full.reshape(nb, nty, ts, ntx, ts).swapaxes(2, 3)
+    band, ty, tx = np.indices((nb, nty, ntx)).reshape(3, -1)
+    return {"tx": tx.astype(np.int64), "ty": ty.astype(np.int64),
+            "band": band.astype(np.int32),
+            "data": [b.tobytes() for b in blocks.reshape(-1, ts, ts)]}
+
+
 def raster_to_tiles(
     spark: SparkSession, arr: np.ndarray, gg: GridGeometry, tile_size: int = 64
 ) -> DataFrame:
     """Materialize an in-memory (h, w, bands) array as a tile-row DataFrame.
     Edge tiles are zero-padded to full size; real extent lives in ``gg``."""
-    h, w, nb = arr.shape
-    rows = []
-    for band in range(nb):
-        for ty in range(0, (h + tile_size - 1) // tile_size):
-            for tx in range(0, (w + tile_size - 1) // tile_size):
-                block = np.zeros((tile_size, tile_size), dtype=arr.dtype)
-                ys, xs = ty * tile_size, tx * tile_size
-                sub = arr[ys : ys + tile_size, xs : xs + tile_size, band]
-                block[: sub.shape[0], : sub.shape[1]] = sub
-                rows.append(
-                    {"tx": tx, "ty": ty, "band": band, "data": block.tobytes()}
-                )
-    return spark.createDataFrame(pd.DataFrame(rows), schema=TILE_SCHEMA)
+    return spark.createDataFrame(pd.DataFrame(_tile_cut(arr, tile_size)),
+                                 schema=TILE_SCHEMA)
 
 
 def tiles_to_raster(tiles_df: DataFrame, gg: GridGeometry, tile_size: int = 64,

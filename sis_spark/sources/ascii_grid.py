@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udfs import _map_rows
 from ..raster.grid import GridGeometry
 from ..raster.tiles import TILE_SCHEMA, raster_to_tiles
 
@@ -109,22 +110,18 @@ def read_ascii_grid(
 
     idx = idx.repartition(spark.sparkContext.defaultParallelism, "row")
 
-    def to_fragments(batches):
-        for b in batches:
-            out = []
-            for row, line in zip(b["row"], b["line"]):
-                v = np.array(line.split(), dtype=np.float64)
-                v = np.where(v == nodata, np.nan, v)
-                ty, iy = divmod(int(row), tile_size)
-                for tx in range((w + tile_size - 1) // tile_size):
-                    seg = np.zeros(tile_size, dtype=np.float64)
-                    chunk = v[tx * tile_size:(tx + 1) * tile_size]
-                    seg[: len(chunk)] = chunk
-                    out.append((tx, ty, iy, seg.tobytes()))
-            yield pd.DataFrame(out, columns=["tx", "ty", "iy", "seg"])
+    ntx = (w + tile_size - 1) // tile_size
 
-    frags = idx.mapInPandas(
-        to_fragments, schema="tx long, ty long, iy int, seg binary")
+    def to_fragments(row, line):
+        seg = np.zeros(ntx * tile_size, dtype=np.float64)
+        v = np.array(line.split(), dtype=np.float64)[:seg.size]
+        seg[:len(v)] = np.where(v == nodata, np.nan, v)
+        ty, iy = divmod(row["row"], tile_size)
+        return {"tx": np.arange(ntx, dtype=np.int64), "ty": ty, "iy": iy,
+                "seg": [s.tobytes() for s in seg.reshape(ntx, tile_size)]}
+
+    frags = _map_rows(idx, "tx long, ty long, iy int, seg binary", ["line"],
+                      None, to_fragments)
 
     def assemble(key, pdf: pd.DataFrame):
         block = np.zeros((tile_size, tile_size), dtype=np.float64)

@@ -13,8 +13,9 @@ is original, built on the PUBLIC OGC CoverageJSON Community Standard:
   regular grid yields the engine's corner-registered affine.
 
 Spark shape: documents are self-describing JSON, so a folder of coverage
-documents parallelizes per file (the GPX/MF-CSV pattern): each task
-json-parses its files and emits finished tile blocks.  Within one very
+documents parallelizes per file (the GPX/MF-CSV pattern, one manifest
+row per document on ``functions.udfs._map_manifest``): each document is
+json-parsed task-side and cut into finished tile blocks.  Within one very
 large document the per-parameter NdArray is sliced per tile row after a
 single parse — CoverageJSON is a text interchange format, not a scale
 format, and the store documents that boundary (the scale path is
@@ -29,8 +30,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.udfs import _map_manifest
 from ..raster.grid import GridGeometry
-from ..raster.tiles import TILE_SCHEMA
+from ..raster.tiles import TILE_SCHEMA, _tile_cut
 
 
 def _axis_values(axis: dict) -> np.ndarray:
@@ -88,45 +90,27 @@ def coveragejson_tiles(
     file position in ``paths`` (a folder of time slices reads as a band
     stack).  ``index`` fixes non-spatial axes by integer position, e.g.
     ``{"t": 0}``."""
+    if not paths:
+        raise ValueError("coveragejson_tiles needs at least one path "
+                         "(got an empty path list)")
     with open(paths[0], "r") as f:
         first = parse_coverage(json.load(f))
     gg = coverage_grid_geometry(first["axes"])
-    h = len(first["axes"]["y"])
-    w = len(first["axes"]["x"])
     index = dict(index or {})
 
-    par = spark.sparkContext.defaultParallelism
-    pdf = pd.DataFrame({"band": np.arange(len(paths)), "path": paths})
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), par) or 1)
+    def read_doc(row):
+        with open(row["path"], "r") as f:
+            cov = parse_coverage(json.load(f))
+        vals, axis_names = cov["params"][parameter]
+        sel = [slice(None) if ax in ("x", "y") else int(index.get(ax, 0))
+               for ax in axis_names]
+        plane = vals[tuple(sel)]
+        if axis_names.index("x") < axis_names.index("y"):
+            plane = plane.T
+        return dict(_tile_cut(plane[:, :, None], tile_size), band=row["band"])
 
-    def read_docs(batches):
-        for b in batches:
-            for band, path in zip(b["band"], b["path"]):
-                with open(path, "r") as f:
-                    cov = parse_coverage(json.load(f))
-                vals, axis_names = cov["params"][parameter]
-                sel = []
-                for ax in axis_names:
-                    if ax == "y":
-                        sel.append(slice(None))
-                    elif ax == "x":
-                        sel.append(slice(None))
-                    else:
-                        sel.append(int(index.get(ax, 0)))
-                plane = vals[tuple(sel)]
-                if axis_names.index("x") < axis_names.index("y"):
-                    plane = plane.T
-                out = []
-                for ty in range((h + tile_size - 1) // tile_size):
-                    for tx in range((w + tile_size - 1) // tile_size):
-                        block = np.zeros((tile_size, tile_size), np.float64)
-                        sub = plane[ty * tile_size:(ty + 1) * tile_size,
-                                    tx * tile_size:(tx + 1) * tile_size]
-                        block[: sub.shape[0], : sub.shape[1]] = sub
-                        out.append((tx, ty, int(band), block.tobytes()))
-                yield pd.DataFrame(out, columns=["tx", "ty", "band", "data"])
-
-    return df.mapInPandas(read_docs, schema=TILE_SCHEMA), gg
+    docs = pd.DataFrame({"band": np.arange(len(paths)), "path": paths})
+    return _map_manifest(spark, docs, TILE_SCHEMA, read_doc), gg
 
 
 def format_coverage(axes: dict, params: dict) -> str:

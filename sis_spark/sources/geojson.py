@@ -27,6 +27,7 @@ import json
 import pandas as pd
 
 from ..functions.geometry import wkb_parse, wkb_write
+from ..functions.udfs import _map_rows, _parse_files
 
 GEOJSON_SCHEMA = "seq long, gtype string, wkb binary, props string"
 
@@ -142,19 +143,7 @@ def parse_geojson(text: str) -> pd.DataFrame:
 def geojson_table(spark, paths: list[str]):
     """Distributed read of many FeatureCollection files: the path list
     parallelizes and each task parses its files (the GPX-store shape)."""
-    pdf = pd.DataFrame({"path": paths})
-    par = spark.sparkContext.defaultParallelism
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), par) or 1)
-
-    def read(batches):
-        for b in batches:
-            for path in b["path"]:
-                with open(path, "r") as f:
-                    out = parse_geojson(f.read())
-                out.insert(0, "path", path)
-                yield out
-
-    return df.mapInPandas(read, schema="path string, " + GEOJSON_SCHEMA)
+    return _parse_files(spark, paths, GEOJSON_SCHEMA, parse_geojson)
 
 
 def geojson_seq_table(spark, path: str):
@@ -163,23 +152,14 @@ def geojson_seq_table(spark, path: str):
     line-level splits, so one multi-TB file fans out; ``seq`` is the
     per-partition-stable line hash surrogate (use an id property for a
     stable key at scale)."""
-    lines = spark.read.text(path)
+    def decode(row, ln):
+        s = ln.strip()
+        if not s or s == "\x1e":
+            return None
+        return (json.loads(s.lstrip("\x1e")),)
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for ln in b["value"]:
-                s = ln.strip()
-                if not s or s == "\x1e":
-                    continue
-                rows.append(parse_feature(json.loads(s.lstrip("\x1e")), 0))
-            if rows:
-                out = pd.DataFrame(
-                    rows, columns=["seq", "gtype", "wkb", "props"]
-                )
-                yield out
-
-    return lines.mapInPandas(parse, schema=GEOJSON_SCHEMA)
+    return _map_rows(spark.read.text(path), GEOJSON_SCHEMA, ["value"], decode,
+                     lambda row, feat: parse_feature(feat, 0))
 
 
 def feature_json(gtype: str, wkb: bytes, props_json: str | None) -> str:
@@ -214,16 +194,7 @@ def write_geojson(df: pd.DataFrame) -> str:
 def write_geojson_seq(df, out_path: str):
     """Engine DataFrame (GEOJSON_SCHEMA columns) -> ndjson directory via
     the line writer (one Feature per line, executor-side encode)."""
-    from pyspark.sql import functions as F  # noqa: N812
-
-    def enc(batches):
-        for b in batches:
-            vals = [
-                feature_json(g, w, p)
-                for g, w, p in zip(b["gtype"], b["wkb"], b["props"])
-            ]
-            yield pd.DataFrame({"value": vals})
-
-    df.select("gtype", "wkb", "props").mapInPandas(
-        enc, schema="value string"
-    ).write.mode("overwrite").text(out_path)
+    _map_rows(df.select("gtype", "wkb", "props"), "value string",
+              ["gtype", "wkb", "props"], None,
+              lambda row, g, w, p: {"value": feature_json(g, w, p)},
+              ).write.mode("overwrite").text(out_path)

@@ -13,8 +13,9 @@ stdlib ``sqlite3``:
 
 Spark shape: this is the engine's JDBC/SQL-store analog
 (SQL/SQLStore.java, FeatureStream.java pushdown): the driver reads only
-the catalog + MIN/MAX(rowid); the read fans out as rowid-range partitions
-and each task opens the database read-only and executes
+the catalog + MIN/MAX(rowid); the read fans out as a manifest of rowid
+ranges (``functions.udfs._map_manifest``) and each range opens the
+database read-only and executes
 
     SELECT ... WHERE rowid BETWEEN ? AND ? [AND <pushdown predicate>]
 
@@ -27,10 +28,13 @@ from __future__ import annotations
 import os
 import sqlite3
 import struct
+from contextlib import closing
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.udfs import _map_manifest
 
 
 def gpb_to_wkb(blob: bytes) -> bytes | None:
@@ -141,8 +145,7 @@ def list_feature_tables(path: str) -> list[dict]:
 
 
 def geopackage_table(
-    spark: SparkSession, path: str, table: str,
-    predicate: str | None = None, num_partitions: int | None = None,
+    spark: SparkSession, path: str, table: str, predicate: str | None = None,
 ) -> DataFrame:
     """Distributed partitioned read of one feature table.  ``predicate``
     (SQL over the table's columns) is PUSHED DOWN into every partition's
@@ -178,27 +181,21 @@ def geopackage_table(
     if lo is None:
         return spark.createDataFrame([], schema)
 
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    edges = np.linspace(lo, hi + 1, n_part + 1).astype(np.int64)
+    edges = np.linspace(lo, hi + 1, spark.sparkContext.defaultParallelism + 1
+                        ).astype(np.int64)
     ranges = pd.DataFrame({"lo": edges[:-1], "hi": edges[1:] - 1})
     ranges = ranges[ranges["hi"] >= ranges["lo"]]
-    rdf = spark.createDataFrame(ranges).repartition(len(ranges))
     where_extra = f" AND ({predicate})" if predicate else ""
 
-    def read_range(batches):
-        c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        try:
-            for b in batches:
-                for lo_, hi_ in zip(b["lo"], b["hi"]):
-                    cur = c.execute(
-                        f"SELECT * FROM {table} WHERE rowid BETWEEN ? AND ?"
-                        + where_extra, (int(lo_), int(hi_)))
-                    rows = cur.fetchall()
-                    pdf = pd.DataFrame(rows, columns=col_names)
-                    if len(pdf):
-                        pdf[geom_col] = [gpb_to_wkb(v) for v in pdf[geom_col]]
-                    yield pdf
-        finally:
-            c.close()
+    def read_range(row):
+        with closing(sqlite3.connect(f"file:{path}?mode=ro", uri=True)) as c:
+            rows = c.execute(
+                f"SELECT * FROM {table} WHERE rowid BETWEEN ? AND ?"
+                + where_extra, (row["lo"], row["hi"])).fetchall()
+        if not rows:
+            return None
+        cols = dict(zip(col_names, map(list, zip(*rows))))
+        cols[geom_col] = [gpb_to_wkb(v) for v in cols[geom_col]]
+        return cols
 
-    return rdf.mapInPandas(read_range, schema=schema)
+    return _map_manifest(spark, ranges, schema, read_range)

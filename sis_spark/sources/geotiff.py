@@ -630,9 +630,8 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
     range-read + inflate in parallel (TiledGridCoverage's AT_GET_TILE_TIME).
     """
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from ..functions.udfs import _map_rows
+    from ..functions.udfs import _map_manifest
     from ..raster.grid import GridGeometry
     from ..raster.tiles import TILE_SCHEMA
 
@@ -657,9 +656,6 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
     bc = spark.sparkContext.broadcast(buf)
 
     manifest = pd.DataFrame(info["blocks"])
-    mdf = spark.createDataFrame(manifest).repartition(
-        min(len(manifest), spark.sparkContext.defaultParallelism)
-    )
 
     ntx, nty = (w + tile_size - 1) // tile_size, (h + tile_size - 1) // tile_size
 
@@ -696,14 +692,16 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
             return {"tx": row["tx"], "ty": row["ty"], "band": np.arange(c),
                     "data": [block[:, :, b].tobytes() for b in range(c)]}
 
-        tiles_df = _map_rows(mdf, TILE_SCHEMA, [], decode, inflate_aligned)
+        tiles_df = _map_manifest(spark, manifest, TILE_SCHEMA, inflate_aligned,
+                                 decode)
         gg = GridGeometry((0, 0, w - 1, h - 1), info["affine"],
                       geokeys_to_crs(info["geokeys"]) or "EPSG:4326") if info["affine"] else None
         return tiles_df, gg
 
-    pieces = _map_rows(
-        mdf, "tx long, ty long, band int, sy long, sx long, data binary, bh long, bw long",
-        [], decode, inflate)
+    pieces = _map_manifest(
+        spark, manifest,
+        "tx long, ty long, band int, sy long, sx long, data binary, bh long, bw long",
+        inflate, decode)
 
     def assemble(key, pdf):
         tx, ty, band = int(key[0]), int(key[1]), int(key[2])
@@ -720,8 +718,6 @@ def geotiff_tiles(spark, buf: bytes, tile_size: int = 64, level: int = 0):
             x1 = min(ox + tile_size, sx + block.shape[1], w)
             if y1 > y0 and x1 > x0:
                 out[y0 - oy : y1 - oy, x0 - ox : x1 - ox] = block[y0 - sy : y1 - sy, x0 - sx : x1 - sx]
-        import pandas as pd  # noqa: F811
-
         return pd.DataFrame({"tx": [tx], "ty": [ty], "band": [band], "data": [out.tobytes()]})
 
     tiles_df = pieces.groupBy("tx", "ty", "band").applyInPandas(assemble, schema=TILE_SCHEMA)

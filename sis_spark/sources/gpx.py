@@ -11,9 +11,10 @@ with stdlib ``xml.etree`` parsing:
   trkseg nesting becomes a segment_id column, the Moving-Features
   "trajectory as ordered rows" shape shared with the CSV store.
 
-Reading is driver-side per file (GPX files are small); many files
-parallelize via ``spark.read`` of the paths + mapInPandas parse — the
-shape provided by ``gpx_table``.  A writer round-trips the same schema.
+Reading is one file per task-side parse (GPX files are small); many
+files parallelize as a manifest of paths (``functions.udfs._parse_files``
+on ``_map_manifest``) — the shape provided by ``gpx_table``.  A writer
+round-trips the same schema.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ import xml.etree.ElementTree as ET
 from xml.sax.saxutils import escape
 
 import pandas as pd
+
+from ..functions.udfs import _parse_files
 
 GPX_SCHEMA = (
     "kind string, route_id int, segment_id int, seq int, "
@@ -108,20 +111,6 @@ def write_gpx(df: pd.DataFrame) -> str:
 
 def gpx_table(spark, paths: list[str]):
     """Distributed read of many GPX files: the path list parallelizes and
-    each task parses its files (mapInPandas; file content read task-side —
-    the DataStore probe/open shape for a folder of GPX files)."""
-    import pandas as pd  # noqa: F811
-
-    pdf = pd.DataFrame({"path": paths})
-    par = spark.sparkContext.defaultParallelism
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), par) or 1)
-
-    def read(batches):
-        for b in batches:
-            for path in b["path"]:
-                with open(path, "r") as f:
-                    out = parse_gpx(f.read())
-                out.insert(0, "path", path)
-                yield out
-
-    return df.mapInPandas(read, schema="path string, " + GPX_SCHEMA)
+    each task parses its files (file content read task-side — the
+    DataStore probe/open shape for a folder of GPX files)."""
+    return _parse_files(spark, paths, GPX_SCHEMA, parse_gpx)

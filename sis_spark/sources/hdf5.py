@@ -26,10 +26,10 @@ headers, symbol-table root group, chunked+deflate or contiguous datasets)
 so round-trip tests exercise the reader without an external library —
 the JPEG-codec precedent (raster/jpeg.py).
 
-The distributed read maps HDF5 chunks straight onto Spark tasks: the
-driver walks the chunk B-tree (metadata only), builds a chunk manifest
-DataFrame, and executors do ranged reads + inflate per chunk —
-shuffle-free, like the classic-netCDF strip reader.
+The distributed read maps HDF5 chunks straight onto manifest rows: the
+driver walks the chunk B-tree (metadata only), builds the chunk manifest
+(``functions.udfs._map_manifest``), and executors do ranged reads +
+inflate per chunk — shuffle-free, like the classic-netCDF strip reader.
 """
 
 from __future__ import annotations
@@ -744,8 +744,8 @@ def netcdf4_variable_tiles(spark, path: str, var_name: str,
     to full chunk size, in TILE_SCHEMA with band 0.
     """
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
 
+    from ..functions.udfs import _map_manifest
     from ..raster.grid import GridGeometry
     from ..raster.tiles import TILE_SCHEMA
 
@@ -797,31 +797,23 @@ def netcdf4_variable_tiles(spark, path: str, var_name: str,
         "addr": [c["addr"] for c in man] + [-1] * len(absent),
         "nbytes": [c["nbytes"] for c in man] + [0] * len(absent),
     })
-    par = spark.sparkContext.defaultParallelism
-    manifest = spark.createDataFrame(rows).repartition(
-        min(max(len(rows), 1), par))
 
-    def read_tiles(batches):
-        for b in batches:
-            out = []
-            for tx, ty, addr, nbytes in zip(
-                    b["tx"], b["ty"], b["addr"], b["nbytes"]):
-                if int(addr) < 0:  # synthesized all-fill chunk
-                    block = np.full(
-                        (ch, cw),
-                        float(h5fill) if h5fill is not None else 0.0,
-                        np.float64)
-                else:
-                    block = read_chunk(path, int(addr), int(nbytes), filters,
-                                       dtype, (ch, cw)).astype(np.float64)
-                if fill is not None:
-                    block = np.where(block == float(fill), np.nan, block)
-                if scale != 1.0 or off != 0.0:
-                    block = block * scale + off
-                out.append((int(tx), int(ty), 0, block.tobytes()))
-            yield pd.DataFrame(out, columns=["tx", "ty", "band", "data"])
+    def read_tile(row):
+        if row["addr"] < 0:  # synthesized all-fill chunk
+            block = np.full((ch, cw),
+                            float(h5fill) if h5fill is not None else 0.0,
+                            np.float64)
+        else:
+            block = read_chunk(path, row["addr"], row["nbytes"], filters,
+                               dtype, (ch, cw)).astype(np.float64)
+        if fill is not None:
+            block = np.where(block == float(fill), np.nan, block)
+        if scale != 1.0 or off != 0.0:
+            block = block * scale + off
+        return {"tx": row["tx"], "ty": row["ty"], "band": 0,
+                "data": block.tobytes()}
 
-    return manifest.mapInPandas(read_tiles, schema=TILE_SCHEMA), gg, (ch, cw)
+    return _map_manifest(spark, rows, TILE_SCHEMA, read_tile), gg, (ch, cw)
 
 
 def _attr_msg_v3(name: str, val) -> bytes:

@@ -11,8 +11,9 @@ this follows the public OGC 07-147r2 spec directly) with stdlib
 * <ExtendedData><Data name=..><value>  -> a map column
 
 KML's <coordinates> order is lon,lat[,alt] tuples separated by
-whitespace.  Reading is task-side per file via mapInPandas (the GPX
-store's folder shape); a writer round-trips the same schema."""
+whitespace.  Reading is task-side per file over a manifest of paths (the
+text stores' folder shape, ``functions.udfs._parse_files``); a writer
+round-trips the same schema."""
 
 from __future__ import annotations
 
@@ -20,6 +21,8 @@ import xml.etree.ElementTree as ET
 from xml.sax.saxutils import escape
 
 import pandas as pd
+
+from ..functions.udfs import _parse_files
 
 KML_SCHEMA = (
     "placemark_id int, name string, kind string, seq int, "
@@ -137,16 +140,4 @@ def write_kml(df: pd.DataFrame) -> str:
 def kml_table(spark, paths: list[str]):
     """Distributed read of many KML files (task-side parse, the GPX
     folder shape)."""
-    pdf = pd.DataFrame({"path": paths})
-    par = spark.sparkContext.defaultParallelism
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), par) or 1)
-
-    def read(batches):
-        for b in batches:
-            for path in b["path"]:
-                with open(path, "r") as f:
-                    out = parse_kml(f.read())
-                out.insert(0, "path", path)
-                yield out
-
-    return df.mapInPandas(read, schema="path string, " + KML_SCHEMA)
+    return _parse_files(spark, paths, KML_SCHEMA, parse_kml)

@@ -8,10 +8,11 @@ into coordinates.
 
 Spark shape: like sources/raw_raster — the fixed record layout means any
 record range maps to a byte range computable from the header alone, so
-the read is a SHUFFLE-FREE mapInPandas over a driver-built manifest of
-record chunks; each task seeks and decodes its slice with numpy (ranged
-GETs at 100 TB).  Raw int32 coordinates are exposed alongside the scaled
-doubles so downstream exact arithmetic never re-quantizes.
+the read is a SHUFFLE-FREE manifest of record chunks
+(``functions.udfs._map_manifest``); each chunk seeks and decodes its
+slice with numpy (ranged GETs at 100 TB).  Raw int32 coordinates are
+exposed alongside the scaled doubles so downstream exact arithmetic never
+re-quantizes.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.udfs import _map_manifest
 
 HEADER_SIZE = 227
 POINT_LEN = 20  # point data record format 0
@@ -79,41 +82,36 @@ def parse_las_header(buf: bytes) -> dict:
 def read_las(spark: SparkSession, path: str,
              chunk: int = 65536) -> tuple[DataFrame, dict]:
     """Distributed shuffle-free LAS read -> (DataFrame, header dict);
-    one task per record chunk, ranged seek + numpy structured decode."""
+    one manifest row per record chunk, ranged seek + numpy structured
+    decode."""
     with open(path, "rb") as f:
         hdr = parse_las_header(f.read(HEADER_SIZE))
     n, off = hdr["n"], hdr["offset"]
     sx, sy, sz = hdr["scale"]
     ox, oy, oz = hdr["origin"]
-    starts = list(range(0, n, int(chunk)))
-    par = spark.sparkContext.defaultParallelism
-    man = spark.createDataFrame(
-        pd.DataFrame({"start": np.asarray(starts, np.int64)})
-    ).repartition(min(len(starts), par) or 1)
+    starts = pd.DataFrame({"start": np.arange(0, n, int(chunk), dtype=np.int64)})
 
-    def read_chunk(batches):
+    def read_chunk(row):
+        s = row["start"]
+        cnt = min(int(chunk), n - s)
         with open(path, "rb") as f:
-            for b in batches:
-                for start in b["start"]:
-                    s = int(start)
-                    cnt = min(int(chunk), n - s)
-                    f.seek(off + s * POINT_LEN)
-                    rec = np.frombuffer(f.read(cnt * POINT_LEN), dtype=_PT0)
-                    yield pd.DataFrame({
-                        "idx": np.arange(s, s + cnt, dtype=np.int64),
-                        "xi": rec["xi"].astype(np.int64),
-                        "yi": rec["yi"].astype(np.int64),
-                        "zi": rec["zi"].astype(np.int64),
-                        "x": rec["xi"] * sx + ox,
-                        "y": rec["yi"] * sy + oy,
-                        "z": rec["zi"] * sz + oz,
-                        "intensity": rec["intensity"].astype(np.int64),
-                        "classification": rec["classification"].astype(np.int64),
-                    })
+            f.seek(off + s * POINT_LEN)
+            rec = np.frombuffer(f.read(cnt * POINT_LEN), dtype=_PT0)
+        return {
+            "idx": np.arange(s, s + cnt, dtype=np.int64),
+            "xi": rec["xi"].astype(np.int64),
+            "yi": rec["yi"].astype(np.int64),
+            "zi": rec["zi"].astype(np.int64),
+            "x": rec["xi"] * sx + ox,
+            "y": rec["yi"] * sy + oy,
+            "z": rec["zi"] * sz + oz,
+            "intensity": rec["intensity"].astype(np.int64),
+            "classification": rec["classification"].astype(np.int64),
+        }
 
     schema = ("idx long, xi long, yi long, zi long, x double, y double, "
               "z double, intensity long, classification long")
-    return man.mapInPandas(read_chunk, schema=schema), hdr
+    return _map_manifest(spark, starts, schema, read_chunk), hdr
 
 
 def make_formula_las(path: str, n: int) -> None:

@@ -21,12 +21,12 @@ Reference semantics re-derived (not ported) from:
   (MovingFeatureBuilder.java:133-141 ``addValue``).
 
 Spark shape: file headers are read driver-side (the schema source, like
-Spark's own CSV ``header`` option); the data rows parse executor-side via
-mapInPandas over the path list — one task per file batch, so a folder of
-MF-CSV files scales horizontally while the sequential previous-line
-inheritance stays correct inside each file.  The merged representation is
-a groupBy(mfidref) + sort + JVM-side higher-order ``aggregate`` fold —
-no Python in the merge path.
+Spark's own CSV ``header`` option); the data rows parse executor-side
+over a manifest of paths (``functions.udfs._map_manifest``) — one file
+per manifest row, so a folder of MF-CSV files scales horizontally while
+the sequential previous-line inheritance stays correct inside each file.
+The merged representation is a groupBy(mfidref) + sort + JVM-side
+higher-order ``aggregate`` fold — no Python in the merge path.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.udfs import _map_manifest
 
 _XSD_TO_SPARK = {
     "xsd:string": "string",
@@ -198,26 +200,23 @@ def mf_table(spark: SparkSession, paths: list[str]) -> DataFrame:
     [x1,y1,x2,y2,...] array (the reference's double[] representation,
     StoreTest.java testStaticFeatures).  Schema comes from the first
     file's header; all files must share it."""
+    if not paths:
+        raise ValueError("mf_table needs at least one path (got an empty path list)")
     header = read_mf_header(paths[0])
     schema = mf_schema(header)
     attr_names = [n for n, _t in header["columns"]]
 
-    par = spark.sparkContext.defaultParallelism
-    pdf = pd.DataFrame({"path": paths})
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), par) or 1)
+    def read(row):
+        path = row["path"]
+        with open(path, "r") as f:
+            out = parse_mf_csv(f.read(), read_mf_header(path))
+        out.insert(0, "path", path)
+        out["start_time"] = out.pop("start_us").astype("datetime64[us]")
+        out["end_time"] = out.pop("end_us").astype("datetime64[us]")
+        return out[["path", "line_id", "mfidref", "start_time",
+                    "end_time", "trajectory"] + attr_names]
 
-    def read(batches):
-        for b in batches:
-            for path in b["path"]:
-                with open(path, "r") as f:
-                    out = parse_mf_csv(f.read(), read_mf_header(path))
-                out.insert(0, "path", path)
-                out["start_time"] = out.pop("start_us").astype("datetime64[us]")
-                out["end_time"] = out.pop("end_us").astype("datetime64[us]")
-                yield out[["path", "line_id", "mfidref", "start_time",
-                           "end_time", "trajectory"] + attr_names]
-
-    return df.mapInPandas(read, schema=schema)
+    return _map_manifest(spark, pd.DataFrame({"path": paths}), schema, read)
 
 
 def mf_merge(df: DataFrame, attrs: list[str]) -> DataFrame:

@@ -19,9 +19,10 @@ strip reader is untouched.
 
 Data is big-endian, row-major, at fixed ``begin`` offsets — so, exactly
 like the raw-raster store, a 2-D (or sliced n-D) variable reads as a
-SHUFFLE-FREE mapInPandas over tile-row strips with ranged seeks.  CF
-``scale_factor``/``add_offset``/``_FillValue`` attributes unpack packed
-integers to physical values (the ConvertedGridCoverage transfer function).
+SHUFFLE-FREE manifest of tile-row strips with ranged seeks
+(``functions.udfs._map_manifest``).  CF ``scale_factor``/``add_offset``/
+``_FillValue`` attributes unpack packed integers to physical values (the
+ConvertedGridCoverage transfer function).
 
 A writer emits CDF-1 files with fixed dimensions (round-trip tested), so
 the store is usable as a sink as well.
@@ -35,8 +36,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.udfs import _map_manifest
 from ..raster.grid import GridGeometry
-from ..raster.tiles import TILE_SCHEMA
+from ..raster.tiles import TILE_SCHEMA, _tile_cut
 
 _NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 0x0A, 0x0B, 0x0C
 _DTYPES = {1: np.dtype(">i1"), 2: np.dtype("S1"), 3: np.dtype(">i2"),
@@ -207,36 +209,22 @@ def netcdf_variable_tiles(
     gg = _grid_geometry_from_coords(path, hdr, v)
 
     n_ty = (h + tile_size - 1) // tile_size
-    n_tx = (w + tile_size - 1) // tile_size
-    par = spark.sparkContext.defaultParallelism
-    strips = spark.createDataFrame(
-        pd.DataFrame({"ty": np.arange(n_ty, dtype=np.int64)})
-    ).repartition(min(n_ty, par) or 1)
+    strips = pd.DataFrame({"ty": np.arange(n_ty, dtype=np.int64)})
 
-    def read_strip(batches):
+    def read_strip(row):
+        y0 = row["ty"] * tile_size
+        nr = min(tile_size, h - y0)
         with open(path, "rb") as f:
-            for b in batches:
-                for ty in b["ty"]:
-                    y0 = int(ty) * tile_size
-                    nr = min(tile_size, h - y0)
-                    f.seek(base + y0 * w * bps)
-                    rows = np.frombuffer(
-                        f.read(nr * w * bps), dtype=dt
-                    ).reshape(nr, w).astype(np.float64)
-                    if fill is not None:
-                        rows = np.where(rows == float(fill), np.nan, rows)
-                    if scale != 1.0 or off != 0.0:
-                        rows = rows * scale + off
-                    out = []
-                    for tx in range(n_tx):
-                        block = np.zeros((tile_size, tile_size), np.float64)
-                        sub = rows[:, tx * tile_size:(tx + 1) * tile_size]
-                        block[: sub.shape[0], : sub.shape[1]] = sub
-                        out.append((int(tx), int(ty), 0, block.tobytes()))
-                    yield pd.DataFrame(
-                        out, columns=["tx", "ty", "band", "data"])
+            f.seek(base + y0 * w * bps)
+            buf = f.read(nr * w * bps)
+        rows = np.frombuffer(buf, dtype=dt).reshape(nr, w).astype(np.float64)
+        if fill is not None:
+            rows = np.where(rows == float(fill), np.nan, rows)
+        if scale != 1.0 or off != 0.0:
+            rows = rows * scale + off
+        return dict(_tile_cut(rows[:, :, None], tile_size), ty=row["ty"])
 
-    return strips.mapInPandas(read_strip, schema=TILE_SCHEMA), gg
+    return _map_manifest(spark, strips, TILE_SCHEMA, read_strip), gg
 
 
 def _pad4(b: bytes) -> bytes:

@@ -18,10 +18,10 @@ Header and layout semantics re-derived from the reference's RawRasterStore
 
 Spark shape: a fixed binary layout means every tile row maps to a byte
 range computable from the header alone — the read is a SHUFFLE-FREE
-mapInPandas over a driver-built manifest of tile-row strips; each task
-seeks into the data file and emits finished tile blocks.  That is the
-random-access contract a 100 TB object store needs (ranged GETs), unlike
-the ASCII store's sequential text scan.
+manifest of tile-row strips (``functions.udfs._map_manifest``); each
+strip seeks into the data file and emits finished tile blocks.  That is
+the random-access contract a 100 TB object store needs (ranged GETs),
+unlike the ASCII store's sequential text scan.
 """
 
 from __future__ import annotations
@@ -30,8 +30,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.udfs import _map_manifest
 from ..raster.grid import GridGeometry
-from ..raster.tiles import TILE_SCHEMA
+from ..raster.tiles import TILE_SCHEMA, _tile_cut
 
 _HDR_KEYS = {"nrows", "ncols", "nbands", "nbits", "pixeltype", "byteorder",
              "layout", "skipbytes", "bandrowbytes", "totalrowbytes",
@@ -107,8 +108,8 @@ def read_raw_raster(
     spark: SparkSession, data_path: str, hdr_path: str | None = None,
     tile_size: int = 64,
 ) -> tuple[DataFrame, GridGeometry, np.dtype]:
-    """Distributed shuffle-free read: one task per tile-row strip, ranged
-    reads into finished TILE_SCHEMA blocks (native dtype bytes)."""
+    """Distributed shuffle-free read: one manifest row per tile-row strip,
+    ranged reads into finished TILE_SCHEMA blocks (native dtype bytes)."""
     from ..functions.wkt_crs import prj_sidecar_code
 
     hdr_path = hdr_path or data_path.rsplit(".", 1)[0] + ".hdr"
@@ -121,43 +122,27 @@ def read_raw_raster(
     w, hh = gg.width, gg.height
     nb = info["nbands"]
     n_ty = (hh + tile_size - 1) // tile_size
-    n_tx = (w + tile_size - 1) // tile_size
-
-    par = spark.sparkContext.defaultParallelism
-    strips = spark.createDataFrame(
-        pd.DataFrame({"ty": np.arange(n_ty, dtype=np.int64)})
-    ).repartition(min(n_ty, par) or 1)
+    strips = pd.DataFrame({"ty": np.arange(n_ty, dtype=np.int64)})
     bps = info["bps"]
     lay = info["layout"]
 
-    def read_strip(batches):
+    def read_strip(row):
+        y0 = row["ty"] * tile_size
+        nr = min(tile_size, hh - y0)
         with open(data_path, "rb") as f:
-            for b in batches:
-                for ty in b["ty"]:
-                    y0 = int(ty) * tile_size
-                    nr = min(tile_size, hh - y0)
-                    if lay == "BSQ":
-                        cube = np.empty((nr, w, nb), dtype=dtype)
-                        for band in range(nb):
-                            f.seek(info["skip"] + (band * hh + y0) * w * bps)
-                            cube[:, :, band] = np.frombuffer(
-                                f.read(nr * w * bps), dtype=dtype
-                            ).reshape(nr, w)
-                    else:
-                        tr = (info["total_row"] if lay == "BIL"
-                              else w * nb * bps)
-                        f.seek(info["skip"] + y0 * tr)
-                        cube = _decode_rows(f.read(nr * tr), info, dtype, w, nr)
-                    out = []
-                    for band in range(nb):
-                        for tx in range(n_tx):
-                            block = np.zeros((tile_size, tile_size), dtype=dtype)
-                            sub = cube[:, tx * tile_size:(tx + 1) * tile_size, band]
-                            block[: sub.shape[0], : sub.shape[1]] = sub
-                            out.append((int(tx), int(ty), band, block.tobytes()))
-                    yield pd.DataFrame(out, columns=["tx", "ty", "band", "data"])
+            if lay == "BSQ":
+                cube = np.empty((nr, w, nb), dtype=dtype)
+                for band in range(nb):
+                    f.seek(info["skip"] + (band * hh + y0) * w * bps)
+                    cube[:, :, band] = np.frombuffer(
+                        f.read(nr * w * bps), dtype=dtype).reshape(nr, w)
+            else:
+                tr = info["total_row"] if lay == "BIL" else w * nb * bps
+                f.seek(info["skip"] + y0 * tr)
+                cube = _decode_rows(f.read(nr * tr), info, dtype, w, nr)
+        return dict(_tile_cut(cube, tile_size), ty=row["ty"])
 
-    return strips.mapInPandas(read_strip, schema=TILE_SCHEMA), gg, dtype
+    return _map_manifest(spark, strips, TILE_SCHEMA, read_strip), gg, dtype
 
 
 def format_raw_raster(

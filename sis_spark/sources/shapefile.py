@@ -15,9 +15,12 @@ original, built directly on the published layouts.
 * ``.dbf``: dBase III header + 32-byte field descriptors + fixed-width
   ASCII records; types C (text), N/F (numeric), L (logical), D (date).
 
-Spark shape: headers + the .shx index parse driver-side (tiny); the
-record set becomes a manifest DataFrame and each task seeks its record
-ranges in .shp/.dbf directly — shuffle-free, ranged-GET friendly.
+Spark shape: the .dbf header parses driver-side (tiny) and the record
+count comes from the .shx size; the record set becomes a manifest of
+fixed-size record ranges (``_CHUNK`` records each,
+``functions.udfs._map_manifest``) and each range reads its slice of the
+.shx index, then seeks its records in .shp/.dbf directly — shuffle-free,
+ranged-GET friendly.
 Polygon records assemble their rings into shells + holes by containment
 (``bdpoly_assemble``, the ST_BdPoly kernel) and all rings are normalized
 to the engine's CCW convention; geometries come out as WKB compatible
@@ -26,6 +29,7 @@ with every SQLMM function.
 
 from __future__ import annotations
 
+import os
 import struct
 
 import numpy as np
@@ -34,6 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import geometry as geo
 from ..functions.sqlmm import bdpoly_assemble, shoelace_area
+from ..functions.udfs import _map_manifest
+
+_CHUNK = 8192  # records per manifest row of ``shapefile_table``
 
 
 def _ccw(vx, vy):
@@ -119,10 +126,7 @@ def shapefile_table(spark: SparkSession, base: str) -> DataFrame:
     """Distributed read of ``base``.shp/.shx/.dbf -> DataFrame
     (fid, geom WKB, <dbf attributes>)."""
     base = base.rsplit(".", 1)[0] if base.endswith((".shp", ".dbf", ".shx")) else base
-    with open(base + ".shx", "rb") as f:
-        shx = f.read()
-    n_rec = (len(shx) - 100) // 8
-    idx = np.frombuffer(shx, dtype=">i4", count=2 * n_rec, offset=100).reshape(n_rec, 2)
+    n_rec = (os.path.getsize(base + ".shx") - 100) // 8
     with open(base + ".dbf", "rb") as f:
         dbf_head = f.read(4096)
     nrec_d, hsize, rsize, fields = _parse_dbf_header(dbf_head)
@@ -141,28 +145,30 @@ def shapefile_table(spark: SparkSession, base: str) -> DataFrame:
     schema = "fid bigint, geom binary" + "".join(
         f", `{n}` {ftype_of(f_)}" for f_ in fields for n in [f_[0]])
 
-    manifest = pd.DataFrame({
-        "fid": np.arange(n_rec, dtype=np.int64),
-        "off": idx[:, 0].astype(np.int64) * 2,   # words -> bytes
-        "len": idx[:, 1].astype(np.int64) * 2,
-    })
-    par = spark.sparkContext.defaultParallelism
-    mdf = spark.createDataFrame(manifest).repartition(min(par, max(1, n_rec)) or 1)
+    lo = np.arange(0, n_rec, _CHUNK, dtype=np.int64)
+    ranges = pd.DataFrame({"lo": lo, "hi": np.minimum(lo + _CHUNK, n_rec)})
 
-    def read_records(batches):
-        with open(base + ".shp", "rb") as fshp, open(base + ".dbf", "rb") as fdbf:
-            for b in batches:
-                rows = []
-                for fid, off, ln in zip(b["fid"], b["off"], b["len"]):
-                    fshp.seek(int(off) + 8)  # skip record header
-                    wkb = _shape_to_wkb(fshp.read(int(ln)))
-                    fdbf.seek(hsize + int(fid) * rsize)
-                    attrs = _decode_dbf_record(fdbf.read(rsize), fields)
-                    rows.append([int(fid), wkb] + attrs)
-                yield pd.DataFrame(
-                    rows, columns=["fid", "geom"] + [f_[0] for f_ in fields])
+    def read_records(row):
+        lo, hi = row["lo"], row["hi"]
+        with open(base + ".shx", "rb") as f:
+            f.seek(100 + 8 * lo)
+            idx = np.frombuffer(f.read(8 * (hi - lo)), dtype=">i4").reshape(-1, 2)
+        with open(base + ".shp", "rb") as f:
+            geoms = []
+            for off, ln in idx.astype(np.int64) * 2:  # words -> bytes
+                f.seek(int(off) + 8)  # skip record header
+                geoms.append(_shape_to_wkb(f.read(int(ln))))
+        with open(base + ".dbf", "rb") as f:
+            f.seek(hsize + lo * rsize)
+            raw = f.read((hi - lo) * rsize)
+        attrs = [_decode_dbf_record(raw[i:i + rsize], fields)
+                 for i in range(0, len(raw), rsize)]
+        cols = {"fid": np.arange(lo, hi, dtype=np.int64), "geom": geoms}
+        for j, f_ in enumerate(fields):
+            cols[f_[0]] = [a[j] for a in attrs]
+        return cols
 
-    return mdf.mapInPandas(read_records, schema=schema)
+    return _map_manifest(spark, ranges, schema, read_records)
 
 
 # ---------------------------------------------------------------- writer

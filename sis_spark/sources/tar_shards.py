@@ -17,12 +17,12 @@ Spark-first shape:
   returned DataFrame is only the shard manifest (path, samples, bytes,
   sha256) — the commit-metadata shape of the snapshot store
   (sources/table_format.py).
-- **Read** is one task per shard (mapInPandas over the shard list).  With a
-  column projection that drops ``bytes``, the reader uses the index sidecar
-  to issue *ranged reads* of just the .json/.txt members — the tar analog of
-  parquet column pruning (a caption-only scan of a 100 TB image corpus reads
-  ~1% of the bytes).  Without the sidecar it falls back to a streaming tar
-  scan.
+- **Read** is one manifest row per shard (``functions.udfs._map_manifest``
+  over the shard list).  With a column projection that drops ``bytes``,
+  the reader uses the index sidecar to issue *ranged reads* of just the
+  .json/.txt members — the tar analog of parquet column pruning (a
+  caption-only scan of a 100 TB image corpus reads ~1% of the bytes).
+  Without the sidecar it falls back to a streaming tar scan.
 
 Reference analog: the folder-store aggregate of per-file resources
 (S/storage/folder/Store.java) — here each tar file is the resource and the
@@ -41,6 +41,8 @@ import tarfile
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.udfs import _map_manifest
 
 # metadata fields carried in the .json member (everything except the three
 # member-encoded fields image_id/bytes/caption); missing input columns are
@@ -173,7 +175,8 @@ def _rows_from_members(
 def read_tar_shards(
     spark: SparkSession, in_dir: str, columns: list[str] | None = None
 ) -> DataFrame:
-    """Distributed read of a tar-shard directory: one task per shard.
+    """Distributed read of a tar-shard directory: one manifest row per
+    shard.
 
     ``columns`` prunes at the STORAGE level: a projection without ``bytes``
     reads only the small .json/.txt members through the index sidecar's
@@ -189,41 +192,39 @@ def read_tar_shards(
         c for c in READ_SCHEMA.split(", ") if c.split(" ")[0] in names
     )
     need_payload = "bytes" in names
-    paths = sorted(glob.glob(os.path.join(in_dir, "shard-*.tar")))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(len(paths), 1)
-    )
+    paths = pd.DataFrame(
+        {"path": sorted(glob.glob(os.path.join(in_dir, "shard-*.tar")))})
 
-    def read_shard(batches):
-        for b in batches:
-            for path in b["path"]:
-                shard = int(os.path.basename(path)[6:-4])
-                members: dict[str, dict[str, bytes]] = {}
+    def read_shard(row):
+        path = row["path"]
+        members: dict[str, dict[str, bytes]] = {}
 
-                def put(name: str, data: bytes | None, lazy=None):
-                    stem, ext = name.rsplit(".", 1)
-                    kind = {"json": "json", "txt": "txt"}.get(ext, "payload")
-                    if kind == "payload" and not need_payload:
-                        return
-                    if data is None:
-                        data = lazy()
-                    members.setdefault(stem, {})[kind] = data
+        def put(name: str, data: bytes | None, lazy=None):
+            stem, ext = name.rsplit(".", 1)
+            kind = {"json": "json", "txt": "txt"}.get(ext, "payload")
+            if kind == "payload" and not need_payload:
+                return
+            if data is None:
+                data = lazy()
+            members.setdefault(stem, {})[kind] = data
 
-                idx_path = path + ".idx.json"
-                if os.path.exists(idx_path):
-                    entries = json.load(open(idx_path))["entries"]
-                    with open(path, "rb") as fh:
-                        for e in entries:
-                            name, off, size = e["name"], e["offset"], e["size"]
-                            if name.rsplit(".", 1)[1] not in ("json", "txt") and not need_payload:
-                                continue  # ranged read skips payload members
-                            fh.seek(off)
-                            put(name, fh.read(size))
-                else:
-                    with tarfile.open(path, "r") as tf:
-                        for info in tf:
-                            put(info.name, None,
-                                lazy=lambda i=info, t=tf: t.extractfile(i).read())
-                yield _rows_from_members(shard, members, names)
+        idx_path = path + ".idx.json"
+        if os.path.exists(idx_path):
+            with open(idx_path) as fh:
+                entries = json.load(fh)["entries"]
+            with open(path, "rb") as fh:
+                for e in entries:
+                    name, off, size = e["name"], e["offset"], e["size"]
+                    if name.rsplit(".", 1)[1] not in ("json", "txt") and not need_payload:
+                        continue  # ranged read skips payload members
+                    fh.seek(off)
+                    put(name, fh.read(size))
+        else:
+            with tarfile.open(path, "r") as tf:
+                for info in tf:
+                    put(info.name, None,
+                        lazy=lambda i=info, t=tf: t.extractfile(i).read())
+        return _rows_from_members(int(os.path.basename(path)[6:-4]), members,
+                                  names)
 
-    return pdf.mapInPandas(read_shard, schema=schema)
+    return _map_manifest(spark, paths, schema, read_shard)

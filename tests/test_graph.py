@@ -406,8 +406,11 @@ def test_random_walks_matches_brute(spark):
     starts = spark.createDataFrame(
         [(w, w % 12) for w in range(5)], "walk long, node long"
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     got = {(r["walk"], r["step"]): r["node"]
            for r in random_walks(edges, starts, steps=4).collect()}
+    assert cache.numCachedEntries() == cached
 
     adj = {}
     for a, b in es:

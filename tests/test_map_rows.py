@@ -1,13 +1,14 @@
-"""The engine's one per-row Arrow loop (functions/udfs._map_rows), driven
-directly on pandas batches: the mapInPandas function it builds is captured
-from a stand-in frame, so no Spark job runs."""
+"""The engine's one per-row Arrow loop (functions/udfs._map_rows) and the
+reader core on it (_map_manifest), driven directly on pandas batches: the
+mapInPandas function each builds is captured from a stand-in frame, so no
+Spark job runs."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from sis_spark.functions.udfs import _concat, _map_rows
+from sis_spark.functions.udfs import _concat, _map_manifest, _map_rows
 
 
 class _Capture:
@@ -15,6 +16,19 @@ class _Capture:
 
     def mapInPandas(self, fn, schema):
         return fn
+
+    def repartition(self, n):
+        return self
+
+
+class _Spark:
+    """Stands in for a SparkSession: its manifest frame is a _Capture."""
+
+    class sparkContext:
+        defaultParallelism = 2
+
+    def createDataFrame(self, pdf):
+        return _Capture()
 
 
 def _run(batches, payloads, decode, body):
@@ -69,3 +83,14 @@ def test_numpy_parts_concatenate_and_a_list_part_flattens():
                   lambda row: {"v": np.full(2, row["k"], np.int64)
                                if row["k"] == 1 else [5]})
     assert out["v"].dtype == np.int64 and out["v"].tolist() == [1, 1, 5]
+
+
+def test_manifest_yields_one_frame_per_unit():
+    """A partition of many manifest rows streams: each unit of I/O is its
+    own frame, so a task never holds more than one unit's output."""
+    manifest = pd.DataFrame({"start": [0, 3, 6, 9]})
+    fn = _map_manifest(_Spark(), manifest, "unused",
+                       lambda row: None if row["start"] == 3 else
+                       {"i": np.arange(row["start"], row["start"] + 3)})
+    frames = list(fn(iter([manifest])))
+    assert [f["i"].tolist() for f in frames] == [[0, 1, 2], [6, 7, 8], [9, 10, 11]]

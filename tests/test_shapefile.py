@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from sis_spark.functions import geometry as geo
+from sis_spark.sources import shapefile
 from sis_spark.sources.shapefile import shapefile_table, write_shapefile
 
 
@@ -73,3 +74,21 @@ def test_multipoint_and_null(spark, tmp_path):
     t, v = geo.wkb_parse(bytes(rows[0]["geom"]))
     assert t == "multipoint" and [tuple(p) for p in v] == [(1.0, 3.0), (2.0, 4.0)]
     assert rows[1]["geom"] is None
+
+
+def test_record_ranges_read_every_record_once(spark, tmp_path, monkeypatch):
+    """About 3 x defaultParallelism records split into 2-record ranges
+    (more ranges than partitions, the last one short): every record comes
+    back exactly once with its geometry and attributes."""
+    monkeypatch.setattr(shapefile, "_CHUNK", 2)
+    n = 3 * spark.sparkContext.defaultParallelism + 1
+    geoms = [("point", (0.5 * i, -1.0 * i)) for i in range(n)]
+    attrs = pd.DataFrame({"name": [f"r{i}" for i in range(n)],
+                          "n": [3 * i for i in range(n)]})
+    fields = [("name", "C", 8, 0), ("n", "N", 6, 0)]
+    rows = shapefile_table(spark, _write(tmp_path, geoms, attrs, fields)).collect()
+    assert sorted(r["fid"] for r in rows) == list(range(n))
+    for r in rows:
+        i = r["fid"]
+        assert geo.wkb_parse(bytes(r["geom"])) == ("point", (0.5 * i, -1.0 * i))
+        assert (r["name"], r["n"]) == (f"r{i}", 3 * i)

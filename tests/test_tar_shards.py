@@ -44,6 +44,25 @@ def test_round_trip_full(spark, tmp_path):
         assert r["lat"] == pytest.approx(o["lat"], abs=0)
 
 
+def test_many_shards_read_every_member_once(spark, tmp_path):
+    """About 3 x defaultParallelism shards on a manifest capped at the core
+    count: every sample comes back exactly once, with its written values."""
+    n_shards = 3 * spark.sparkContext.defaultParallelism
+    out = os.path.join(str(tmp_path), "many")
+    img = images_table(spark, 4 * n_shards, partitions=4)
+    write_tar_shards(img, out, n_shards=n_shards).collect()
+    assert len(glob.glob(os.path.join(out, "shard-*.tar"))) == n_shards
+    back = read_tar_shards(spark, out).collect()
+    ids = [r["image_id"] for r in back]
+    assert len(ids) == len(set(ids)) == 4 * n_shards
+    orig = _rows(img)
+    for r in back:
+        o = orig[r["image_id"]]
+        assert bytes(r["bytes"]) == bytes(o["bytes"])
+        assert (r["caption"], r["w"], r["h"], r["phash"]) == (
+            o["caption"], o["w"], o["h"], o["phash"])
+
+
 def test_manifest_and_determinism(spark, tmp_path):
     out1 = _write(spark, tmp_path, "a")
     out2 = _write(spark, tmp_path, "b")

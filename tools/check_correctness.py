@@ -2,13 +2,17 @@
 
 Runs every registry query on Spark AND its DuckDB oracle at sf0.01, compares
 row count, schema, and order-insensitive values (columns sorted by name, rows
-sorted by all columns, exact equality).  Usage:
+sorted by all columns, exact equality).  Each ``ok`` line ends with a
+sha256 prefix of the Spark rows (``digest``: dtypes plus the sorted exact
+``repr`` of every row), so two checkouts compare by ``diff`` of two runs.
+Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 
@@ -31,6 +35,21 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         elif df[c].dtype == np.float32:
             df[c] = df[c].astype("float64")
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def digest(df: pd.DataFrame) -> str:
+    """sha256 prefix of the canonical Spark rows: the column names and
+    dtypes, then every row's exact ``repr`` (arrays as lists), sorted."""
+    cols = sorted(df.columns)
+
+    def cell(v):
+        return repr(v.tolist() if isinstance(v, np.ndarray) else v)
+
+    rows = sorted("\x1f".join(cell(v) for v in r)
+                  for r in df[cols].itertuples(index=False, name=None))
+    h = hashlib.sha256(repr([(c, str(df[c].dtype)) for c in cols]).encode())
+    h.update("\n".join(rows).encode())
+    return h.hexdigest()[:16]
 
 
 def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
@@ -92,7 +111,8 @@ def main():
             continue
         t1 = time.time()
         if oracle_fn is None:
-            print(f"ok*  {name}: {len(got)} rows (rows-only, no oracle) spark={t1-t0:.1f}s")
+            print(f"ok*  {name}: {len(got)} rows (rows-only, no oracle) "
+                  f"spark={t1-t0:.1f}s digest={digest(got)}")
             continue
         try:
             exp = con.execute(oracle_fn()).fetch_df()
@@ -105,7 +125,8 @@ def main():
             print(f"FAIL {name}: " + "; ".join(problems))
             failed.append(name)
         else:
-            print(f"ok   {name}: {len(got)} rows match  spark={t1-t0:.1f}s duck={time.time()-t1:.1f}s")
+            print(f"ok   {name}: {len(got)} rows match  spark={t1-t0:.1f}s "
+                  f"duck={time.time()-t1:.1f}s digest={digest(got)}")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else " — all green"))
     sys.exit(1 if failed else 0)
 
