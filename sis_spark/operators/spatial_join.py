@@ -19,7 +19,9 @@ Phase 2 (refine, one map pass):
       in a filter; it returns True for sure rows without the geometry
       kernel and ray-casts the rest (numpy even-odd kernel) against the
       polygon vertex arrays shipped once per executor via a Spark broadcast
-      — the "broadcast STRtree" role of the north star.
+      — the "broadcast STRtree" role of the north star.  The polygon key
+      rides on the covering row, so the refined candidates carry it out
+      with no further join.
 
 With ``salt`` set, the covering join shuffles on cell instead, salting hot
 cells (fact side salted, dimension side repeated per salt value) — the
@@ -260,6 +262,7 @@ def spatial_join(
         res = choose_resolution(polygons)
         pc = polygon_cells(polygons, res, classify=True)
     pc = pc.astype({"cell": "int64", "poly_idx": "int64"})
+    pc[poly_key_col] = packed["keys"][pc["poly_idx"].to_numpy()]
 
     def join(pts: DataFrame) -> DataFrame:
         if salt:
@@ -283,16 +286,12 @@ def spatial_join(
         )
         return pd.Series(keep)
 
-    refined = _point_join(
+    # the polygon key rides on the covering row: only it survives the refine
+    return _point_join(
         points, lon_col, lat_col, res, join,
         pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx"), F.col("sure")),
-        [c for c in pc.columns if c != "poly_idx"],
+        [c for c in pc.columns if c != poly_key_col],
     )
-    keys_arr = packed["keys"]
-    key_map = spark.createDataFrame(
-        pd.DataFrame({"poly_idx": np.arange(len(keys_arr)), poly_key_col: keys_arr})
-    )
-    return refined.join(F.broadcast(key_map), "poly_idx").drop("poly_idx")
 
 
 def _salted_join(points: DataFrame, pts: DataFrame, pc: pd.DataFrame, lon_col: str,

@@ -33,6 +33,11 @@ def get_spark(
     ``cores=None`` → ``local[*]``.  Shuffle partitions default to the
     core count — correct for local mode; on a real cluster pass
     ~2-3× total executor cores.
+
+    The parallel-listing threshold is raised so that a read of an explicit
+    file list (a snapshot table's manifest selection) stats the files on
+    the driver instead of starting a listing job once it names more than
+    Spark's default of 32 paths.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -52,6 +57,7 @@ def get_spark(
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

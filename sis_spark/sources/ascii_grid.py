@@ -15,8 +15,11 @@ Spark shape: the (small) header parses driver-side; the body is read as a
 line DataFrame — one text line per grid row, the layout this writer and
 every common producer emit — and each task turns its row-range into tile
 fragments which a single (tx, ty) shuffle assembles into the engine's
-TILE_SCHEMA blocks (float64).  A body that is not line-per-row falls back
-to a driver-side whole-text parse.
+TILE_SCHEMA blocks (float64).  The layout is decided on the driver from
+the first body line, which the header read already holds: a body whose
+first line does not hold NCOLS values falls back to a driver-side
+whole-text parse.  Blank lines are skipped; a later row line that does
+not hold NCOLS values raises a ``ValueError`` naming it.
 """
 
 from __future__ import annotations
@@ -90,15 +93,8 @@ def read_ascii_grid(
         gg = GridGeometry(gg.extent, gg.affine, code)
     w, h = gg.width, gg.height
 
-    lines = spark.read.text(path)
-    # stable line numbers: single ordered pass (the file is one split for
-    # typical sizes; zipWithIndex keeps correctness if it is not)
-    idx = lines.rdd.zipWithIndex().map(
-        lambda t: (t[1] - n_head, t[0]["value"])
-    ).toDF(["row", "line"]).filter(F.col("row") >= 0)
-
-    n_body = idx.count()
-    if n_body != h:
+    body = [ln for ln in head_lines[n_head:] if ln.strip()]
+    if not body or len(body[0].split()) != w:
         # not line-per-row: parse driver-side (reference reads sequentially
         # token-by-token anyway; this layout is rare and small in practice)
         with open(path, "r") as f:
@@ -108,14 +104,25 @@ def read_ascii_grid(
         arr = np.where(arr == nodata, np.nan, arr)[..., None]
         return raster_to_tiles(spark, arr, gg, tile_size), gg
 
-    idx = idx.repartition(spark.sparkContext.defaultParallelism, "row")
+    # stable line numbers over the non-blank lines: single ordered pass (the
+    # file is one split for typical sizes; zipWithIndex keeps correctness if
+    # it is not)
+    lines = spark.read.text(path).filter(F.trim("value") != "")
+    idx = spark.createDataFrame(
+        lines.rdd.zipWithIndex().map(lambda t: (t[1] - n_head, t[0]["value"])),
+        "row long, line string",
+    ).filter(F.col("row") >= 0).repartition(spark.sparkContext.defaultParallelism, "row")
 
     ntx = (w + tile_size - 1) // tile_size
 
     def to_fragments(row, line):
+        v = np.array(line.split(), dtype=np.float64)
+        if len(v) != w or row["row"] >= h:
+            raise ValueError(
+                f"{path}: row line {row['row']} holds {len(v)} values; the "
+                f"body should be NROWS {h} lines of NCOLS {w} values")
         seg = np.zeros(ntx * tile_size, dtype=np.float64)
-        v = np.array(line.split(), dtype=np.float64)[:seg.size]
-        seg[:len(v)] = np.where(v == nodata, np.nan, v)
+        seg[:w] = np.where(v == nodata, np.nan, v)
         ty, iy = divmod(row["row"], tile_size)
         return {"tx": np.arange(ntx, dtype=np.int64), "ty": ty, "iy": iy,
                 "seg": [s.tobytes() for s in seg.reshape(ntx, tile_size)]}

@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from ..functions.geometry import wkb_parse, wkb_write
 from ..functions.udfs import _map_rows, _parse_files
@@ -149,17 +150,19 @@ def geojson_table(spark, paths: list[str]):
 def geojson_seq_table(spark, path: str):
     """Newline-delimited GeoJSON (one Feature per line, RFC 8142 without
     the RS byte — the common ndjson dialect): ``spark.read.text`` gives
-    line-level splits, so one multi-TB file fans out; ``seq`` is the
-    per-partition-stable line hash surrogate (use an id property for a
-    stable key at scale)."""
+    line-level splits, so one multi-TB file fans out; ``seq`` is a
+    per-line surrogate that grows with the line order
+    (``monotonically_increasing_id``; use an id property for a stable key
+    at scale)."""
     def decode(row, ln):
         s = ln.strip()
         if not s or s == "\x1e":
             return None
         return (json.loads(s.lstrip("\x1e")),)
 
-    return _map_rows(spark.read.text(path), GEOJSON_SCHEMA, ["value"], decode,
-                     lambda row, feat: parse_feature(feat, 0))
+    lines = spark.read.text(path).withColumn("seq", F.monotonically_increasing_id())
+    return _map_rows(lines, GEOJSON_SCHEMA, ["value"], decode,
+                     lambda row, feat: parse_feature(feat, row["seq"]))
 
 
 def feature_json(gtype: str, wkb: bytes, props_json: str | None) -> str:

@@ -22,6 +22,14 @@ Iceberg spec the plans rely on), over plain parquet + JSON manifests:
   survive.  This is the plan-time pruning Iceberg does with its manifest
   trees — at 10^12 rows the gain is exactly that the cluster never globs
   the table directory.
+* **Schema in the manifest** — every commit records the read schema (data
+  columns, then partition columns, each with its written type), and a read
+  passes it to ``spark.read.schema``: no footer is opened for inference,
+  and the driver stats the listed files itself (``session.get_spark``
+  raises the parallel-listing threshold), so ``read`` starts no Spark job.
+  An empty selection is an empty frame of that schema.  A manifest without
+  the key (a table written before schemas were recorded) is read with
+  Spark's inference.
 
 Scale note: one JSON manifest listing ~1e6 files is tens of MB — fine for a
 driver;real Iceberg splits manifests hierarchically, documented out of
@@ -36,6 +44,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _meta_dir(root: str) -> str:
@@ -122,8 +131,28 @@ def _collect_files(spark: SparkSession, root: str, df: DataFrame,
     return files
 
 
+def _read_schema(df: DataFrame, partition_by: list[str]) -> dict:
+    """The schema a read of ``df`` written with ``partition_by`` gives, as
+    JSON: data columns in ``df`` order, then the partition columns, each
+    with its written type, nullable at every level as a parquet read is."""
+    def nullable(t):
+        if isinstance(t, list):
+            return [nullable(v) for v in t]
+        if isinstance(t, dict):
+            return {k: True if k in ("nullable", "containsNull", "valueContainsNull")
+                    else nullable(v) for k, v in t.items()}
+        return t
+
+    fields = ([f for f in df.schema.fields if f.name not in partition_by]
+              + [df.schema[c] for c in partition_by])
+    return nullable(T.StructType(fields).jsonValue())
+
+
 def _commit(root: str, files: list[dict], op: str, partition_by: list[str],
-            expected_parent: int) -> int:
+            expected_parent: int, schema: dict | None = None) -> int:
+    """Snapshot ``expected_parent + 1`` listing ``files``; ``schema`` is the
+    read schema (``_read_schema``), carried from the parent by every commit
+    after the create."""
     cur = current_snapshot(root)
     if cur != expected_parent:
         raise RuntimeError(
@@ -132,7 +161,7 @@ def _commit(root: str, files: list[dict], op: str, partition_by: list[str],
     n = cur + 1
     manifest = {
         "snapshot": n, "parent": cur, "ts": time.time(), "op": op,
-        "partition_by": partition_by, "files": files,
+        "partition_by": partition_by, "schema": schema, "files": files,
     }
     _atomic_write(_manifest_path(root, n), json.dumps(manifest))
     _atomic_write(os.path.join(_meta_dir(root), "_current"), str(n))
@@ -147,7 +176,7 @@ def create_table(spark: SparkSession, root: str, df: DataFrame,
     if current_snapshot(root) != 0:
         raise RuntimeError(f"table {root} already exists")
     files = _collect_files(spark, root, df, partition_by, write_id=1)
-    return _commit(root, files, "create", partition_by, expected_parent=0)
+    return _commit(root, files, "create", partition_by, 0, _read_schema(df, partition_by))
 
 
 def append(spark: SparkSession, root: str, df: DataFrame) -> int:
@@ -155,7 +184,8 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     parent = current_snapshot(root)
     m = load_manifest(root, parent)
     files = _collect_files(spark, root, df, m["partition_by"], write_id=parent + 1)
-    return _commit(root, m["files"] + files, "append", m["partition_by"], parent)
+    return _commit(root, m["files"] + files, "append", m["partition_by"], parent,
+                   m.get("schema"))
 
 
 def overwrite_partitions(spark: SparkSession, root: str, df: DataFrame) -> int:
@@ -167,7 +197,8 @@ def overwrite_partitions(spark: SparkSession, root: str, df: DataFrame) -> int:
     touched = {tuple(sorted(f["partition"].items())) for f in files}
     kept = [f for f in m["files"]
             if tuple(sorted(f["partition"].items())) not in touched]
-    return _commit(root, kept + files, "overwrite", m["partition_by"], parent)
+    return _commit(root, kept + files, "overwrite", m["partition_by"], parent,
+                   m.get("schema"))
 
 
 def rollback(root: str, to_snapshot: int) -> int:
@@ -175,7 +206,7 @@ def rollback(root: str, to_snapshot: int) -> int:
     parent = current_snapshot(root)
     m = load_manifest(root, to_snapshot)
     return _commit(root, m["files"], f"rollback({to_snapshot})",
-                   m["partition_by"], parent)
+                   m["partition_by"], parent, m.get("schema"))
 
 
 def read(spark: SparkSession, root: str, snapshot: int | None = None,
@@ -208,26 +239,35 @@ def _grouped_reads(spark: SparkSession, root: str, m: dict, files: list[dict]):
     """One file-source read per write-dir, the per-group DataFrames: hive
     partition dirs live under each write-id directory, so each read's
     basePath recovers the partition columns, and the group count is the
-    number of commits, not partitions."""
+    number of commits, not partitions.  The manifest's schema, when it
+    has one, spares each read the footer inference."""
     if not files:
         return []
+
+    def reader():
+        r = spark.read
+        return r.schema(T.StructType.fromJson(m["schema"])) if m.get("schema") else r
+
     if m["partition_by"]:
         groups: dict[str, list[str]] = {}
         for f in files:
             wdir = f["path"].split("/")[1]  # data/<wN>/...
             groups.setdefault(wdir, []).append(os.path.join(root, f["path"]))
         return [
-            spark.read.option("basePath", os.path.join(root, "data", wdir)).parquet(*ps)
+            reader().option("basePath", os.path.join(root, "data", wdir)).parquet(*ps)
             for wdir, ps in sorted(groups.items())
         ]
-    return [spark.read.parquet(*[os.path.join(root, f["path"]) for f in files])]
+    return [reader().parquet(*[os.path.join(root, f["path"]) for f in files])]
 
 
 def _read_files(spark: SparkSession, root: str, m: dict, files: list[dict]) -> DataFrame:
     """The union of ``files`` (manifest entries of ``m``) with the table's
-    partition columns.  An empty selection reads one table file under
-    limit 0 for the schema: a read of the whole data dir spans the write
-    dirs, which Spark rejects as conflicting partition layouts."""
+    partition columns.  An empty selection is an empty frame of the
+    manifest's schema; without one, it reads one table file under limit 0
+    for the schema (a read of the whole data dir spans the write dirs,
+    which Spark rejects as conflicting partition layouts)."""
+    if not files and m.get("schema"):
+        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
     if not files and m["files"]:
         return _read_files(spark, root, m, m["files"][:1]).limit(0)
     if not files:
@@ -271,7 +311,7 @@ def _rewrite_commit(
             for f in _collect_files(spark, root, new_rows, m["partition_by"], write_id=parent + 1)
             if f["rows"] > 0
         ]
-    return _commit(root, kept + new_files, op, m["partition_by"], parent)
+    return _commit(root, kept + new_files, op, m["partition_by"], parent, m.get("schema"))
 
 
 def merge_upsert(
@@ -387,7 +427,7 @@ def write_clustered(
     )
     files = _collect_files(spark, root, clustered, [], write_id=1)
     _file_stats(root, files, stats_cols)
-    return _commit(root, files, "create-clustered", [], expected_parent=0)
+    return _commit(root, files, "create-clustered", [], 0, _read_schema(df, []))
 
 
 def read_pruned(
@@ -448,4 +488,5 @@ def compact_files(
                                    write_id=parent + 1)
         if stats_cols:
             _file_stats(root, new_files, stats_cols)
-    return _commit(root, kept + new_files, "compact", m["partition_by"], parent)
+    return _commit(root, kept + new_files, "compact", m["partition_by"], parent,
+                   m.get("schema"))

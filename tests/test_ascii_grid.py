@@ -3,6 +3,7 @@ CELLSIZE vs DX/DY), nodata -> NaN, round-trip, and the non-line-per-row
 fallback parse."""
 
 import numpy as np
+import pytest
 
 from sis_spark.raster.grid import GridGeometry
 from sis_spark.raster.tiles import tiles_to_raster
@@ -57,3 +58,37 @@ def test_fallback_multirow_lines(spark, tmp_path):
     tiles, gg = read_ascii_grid(spark, str(p))
     back = tiles_to_raster(tiles, gg, dtype=np.float64)[..., 0]
     assert back.tolist() == [[1, 2, 3], [4, 5, 6]]
+
+
+def test_read_starts_no_job_and_checks_row_lines(spark, tmp_path):
+    """The layout is decided from the header read: the call starts no
+    Spark job (no count over the text).  Blank lines are skipped, and a row
+    line that does not hold NCOLS values raises, naming the line."""
+    w, h = 300, 200
+    gy, gx = np.mgrid[0:h, 0:w]
+    arr = ((gx * 7 + gy * 5) % 31).astype(np.float64)
+    gg = GridGeometry((0, 0, w - 1, h - 1), (0.5, 0.0, 5.0, 0.0, -0.5, 100.0))
+    p = tmp_path / "big.asc"
+    p.write_text(format_ascii_grid(arr, gg))
+    sc = spark.sparkContext
+    sc.setJobGroup("ascii_grid_read", "ascii_grid_read")
+    try:
+        tiles, gg2 = read_ascii_grid(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("ascii_grid_read") == []
+    assert (tiles_to_raster(tiles, gg2, dtype=np.float64)[..., 0] == arr).all()
+
+    text = format_ascii_grid(arr[:5, :4], GridGeometry((0, 0, 3, 4), (1.0, 0.0, 0.0, 0.0, -1.0, 5.0)))
+    lines = text.splitlines()
+    blank = tmp_path / "blank.asc"
+    blank.write_text("\n".join(lines[:8] + [""] + lines[8:]) + "\n\n")
+    tiles, gg3 = read_ascii_grid(spark, str(blank))
+    assert (tiles_to_raster(tiles, gg3, dtype=np.float64)[..., 0] == arr[:5, :4]).all()
+
+    lines[8] = "1 2 3"
+    bad = tmp_path / "bad.asc"
+    bad.write_text("\n".join(lines) + "\n")
+    tiles, _ = read_ascii_grid(spark, str(bad))
+    with pytest.raises(Exception, match="ValueError.*row line 2 holds 3 values"):
+        tiles.collect()

@@ -120,3 +120,15 @@ def test_feature_json_deterministic():
     s2 = feature_json(rows["gtype"].iloc[0], rows["wkb"].iloc[0],
                       rows["props"].iloc[0])
     assert s1 == s2 and '"a":1,"b":2' in s1
+
+
+def test_geojson_seq_gives_each_line_its_own_seq(spark, tmp_path):
+    src = os.path.join(tmp_path, "three.ndjson")
+    with open(src, "w") as fh:
+        for i in range(3):
+            fh.write(json.dumps(_feature(ALL_TYPES[0], {"i": i})) + "\n")
+    rows = geojson_seq_table(spark, src).toPandas()
+    assert rows["seq"].nunique() == 3
+    # write_geojson orders by seq: the document keeps the line order
+    doc = json.loads(write_geojson(rows.sample(frac=1.0, random_state=3)))
+    assert [f["properties"]["i"] for f in doc["features"]] == [0, 1, 2]

@@ -36,12 +36,49 @@ def test_spatial_join_prefilter_is_broadcast(spark, sf_dir):
     pts = _events_points(spark, sf_dir)
     out = spatial_join(pts, _supplier_polygons(spark, sf_dir), "lon", "lat")
     plan = _plan(out)
-    # both the cell-prefilter join and the key-map join must be broadcast:
-    # the skewed point side must never shuffle on cell
-    assert plan.count("BroadcastHashJoin") >= 2
+    # the cell-prefilter join is the one join (the polygon key rides on the
+    # covering row) and it is broadcast: the skewed point side must never
+    # shuffle on cell
+    assert plan.count("BroadcastHashJoin") == 1
     assert "SortMergeJoin" not in plan
     # refine is a scalar Arrow eval, not a row-pipe
     assert "ArrowEvalPython" in plan
+
+
+def test_snapshot_join_pass_job_count(spark, tmp_path):
+    """One flagship pass (``spatial_join_snapshot`` -> ``assign_tiles`` ->
+    aggregate) over more than 32 pruned files starts at most 3 Spark jobs:
+    the manifest read lists and types nothing through Spark."""
+    from sis_spark.functions.spark_exprs import cell_col
+    from sis_spark.operators.tiling import assign_tiles
+    from sis_spark.sources import images
+    from sis_spark.sources import table_format as tf
+
+    root = str(tmp_path / "pass_jobs")
+    pts = spark.range(0, 4000).select(
+        "id",
+        ((F.col("id") * 7919 % 3400) / 10.0 - 170.0).alias("lon"),
+        ((F.col("id") * 104729 % 1600) / 10.0 - 80.0).alias("lat"),
+    )
+    tf.create_table(spark, root,
+                    pts.withColumn("cell_p", cell_col(F.col("lon"), F.col("lat"), 3)),
+                    partition_by=["cell_p"])
+    # edges off the 0.1-degree point lattice: no point on the boundary
+    polys = [{"key": 5, "vx": [-160.05, 160.05, 160.05, -160.05],
+              "vy": [-70.05, -70.05, 70.05, 70.05]}]
+    assert len(images.covering_prefixes(polys, 3)) > 32
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot_pass", "snapshot_pass")
+    try:
+        joined = images.spatial_join_snapshot(spark, root, polys, 3)
+        r = assign_tiles(joined, "lon", "lat", 8).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("poly_key").alias("k")).first()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    want = pts.filter(F.col("lon").between(-160.05, 160.05)
+                      & F.col("lat").between(-70.05, 70.05)).count()
+    assert (r["n"], r["k"]) == (want, 5 * want)
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot_pass")) <= 3
 
 
 def test_cell_expr_is_whole_stage_codegen(spark, sf_dir):

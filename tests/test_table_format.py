@@ -306,3 +306,75 @@ def test_compact_files_preserves_content(spark, tmp_path):
     assert sorted(r["id"] for r in tf.read(spark, root).collect()) == rows_before
     # history: the pre-compaction snapshot still reads identically
     assert tf.read(spark, root, snapshot=before["snapshot"]).count() == 160
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn's result, the Spark job ids fn started under job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_read_starts_no_job_and_keeps_schema(spark, tmp_path):
+    """The manifest carries the read schema: a read of more than 32 files
+    (Spark's default parallel-listing threshold) starts no Spark job, the
+    column order and the partition column's written type round-trip, and
+    an empty selection is an empty frame of that schema."""
+    from pyspark.sql import types as T
+
+    root = str(tmp_path / "t_schema")
+    df = spark.range(0, 400).select(
+        (F.col("id") * 1.5).alias("v"),
+        (F.col("id") % 40).cast("short").alias("p"),
+        F.col("id"),
+        F.array(F.col("id"), F.lit(1)).alias("arr"),
+    )
+    tf.create_table(spark, root, df.repartition("p"), partition_by=["p"])
+    assert len(tf.load_manifest(root)["files"]) == 40
+
+    full, jobs = _jobs_in_group(spark, "tf_read_no_job", lambda: tf.read(spark, root))
+    assert jobs == []
+    assert full.columns == ["v", "id", "arr", "p"]
+    assert full.schema["p"].dataType == T.ShortType()
+    assert full.schema["arr"].dataType == T.ArrayType(T.LongType(), True)
+    assert full.count() == 400
+    assert sorted(full.filter(F.col("p") == 7).select("id").toPandas()["id"]) == list(
+        range(7, 400, 40))
+
+    empty, jobs = _jobs_in_group(
+        spark, "tf_read_empty", lambda: tf.read(spark, root, partition_filter=lambda p: False))
+    assert jobs == []
+    assert empty.schema == full.schema and empty.count() == 0
+
+    # every later commit carries the schema: the appended table reads the same way
+    tf.append(spark, root, df.filter(F.col("id") < 40))
+    assert tf.read(spark, root).schema == full.schema
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
+    """A manifest written before the schema was recorded (no ``schema``
+    key) still reads, through Spark's schema inference."""
+    import json
+
+    root = str(tmp_path / "t_old")
+    tf.create_table(spark, root, mk_df(spark, 0, 100), partition_by=["p"])
+    tf.append(spark, root, mk_df(spark, 100, 140))
+    for n in (1, 2):
+        path = os.path.join(root, "_meta", f"v{n}.json")
+        with open(path) as f:
+            m = json.load(f)
+        del m["schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+    cur = tf.read(spark, root)
+    assert sorted(cur.columns) == ["id", "p", "val"]
+    assert cur.count() == 140
+    assert tf.read(spark, root, partition_filter=lambda p: p["p"] == "1").count() == 35
+    empty = tf.read(spark, root, partition_filter=lambda p: False)
+    assert empty.count() == 0 and sorted(empty.columns) == ["id", "p", "val"]
+    tf.rollback(root, to_snapshot=1)
+    assert "schema" in tf.load_manifest(root) and tf.read(spark, root).count() == 100
