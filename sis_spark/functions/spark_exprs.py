@@ -16,14 +16,20 @@ from .. import synth
 from .transforms import MAX_MERC_LAT
 
 
-def _spread_bits_col(v: Column) -> Column:
-    """Morton bit-spread on a bigint Column (same magic numbers as cells.py)."""
-    v = v.bitwiseAND(F.lit(0xFFFFFFFF))
-    v = (v.bitwiseOR(F.shiftleft(v, 16))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    v = (v.bitwiseOR(F.shiftleft(v, 8))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    v = (v.bitwiseOR(F.shiftleft(v, 4))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    v = (v.bitwiseOR(F.shiftleft(v, 2))).bitwiseAND(F.lit(0x3333333333333333))
-    v = (v.bitwiseOR(F.shiftleft(v, 1))).bitwiseAND(F.lit(0x5555555555555555))
+_SPREAD_STEPS = ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
+                 (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
+                 (1, 0x5555555555555555))
+
+
+def _spread_bits_col(v: Column, bits: int) -> Column:
+    """Morton bit-spread of a bigint Column of ``bits``-bit values
+    (0 <= v < 2**bits, bits <= 32; same magic numbers as cells.py).  Each
+    step names ``v`` twice, so the expression holds 2**steps copies of the
+    input; a step whose shift is at least ``bits`` moves no bit and is left
+    out (a res-8 cell id spreads in 3 steps, 8 copies, not 64)."""
+    for shift, mask in _SPREAD_STEPS:
+        if bits > shift:
+            v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
     return v
 
 
@@ -40,8 +46,8 @@ def cell_col(lon: Column, lat: Column, res: int) -> Column:
     ).cast("long")
     return (
         F.lit(1 << (2 * res))
-        .bitwiseOR(F.shiftleft(_spread_bits_col(ix), 1))
-        .bitwiseOR(_spread_bits_col(iy))
+        .bitwiseOR(F.shiftleft(_spread_bits_col(ix, res), 1))
+        .bitwiseOR(_spread_bits_col(iy, res))
     )
 
 

@@ -37,7 +37,10 @@ def get_spark(
     The parallel-listing threshold is raised so that a read of an explicit
     file list (a snapshot table's manifest selection) stats the files on
     the driver instead of starting a listing job once it names more than
-    Spark's default of 32 paths.
+    Spark's default of 32 paths.  The sessions built here are local mode,
+    where driver and executors share the machine and filesystem; a stat
+    there costs less than a listing job (measured on the ``join_tiles``
+    benchmark, 4 CPUs).  A cluster session should decide it anew.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")

@@ -19,7 +19,11 @@ TILE_SCHEMA blocks (float64).  The layout is decided on the driver from
 the first body line, which the header read already holds: a body whose
 first line does not hold NCOLS values falls back to a driver-side
 whole-text parse.  Blank lines are skipped; a later row line that does
-not hold NCOLS values raises a ``ValueError`` naming it.
+not hold NCOLS values raises a ``ValueError`` naming it, and so does a
+body short of NROWS lines (every tile of the header's grid keys a group,
+so a tile missing rows is seen where it is assembled).  A body that is
+one split of the text starts no Spark job before the caller's action; a
+longer one starts ``zipWithIndex``'s partition-size job.
 """
 
 from __future__ import annotations
@@ -129,13 +133,27 @@ def read_ascii_grid(
 
     frags = _map_rows(idx, "tx long, ty long, iy int, seg binary", ["line"],
                       None, to_fragments)
+    # one marker row (iy -1) per tile of the header's grid: a tile row the
+    # body never reaches still forms a group, and fails the row check below
+    nty = (h + tile_size - 1) // tile_size
+    frags = frags.unionByName(spark.range(ntx * nty).select(
+        (F.col("id") % ntx).alias("tx"), F.expr(f"id div {ntx}").alias("ty"),
+        F.lit(-1).alias("iy"), F.lit(None).cast("binary").alias("seg")))
 
     def assemble(key, pdf: pd.DataFrame):
+        ty = int(key[1])
+        pdf = pdf[pdf["iy"] >= 0]
+        n_valid = min(tile_size, h - ty * tile_size)
+        if len(pdf) != n_valid:  # row numbers are unique and < NROWS
+            missing = sorted(set(range(n_valid)) - set(pdf["iy"].tolist()))[0]
+            raise ValueError(
+                f"{path}: the body holds no row line {ty * tile_size + missing}; "
+                f"it should be NROWS {h} lines of NCOLS {w} values")
         block = np.zeros((tile_size, tile_size), dtype=np.float64)
         for iy, seg in zip(pdf["iy"], pdf["seg"]):
             block[int(iy)] = np.frombuffer(seg, dtype=np.float64)
         return pd.DataFrame(
-            [(int(key[0]), int(key[1]), 0, block.tobytes())],
+            [(int(key[0]), ty, 0, block.tobytes())],
             columns=["tx", "ty", "band", "data"],
         )
 

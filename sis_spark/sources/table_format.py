@@ -24,12 +24,16 @@ Iceberg spec the plans rely on), over plain parquet + JSON manifests:
   the table directory.
 * **Schema in the manifest** — every commit records the read schema (data
   columns, then partition columns, each with its written type), and a read
-  passes it to ``spark.read.schema``: no footer is opened for inference,
-  and the driver stats the listed files itself (``session.get_spark``
-  raises the parallel-listing threshold), so ``read`` starts no Spark job.
+  passes it to ``spark.read.schema``: no footer is opened for inference.
   An empty selection is an empty frame of that schema.  A manifest without
   the key (a table written before schemas were recorded) is read with
   Spark's inference.
+* **No job at read time** — on a session whose
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` is above the
+  number of files one read names, the driver stats the listed files itself
+  and ``read`` starts no Spark job.  ``session.get_spark`` (local mode)
+  sets it; a session left at Spark's default of 32 starts a listing job
+  for a larger selection, as before.  Measured in local mode only.
 
 Scale note: one JSON manifest listing ~1e6 files is tens of MB — fine for a
 driver;real Iceberg splits manifests hierarchically, documented out of

@@ -61,9 +61,10 @@ def test_fallback_multirow_lines(spark, tmp_path):
 
 
 def test_read_starts_no_job_and_checks_row_lines(spark, tmp_path):
-    """The layout is decided from the header read: the call starts no
-    Spark job (no count over the text).  Blank lines are skipped, and a row
-    line that does not hold NCOLS values raises, naming the line."""
+    """The layout is decided from the header read: a one-split body starts
+    no Spark job (no count over the text).  Blank lines are skipped; a row
+    line that does not hold NCOLS values, or a body short of NROWS lines,
+    raises, naming the line."""
     w, h = 300, 200
     gy, gx = np.mgrid[0:h, 0:w]
     arr = ((gx * 7 + gy * 5) % 31).astype(np.float64)
@@ -79,12 +80,30 @@ def test_read_starts_no_job_and_checks_row_lines(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("ascii_grid_read") == []
     assert (tiles_to_raster(tiles, gg2, dtype=np.float64)[..., 0] == arr).all()
 
+    # a body over many splits numbers its lines across them
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try:
+        tiles, gg2 = read_ascii_grid(spark, str(p))
+        assert spark.read.text(str(p)).rdd.getNumPartitions() > 1
+        assert (tiles_to_raster(tiles, gg2, dtype=np.float64)[..., 0] == arr).all()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
     text = format_ascii_grid(arr[:5, :4], GridGeometry((0, 0, 3, 4), (1.0, 0.0, 0.0, 0.0, -1.0, 5.0)))
     lines = text.splitlines()
     blank = tmp_path / "blank.asc"
     blank.write_text("\n".join(lines[:8] + [""] + lines[8:]) + "\n\n")
     tiles, gg3 = read_ascii_grid(spark, str(blank))
     assert (tiles_to_raster(tiles, gg3, dtype=np.float64)[..., 0] == arr[:5, :4]).all()
+
+    # a body short of NROWS lines: a tile short of rows, or a whole tile row
+    # (tile_size 2: row 4 is tile row 2's only row) missing
+    short = tmp_path / "short.asc"
+    short.write_text("\n".join(lines[:-1]) + "\n")
+    for tile_size in (64, 2):
+        tiles, _ = read_ascii_grid(spark, str(short), tile_size=tile_size)
+        with pytest.raises(Exception, match="ValueError.*no row line 4"):
+            tiles.collect()
 
     lines[8] = "1 2 3"
     bad = tmp_path / "bad.asc"

@@ -45,6 +45,23 @@ def test_cell_expr_jvm_equals_numpy_udf(events):
     assert df.filter(F.col("c_jvm") != F.col("c_py")).count() == 0
 
 
+def test_cell_expr_equals_numpy_at_every_res(spark):
+    """The JVM cell id spreads in as many Morton steps as ``res`` needs:
+    every resolution, including the globe edges and out-of-range clamps,
+    equals cells.encode_cell."""
+    rng = np.random.default_rng(11)
+    lon = np.concatenate([rng.uniform(-200.0, 200.0, 500),
+                          [-180.0, 180.0, 179.9999999, -180.0000001, 0.0, -1e-12]])
+    lat = np.concatenate([rng.uniform(-100.0, 100.0, 500),
+                          [-90.0, 90.0, 89.99999999, 0.0, 1e-12, 45.0]])
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    res_all = range(1, _cells.MAX_RES + 1)
+    got = df.select(*[cell_col(F.col("lon"), F.col("lat"), r).alias(f"c{r}")
+                      for r in res_all]).toPandas()
+    for r in res_all:
+        assert (got[f"c{r}"].to_numpy() == _cells.encode_cell(lon, lat, r)).all(), r
+
+
 def test_tile_expr_jvm_equals_numpy_udf(events):
     zoom = 11
     tx, ty = tile_cols(F.col("lon"), F.col("lat"), zoom)
